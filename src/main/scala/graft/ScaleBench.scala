@@ -1093,7 +1093,7 @@ object ScaleBench {
     * bloom sidecars on the UNCLUSTERED o_orderkey; a fixed 8-key point
     * probe measured three ways — files kept by the bloom vs total
     * (min/max keeps ~all: every file's unclustered-key range spans the
-    * domain), [[Txn.readPoint]] wall time, and the full-scan filter
+    * domain), [[Txn.readSkipping]] wall time, and the full-scan filter
     * alternative. The claim: kept-file fraction FALLS as the table
     * grows (probe cost tracks matching files, not table size) while
     * the full scan is linear — the Delta bloom-index story measured.
@@ -1133,9 +1133,11 @@ object ScaleBench {
           root, statsCols = Seq("o_custkey"), bloomCols = Seq("o_orderkey"),
           bloomBits = 1 << 18)
         val t1 = System.nanoTime()
-        val pf = Txn.probeFiles(spark, root, "o_orderkey", probes)
-        kept = pf._1; total = pf._2
-        nHits = Txn.readPoint(spark, root, "o_orderkey", probes).count()
+        val point = Seq(Txn.PointProbe("o_orderkey", probes))
+        val (_, pf) = Txn.skipDecision(spark, root,
+          Txn.currentVersion(spark, root).get, point)
+        kept = pf.filesKept; total = pf.filesTotal
+        nHits = Txn.readSkipping(spark, root, point).count()
         val t2 = System.nanoTime()
         Txn.read(spark, root)
           .where(col("o_orderkey").isin(probes: _*)).count()
@@ -1163,7 +1165,7 @@ object ScaleBench {
   /** PARTITION-PRUNING economics (r10): the table grows n× by adding
     * YEARS (replica k shifts o_year by +100k — new partitions of
     * constant size, the time-partitioned ingest shape), and a fixed
-    * one-year query runs via [[Txn.readPartitionPruned]] (opens 1
+    * one-year query runs via [[Txn.readSkipping]] (opens 1
     * partition dir) vs the full-scan filter. The claim: partition-read
     * cost tracks PARTITION size (flat as the table grows) while the
     * scan is linear — the one skipping mechanism that needs no sidecar
@@ -1195,10 +1197,10 @@ object ScaleBench {
         val t0 = System.nanoTime()
         Txn.commitPartitioned(base, root, "o_year")
         val t1 = System.nanoTime()
-        val pp = Txn.partitionProbe(spark, root, "o_year", Seq(1995L))
+        val year = Seq(Txn.PartProbe("o_year", Seq(1995L)))
+        val pp = Txn.partitionCensus(spark, root, year)
         kept = pp._1; total = pp._2
-        nHits = Txn.readPartitionPruned(spark, root, "o_year", Seq(1995L))
-          .count()
+        nHits = Txn.readSkipping(spark, root, year).count()
         val t2 = System.nanoTime()
         Txn.read(spark, root).where(col("o_year") === 1995L).count()
         val t3 = System.nanoTime()
@@ -1216,7 +1218,7 @@ object ScaleBench {
       s""""x$m":{"dirs_kept":$k,"dirs_total":$t,"year_rows":$h,"build_sec":${f2(b)},"pruned_read_sec":${f2(p)},"full_scan_sec":${f2(sc)}}"""
     }.mkString(",")
     val s =
-      s"""{"note":"table grown nx by ADDING years (new partitions of constant size -- the time-partitioned ingest shape); fixed one-year query: readPartitionPruned opens dirs_kept of dirs_total partition dirs straight off the directory listing (no sidecar). The claim is pruned_read_sec flat in table size (tracks the partition, 1/nx of the table) vs the full scan linear","passes":$passes,"corpora":{$json}}"""
+      s"""{"note":"table grown nx by ADDING years (new partitions of constant size -- the time-partitioned ingest shape); fixed one-year query: readSkipping opens dirs_kept of dirs_total partition dirs straight off the directory listing (no sidecar). The claim is pruned_read_sec flat in table size (tracks the partition, 1/nx of the table) vs the full scan linear","passes":$passes,"corpora":{$json}}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("PARTITION_r13.json"), s.getBytes)
     println(s)
@@ -1228,8 +1230,8 @@ object ScaleBench {
     * o_orderkey so probes stay unique); within every year the data is
     * range-laid-out by o_custkey into ~16 files with distinct ranges
     * (the clustered-ingest shape). A fixed one-year, narrow-custkey
-    * query then reads via (a) [[Txn.readPartitionFilePruned]] — both
-    * rungs, (b) [[Txn.readPartitionPruned]] + residual — directory rung
+    * query then reads via (a) [[Txn.readSkipping]] — both
+    * rungs, (b) [[Txn.readSkipping]] + residual — directory rung
     * only, (c) full scan + filter. The CLAIM: dirs_kept stays 1 while
     * dirs_total grows n×, files_kept stays ~1-2 of the ~16 in the kept
     * dir, and at 100 TB rung (b)→(a) is another ~10× fewer file opens
@@ -1268,12 +1270,15 @@ object ScaleBench {
             .sortWithinPartitions("o_custkey"),
           root, "o_year", statsCols = Seq("o_custkey"))
         val t1 = System.nanoTime()
-        probe = Txn.partitionFileProbe(spark, root, "o_year", Seq(1995L),
-          "o_custkey", cLo, cHi)
-        nHits = Txn.readPartitionFilePruned(spark, root, "o_year",
-          Seq(1995L), "o_custkey", cLo, cHi).count()
+        val year = Txn.PartProbe("o_year", Seq(1995L))
+        val twoRung = Seq(year, Txn.RangeProbe("o_custkey", cLo, cHi))
+        val (dk, dt) = Txn.partitionCensus(spark, root, twoRung)
+        val (_, fr) = Txn.skipDecision(spark, root,
+          Txn.currentVersion(spark, root).get, twoRung)
+        probe = (dk, dt, fr.filesKept, fr.filesTotal)
+        nHits = Txn.readSkipping(spark, root, twoRung).count()
         val t2 = System.nanoTime()
-        Txn.readPartitionPruned(spark, root, "o_year", Seq(1995L))
+        Txn.readSkipping(spark, root, Seq(year))
           .where(col("o_custkey").between(cLo, cHi)).count()
         val t3 = System.nanoTime()
         Txn.read(spark, root).where(col("o_year") === 1995L &&
@@ -1306,13 +1311,13 @@ object ScaleBench {
           base2.repartition(col("o_year"), col("o_src")),
           root2, "o_year,o_src")
         val t0b = System.nanoTime()
-        val (frame, kept, total, dirsKept, dirsTotal) =
-          Txn.readSqlPruned(spark, root2, Txn.currentVersion(spark, root2).get,
+        val (frame, r) =
+          Txn.skipScan(spark, root2, Txn.currentVersion(spark, root2).get,
             Seq(Txn.PartProbe("o_year", Seq(1995L)),
               Txn.PartProbe("o_src", Seq("s1"))))
         nHits2 = frame.count()
         val t1b = System.nanoTime()
-        d2 = (dirsKept, dirsTotal, kept, total)
+        d2 = (r.dirsKept, r.dirsTotal, r.filesKept, r.filesTotal)
         twoLevelMin = math.min(twoLevelMin, (t1b - t0b) / 1e9)
         f2a.delete(new org.apache.hadoop.fs.Path(root2), true)
       }

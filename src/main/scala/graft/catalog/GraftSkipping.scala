@@ -20,8 +20,7 @@ import graft.ops.Txn
   * unrecognized shape contributes nothing. Spark re-evaluates the full
   * predicate post-scan regardless (the catalog's residual contract), so
   * the probes are purely an I/O optimization: the exact semantics the
-  * programmatic [[Txn.readPruned]]/[[Txn.readPoint]]/
-  * [[Txn.readPartitionFilePruned]] paths pin with their `≡ read().
+  * programmatic [[Txn.readSkipping]] path pins with its `≡ read().
   * where(...)` specs. */
 private[catalog] object GraftSkipping {
 
@@ -321,11 +320,11 @@ object GraftScanStats {
     * unpaid listing is the rung's win), so `dirsKept`/`dirsTotal`
     * carry that half of the claim (0/0 on flat tables). */
   final case class ScanDecision(label: String, filesKept: Int,
-      filesTotal: Int, dirsKept: Int = 0, dirsTotal: Int = 0)
+      filesTotal: Int, dirsKept: Int, dirsTotal: Int)
   private val last = new AtomicReference[Option[ScanDecision]](None)
-  private[graft] def record(label: String, kept: Int, total: Int,
-      dirsKept: Int = 0, dirsTotal: Int = 0): Unit =
-    last.set(Some(ScanDecision(label, kept, total, dirsKept, dirsTotal)))
+  private[graft] def record(label: String, r: Txn.SkipReport): Unit =
+    last.set(Some(ScanDecision(label, r.filesKept, r.filesTotal,
+      r.dirsKept, r.dirsTotal)))
   def lastDecision: Option[ScanDecision] = last.get()
   def reset(): Unit = last.set(None)
 }
@@ -391,10 +390,10 @@ private[catalog] class GraftNativeScanBuilder(spark: SparkSession,
     val probes = GraftSkipping.probesOfExprs(pushedExprs)
     val decision =
       if (probes.isEmpty) None
-      else Some(Txn.sqlKeptFiles(spark, root, version, probes))
+      else Some(Txn.skipDecision(spark, root, version, probes))
+    decision.foreach { case (_, report) => GraftScanStats.record(label, report) }
     val static = decision match {
-      case Some((keptPaths, kept, total)) if kept < total =>
-        GraftScanStats.record(label, kept, total)
+      case Some((keptPaths, report)) if report.filesKept < report.filesTotal =>
         // a fully-pruned scan still needs a valid (empty) file index —
         // ParquetTable over zero paths serves the empty result with the
         // declared schema
@@ -402,11 +401,7 @@ private[catalog] class GraftNativeScanBuilder(spark: SparkSession,
         b.pushFilters(pushedExprs)
         required.foreach(b.pruneColumns)
         b.build()
-      case other =>
-        other.foreach { case (_, kept, total) =>
-          GraftScanStats.record(label, kept, total)
-        }
-        inner.build()
+      case _ => inner.build()
     }
     // declared-index tables additionally accept RUNTIME filters (DPP):
     // a broadcast-join's build-side key set arrives post-exchange as an
@@ -421,7 +416,7 @@ private[catalog] class GraftNativeScanBuilder(spark: SparkSession,
         required.foreach(b.pruneColumns)
         b.build()
       },
-      rps => Txn.sqlKeptFiles(spark, root, version, rps), label)
+      rps => Txn.skipDecision(spark, root, version, rps), label)
   }
 }
 
@@ -442,7 +437,7 @@ private[catalog] class GraftNativeScanBuilder(spark: SparkSession,
 private[catalog] class GraftRuntimeFilterableScan(
     private var delegate: Scan, filterable: Seq[String],
     staticProbes: Seq[Txn.SkipProbe], rebuild: Seq[String] => Scan,
-    keptOf: Seq[Txn.SkipProbe] => (Seq[String], Int, Int), label: String)
+    keptOf: Seq[Txn.SkipProbe] => (Seq[String], Txn.SkipReport), label: String)
   extends Scan
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -498,9 +493,9 @@ private[catalog] class GraftRuntimeFilterableScan(
   override def filter(predicates: Array[V2Predicate]): Unit = {
     val runtime = probesOfV2(predicates)
     if (runtime.nonEmpty) {
-      val (keptPaths, kept, total) = keptOf(staticProbes ++ runtime)
-      if (kept < total) {
-        GraftScanStats.record(s"$label(runtime)", kept, total)
+      val (keptPaths, report) = keptOf(staticProbes ++ runtime)
+      if (report.filesKept < report.filesTotal) {
+        GraftScanStats.record(s"$label(runtime)", report)
         delegate = rebuild(keptPaths)
       }
     }

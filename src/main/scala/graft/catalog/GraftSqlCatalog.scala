@@ -814,7 +814,7 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
           else phys.select(colMap.map { case (p, l) => col(p).as(l) }: _*)))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new GraftWriteBuilder(root, info.schema(), version, partCol,
+    new GraftWriteBuilder(spark, root, info.schema(), version, partCol,
       statsCols, bloomCols, mapped = colMap.nonEmpty,
       physifyFrame = physify, physifySchemaF = physifySchema,
       checkSql = tableProps.get("check"))
@@ -1130,9 +1130,8 @@ private[catalog] class GraftScanBuilder(spark: SparkSession, root: String,
     val base =
       if (probes.isEmpty) snapshot
       else {
-        val (frame, kept, total, dirsKept, dirsTotal) =
-          Txn.readSqlPruned(spark, root, version, probes)
-        GraftScanStats.record(label, kept, total, dirsKept, dirsTotal)
+        val (frame, report) = Txn.skipScan(spark, root, version, probes)
+        GraftScanStats.record(label, report)
         mapFrame(frame)
       }
     // push translated predicates into the inner plan (parquet footer
@@ -1293,8 +1292,8 @@ private[catalog] class GraftV1Scan(pruned: DataFrame, label: String,
   * boundary on the write side. Schemas beyond the native writer's flat
   * primitive set (arrays, structs, decimals) fall back to the V1
   * bridge, whose Txn commits handle any Spark schema. */
-private[catalog] class GraftWriteBuilder(root: String, schema: StructType,
-    pinnedVersion: Long, partCol: Option[String],
+private[catalog] class GraftWriteBuilder(spark: SparkSession, root: String,
+    schema: StructType, pinnedVersion: Long, partCol: Option[String],
     statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
     mapped: Boolean = false,
     physifyFrame: DataFrame => DataFrame = identity,
@@ -1392,11 +1391,13 @@ private[catalog] class GraftWriteBuilder(root: String, schema: StructType,
       // write.distribution-mode (r14 advice): a value-skewed ingest
       // (most rows in one partition value) funnels through one task
       // under clustering, and `none` reverts to the unclustered shape.
+      // The key is read from the session that built the write, never
+      // from whichever session is active when Spark asks.
       override def requiredDistribution()
           : org.apache.spark.sql.connector.distributions.Distribution =
         if (partCols.nonEmpty && replaceWhere.isEmpty &&
-            SparkSession.active.conf
-              .get("spark.graft.write.distribution", "clustered") == "clustered")
+            spark.conf.get("spark.graft.write.distribution", "clustered") ==
+              "clustered")
           org.apache.spark.sql.connector.distributions.Distributions.clustered(
             partCols.map(c =>
               org.apache.spark.sql.connector.expressions.Expressions.identity(c)

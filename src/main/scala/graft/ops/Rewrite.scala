@@ -509,7 +509,7 @@ object Rewrite {
   /** DATA SKIPPING through the transactional table (r9): commit orders
     * range-clustered on o_custkey WITH per-file min/max stats in the
     * snapshot sidecar, then answer a customer-range query via
-    * `Txn.readPruned` — which opens only the files whose recorded range
+    * `Txn.readSkipping` — which opens only the files whose recorded range
     * intersects [301, 600] (a populated mid-range at every fixture SF) (TxnSpec pins the file count actually
     * read < total and the ≡-to-full-filter equivalence; this row
     * hash-gates the pruned read's CONTENT against DuckDB's plain
@@ -535,7 +535,7 @@ object Rewrite {
         .repartitionByRange(8, col("o_custkey"))
         .sortWithinPartitions("o_custkey"),
       root, statsCols = Seq("o_custkey"))
-    Txn.readPruned(s, root, "o_custkey", 301L, 600L)
+    Txn.readSkipping(s, root, Seq(Txn.RangeProbe("o_custkey", 301L, 600L)))
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
         sum(graft.Tables.micro(col("o_totalprice"))).as("revenue_micro"))
@@ -545,7 +545,7 @@ object Rewrite {
   /** DATA SKIPPING on a TOMBSTONED version (r10, closing the r9 "blunt
     * refusal"): the same clustered-commit-with-stats shape as
     * txn_skipping, then a `commitDelete` GDPR-erases every 10th order
-    * key BEFORE the pruned read — `Txn.readPruned` must still skip
+    * key BEFORE the pruned read — `Txn.readSkipping` must still skip
     * files by stats and fold the tombstone anti-join over the pruned
     * scan (the deletion-vector read shape: prune first, filter deleted
     * rows after). The oracle is the range filter minus the erased
@@ -571,7 +571,8 @@ object Rewrite {
     Txn.commitDelete(s, root, "o_orderkey",
       o.where(col("o_orderkey") % 10 === 0).select("o_orderkey"),
       meta = Map("op" -> "erasure"))
-    Txn.readPruned(s, root, "o_custkey", 301L, 600L).orderBy("o_orderkey")
+    Txn.readSkipping(s, root, Seq(Txn.RangeProbe("o_custkey", 301L, 600L)))
+      .orderBy("o_orderkey")
   }
 
   /** CDC across a SCHEMA-EVOLVING rewrite (r10): version 2 rewrites the
@@ -711,7 +712,7 @@ object Rewrite {
     * UNCLUSTERED o_orderkey spans ~the whole key domain in every file —
     * range stats cannot skip anything for a point probe. The per-file
     * BLOOM sidecar (`Txn.commitIndexed(bloomCols = o_orderkey)`) can:
-    * `readPoint` keeps only files whose filter may contain a probe key
+    * `readSkipping` keeps only files whose filter may contain a probe key
     * (one-sided — never drops a file holding a match), the skipping
     * story Delta's bloom filter index tells. Probes are every order key
     * divisible by 997 (collected bounded, ~dozens) plus two absent
@@ -735,8 +736,8 @@ object Rewrite {
     val probes = o.where(col("o_orderkey") % 997 === 0)
       .select("o_orderkey").orderBy("o_orderkey")
       .collect().map(_.getLong(0)).toSeq // bounded: ~|orders|/997 keys
-    Txn.readPoint(s, root, "o_orderkey",
-      probes ++ Seq(999999941L, 999999943L)) // absent probes: must miss
+    Txn.readSkipping(s, root, Seq(Txn.PointProbe("o_orderkey",
+      probes ++ Seq(999999941L, 999999943L)))) // absent probes: must miss
       .orderBy("o_orderkey")
   }
 
@@ -746,7 +747,7 @@ object Rewrite {
     * key `suid` is doc_id REVERSED (injective, so the oracle is exact,
     * and order-destroying, so per-file lexicographic min/max spans
     * ~everything — string STATS cannot prune a point probe). The
-    * xxhash64-fed string bloom can: `readPointString` opens only files
+    * xxhash64-fed string bloom can: `readSkipping` opens only files
     * whose filter may contain a probe (one-sided; absent probes must
     * return nothing). CatalogSpec measures kept ≤ 3 of 16 on the same
     * shape through pasted SQL. */
@@ -764,8 +765,8 @@ object Rewrite {
       root, bloomCols = Seq("suid"), bloomBits = 1 << 18)
     val probes = d.where(col("doc_id") % 97 === 0)
       .select("suid").collect().map(_.getString(0)).toSeq // bounded ~docs/97
-    Txn.readPointString(s, root, "suid",
-      probes ++ Seq("doc-absent-a", "doc-absent-b")) // absent: must miss
+    Txn.readSkipping(s, root, Seq(Txn.StrPointProbe("suid",
+      probes ++ Seq("doc-absent-a", "doc-absent-b")))) // absent: must miss
       .orderBy("doc_id")
   }
 
@@ -860,7 +861,7 @@ object Rewrite {
     * `data/<uuid>/o_year=YYYY/` partition dirs, a 2099 shard appended
     * partition-wise (`commitAppendPartitioned` — the O(shard)
     * ingest-one-day loop), then a three-year query answered by
-    * `readPartitionPruned`, which opens only the matching partition
+    * `readSkipping`, which opens only the matching partition
     * DIRECTORIES (the listing is the index — no sidecar, no file
     * stats). The oracle filters the raw table by year and unions the
     * shard, so the driver hash fails if pruning drops a partition,
@@ -888,7 +889,8 @@ object Rewrite {
       o.where(col("o_orderkey") % 17 === 0)
         .withColumn("o_orderkey", col("o_orderkey") + 30000000L)
         .withColumn("o_year", lit(2099L)), root, "o_year")
-    Txn.readPartitionPruned(s, root, "o_year", Seq(1993L, 1995L, 2099L))
+    Txn.readSkipping(s, root,
+      Seq(Txn.PartProbe("o_year", Seq(1993L, 1995L, 2099L))))
       .withColumn("o_year", col("o_year").cast("long"))
       .orderBy("o_orderkey")
   }
@@ -896,7 +898,7 @@ object Rewrite {
   /** TWO-RUNG SKIPPING as a registered row (r11): a year-partitioned
     * table range-laid-out by o_custkey inside each year with
     * per-partition stats sidecars, a tombstone delete on top, read via
-    * [[Txn.readPartitionFilePruned]] — directory pruning → file-stats
+    * [[Txn.readSkipping]] — directory pruning → file-stats
     * skipping → residual filter → tombstone fold, the partition→file→
     * row point-query path a 100 TB warehouse actually serves. The
     * oracle recomputes from raw orders, so the driver hash fails if
@@ -921,8 +923,8 @@ object Rewrite {
       root, "o_year", statsCols = Seq("o_custkey"))
     Txn.commitDelete(s, root, "o_orderkey",
       o.where(col("o_orderkey") % 97 === 0).select("o_orderkey"))
-    Txn.readPartitionFilePruned(s, root, "o_year", Seq(1995L),
-      "o_custkey", 500L, 1500L)
+    Txn.readSkipping(s, root, Seq(Txn.PartProbe("o_year", Seq(1995L)),
+      Txn.RangeProbe("o_custkey", 500L, 1500L)))
       .withColumn("o_year", col("o_year").cast("long"))
       .orderBy("o_orderkey")
   }

@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
   * deletion-vector role; readers fold entries in log order, and a
   * periodic compacting [[commit]] collapses the chain). The remaining
   * simplification vs Delta: tombstones are key-level, not per-file
-  * row bitmaps — [[readPruned]] still skips files by stats and folds
+  * row bitmaps — [[readSkipping]] still skips files by stats and folds
   * the tombstone anti-joins over the pruned scan (r10), paying one
   * O(deleted-keys) join per tombstone until compaction. */
 object Txn {
@@ -429,7 +429,7 @@ object Txn {
     * stored in an underscore-prefixed sidecar INSIDE the snapshot dir
     * (`data/<uuid>/_stats.tsv` — invisible to parquet readers, and
     * published atomically with the data because the pointer swap happens
-    * after). [[readPruned]] then opens only the files whose range
+    * after). [[readSkipping]] then opens only the files whose range
     * overlaps a predicate — the Delta/Iceberg file-skipping core. Stats
     * cost one extra scan of the new snapshot at commit time (file-local
     * aggregation, no shuffle: the groupBy key IS the input file). */
@@ -999,7 +999,7 @@ object Txn {
     * survives (log-replay semantics); every read of a tombstoned
     * version pays one anti-join per tombstone, and a periodic full
     * [[commit]] of `read(...)` (compaction) collapses the chain back
-    * to a single clean dir. [[readPruned]] on a tombstoned version
+    * to a single clean dir. [[readSkipping]] on a tombstoned version
     * prunes by stats first, then folds the tombstone anti-joins over
     * the pruned scan (r10 — the deletion-vector read shape).
     * The CDC slow path handles tombstone steps (the
@@ -1247,8 +1247,8 @@ object Txn {
     * warehouse idiom for time/tenant-keyed 100 TB corpora. The
     * partition column materializes from the directory names on read
     * (one column of storage saved per row), and partition-level
-    * skipping ([[readPartitionPruned]]) needs no sidecar at all: the
-    * directory listing IS the index. Layout is self-describing
+    * skipping ([[readSkipping]] with a `PartProbe`) needs no sidecar at
+    * all: the directory listing IS the index. Layout is self-describing
     * (readers detect `col=` children), so deletes, upserts, restores,
     * clones and CDC all compose with partitioned snapshots unchanged.
     * Pair with [[commitAppendPartitioned]] for the canonical
@@ -1284,65 +1284,6 @@ object Txn {
       dedupKey = None, partitionBy = Some(partCol),
       bloomCols = bloomCols, bloomBits = bloomBits)
       .getOrElse(sys.error("unreachable: dedup-free append cannot no-op"))
-  }
-
-  /** PARTITION-PRUNED read `partCol IN (values)` on the current
-    * version: each partitioned snapshot dir contributes only its
-    * matching `partCol=value` subdirectories — the scan opens
-    * O(matching partitions), never O(table), straight off the
-    * directory listing (Hive/Spark static partition pruning, served
-    * through the Txn manifest). Flat dirs in a mixed chain are read
-    * whole (one-sided: the trailing filter still applies), tombstones
-    * fold in log order, and the final `where` keeps semantics ≡
-    * `read(...).where(partCol isin values)` — the registered
-    * txn_partitioned row hash-gates that equivalence. Values may be
-    * any type whose toString matches the written directory names
-    * (longs, plain strings); values Spark would ESCAPE in a dir name
-    * (spaces, slashes) won't match the raw toString — keep partition
-    * values URI-safe, which a sane layout does anyway. */
-  def readPartitionPruned(spark: SparkSession, root: String,
-      partCol: String, values: Seq[Any]): DataFrame = {
-    require(values.nonEmpty, "readPartitionPruned needs at least one value")
-    val v = currentVersion(spark, root).getOrElse(
-      sys.error(s"no committed version at $root"))
-    // the shared recursive walk (r13): the directory rung drops
-    // non-matching `partCol=value` subtrees AT WHATEVER LEVEL the
-    // column lives, flat dirs in a mixed chain read whole (one-sided),
-    // tombstones fold in log order — semantics ≡ read().where(isin),
-    // same as before, now multi-level-aware
-    val wanted = values.map(dirValue).toSet
-    val (plan, _) = prunePlanBy(spark, root, v, _ => true,
-      keepPart = (c, pv) => c != partCol || wanted(pv))
-    scanPruned(spark, root, v, plan)
-      .where(col(partCol).isin(values: _*))
-  }
-
-  /** The directory-level decision [[readPartitionPruned]] would make:
-    * (kept, total) partition dirs across the version's partitioned
-    * snapshot dirs — the measurable skipping claim. */
-  def partitionProbe(spark: SparkSession, root: String, partCol: String,
-      values: Seq[Any]): (Int, Int) = {
-    val v = currentVersion(spark, root).getOrElse(
-      sys.error(s"no committed version at $root"))
-    val f = fs(spark, root)
-    val wanted = values.map(dirValue).toSet
-    var kept = 0
-    var total = 0
-    manifestDirs(f, root, v).map(parseEntry).foreach {
-      case (dir, None) =>
-        val abs = resolveDir(root, dir)
-        if (isPartitionedDir(f, abs))
-          // LEAF granularity (r13): single-level layouts count their
-          // immediate subdirs exactly as before; multi-level layouts
-          // count leaves, kept iff the probed column's level admits
-          partitionLeafDirs(f, abs).foreach { case (_, parts) =>
-            total += 1
-            if (parts.forall { case (c, pv) => c != partCol || wanted(pv) })
-              kept += 1
-          }
-      case _ => ()
-    }
-    (kept, total)
   }
 
   /** OPTIMISTIC-CONCURRENCY commit: publish `df` as the next version
@@ -1407,8 +1348,9 @@ object Txn {
     *
     * Null semantics are preserved per format: min/max ignore nulls
     * natively (a null-only (file, col) cell writes the `-` sentinel —
-    * never prunable); blooms skip nulls inside
-    * [[graft.functions.BloomGramAggNullable]] and an all-null
+    * never prunable); the bloom feed is gated to NULL for null values
+    * (a STRING feed's `xxhash64(NULL)` is the seed, not NULL), which
+    * [[graft.functions.BloomGramAggNullable]] skips, and an all-null
     * (file, col) writes NO bloom line (its zero-bit buffer is
     * unambiguous: any real value sets K bits) — exactly the lines the
     * old `WHERE col IS NOT NULL` per-column jobs produced.
@@ -1445,7 +1387,7 @@ object Txn {
     val aggs: Seq[org.apache.spark.sql.Column] =
       numCols.flatMap(c => Seq(min(numFeed(snap, c)), max(numFeed(snap, c)))) ++
         strCols.flatMap(c => Seq(min(col(c)), max(col(c)))) ++
-        bloomCols.map(c => bloomAgg(bloomFeed(snap, c)))
+        bloomCols.map(c => bloomAgg(when(col(c).isNotNull, bloomFeed(snap, c))))
     val rows = snap.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
       .collect() // one row per data FILE — bounded by snapshot file count
     val kw = keys.size
@@ -1670,7 +1612,7 @@ object Txn {
 
   /** [[commit]] that also writes BLOOM sidecars: full-snapshot publish
     * with `_stats.tsv` for `statsCols` (range skipping) and
-    * `_bloom.tsv` for `bloomCols` (point skipping via [[readPoint]]).
+    * `_bloom.tsv` for `bloomCols` (point skipping via [[readSkipping]]).
     * Sidecars cost one extra scan of the fresh snapshot each and are
     * invisible to plain parquet readers. */
   def commitIndexed(df: DataFrame, root: String, statsCols: Seq[String] = Nil,
@@ -1714,15 +1656,6 @@ object Txn {
     publishFull(f, root, dataRel, manifestBody(dataRel, meta))
   }
 
-  /** Per-manifest-entry pruning decision for version `version`: each
-    * data-dir entry resolves to its KEPT parquet files (those whose
-    * recorded `colName` range may overlap [lo, hi] — no stats row or
-    * null bounds means always kept: pruning must be an optimization,
-    * never a filter), tombstone entries pass through for the reader's
-    * log-order fold. Also returns the total data-file count. The
-    * version is an explicit parameter so one resolve feeds both the
-    * file list and the schema (r10 advice: resolving twice let a
-    * concurrent commit mix two versions' views). */
   /** One file group of a pruned scan: `files` read together, plus the
     * partition (col, rawValue) chain they sit under when they come from
     * a hive-partitioned subdir (one pair per nesting level, r13) — the
@@ -1731,23 +1664,39 @@ object Txn {
   private case class ScanGroup(files: Seq[String],
       parts: Seq[(String, String)])
 
-  /** Shared file-skipping walk (r11: partition-aware — the r10 refusal
-    * guard is gone): every data file in version `version` passes
+  /** What one skipping plan kept, rung by rung. `filesTotal` counts the
+    * data files LISTED: files under a directory the directory rung
+    * dropped are never listed (that unpaid listing is the rung's win),
+    * so they count in neither file figure. `dirsKept`/`dirsTotal` count
+    * the `col=value` directories VISITED, per level — a two-level
+    * `year=…/src=…` probe visits every year dir but only the kept years'
+    * src children. Flat dirs report 0/0 directories and tombstone key
+    * dirs count nowhere; [[partitionCensus]] gives the leaf view. */
+  final case class SkipReport(filesKept: Int, filesTotal: Int,
+      dirsKept: Int, dirsTotal: Int)
+
+  /** The skipping planner every pruned read and probe goes through
+    * (r11: partition-aware): every data file in version `version` passes
     * through `keepFile` (keyed by basename for flat dirs,
     * `subdir/basename` inside partitioned dirs — matching the sidecar
     * keys); tombstone entries pass through for the reader's log-order
     * fold. Partitioned dirs additionally pass each `col=value` subdir
     * through `keepPart` FIRST — the directory rung — and only surviving
     * subdirs pay the file-rung listing, so a pruned read's metadata
-    * cost is O(kept partitions), never O(table). Both predicates must
-    * be one-sided: they may keep what the residual predicate rejects,
-    * never drop a file/dir containing a matching row. */
+    * cost is O(kept partitions), never O(table). Skipping reads pass
+    * [[probesKeepFile]] and [[probesKeepPart]], which are one-sided:
+    * they may keep what the probes' residual rejects, never drop a
+    * file/dir containing a matching row. The version is an
+    * explicit parameter so one resolve feeds the file list, the schema
+    * and the tombstone fold alike (r10 advice: resolving twice let a
+    * concurrent commit mix two versions' views). */
   private def prunePlanBy(spark: SparkSession, root: String, version: Long,
-      keepFile: String => Boolean,
-      keepPart: (String, String) => Boolean = (_, _) => true):
-      (Seq[Either[Seq[ScanGroup], (String, String)]], Int) = {
+      keepFile: String => Boolean, keepPart: (String, String) => Boolean):
+      (Seq[Either[Seq[ScanGroup], (String, String)]], SkipReport) = {
     val f = fs(spark, root)
     var total = 0
+    var dirsKept = 0
+    var dirsTotal = 0
     def parquetFiles(dir: Path): Seq[String] =
       f.listStatus(dir).toSeq
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
@@ -1779,80 +1728,20 @@ object Txn {
               val pdir = st.getPath.getName
               val eq = pdir.indexOf('=')
               val (c, v) = (pdir.substring(0, eq), pdir.substring(eq + 1))
+              dirsTotal += 1
               if (!keepPart(c, v)) Nil // directory rung: never listed
-              else walk(st.getPath, s"$rel$pdir/", parts :+ ((c, v)))
+              else {
+                dirsKept += 1
+                walk(st.getPath, s"$rel$pdir/", parts :+ ((c, v)))
+              }
             }
           }
           Left(walk(new Path(abs), "", Nil))
         }
       case (dir, Some(keyCol)) => Right((dir, keyCol))
     }
-    (plan, total)
-  }
-
-  /** The min/max-stats keep decision for `lo <= col <= hi`: a file
-    * survives unless its recorded range provably misses the interval
-    * (no stats row or null bounds = always kept — pruning is an
-    * optimization, never a filter). */
-  private def statsKeep(stats: Map[(String, String), (Option[Long], Option[Long])],
-      colName: String, lo: Long, hi: Long)(base: String): Boolean =
-    stats.get((base, colName)) match {
-      case Some((Some(mn), Some(mx))) => mx >= lo && mn <= hi
-      case _                          => true
-    }
-
-  private def prunePlan(spark: SparkSession, root: String, version: Long,
-      colName: String, lo: Long,
-      hi: Long): (Seq[Either[Seq[ScanGroup], (String, String)]], Int) =
-    prunePlanBy(spark, root, version,
-      statsKeep(fileStats(spark, root, version), colName, lo, hi))
-
-  /** The file-skipping decision for `lo <= col <= hi` on version
-    * `version`: (data files to read, total data files). Tombstone key
-    * dirs are not data files and appear in neither count; [[readPruned]]
-    * folds their anti-joins over the pruned scan. */
-  def pruneFiles(spark: SparkSession, root: String, version: Long,
-      colName: String, lo: Long, hi: Long): (Seq[String], Int) = {
-    val (plan, total) = prunePlan(spark, root, version, colName, lo, hi)
-    (plan.collect { case Left(gs) => gs.flatMap(_.files) }.flatten, total)
-  }
-
-  /** [[pruneFiles]] against the current version (one resolve, then the
-    * pinned path). */
-  def pruneFiles(spark: SparkSession, root: String, colName: String,
-      lo: Long, hi: Long): (Seq[String], Int) =
-    pruneFiles(spark, root, currentVersion(spark, root).getOrElse(
-      sys.error(s"no committed version at $root")), colName, lo, hi)
-
-  /** Data-skipping read of `lo <= col <= hi` on the current version:
-    * opens only the files [[pruneFiles]] keeps and applies the residual
-    * predicate (file granularity is coarse; row-level filtering still
-    * pushes into the parquet reader as usual). Semantically identical
-    * to `read(...).where(col between lo and hi)` whenever the stats
-    * sidecar is honest — TxnSpec pins that equivalence; the registered
-    * `txn_skipping` row hash-gates it against DuckDB. On a clustered
-    * commit (range-partitioned + sorted, e.g. [[compactCommit]] output
-    * or `compactParquetZorder`) this is the 100 TB point-query path:
-    * O(matching files), not O(table).
-    *
-    * Tombstoned versions (r10, closing the r9 "blunt refusal"): file
-    * stats cannot see row deletions, but they don't need to — the
-    * tombstone anti-joins fold over the PRUNED scan in log order, the
-    * deletion-vector shape Delta uses (prune by stats, then filter
-    * deleted rows). Pruning only drops files whose every row the
-    * residual predicate would reject, and the anti-join only ever
-    * REMOVES rows, so prune-then-delete ≡ delete-then-filter; one GDPR
-    * erasure no longer disables the point-query path until compaction
-    * (it costs one O(deleted-keys) anti-join per tombstone until then).
-    * The version is resolved ONCE and pins file list, schema, and
-    * tombstone fold alike. */
-  def readPruned(spark: SparkSession, root: String, colName: String,
-      lo: Long, hi: Long): DataFrame = {
-    val v = currentVersion(spark, root).getOrElse(
-      sys.error(s"no committed version at $root"))
-    val (plan, _) = prunePlan(spark, root, v, colName, lo, hi)
-    scanPruned(spark, root, v, plan)
-      .where(col(colName).cast("long").between(lo, hi))
+    val kept = plan.collect { case Left(gs) => gs.map(_.files.size).sum }.sum
+    (plan, SkipReport(kept, total, dirsKept, dirsTotal))
   }
 
   /** Assemble a pruned plan into a DataFrame: kept files scanned under
@@ -1917,185 +1806,157 @@ object Txn {
     }.getOrElse(empty)
   }
 
-  /** POINT-LOOKUP read `col IN (values)` via the BLOOM sidecar (r10):
-    * keeps only the files whose bloom filter may contain at least one
-    * probe value (min/max stats, when also present, prune first). This
-    * is the skipping story min/max CANNOT tell: on a table clustered by
-    * some OTHER column (time, tenant, z-order on two dims), every
-    * file's range over an unclustered high-cardinality key spans
-    * ~everything — range stats keep 100% of files — while a bloom keeps
-    * ~(matching files + FP%). Delta ships the same trade as its bloom
-    * filter index. One-sided by construction (a bloom never rejects a
-    * present key), so readPoint ≡ read().where(col.isin(values)) —
-    * TxnSpec pins the equivalence and the registered txn_bloom_point
-    * row hash-gates it; files without a bloom row are always read.
-    * Tombstoned versions fold their anti-joins over the pruned scan
-    * exactly like [[readPruned]]. */
-  /** The stats-and-bloom keep decision for a point probe: a file
-    * survives iff SOME probe value passes both its range stats and its
-    * bloom (absent sidecar rows always keep — one-sided). */
-  private def pointKeep(spark: SparkSession, root: String, version: Long,
-      colName: String, values: Seq[Long]): String => Boolean = {
-    val stats = fileStats(spark, root, version)
-    val blooms = fileBlooms(spark, root, version)
-    base => values.exists { value =>
-      statsKeep(stats, colName, value, value)(base) &&
-        (blooms.get((base, colName)) match {
-          case Some(bits) => bloomMayContain(bits, value)
-          case None       => true
-        })
+  /** The skipping decision alone, without a scan: the data files of
+    * version `version` that `probes` keep, plus the [[SkipReport]] —
+    * the measurable skipping claim. Tombstone key dirs are not data
+    * files and appear nowhere. The native SQL scan hands the kept paths
+    * straight to Spark's vectorized parquet table, so a SQL point query
+    * on an indexed table opens O(matching files). */
+  def skipDecision(spark: SparkSession, root: String, version: Long,
+      probes: Seq[SkipProbe]): (Seq[String], SkipReport) = {
+    val (plan, report) = prunePlanBy(spark, root, version,
+      probesKeepFile(spark, root, version, probes), probesKeepPart(probes))
+    (plan.collect { case Left(gs) => gs.flatMap(_.files) }.flatten, report)
+  }
+
+  /** The pruned scan of version `version` under `probes`, WITHOUT the
+    * probes' residual: only kept files are opened, partition columns
+    * reconstruct hive-unescaped from the directory values, and tombstone
+    * anti-joins fold over the pruned scan in log order. One-sided, so
+    * the frame may still hold rows the probes reject: it is ≡ the
+    * unpruned read once the caller applies its own filter (the SQL V1
+    * bridge re-applies every pushed filter). Everyone else wants
+    * [[readSkipping]]. */
+  def skipScan(spark: SparkSession, root: String, version: Long,
+      probes: Seq[SkipProbe]): (DataFrame, SkipReport) = {
+    val (plan, report) = prunePlanBy(spark, root, version,
+      probesKeepFile(spark, root, version, probes), probesKeepPart(probes))
+    (scanPruned(spark, root, version, plan), report)
+  }
+
+  /** DATA-SKIPPING read of the conjunction of `probes` on the current
+    * version: [[skipScan]] plus each probe's residual, ANDed in probe
+    * order — `RangeProbe` keeps `cast(col as long) BETWEEN lo AND hi`,
+    * `PointProbe` `cast(col as long) IN values`, `StrPointProbe` and
+    * `PartProbe` `col IN values`. Semantically ≡
+    * `read(...).where(<those predicates>)` whenever the sidecars are
+    * honest — TxnSpec/CatalogSpec pin the equivalence and the registered
+    * txn_skipping, txn_skipping_tombstone, txn_bloom_point,
+    * txn_bloom_point_str, txn_partitioned and txn_partition_skipping
+    * rows hash-gate it against DuckDB.
+    *
+    *  - Ranges open only the files whose recorded min/max may overlap
+    *    [lo, hi]; on a clustered commit ([[compactCommit]] output or
+    *    `compactParquetZorder`) this is the 100 TB point-query path:
+    *    O(matching files), not O(table).
+    *  - Points keep only the files whose BLOOM may contain some probe
+    *    value (min/max, when also present, prune first) — the story
+    *    min/max cannot tell on a key the table is not clustered by,
+    *    where every file's range spans ~everything. String points hash
+    *    through the same xxhash64 feed the writer used and check the
+    *    `_stats_str.tsv` lexicographic bounds. A bloom never rejects a
+    *    present key; files without a sidecar row are always read.
+    *  - Partition values drop non-matching `col=value` subtrees at
+    *    whatever level the column lives, straight off the directory
+    *    listing (no sidecar); flat dirs in a mixed chain are read whole.
+    *    Values may be any type whose toString matches the written
+    *    directory names (longs, strings); they hive-escape before
+    *    matching.
+    *
+    * Tombstoned versions (r10): file stats cannot see row deletions,
+    * but they don't need to — the tombstone anti-joins fold over the
+    * PRUNED scan in log order, the deletion-vector shape Delta uses.
+    * Pruning only drops files whose every row the residual rejects and
+    * the anti-join only ever REMOVES rows, so prune-then-delete ≡
+    * delete-then-filter; one erasure costs each read one
+    * O(deleted-keys) anti-join until compaction. The version is
+    * resolved ONCE and pins file list, schema and tombstone fold
+    * alike. */
+  def readSkipping(spark: SparkSession, root: String,
+      probes: Seq[SkipProbe]): DataFrame = {
+    require(probes.nonEmpty, "readSkipping needs at least one probe")
+    def valued[A](c: String, vs: Seq[A]): Seq[A] = {
+      require(vs.nonEmpty, s"readSkipping: the probe on $c needs at least one value")
+      vs
     }
-  }
-
-  def readPoint(spark: SparkSession, root: String, colName: String,
-      values: Seq[Long]): DataFrame = {
-    require(values.nonEmpty, "readPoint needs at least one probe value")
+    val residual = probes.map {
+      case RangeProbe(c, lo, hi) => col(c).cast("long").between(lo, hi)
+      case PointProbe(c, vs)     => col(c).cast("long").isin(valued(c, vs): _*)
+      case StrPointProbe(c, vs)  => col(c).isin(valued(c, vs): _*)
+      case PartProbe(c, vs)      => col(c).isin(valued(c, vs): _*)
+    }.reduce(_ && _)
     val v = currentVersion(spark, root).getOrElse(
       sys.error(s"no committed version at $root"))
-    val (plan, _) = prunePlanBy(spark, root, v,
-      pointKeep(spark, root, v, colName, values))
-    scanPruned(spark, root, v, plan)
-      .where(col(colName).cast("long").isin(values: _*))
+    skipScan(spark, root, v, probes)._1.where(residual)
   }
 
-  /** The file-count decision [[readPoint]] would make: (kept, total)
-    * data files for probing `values` on `colName` — the measurable
-    * skipping claim without executing the scan. */
-  def probeFiles(spark: SparkSession, root: String, colName: String,
-      values: Seq[Long]): (Int, Int) = {
-    val v = currentVersion(spark, root).getOrElse(
-      sys.error(s"no committed version at $root"))
-    val (plan, total) = prunePlanBy(spark, root, v,
-      pointKeep(spark, root, v, colName, values))
-    (plan.collect { case Left(gs) => gs.map(_.files.size).sum }.sum, total)
-  }
-
-  /** STRING point-lookup read `col IN (values)` (r13): the
-    * [[readPoint]] economics for STRING keys — doc IDs, URLs, content
-    * hashes, the natural identifiers of a text corpus — via the
-    * xxhash64-fed blooms and the `_stats_str.tsv` lexicographic
-    * bounds. One-sided like every skipping read: ≡
-    * `read().where(col isin values)`, files without sidecar rows are
-    * always read; tombstones fold over the pruned scan. */
-  def readPointString(spark: SparkSession, root: String, colName: String,
-      values: Seq[String]): DataFrame = {
-    require(values.nonEmpty, "readPointString needs at least one probe value")
-    val v = currentVersion(spark, root).getOrElse(
-      sys.error(s"no committed version at $root"))
-    val (plan, _) = prunePlanBy(spark, root, v,
-      probesKeepFile(spark, root, v, Seq(StrPointProbe(colName, values))))
-    scanPruned(spark, root, v, plan)
-      .where(col(colName).isin(values: _*))
-  }
-
-  /** The file-count decision [[readPointString]] would make: (kept,
-    * total) — the measurable string-bloom skipping claim. */
-  def probeFilesString(spark: SparkSession, root: String, colName: String,
-      values: Seq[String]): (Int, Int) = {
-    val v = currentVersion(spark, root).getOrElse(
-      sys.error(s"no committed version at $root"))
-    val (plan, total) = prunePlanBy(spark, root, v,
-      probesKeepFile(spark, root, v, Seq(StrPointProbe(colName, values))))
-    (plan.collect { case Left(gs) => gs.map(_.files.size).sum }.sum, total)
-  }
-
-  /** TWO-RUNG pruned read on a hive-partitioned table (r11, closing the
-    * r10 "partitioned dirs refuse file skipping" gap): directory
-    * pruning (`partCol IN values` straight off the listing) composes
-    * with file-stats skipping (`lo <= col <= hi` against the
-    * per-partition `_stats.tsv` sidecars) and the residual filter;
-    * tombstones fold over the pruned scan in log order. This is the
-    * actual 100 TB point-query read path — partition → file → row: a
-    * year-partitioned decade of data probed for one customer's January
-    * opens one directory listing, then only the files whose stats admit
-    * the key, then row-level parquet pushdown inside those. Semantics ≡
-    * `read(...).where(partCol isin values && col between lo and hi)` —
-    * TxnSpec pins the equivalence and the dirs/files counts. Flat dirs
-    * in a mixed chain skip the directory rung (one-sided) but still
-    * prune by stats. */
-  def readPartitionFilePruned(spark: SparkSession, root: String,
-      partCol: String, values: Seq[Any], colName: String, lo: Long,
-      hi: Long): DataFrame = {
-    require(values.nonEmpty, "readPartitionFilePruned needs at least one value")
-    val v = currentVersion(spark, root).getOrElse(
-      sys.error(s"no committed version at $root"))
-    val wanted = values.map(dirValue).toSet
-    val (plan, _) = prunePlanBy(spark, root, v,
-      statsKeep(fileStats(spark, root, v), colName, lo, hi),
-      keepPart = (c, pv) => c != partCol || wanted(pv))
-    scanPruned(spark, root, v, plan)
-      .where(col(partCol).isin(values: _*) &&
-        col(colName).cast("long").between(lo, hi))
-  }
-
-  /** The decisions [[readPartitionFilePruned]] would make, without the
-    * scan: (partition dirs kept, partition dirs total, files kept,
-    * files in kept dirs) — the measurable two-rung skipping claim
-    * (dirs_kept < dirs_total proves the directory rung fired AND
-    * files_kept < files-in-kept-dirs proves the file rung fired on what
-    * survived). */
-  def partitionFileProbe(spark: SparkSession, root: String,
-      partCol: String, values: Seq[Any], colName: String, lo: Long,
-      hi: Long): (Int, Int, Int, Int) = {
+  /** LEAF-granular partition census of the current version: (kept,
+    * total) leaf `col=value` dirs across the version's partitioned
+    * snapshot dirs, a leaf kept iff every level of its chain passes
+    * [[probesKeepPart]]. Unlike [[SkipReport]]'s per-level visit
+    * counts every leaf is listed, so single-level layouts count their
+    * immediate subdirs and multi-level layouts count leaves; flat dirs
+    * and tombstones count nowhere. */
+  def partitionCensus(spark: SparkSession, root: String,
+      probes: Seq[SkipProbe]): (Int, Int) = {
     val v = currentVersion(spark, root).getOrElse(
       sys.error(s"no committed version at $root"))
     val f = fs(spark, root)
-    val wanted = values.map(dirValue).toSet
-    var dirsKept = 0
-    var dirsTotal = 0
-    manifestDirs(f, root, v).map(parseEntry).foreach {
+    val keep = probesKeepPart(probes)
+    val leaves = manifestDirs(f, root, v).map(parseEntry).flatMap {
       case (dir, None) =>
         val abs = resolveDir(root, dir)
-        if (isPartitionedDir(f, abs))
-          partitionLeafDirs(f, abs).foreach { case (_, parts) =>
-            dirsTotal += 1
-            if (parts.forall { case (c, pv) => c != partCol || wanted(pv) })
-              dirsKept += 1
-          }
-      case _ => ()
+        if (isPartitionedDir(f, abs)) partitionLeafDirs(f, abs).map(_._2)
+        else Nil
+      case _ => Nil
     }
-    val wantedVals = values.map(dirValue).toSet
-    val (plan, totalInKept) = prunePlanBy(spark, root, v,
-      statsKeep(fileStats(spark, root, v), colName, lo, hi),
-      keepPart = (c, pv) => c != partCol || wantedVals(pv))
-    val filesKept = plan.collect { case Left(gs) => gs.map(_.files.size).sum }.sum
-    (dirsKept, dirsTotal, filesKept, totalInKept)
+    (leaves.count(_.forall { case (c, pv) => keep(c, pv) }), leaves.size)
   }
 
-  /** One-sided skipping probes the SQL read path derives from pushed
-    * data-source filters (r12, r11 verdict item 1): each probe may only
-    * ever KEEP extra files/dirs, never drop one holding a matching row,
-    * so a conjunction of probes composes one-sided too. Ranges and
-    * points consult the `_stats.tsv`/`_bloom.tsv` sidecars exactly like
-    * [[readPruned]]/[[readPoint]]; partition probes ride the directory
-    * listing like [[readPartitionPruned]]. */
-  private[graft] sealed trait SkipProbe
-  private[graft] final case class RangeProbe(col: String, lo: Long,
+  /** One-sided skipping probes: the SQL read path derives them from
+    * pushed data-source filters (r12), programmatic callers hand them
+    * to [[readSkipping]]. Each probe may only ever KEEP extra
+    * files/dirs, never drop one holding a matching row, so a
+    * conjunction of probes composes one-sided too. Ranges and points
+    * consult the `_stats.tsv`/`_bloom.tsv` sidecars; partition probes
+    * ride the directory listing. */
+  sealed trait SkipProbe
+  final case class RangeProbe(col: String, lo: Long,
       hi: Long) extends SkipProbe
-  private[graft] final case class PointProbe(col: String,
+  final case class PointProbe(col: String,
       values: Seq[Long]) extends SkipProbe
-  private[graft] final case class PartProbe(col: String,
+  final case class PartProbe(col: String,
       values: Seq[Any]) extends SkipProbe
   /** String equality/IN probe against the `_stats_str.tsv` sidecars
-    * (r12): a file survives iff SOME probe value falls inside its
-    * lexicographic [min, max] — the categorical-column skipping rung
+    * (r12) and the xxhash64-fed string blooms (r13): a file survives
+    * iff SOME probe value falls inside its lexicographic [min, max] and
+    * may be in its bloom — the categorical-column skipping rung
     * (lang = 'en' on a lang-clustered corpus). */
-  private[graft] final case class StrPointProbe(col: String,
+  final case class StrPointProbe(col: String,
       values: Seq[String]) extends SkipProbe
 
-  /** The conjunction keep-decision for a file key under `probes`:
-    * ranges check min/max stats, points check stats AND blooms per
-    * value (absent sidecar rows always keep), partition probes are
-    * handled at the directory rung and keep every file here. */
+  /** The file rung: the conjunction keep-decision for a file key under
+    * `probes`. Ranges check min/max stats, points check stats AND
+    * blooms per value (absent sidecar rows always keep), partition
+    * probes are handled at the directory rung and keep every file
+    * here. Sidecars load on first use, so a partition-only plan reads
+    * none. */
   private def probesKeepFile(spark: SparkSession, root: String,
       version: Long, probes: Seq[SkipProbe]): String => Boolean = {
-    val stats = fileStats(spark, root, version)
+    lazy val stats = fileStats(spark, root, version)
     lazy val blooms = fileBlooms(spark, root, version)
     lazy val strStats = fileStatsStr(spark, root, version)
+    // min/max: a file survives unless its recorded range provably
+    // misses [lo, hi] (no stats row or null bounds = always kept)
+    def statsKeep(base: String, c: String, lo: Long, hi: Long): Boolean =
+      stats.get((base, c)) match {
+        case Some((Some(mn), Some(mx))) => mx >= lo && mn <= hi
+        case _                          => true
+      }
     base => probes.forall {
-      case RangeProbe(c, lo, hi) => statsKeep(stats, c, lo, hi)(base)
+      case RangeProbe(c, lo, hi) => statsKeep(base, c, lo, hi)
       case PointProbe(c, vs) => vs.exists { v =>
-        statsKeep(stats, c, v, v)(base) &&
+        statsKeep(base, c, v, v) &&
           (blooms.get((base, c)) match {
             case Some(bits) => bloomMayContain(bits, v)
             case None       => true
@@ -2129,59 +1990,15 @@ object Txn {
     }
   }
 
-  /** Directory-rung keep-decision: a `col=value` subdir survives unless
-    * SOME partition probe names its column and excludes its value
-    * (probe values hive-escape before matching the raw listing). */
+  /** The directory rung: a `col=value` subdir survives unless SOME
+    * partition probe names its column and excludes its value (probe
+    * values hive-escape before matching the raw listing). */
   private def probesKeepPart(
       probes: Seq[SkipProbe]): (String, String) => Boolean = {
     val parts = probes.collect {
       case PartProbe(c, vs) => c -> vs.map(dirValue).toSet
     }
     (c, pv) => parts.forall { case (pc, wanted) => c != pc || wanted(pv) }
-  }
-
-  /** Kept-file decision for the NATIVE SQL scan (flat-dir versions):
-    * (kept file paths, kept count, total count). The caller hands the
-    * kept paths straight to Spark's vectorized parquet table, so a SQL
-    * point query on an indexed table opens O(matching files) — the
-    * BLOOM/PARTSKIP economics, reachable from pasted SQL. */
-  private[graft] def sqlKeptFiles(spark: SparkSession, root: String,
-      version: Long,
-      probes: Seq[SkipProbe]): (Seq[String], Int, Int) = {
-    val (plan, total) = prunePlanBy(spark, root, version,
-      probesKeepFile(spark, root, version, probes),
-      probesKeepPart(probes))
-    val kept = plan.collect { case Left(gs) => gs.flatMap(_.files) }.flatten
-    (kept, kept.size, total)
-  }
-
-  /** Probe-pruned read for the SQL V1 bridge (tombstoned or partitioned
-    * chains): partition probes prune directories off the listing, file
-    * probes prune by sidecar stats/blooms, tombstone anti-joins fold
-    * over the pruned scan in log order, and the partition column
-    * reconstructs hive-unescaped. One-sided by construction — the
-    * caller re-applies every pushed filter on top, so semantics stay
-    * ≡ the unpruned read. Returns the frame plus the (kept, total)
-    * file decision for observability. */
-  private[graft] def readSqlPruned(spark: SparkSession, root: String,
-      version: Long, probes: Seq[SkipProbe]): (DataFrame, Int, Int, Int, Int) = {
-    // tally the directory rung by wrapping the keep predicate: total
-    // files below only counts files in SURVIVING dirs (dropped dirs are
-    // never listed — that unpaid listing IS the dir rung's win), so the
-    // dir counts are the only observable trace of it
-    var dirsTotal = 0
-    var dirsKept = 0
-    val kp = probesKeepPart(probes)
-    val (plan, total) = prunePlanBy(spark, root, version,
-      probesKeepFile(spark, root, version, probes),
-      (c, v) => {
-        dirsTotal += 1
-        val k = kp(c, v)
-        if (k) dirsKept += 1
-        k
-      })
-    val kept = plan.collect { case Left(gs) => gs.map(_.files.size).sum }.sum
-    (scanPruned(spark, root, version, plan), kept, total, dirsKept, dirsTotal)
   }
 
   private def bloomMayContain(bits: Array[Long], value: Long): Boolean = {
@@ -2264,7 +2081,8 @@ object Txn {
     * [[scanPruned]] contract. */
   private[graft] def snapshotChunk(spark: SparkSession, root: String,
       version: Long, keys: Set[String]): DataFrame = {
-    val (plan, _) = prunePlanBy(spark, root, version, keys.contains)
+    val (plan, _) = prunePlanBy(spark, root, version, keys.contains,
+      (_, _) => true)
     scanPruned(spark, root, version, plan)
   }
 

@@ -571,7 +571,7 @@ class CatalogSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $c.p SELECT id, 9 AS day FROM range(1000, 1050)")
     val tRoot = GraftCatalog.resolve(spark, catRoot, "p")
     // the shards landed hive-partitioned: 4 day dirs + 1 day dir
-    assert(Txn.partitionProbe(spark, tRoot, "day", Seq(9L)) == ((1, 5)))
+    assert(Txn.partitionCensus(spark, tRoot, Seq(Txn.PartProbe("day", Seq(9L)))) == ((1, 5)))
     // SELECT with a partition filter prunes directories through SQL
     graft.catalog.GraftScanStats.reset()
     assert(spark.sql(s"SELECT count(*) AS n FROM $c.p WHERE day = 9")
@@ -585,7 +585,7 @@ class CatalogSpec extends SparkSpec {
     // INSERT OVERWRITE keeps the partitioned layout (CAS-pinned commit)
     spark.sql(s"INSERT OVERWRITE $c.p SELECT id, id % 2 AS day FROM range(10)")
     assert(spark.sql(s"SELECT count(*) AS n FROM $c.p").head().getLong(0) == 10L)
-    assert(Txn.partitionProbe(spark, tRoot, "day", Seq(0L)) == ((1, 2)))
+    assert(Txn.partitionCensus(spark, tRoot, Seq(Txn.PartProbe("day", Seq(0L)))) == ((1, 2)))
     // r12: partitioned INSERTs take the NATIVE executor-parallel writer
     // (graft task-file names, no Spark .c000 suffix) with the partition
     // column carried by the directory, not the files
@@ -924,12 +924,12 @@ class CatalogSpec extends SparkSpec {
         s"FROM range(${k * 400}, ${k * 400 + 400})")
     }
     val tRoot = GraftCatalog.resolve(spark, catRoot, "cp")
-    assert(Txn.partitionProbe(spark, tRoot, "day", Seq(1L)) == ((3, 12)))
+    assert(Txn.partitionCensus(spark, tRoot, Seq(Txn.PartProbe("day", Seq(1L)))) == ((3, 12)))
     spark.sql(s"CALL $c.compact(`table` => 'cp', zorder => '', " +
       s"target_files => 4)")
     // the compacted snapshot is STILL hive-partitioned: one dir chain,
     // 4 day dirs, and the directory rung fires through SQL
-    assert(Txn.partitionProbe(spark, tRoot, "day", Seq(1L)) == ((1, 4)),
+    assert(Txn.partitionCensus(spark, tRoot, Seq(Txn.PartProbe("day", Seq(1L)))) == ((1, 4)),
       "compaction must preserve the partitioned layout")
     graft.catalog.GraftScanStats.reset()
     assert(spark.sql(s"SELECT count(*) AS n FROM $c.cp WHERE day = 1")
@@ -940,7 +940,7 @@ class CatalogSpec extends SparkSpec {
     // zorder composes: clusters WITHIN partitions, layout intact
     spark.sql(s"CALL $c.compact(`table` => 'cp', zorder => 'id', " +
       s"target_files => 4)")
-    assert(Txn.partitionProbe(spark, tRoot, "day", Seq(1L)) == ((1, 4)))
+    assert(Txn.partitionCensus(spark, tRoot, Seq(Txn.PartProbe("day", Seq(1L)))) == ((1, 4)))
     assert(spark.sql(s"SELECT count(*) AS n FROM $c.cp").head().getLong(0) == 1200L)
   }
 
@@ -983,8 +983,8 @@ class CatalogSpec extends SparkSpec {
     assert(d2.dirsKept == 6 && d2.dirsTotal == 9,
       s"second-level rung must drop 3 of 6 leaf dirs: $d2")
     // programmatic probes see LEAF granularity
-    assert(Txn.partitionProbe(spark, tRoot, "year", Seq(2021L)) == ((2, 6)))
-    assert(Txn.partitionProbe(spark, tRoot, "src", Seq("web")) == ((3, 6)))
+    assert(Txn.partitionCensus(spark, tRoot, Seq(Txn.PartProbe("year", Seq(2021L)))) == ((2, 6)))
+    assert(Txn.partitionCensus(spark, tRoot, Seq(Txn.PartProbe("src", Seq("web")))) == ((3, 6)))
     // NULL partition values land in the sentinel dir and round-trip
     spark.sql(s"INSERT INTO $c.mp VALUES (9999, 2020, NULL)")
     assert(spark.sql(s"SELECT count(*) AS n FROM $c.mp WHERE src IS NULL")
@@ -993,7 +993,7 @@ class CatalogSpec extends SparkSpec {
     spark.sql(s"INSERT OVERWRITE $c.mp SELECT id, 2030 + id % 2, 'x' " +
       s"FROM range(10)")
     assert(spark.sql(s"SELECT count(*) AS n FROM $c.mp").head().getLong(0) == 10L)
-    assert(Txn.partitionProbe(spark, tRoot, "year", Seq(2030L)) == ((1, 2)))
+    assert(Txn.partitionCensus(spark, tRoot, Seq(Txn.PartProbe("year", Seq(2030L)))) == ((1, 2)))
   }
 
   test("STRING bloom sidecars: point lookups on an UNCLUSTERED string " +
@@ -1016,11 +1016,12 @@ class CatalogSpec extends SparkSpec {
     // programmatic claim: the bloom keeps O(matching) of 16 files
     val probe = docs.where(fcol("id") === 7777L)
       .select("suid").head().getString(0)
-    val (kept, total) = Txn.probeFilesString(spark, root, "suid", Seq(probe))
+    val (_, Txn.SkipReport(kept, total, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, Seq(Txn.StrPointProbe("suid", Seq(probe))))
     assert(total == 16 && kept <= 3,
       s"string bloom must prune an unclustered key: $kept/$total")
     // ≡ the unpruned read
-    val got = Txn.readPointString(spark, root, "suid", Seq(probe))
+    val got = Txn.readSkipping(spark, root, Seq(Txn.StrPointProbe("suid", Seq(probe))))
       .select("id").collect().map(_.getLong(0)).toSet
     val want = Txn.read(spark, root).where(fcol("suid") === probe)
       .select("id").collect().map(_.getLong(0)).toSet
@@ -1033,6 +1034,92 @@ class CatalogSpec extends SparkSpec {
     val d = graft.catalog.GraftScanStats.lastDecision.get
     assert(d.filesKept <= 3 && d.filesTotal == 16,
       s"SQL string point query must open O(matching) files: $d")
+  }
+
+  test("probe conjunctions: readSkipping ≡ the filtered read, and its " +
+      "SkipReport is the decision pasted SQL records") {
+    import spark.implicits._
+    val c = sqlCat("conj")
+    val catRoot = spark.conf.get(s"spark.sql.catalog.$c.root")
+    val root = fresh("conj_t")
+    // two-level (year, src) layout; inside each leaf the files hold
+    // distinct id ranges, and key/skey are spread over every file
+    def keyOf(i: Long): Long = (i * 2654435761L) % 100003L
+    def skeyOf(i: Long): String = s"doc-${(i * 40503L) % 100003L}"
+    val df = spark.range(0, 6000).select(col("id"),
+      (lit(2020L) + col("id") % 3).as("year"),
+      when(col("id") % 2 === 0, "web").otherwise("book").as("src"),
+      ((col("id") * 2654435761L) % 100003L).as("key"),
+      concat(lit("doc-"), ((col("id") * 40503L) % 100003L).cast("string"))
+        .as("skey"))
+      .repartitionByRange(4, col("id"))
+    Txn.commitPartitioned(df, root, "year,src", statsCols = Seq("id"),
+      bloomCols = Seq("key", "skey"), bloomBits = 1 << 14)
+    Txn.commitDelete(spark, root, "id", Seq(1234L).toDF("id"))
+    GraftCatalog.create(spark, catRoot, "cj", root)
+    // ids ≡ 4 (mod 6) live under year=2021/src=web; 1234 is tombstoned
+    val hits = Seq(1234L, 1240L, 2230L)
+    val probes = Seq(Txn.RangeProbe("id", 1000L, 2999L),
+      Txn.PointProbe("key", hits.map(keyOf)),
+      Txn.StrPointProbe("skey", hits.map(skeyOf)),
+      Txn.PartProbe("year", Seq(2021L)), Txn.PartProbe("src", Seq("web")))
+    val got = Txn.readSkipping(spark, root, probes).collect().toSet
+    val want = Txn.read(spark, root).where(col("id").between(1000L, 2999L) &&
+      col("key").isin(hits.map(keyOf): _*) &&
+      col("skey").isin(hits.map(skeyOf): _*) &&
+      col("year") === 2021L && col("src") === "web").collect().toSet
+    assert(got == want)
+    assert(got.map(_.getAs[Long]("id")) == Set(1240L, 2230L))
+    graft.catalog.GraftScanStats.reset()
+    val sqlIds = spark.sql(s"SELECT id FROM $c.cj " +
+      s"WHERE id BETWEEN 1000 AND 2999 " +
+      s"AND key IN (${hits.map(keyOf).mkString(", ")}) " +
+      s"AND skey IN (${hits.map(h => s"'${skeyOf(h)}'").mkString(", ")}) " +
+      s"AND year = 2021 AND src = 'web'").collect().map(_.getLong(0)).toSet
+    assert(sqlIds == Set(1240L, 2230L))
+    val d = graft.catalog.GraftScanStats.lastDecision.get
+    val (_, report) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, probes)
+    assert(report ==
+      Txn.SkipReport(d.filesKept, d.filesTotal, d.dirsKept, d.dirsTotal),
+      s"programmatic $report vs SQL $d")
+    assert(report.dirsKept < report.dirsTotal &&
+      report.filesKept < report.filesTotal, s"both rungs must fire: $report")
+  }
+
+  test("partitioned write distribution is read from the session that " +
+      "built the write, not the active one") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.connector.catalog.{Identifier, SupportsWrite}
+    import org.apache.spark.sql.connector.distributions.UnspecifiedDistribution
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RequiresDistributionAndOrdering}
+    import org.apache.spark.sql.types.{LongType, StructType}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val c = sqlCat("wdist")
+    val catRoot = spark.conf.get(s"spark.sql.catalog.$c.root")
+    spark.sql(s"CREATE TABLE $c.wd (id BIGINT, day BIGINT) PARTITIONED BY (day)")
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.write.distribution", "none")
+    val info = new LogicalWriteInfo {
+      override def options(): CaseInsensitiveStringMap =
+        CaseInsensitiveStringMap.empty()
+      override def queryId(): String = "wdist"
+      override def schema(): StructType =
+        new StructType().add("id", LongType).add("day", LongType)
+    }
+    // the write is built while s2 is active …
+    SparkSession.setActiveSession(s2)
+    val write = try {
+      val cat = new graft.catalog.GraftSqlCatalog
+      cat.initialize(c, new CaseInsensitiveStringMap(
+        java.util.Map.of("root", catRoot)))
+      cat.loadTable(Identifier.of(Array.empty[String], "wd"))
+        .asInstanceOf[SupportsWrite].newWriteBuilder(info).build()
+    } finally SparkSession.setActiveSession(spark)
+    // … and planned while the default-conf session is active
+    assert(spark.conf.getOption("spark.graft.write.distribution").isEmpty)
+    assert(write.asInstanceOf[RequiresDistributionAndOrdering]
+      .requiredDistribution().isInstanceOf[UnspecifiedDistribution])
   }
 
   test("ALTER TABLE RENAME/DROP COLUMN via column mapping: metadata-only, " +

@@ -115,19 +115,22 @@ class TxnSpec extends SparkSpec {
       spark.range(0, 8000).toDF("id")
         .repartitionByRange(8, col("id")).sortWithinPartitions("id"),
       root, statsCols = Seq("id"))
-    val (kept, total) = Txn.pruneFiles(spark, root, "id", 2100L, 2900L)
+    val (kept, Txn.SkipReport(_, total, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, Seq(Txn.RangeProbe("id", 2100L, 2900L)))
     assert(total >= 8, s"expected >= 8 data files, got $total")
     assert(kept.size < total,
       s"stats pruned nothing: kept ${kept.size} of $total")
     assert(kept.size <= 2, s"narrow range should hit <= 2 files, got ${kept.size}")
-    val pruned = ids(Txn.readPruned(spark, root, "id", 2100L, 2900L))
+    val pruned = ids(Txn.readSkipping(spark, root, Seq(Txn.RangeProbe("id", 2100L, 2900L))))
     assert(pruned == (2100L to 2900L).toSet)
     // no-stats snapshot: pruning keeps everything (never a filter)
     val root2 = freshRoot("skip2")
     Txn.commit((1L to 100L).toDF("id"), root2)
-    val (kept2, total2) = Txn.pruneFiles(spark, root2, "id", 5L, 10L)
+    val (kept2, Txn.SkipReport(_, total2, _, _)) = Txn.skipDecision(spark, root2,
+      Txn.currentVersion(spark, root2).get, Seq(Txn.RangeProbe("id", 5L, 10L)))
     assert(kept2.size == total2)
-    assert(ids(Txn.readPruned(spark, root2, "id", 5L, 10L)) == (5L to 10L).toSet)
+    assert(ids(Txn.readSkipping(spark, root2, Seq(Txn.RangeProbe("id", 5L, 10L)))) ==
+      (5L to 10L).toSet)
   }
 
   test("commitIf: stale writer detected, fresh writer lands") {
@@ -342,10 +345,12 @@ class TxnSpec extends SparkSpec {
     Txn.commitAppend(spark.range(1000, 2000).toDF("id")
       .repartitionByRange(4, col("id")).sortWithinPartitions("id"),
       root, statsCols = Seq("id"))
-    val (kept, total) = Txn.pruneFiles(spark, root, "id", 1200L, 1400L)
+    val (kept, Txn.SkipReport(_, total, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, Seq(Txn.RangeProbe("id", 1200L, 1400L)))
     assert(total >= 8, s"expected >= 8 files across both dirs, got $total")
     assert(kept.size <= 2, s"range in the appended dir should prune base files, got ${kept.size}")
-    assert(ids(Txn.readPruned(spark, root, "id", 1200L, 1400L)) == (1200L to 1400L).toSet)
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.RangeProbe("id", 1200L, 1400L)))) ==
+      (1200L to 1400L).toSet)
     Txn.vacuum(spark, root, keepLast = 1)
     // the kept version references BOTH dirs — vacuum must retain both
     assert(Txn.read(spark, root).count() == 2000L)
@@ -442,7 +447,7 @@ class TxnSpec extends SparkSpec {
     Txn.commit(spark.range(0, 100).toDF("id"), root2, statsCols = Seq("id"))
     Txn.commitAppend(spark.range(100, 200).toDF("id")
       .withColumn("extra", col("id") * 2), root2, statsCols = Seq("id"))
-    val prunedOld = Txn.readPruned(spark, root2, "id", 10L, 20L)
+    val prunedOld = Txn.readSkipping(spark, root2, Seq(Txn.RangeProbe("id", 10L, 20L)))
     assert(prunedOld.columns.contains("extra"),
       "a pruned read that keeps only pre-evolution files must still surface the evolved column")
     assert(prunedOld.where(col("extra").isNull).count() == 11L)
@@ -472,20 +477,22 @@ class TxnSpec extends SparkSpec {
       .repartitionByRange(8, col("id")).sortWithinPartitions("id"),
       root, statsCols = Seq("id"))
     Txn.commitDelete(spark, root, "id", Seq(5L, 4000L).toDF("id"))
-    val (keptT, totalT) = Txn.pruneFiles(spark, root, "id", 0L, 10L)
+    val (keptT, Txn.SkipReport(_, totalT, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, Seq(Txn.RangeProbe("id", 0L, 10L)))
     assert(keptT.size < totalT,
       s"tombstoned version must still prune: kept ${keptT.size} of $totalT")
-    assert(ids(Txn.readPruned(spark, root, "id", 0L, 10L)) ==
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.RangeProbe("id", 0L, 10L)))) ==
       ((0L to 10L).toSet - 5L))
-    assert(ids(Txn.readPruned(spark, root, "id", 3995L, 4005L)) ==
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.RangeProbe("id", 3995L, 4005L)))) ==
       ((3995L to 4005L).toSet - 4000L))
     // ...and compaction (a full commit of the folded read) restores the
     // join-free path
     Txn.commit(Txn.read(spark, root).repartitionByRange(4, col("id"))
       .sortWithinPartitions("id"), root, statsCols = Seq("id"))
-    val (kept, total) = Txn.pruneFiles(spark, root, "id", 0L, 10L)
+    val (kept, Txn.SkipReport(_, total, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, Seq(Txn.RangeProbe("id", 0L, 10L)))
     assert(kept.size < total)
-    assert(ids(Txn.readPruned(spark, root, "id", 0L, 10L)) ==
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.RangeProbe("id", 0L, 10L)))) ==
       ((0L to 10L).toSet - 5L))
     // vacuum keeps tombstone dirs the retained version references
     val root2 = freshRoot("delvac")
@@ -746,30 +753,33 @@ class TxnSpec extends SparkSpec {
     // min/max on the unclustered key keeps ~EVERY file for the point
     // (a permuted key's per-file range spans nearly the whole domain;
     // allow one lucky miss at the domain edges)…
-    val (mmKept, total) = Txn.pruneFiles(spark, root, "key", probe, probe)
+    val (mmKept, Txn.SkipReport(_, total, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, Seq(Txn.RangeProbe("key", probe, probe)))
     assert(total >= 8 && mmKept.size >= total - 1,
       s"range stats should keep ~all $total files, kept ${mmKept.size}")
     // …the bloom keeps a small fraction
-    val (bKept, bTotal) = Txn.probeFiles(spark, root, "key", Seq(probe))
+    val (_, Txn.SkipReport(bKept, bTotal, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, Seq(Txn.PointProbe("key", Seq(probe))))
     assert(bTotal == total && bKept <= math.max(2, total / 4),
       s"bloom kept $bKept of $bTotal")
     // content ≡ the plain filter (one-sidedness means no lost match)
-    val got = Txn.readPoint(spark, root, "key", Seq(probe))
+    val got = Txn.readSkipping(spark, root, Seq(Txn.PointProbe("key", Seq(probe))))
       .select("grp").collect().map(_.getLong(0)).sorted.toSeq
     val want = df.where(col("key") === probe)
       .select("grp").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == want && got.nonEmpty)
     // an absent key returns nothing (and prunes to ~nothing)
-    assert(Txn.readPoint(spark, root, "key", Seq(999999937L)).count() == 0L)
+    assert(Txn.readSkipping(spark, root, Seq(Txn.PointProbe("key", Seq(999999937L)))).count() == 0L)
     // compaction RE-DERIVES the sidecars on the compacted layout — the
     // point-query path survives the chain-collapsing rewrite
     val flat = freshRoot("bloomflat")
     df.write.parquet(s"$flat/in")
     Txn.compactCommit(spark, s"$flat/in", root, targetBytes = 16L * 1024,
       bloomCols = Seq("key"), bloomBits = 1 << 17)
-    val (k3, t3) = Txn.probeFiles(spark, root, "key", Seq(probe))
+    val (_, Txn.SkipReport(k3, t3, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, Seq(Txn.PointProbe("key", Seq(probe))))
     assert(t3 >= 3 && k3 < t3, s"compacted bloom kept $k3 of $t3")
-    assert(Txn.readPoint(spark, root, "key", Seq(probe))
+    assert(Txn.readSkipping(spark, root, Seq(Txn.PointProbe("key", Seq(probe))))
       .select("grp").collect().map(_.getLong(0)).sorted.toSeq == want)
   }
 
@@ -779,16 +789,16 @@ class TxnSpec extends SparkSpec {
     val df = (1L to 4000L).map(i => (i, i % 8L)).toDF("id", "day")
     Txn.commitPartitioned(df, root, "day")
     // the directory listing IS the index: 1 of 8 partitions opened
-    assert(Txn.partitionProbe(spark, root, "day", Seq(3L)) == ((1, 8)))
-    assert(ids(Txn.readPartitionPruned(spark, root, "day", Seq(3L))) ==
+    assert(Txn.partitionCensus(spark, root, Seq(Txn.PartProbe("day", Seq(3L)))) == ((1, 8)))
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("day", Seq(3L))))) ==
       (1L to 4000L).filter(_ % 8 == 3).toSet)
     // partition column materializes from dir names on a full read
     assert(Txn.read(spark, root).count() == 4000L)
     // O(shard) partitioned append: a new day lands as one more dir
     Txn.commitAppendPartitioned(
       (5001L to 5100L).map(i => (i, 9L)).toDF("id", "day"), root, "day")
-    assert(Txn.partitionProbe(spark, root, "day", Seq(9L)) == ((1, 9)))
-    assert(ids(Txn.readPartitionPruned(spark, root, "day", Seq(9L))) ==
+    assert(Txn.partitionCensus(spark, root, Seq(Txn.PartProbe("day", Seq(9L)))) == ((1, 9)))
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("day", Seq(9L))))) ==
       (5001L to 5100L).toSet)
     // the CDC fast path serves a partitioned append at file level WITH
     // the partition column materialized from the dir names
@@ -799,14 +809,14 @@ class TxnSpec extends SparkSpec {
     assert(ch.length == 100 && ch.forall(c => c._1 == "insert" && c._3 == 9L))
     // tombstone deletes fold over the pruned partition scan
     Txn.commitDelete(spark, root, "id", Seq(3L, 11L, 5001L).toDF("id"))
-    assert(ids(Txn.readPartitionPruned(spark, root, "day", Seq(3L, 9L))) ==
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("day", Seq(3L, 9L))))) ==
       ((1L to 4000L).filter(_ % 8 == 3).toSet -- Set(3L, 11L)) ++
         (5002L to 5100L).toSet)
     // r11: file-level reads COMPOSE with partitioned dirs — the
     // partition column reconstructs from the directory values (no
     // sidecars here, so nothing prunes, but semantics hold incl. the
     // tombstone fold and the materialized partition column)
-    val pruned = Txn.readPruned(spark, root, "id", 1L, 10L)
+    val pruned = Txn.readSkipping(spark, root, Seq(Txn.RangeProbe("id", 1L, 10L)))
     assert(ids(pruned) == ((1L to 10L).toSet - 3L))
     assert(pruned.select("day").collect().map(_.getAs[Number](1 - 1).longValue())
       .toSet == ((1L to 10L).toSet - 3L).map(_ % 8L))
@@ -815,8 +825,8 @@ class TxnSpec extends SparkSpec {
     Txn.commitPartitioned(
       Seq((1L, "web"), (2L, "books"), (3L, "web")).toDF("id", "src"),
       root2, "src")
-    assert(Txn.partitionProbe(spark, root2, "src", Seq("web")) == ((1, 2)))
-    assert(ids(Txn.readPartitionPruned(spark, root2, "src", Seq("web"))) ==
+    assert(Txn.partitionCensus(spark, root2, Seq(Txn.PartProbe("src", Seq("web")))) == ((1, 2)))
+    assert(ids(Txn.readSkipping(spark, root2, Seq(Txn.PartProbe("src", Seq("web"))))) ==
       Set(1L, 3L))
   }
 
@@ -883,23 +893,23 @@ class TxnSpec extends SparkSpec {
     assert(subdirs.forall(d =>
       new java.io.File(dataDirs.head, s"$d/_stats.tsv").exists()))
     // probe matching escapes: the 'a:b' dir is FOUND, not dropped
-    assert(Txn.partitionProbe(spark, root, "src", Seq("a:b")) == ((1, 4)))
-    assert(ids(Txn.readPartitionPruned(spark, root, "src", Seq("a:b"))) ==
+    assert(Txn.partitionCensus(spark, root, Seq(Txn.PartProbe("src", Seq("a:b")))) == ((1, 4)))
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("src", Seq("a:b"))))) ==
       Set(1L, 2L))
     // two-rung read reconstructs the UNESCAPED literal (the residual
     // `src = 'a:b'` filter would otherwise kill every row)
-    val pruned = Txn.readPartitionFilePruned(spark, root, "src",
-      Seq("a:b"), "id", 1L, 10L)
+    val pruned = Txn.readSkipping(spark, root, Seq(Txn.PartProbe("src", Seq("a:b")),
+      Txn.RangeProbe("id", 1L, 10L)))
     assert(ids(pruned) == Set(1L, 2L))
     assert(pruned.select("src").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("a:b"))
     // space-valued partition: raw on disk, URI-encoded in
     // input_file_name — probe + reconstruction still exact
-    assert(ids(Txn.readPartitionFilePruned(spark, root, "src",
-      Seq("a b"), "id", 1L, 10L)) == Set(5L))
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("src", Seq("a b")),
+      Txn.RangeProbe("id", 1L, 10L)))) == Set(5L))
     // the null sentinel reconstructs as an actual null through the
-    // file-level scan (readPruned keeps all partitions — no dir probe)
-    val all = Txn.readPruned(spark, root, "id", 1L, 10L)
+    // file-level scan (a range probe keeps all partitions — no dir probe)
+    val all = Txn.readSkipping(spark, root, Seq(Txn.RangeProbe("id", 1L, 10L)))
     assert(all.where(col("src").isNull).collect().map(_.getLong(0)).toSeq ==
       Seq(4L))
   }
@@ -913,26 +923,28 @@ class TxnSpec extends SparkSpec {
     val df = (1L to 8000L).map(i => (i, i % 4L)).toDF("id", "year")
       .repartitionByRange(4, col("id"))
     Txn.commitPartitioned(df, root, "year", statsCols = Seq("id"))
-    val (dk, dt, fk, fit) =
-      Txn.partitionFileProbe(spark, root, "year", Seq(1L), "id", 100L, 300L)
+    val twoRung = Seq(Txn.PartProbe("year", Seq(1L)), Txn.RangeProbe("id", 100L, 300L))
+    val (dk, dt) = Txn.partitionCensus(spark, root, twoRung)
+    val (_, Txn.SkipReport(fk, fit, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, twoRung)
     assert(dk == 1 && dt == 4, s"directory rung: kept $dk of $dt")
     assert(fk < fit && fk >= 1, s"file rung: kept $fk of $fit in kept dirs")
     def want(rows: Seq[(Long, Long)]): Set[Long] =
       rows.filter { case (i, y) => y == 1L && i >= 100L && i <= 300L }
         .map(_._1).toSet
     val base = (1L to 8000L).map(i => (i, i % 4L))
-    assert(ids(Txn.readPartitionFilePruned(spark, root, "year", Seq(1L),
-      "id", 100L, 300L)) == want(base))
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("year", Seq(1L)),
+      Txn.RangeProbe("id", 100L, 300L)))) == want(base))
     // tombstones fold over the two-rung pruned scan
     Txn.commitDelete(spark, root, "id", Seq(101L, 205L).toDF("id"))
-    assert(ids(Txn.readPartitionFilePruned(spark, root, "year", Seq(1L),
-      "id", 100L, 300L)) == want(base) -- Set(101L, 205L))
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("year", Seq(1L)),
+      Txn.RangeProbe("id", 100L, 300L)))) == want(base) -- Set(101L, 205L))
     // a FLAT appended shard in the chain skips the directory rung
     // (one-sided) but still stats-prunes; content stays ≡ plain filter
     Txn.commitAppend((8101L to 8200L).map(i => (i, 1L)).toDF("id", "year"),
       root, statsCols = Seq("id"))
-    assert(ids(Txn.readPartitionFilePruned(spark, root, "year", Seq(1L),
-      "id", 100L, 8150L)) ==
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("year", Seq(1L)),
+      Txn.RangeProbe("id", 100L, 8150L)))) ==
       ((100L to 8000L).filter(_ % 4 == 1).toSet -- Set(101L, 205L)) ++
         (8101L to 8150L))
     // bloom sidecars compose with partition subdirs: point reads prune
@@ -943,9 +955,10 @@ class TxnSpec extends SparkSpec {
     Txn.commitPartitioned(keyed, root2, "tenant",
       bloomCols = Seq("key"), bloomBits = 1 << 17)
     val probe = ((42L * 2654435761L) % 100003L)
-    val (bk, bt) = Txn.probeFiles(spark, root2, "key", Seq(probe))
+    val (_, Txn.SkipReport(bk, bt, _, _)) = Txn.skipDecision(spark, root2,
+      Txn.currentVersion(spark, root2).get, Seq(Txn.PointProbe("key", Seq(probe))))
     assert(bk < bt, s"partitioned bloom kept $bk of $bt")
-    assert(ids(Txn.readPoint(spark, root2, "key", Seq(probe))) == Set(42L))
+    assert(ids(Txn.readSkipping(spark, root2, Seq(Txn.PointProbe("key", Seq(probe))))) == Set(42L))
   }
 
   test("maintain: the gauge trips, compaction collapses the chain, reads hold") {
@@ -981,7 +994,8 @@ class TxnSpec extends SparkSpec {
         s"compaction left ($filesAfter files, $tombsAfter tombstones)")
       assert(ids(Txn.read(spark, root)) == expected)
       // the re-derived stats sidecar keeps the point-query path fast
-      val (kept, total) = Txn.pruneFiles(spark, root, "id", 1L, 5L)
+      val (kept, Txn.SkipReport(_, total, _, _)) = Txn.skipDecision(spark, root,
+        Txn.currentVersion(spark, root).get, Seq(Txn.RangeProbe("id", 1L, 5L)))
       assert(kept.size < total || total == 1,
         s"stats kept ${kept.size} of $total")
       // gauge now below thresholds: the next tick is a no-op
@@ -998,8 +1012,8 @@ class TxnSpec extends SparkSpec {
       assert(pv.nonEmpty)
       val (_, _, _, ptombs) = Txn.tableDetail(spark, proot)
       assert(ptombs == 0)
-      assert(Txn.partitionProbe(spark, proot, "day", Seq(2L)) == ((1, 4)))
-      assert(ids(Txn.readPartitionPruned(spark, proot, "day", Seq(2L))) ==
+      assert(Txn.partitionCensus(spark, proot, Seq(Txn.PartProbe("day", Seq(2L)))) == ((1, 4)))
+      assert(ids(Txn.readSkipping(spark, proot, Seq(Txn.PartProbe("day", Seq(2L))))) ==
         (1L to 400L).filter(_ % 4 == 2).toSet)
       assert(ids(Txn.read(spark, proot)) == (1L to 400L).toSet - 7L)
     } finally {
@@ -1043,14 +1057,47 @@ class TxnSpec extends SparkSpec {
     Txn.commitAppend(shard(2001L, 4000L), root,
       bloomCols = Seq("key"), bloomBits = 1 << 16)
     val probe = (3456L * 2654435761L) % 1000003L // lives in the APPENDED shard
-    val (kept, total) = Txn.probeFiles(spark, root, "key", Seq(probe))
+    val (_, Txn.SkipReport(kept, total, _, _)) = Txn.skipDecision(spark, root,
+      Txn.currentVersion(spark, root).get, Seq(Txn.PointProbe("key", Seq(probe))))
     assert(total >= 8 && kept <= total / 2,
       s"bloom should prune across the chain: kept $kept of $total")
-    val got = Txn.readPoint(spark, root, "key", Seq(probe))
+    val got = Txn.readSkipping(spark, root, Seq(Txn.PointProbe("key", Seq(probe))))
       .select("grp").collect().map(_.getLong(0)).toSeq.sorted
     assert(got.nonEmpty && got == Txn.read(spark, root)
       .where(col("key") === probe)
       .select("grp").collect().map(_.getLong(0)).toSeq.sorted)
+  }
+
+  test("string bloom sidecars skip NULLs: lines match the non-null values " +
+      "alone, an all-null file writes no line") {
+    import spark.implicits._
+    val root = freshRoot("bloomnull")
+    val mBits = 1 << 12
+    // three files by grp: values with nulls, values only, nulls only
+    val df = Seq[(Long, String)]((0L, "a"), (0L, null), (0L, "b"),
+      (1L, "c"), (1L, "d"), (2L, null), (2L, null)).toDF("grp", "s")
+      .repartitionByRange(3, col("grp"))
+    Txn.commitIndexed(df, root, bloomCols = Seq("s"), bloomBits = mBits)
+    val dataDir = new java.io.File(root, "data").listFiles().head
+    val lines = scala.io.Source.fromFile(new java.io.File(dataDir, "_bloom.tsv"))
+      .getLines().toSet
+    val byFile = spark.read.parquet(dataDir.getPath)
+      .select(regexp_extract(input_file_name(), "[^/]+$", 0), col("s"))
+      .collect().groupBy(_.getString(0))
+      .map { case (file, rows) => file -> rows.map(_.getString(1)).toSeq }
+    val allNull = byFile.collect { case (file, vs) if vs.forall(_ == null) => file }
+    assert(byFile.size == 3 && allNull.size == 1, s"fixture layout: $byFile")
+    val agg = new graft.functions.BloomGramAgg(mBits)
+    val want = byFile.collect { case (file, vs) if vs.exists(_ != null) =>
+      val bits = vs.filter(_ != null)
+        .foldLeft(agg.zero)((b, v) => agg.reduce(b, Txn.bloomStringHash(v)))
+      val bytes = java.nio.ByteBuffer.allocate(bits.length * 8)
+      bits.foreach(bytes.putLong)
+      s"$file\ts\t${java.util.Base64.getEncoder.encodeToString(bytes.array())}"
+    }.toSet
+    assert(lines == want, s"bloom lines differ from the non-null build: $lines")
+    assert(!lines.exists(_.startsWith(s"${allNull.head}\t")),
+      "an all-null file must write no bloom line")
   }
 
   test("widening appends: a same-chain wider shard is accepted, mixed " +

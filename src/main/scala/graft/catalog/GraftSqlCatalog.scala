@@ -69,7 +69,8 @@ import graft.ops.{GraftCatalog, Txn}
   * torn write.
   *
   * 100 TB: catalog resolution is one small-file read; loadTable adds
-  * one footer-sampling schema resolve; all data movement is the Txn
+  * one driver-side schema resolve (one footer per new data dir, memoized
+  * for the JVM's life); all data movement is the Txn
   * read/commit machinery whose scale curves the TXNAPPEND/UPSERT/
   * PARTITION artifacts measure. The V1 row boundary costs one
   * InternalRow conversion per row on SQL reads — acceptable for the
@@ -599,9 +600,10 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
 }
 
 /** One Txn table pinned at `version` — the unit a single SQL statement
-  * sees. Schema resolves from the pinned snapshot (footer sampling +
-  * mergeSchema, so evolved tables surface the union schema exactly as
-  * `Txn.readVersion` reads them).
+  * sees. Schema resolves from the pinned snapshot through
+  * `Txn.readVersion`, whose data dirs' footers come from the driver-side
+  * footer memo (no Spark job), so evolved tables surface the merged
+  * schema exactly as a mergeSchema read would.
   *
   * DELETE FROM / TRUNCATE (r11, SupportsDelete; r12 regimes) — the Txn
   * economics, picked by shape:
@@ -631,6 +633,12 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
   private lazy val physSnapshot: DataFrame =
     Txn.readVersion(spark, root, version)
 
+  /** The commit metadata of every version at or below `version`,
+    * newest first: one history scan serves both [[colMap]] and
+    * [[colTypes]]. */
+  private lazy val metaNewestFirst: Seq[Map[String, String]] =
+    Txn.history(spark, root).filter(_._1 <= version).reverse.map(_._3)
+
   /** Effective COLUMN MAPPING at this pinned version (r13): the last
     * `colmap` commit-metadata entry at or below `version` — empty on
     * never-renamed tables (the overwhelmingly common case, which then
@@ -638,8 +646,7 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
     * log, `VERSION AS OF` a pre-rename version reads with the OLD
     * names, exactly Delta's versioned-mapping behavior. */
   private[catalog] lazy val colMap: Seq[(String, String)] =
-    Txn.history(spark, root).filter(_._1 <= version).reverse
-      .collectFirst { case (_, _, m) if m.contains("colmap") => m("colmap") }
+    metaNewestFirst.flatMap(_.get("colmap")).headOption
       .map(GraftSqlCatalog.decodeColMap).getOrElse(Nil)
   private def toPhysical(logical: String): String =
     colMap.collectFirst { case (p, l) if l == logical => p }
@@ -660,8 +667,7 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
     * pre-widen version reads with the old (file) types. */
   private[catalog] lazy val colTypes
       : Seq[(String, org.apache.spark.sql.types.DataType)] =
-    Txn.history(spark, root).filter(_._1 <= version).reverse
-      .collectFirst { case (_, _, m) if m.contains("coltypes") => m("coltypes") }
+    metaNewestFirst.flatMap(_.get("coltypes")).headOption
       .map(GraftSqlCatalog.decodeColTypes).getOrElse(Nil)
 
   /** The LOGICAL snapshot a SQL statement sees: the physical frame

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Minimal transactional table commits (r8 verdict item 3): the repo's
   * rewrite operators (MERGE, compaction, corpus rewrites) compute new
@@ -46,7 +48,19 @@ import org.apache.spark.sql.functions._
   * simplification vs Delta: tombstones are key-level, not per-file
   * row bitmaps — [[readSkipping]] still skips files by stats and folds
   * the tombstone anti-joins over the pruned scan (r10), paying one
-  * O(deleted-keys) join per tombstone until compaction. */
+  * O(deleted-keys) join per tombstone until compaction.
+  *
+  * Schema resolution never launches a Spark job. Every `data/<uuid>`
+  * dir is IMMUTABLE once written and uuid-named, so it is never
+  * rewritten and its name is never reused: one write, one schema, for
+  * the dir's whole life. A per-JVM memo therefore keeps, per qualified
+  * dir path, one footer's parquet schema and Spark row-metadata string
+  * (no row groups) plus whether the dir is hive-partitioned, read once
+  * on the driver; every reader converts the footer with Spark's own
+  * code under the calling session's settings and imposes the result
+  * with `spark.read.schema(...)`. An entry can never go stale: vacuum
+  * only deletes whole dirs, so the worst a stale entry can name is a
+  * deleted dir, whose read fails exactly as an inferring read does. */
 object Txn {
 
   private def fs(spark: SparkSession, root: String): FileSystem =
@@ -262,10 +276,10 @@ object Txn {
   }
 
   /** Snapshot-read version `n` (time travel). Multi-dir versions (from
-    * [[commitAppend]]) read with mergeSchema so an appended shard may
-    * ADD nullable columns (older rows surface them as null — the
-    * parquet schema-evolution contract); single-dir reads keep the
-    * cheaper footer-sampling path. */
+    * [[commitAppend]]) read under the MERGED footer schema so an
+    * appended shard may ADD nullable columns (older rows surface them
+    * as null — the parquet schema-evolution contract). Every schema
+    * comes from the footer memo, so resolving `.schema` runs no job. */
   def readVersion(spark: SparkSession, root: String, n: Long): DataFrame = {
     val f = fs(spark, root)
     require(f.exists(new Path(s"$root/_commits/$n")),
@@ -279,9 +293,10 @@ object Txn {
         // cannot resolve partition columns across distinct roots
         dirs.map(readDir(spark, f, _))
           .reduce(_.unionByName(_, allowMissingColumns = true))
-      else try spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+      else try dirReader(spark, f, dirs).option("mergeSchema", "true")
+        .parquet(dirs: _*)
       catch {
-        // WIDENED chains (r13, ALTER COLUMN TYPE): parquet footer
+        // WIDENED chains (r13, ALTER COLUMN TYPE): footer schema
         // merging refuses int32-vs-int64 shards, but UNION coerces
         // them to the wider member — re-read per dir and union. Only
         // widened tables pay the fallback (and only its plan has N
@@ -304,7 +319,7 @@ object Txn {
           Some(acc.fold(d)(_.unionByName(d, allowMissingColumns = true)))
         case (acc, (dir, Some(keyCol))) =>
           val cols = tombstoneCols(keyCol)
-          val keys = spark.read.parquet(resolveDir(root, dir))
+          val keys = readDir(spark, f, resolveDir(root, dir))
             .select(cols.map(col): _*).distinct()
           val base = acc.getOrElse(sys.error(
             s"tombstone $dir precedes any data dir at $root"))
@@ -381,20 +396,93 @@ object Txn {
     * `col=value` subdirectories — self-describing, so readers never
     * depend on commit metadata to pick the right scan shape (a delete
     * or append on a partitioned table needs no special flags). */
-  private def isPartitionedDir(f: FileSystem, path: String): Boolean = {
-    val p = new Path(path)
-    f.exists(p) && f.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.contains("="))
+  private def isPartitionedDir(f: FileSystem, path: String): Boolean =
+    memoized(qualified(f, path)).fold {
+      val p = new Path(path)
+      f.exists(p) && hasPartitionChild(f.listStatus(p).toSeq)
+    }(_.partitioned)
+
+  private def hasPartitionChild(children: Seq[FileStatus]): Boolean =
+    children.exists(st => st.isDirectory && st.getPath.getName.contains("="))
+
+  /** One data dir as schema resolution sees it: its footer (any data
+    * file's — one write, one schema) and its layout. */
+  private final case class DirFooter(footer: GraftParquetShim.FooterSchema,
+      partitioned: Boolean)
+
+  /** The footer memo (see the header): qualified dir path → entry,
+    * least recently used evicted past a fixed entry count. */
+  private val FooterMemoEntries = 4096
+  private val footerMemo =
+    new java.util.LinkedHashMap[String, DirFooter](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, DirFooter]): Boolean =
+        size() > FooterMemoEntries
+    }
+  private def memoized(key: String): Option[DirFooter] =
+    footerMemo.synchronized(Option(footerMemo.get(key)))
+
+  private def qualified(f: FileSystem, dir: String): String =
+    f.makeQualified(new Path(dir)).toString
+
+  /** The data schema Spark's own inference gives a read of `dirs`
+    * (mergeSchema across them), resolved on the driver from the footer
+    * memo: no Spark job. Members merge in the order inference visits
+    * them — by file path — so field order is inference's. Missing
+    * footers are read in one batch; None when a dir has no data file
+    * (the caller then lets Spark infer, raising today's error). Throws
+    * `CANNOT_MERGE_*` on incompatible dirs, as inference does. */
+  private def footerSchema(spark: SparkSession, f: FileSystem,
+      dirs: Seq[String]): Option[StructType] = {
+    val keys = dirs.map(qualified(f, _)).distinct
+    val missing = keys.filter(memoized(_).isEmpty).flatMap { k =>
+      val p = new Path(k)
+      if (!f.exists(p)) None
+      else {
+        val children = f.listStatus(p).toSeq
+        val partitioned = hasPartitionChild(children)
+        val files =
+          if (!partitioned) children.filter(_.isFile)
+          else {
+            val it = f.listFiles(p, true)
+            val all = Seq.newBuilder[FileStatus]
+            while (it.hasNext) all += it.next()
+            all.result()
+          }
+        files.filter { st =>
+          val n = st.getPath.getName
+          !n.startsWith("_") && !n.startsWith(".")
+        }.minByOption(_.getPath.toString).map(st => (k, st, partitioned))
+      }
+    }
+    if (missing.nonEmpty) {
+      val read = GraftParquetShim.readFooters(spark, missing.map(_._2))
+      footerMemo.synchronized(missing.foreach { case (k, st, part) =>
+        read.get(st.getPath.toString).foreach(fs =>
+          footerMemo.put(k, DirFooter(fs, part)))
+      })
+    }
+    val entries = keys.sortBy(_ + "/").map(memoized)
+    if (entries.exists(_.isEmpty)) None
+    else Some(GraftParquetShim.mergedSchema(spark, entries.map(_.get.footer)))
   }
+
+  /** A reader of `dirs` with their [[footerSchema]] imposed: the data
+    * columns come from the memo, while partition discovery still types
+    * hive partition columns exactly as an inferring read does. */
+  private def dirReader(spark: SparkSession, f: FileSystem,
+      dirs: Seq[String]): DataFrameReader =
+    footerSchema(spark, f, dirs).fold(spark.read)(spark.read.schema(_))
 
   /** Read one snapshot dir, partition-aware: a partitioned dir reads
     * with itself as basePath (partition columns materialize from the
     * dir names), a flat dir reads plainly. */
   private def readDir(spark: SparkSession, f: FileSystem,
-      dir: String): DataFrame =
-    if (isPartitionedDir(f, dir))
-      spark.read.option("basePath", dir).parquet(dir)
-    else spark.read.parquet(dir)
+      dir: String): DataFrame = {
+    val reader = dirReader(spark, f, Seq(dir))
+    if (isPartitionedDir(f, dir)) reader.option("basePath", dir).parquet(dir)
+    else reader.parquet(dir)
+  }
 
   /** Re-stamp a just-published manifest's mtime to NOW (r11, r10
     * advice): FS rename PRESERVES mtime, so without this the manifest
@@ -927,8 +1015,7 @@ object Txn {
       // — every subsequent read of the version chain fails, long after
       // the writer is gone. Reject it HERE, where the writer can fix
       // it, not at read time. Cost: one tip schema resolve per attempt
-      // (footer sampling, O(dirs) small reads) — the same cost class
-      // as the history scan appendIdempotent already pays per batch.
+      // (driver-side, from the footer memo — no Spark job).
       // Hive-PARTITION columns are exempt: their
       // read-side type is INFERRED from directory names (int for
       // numeric values), not declared by the data, so comparing it to
@@ -1644,7 +1731,7 @@ object Txn {
     val spark = df.sparkSession
     val f = fs(spark, root)
     val dataRel = writeSnapshot(df, root, statsCols)
-    val snap = spark.read.parquet(s"$root/$dataRel")
+    val snap = readDir(spark, f, s"$root/$dataRel")
     checks.foreach { c =>
       val bad = snap.where(!expr(c))
       val sample = bad.limit(3).collect()
@@ -1754,6 +1841,7 @@ object Txn {
     * per file instead (r9 review). */
   private def scanPruned(spark: SparkSession, root: String, version: Long,
       plan: Seq[Either[Seq[ScanGroup], (String, String)]]): DataFrame = {
+    val f = fs(spark, root)
     val schema = readVersion(spark, root, version).schema
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -1795,7 +1883,7 @@ object Txn {
         Some(acc.fold(d)(_.unionByName(d)))
       case (acc, Right((dir, keyCol))) =>
         val cols = tombstoneCols(keyCol)
-        val keys = spark.read.parquet(resolveDir(root, dir))
+        val keys = readDir(spark, f, resolveDir(root, dir))
           .select(cols.map(col): _*).distinct()
         val base = acc.getOrElse(sys.error(
           s"tombstone $dir precedes any data dir at $root"))
@@ -2162,8 +2250,10 @@ object Txn {
         val added = curDirs.drop(prevDirs.size).map(d => resolveDir(root, d))
         val step =
           if (added.isEmpty) readVersion(spark, root, v).limit(0)
-          else if (added.size == 1) spark.read.parquet(added.head)
-          else spark.read.option("mergeSchema", "true").parquet(added: _*)
+          else if (added.size == 1)
+            dirReader(spark, f, added).parquet(added.head)
+          else dirReader(spark, f, added).option("mergeSchema", "true")
+            .parquet(added: _*)
         step.withColumn("change_op", lit("insert"))
           .withColumn("change_version", lit(v))
       } else {

@@ -63,6 +63,19 @@ class TextPipelineSpec extends SparkSpec {
     assert(ops.Q.spreadScan(stream, col("value")) eq stream)
   }
 
+  test("spreadScan: a malformed byte target fails naming the key and value") {
+    val docs = Tables.documents(spark, dir).select("doc_id", "text")
+    assume(docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes,
+      "fixture wider than one split — the byte target is never read")
+    spark.conf.set("spark.graft.spread.targetBytesPerTask", "48k")
+    val err = try intercept[IllegalArgumentException](
+      ops.Q.spreadScan(docs, col("doc_id")))
+    finally spark.conf.unset("spark.graft.spread.targetBytesPerTask")
+    assert(err.getMessage.contains("spark.graft.spread.targetBytesPerTask"))
+    assert(err.getMessage.contains("'48k'"))
+  }
+
   test("doc chunks reassemble to the original document") {
     // stride 32, width 40: dropping the 8-token overlap from every
     // chunk after the first and concatenating must rebuild the doc.

@@ -1151,4 +1151,175 @@ class TxnSpec extends SparkSpec {
     }
     assert(Txn.currentVersion(spark, root).contains(1L))
   }
+
+  /** The properties of every Spark job started while `body` runs, with
+    * the listener bus drained on both sides so no event of earlier work
+    * leaks in and none of `body`'s is lost. */
+  private def jobsDuring[T](body: => T): (T, Seq[java.util.Properties]) = {
+    val sc = spark.sparkContext
+    org.apache.spark.GraftListenerBusAccess.drain(sc)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties).getOrElse(new java.util.Properties))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftListenerBusAccess.drain(sc)
+      (out, seen.toArray.toSeq.map(_.asInstanceOf[java.util.Properties]))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A V2 SQL catalog over a fresh root: (catalog name, catalog root). */
+  private def sqlCatalog(tag: String): (String, String) = {
+    val root = freshRoot(s"cat_$tag")
+    val name = s"gtxn_$tag"
+    spark.conf.set(s"spark.sql.catalog.$name",
+      classOf[graft.catalog.GraftSqlCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.root", root)
+    (name, root)
+  }
+
+  /** The manifest entries of version `v`, absolute. */
+  private def entriesOf(root: String, v: Long): Seq[String] = {
+    val in = fs(root).open(new Path(s"$root/_commits/$v"))
+    val line = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next()
+      finally in.close()
+    line.split(',').toSeq.map(_.trim).filter(_.nonEmpty).map { e =>
+      val (tomb, d) = if (e.startsWith("~")) ("~", e.drop(1)) else ("", e)
+      if (d.startsWith("/") || d.contains("://")) e else s"$tomb$root/$d"
+    }
+  }
+
+  test("readVersion schema is job-free and equals the inferring reads") {
+    import spark.implicits._
+    // reference reads: Spark infers each schema from the same dirs
+    def partitioned(d: String): Boolean = fs(d).listStatus(new Path(d))
+      .exists(st => st.isDirectory && st.getPath.getName.contains("="))
+    def inferDir(d: String) =
+      if (partitioned(d)) spark.read.option("basePath", d).parquet(d)
+      else spark.read.parquet(d)
+    def merged(dirs: Seq[String]) =
+      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    def unionOf(dirs: Seq[String]) =
+      dirs.map(inferDir).reduce(_.unionByName(_, allowMissingColumns = true))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+
+    // flat single dir
+    val flat = freshRoot("eq_flat")
+    Txn.commit(Seq((1L, "a", 1.5), (2L, null, 2.5)).toDF("id", "tag", "x"), flat)
+    // the empty CREATE TABLE v1
+    val (cat, catRoot) = sqlCatalog("eq")
+    spark.sql(s"CREATE TABLE $cat.ev (id BIGINT, tag STRING, ts TIMESTAMP)")
+    val created = s"$catRoot/_managed/ev"
+    // an append chain adding a nullable column, then one declaring its
+    // columns in another order (field order follows inference's visit)
+    val chain = freshRoot("eq_chain")
+    Txn.commit(Seq((1L, "a")).toDF("id", "a"), chain)
+    Txn.commitAppend(Seq((2L, "b", 0.5)).toDF("id", "a", "b"), chain)
+    Txn.commitAppend(Seq((7, 3L, "c")).toDF("c", "id", "a"), chain)
+    // an int -> long widened chain: footer merging refuses it
+    val widened = freshRoot("eq_widen")
+    Txn.commit(Seq((1L, 10)).toDF("id", "x"), widened)
+    Txn.commitAppend(Seq((2L, 3000000000L)).toDF("id", "x"), widened)
+    // one- and two-level partitioned chains: an escaped value and NULL
+    val part1 = freshRoot("eq_part1")
+    val p1 = Seq[(Long, String)]((1L, "x/y"), (2L, null), (3L, "p%q")).toDF("id", "src")
+    Txn.commitPartitioned(p1, part1, "src")
+    Txn.commitAppendPartitioned(Seq((4L, "a b")).toDF("id", "src"), part1, "src")
+    val part2 = freshRoot("eq_part2")
+    val p2 = Seq[(Long, java.lang.Integer, String)]((1L, 2024, "x/y"),
+      (2L, null, "w"), (3L, 2025, null)).toDF("id", "yr", "src")
+    Txn.commitPartitioned(p2, part2, "yr,src")
+    Txn.commitAppendPartitioned(
+      Seq[(Long, java.lang.Integer, String)]((4L, 2024, "p%q")).toDF("id", "yr", "src"),
+      part2, "yr,src")
+    // a tombstoned version (rows appended after the tombstone survive)
+    val tomb = freshRoot("eq_tomb")
+    Txn.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), tomb)
+    Txn.commitDelete(spark, tomb, "id", Seq(2L, 3L).toDF("id"))
+    Txn.commitAppend(Seq((3L, "c2")).toDF("id", "v"), tomb)
+    // a zero-copy clone: its manifest names the chain's dirs absolutely
+    val clone = freshRoot("eq_clone")
+    Txn.cloneTable(spark, chain, clone)
+
+    val widenedDirs = entriesOf(widened, 2)
+    val widenErr = intercept[Exception](merged(widenedDirs).schema)
+    assert(widenErr.getMessage.contains("CANNOT_MERGE"))
+    val tombExpected = {
+      val Seq(d1, k, d2) = entriesOf(tomb, 3)
+      val base = spark.read.parquet(d1)
+      val keys = spark.read.parquet(k.drop(1).takeWhile(_ != '@'))
+        .select("id").distinct()
+      base.join(keys, Seq("id"), "left_anti")
+        .select(base.columns.map(col).toSeq: _*)
+        .unionByName(spark.read.parquet(d2), allowMissingColumns = true)
+    }
+    assert(entriesOf(clone, 1).forall(_.startsWith(chain)))
+    val shapes = Seq(
+      ("flat", flat, 1L, inferDir(entriesOf(flat, 1).head)),
+      ("create", created, 1L, inferDir(entriesOf(created, 1).head)),
+      ("chain", chain, 3L, merged(entriesOf(chain, 3))),
+      ("widened", widened, 2L, unionOf(widenedDirs)),
+      ("part1", part1, 2L, unionOf(entriesOf(part1, 2))),
+      ("part2", part2, 2L, unionOf(entriesOf(part2, 2))),
+      ("tomb", tomb, 3L, tombExpected),
+      ("clone", clone, 1L, merged(entriesOf(clone, 1))))
+    shapes.foreach { case (name, root, v, expected) =>
+      val (schema, jobs) = jobsDuring(Txn.readVersion(spark, root, v).schema)
+      assert(jobs.size == 0, s"$name: schema resolution ran jobs")
+      assert(schema == expected.schema,
+        s"$name: ${schema.treeString} vs ${expected.schema.treeString}")
+      assert(rows(Txn.readVersion(spark, root, v)) == rows(expected), name)
+    }
+  }
+
+  test("job-count pin: INSERT, readVersion schema and stream batches") {
+    import spark.implicits._
+    // INSERT INTO a catalog table with 10+ versions: the write job only
+    val (cat, catRoot) = sqlCatalog("jobs")
+    spark.sql(s"CREATE TABLE $cat.ev (id BIGINT, tag STRING)")
+    (1 to 10).foreach(i => spark.sql(s"INSERT INTO $cat.ev VALUES ($i, 't$i')"))
+    val evRoot = s"$catRoot/_managed/ev"
+    assert(Txn.currentVersion(spark, evRoot).exists(_ >= 10L))
+    val (_, insertJobs) = jobsDuring(
+      spark.sql(s"INSERT INTO $cat.ev VALUES (11, 't11')"))
+    assert(insertJobs.size == 1, "INSERT jobs")
+    // readVersion(...).schema over a 10-dir table: no job at all
+    val ten = freshRoot("jobs_ten")
+    Txn.commit(Seq((0L, "v0")).toDF("id", "v"), ten)
+    (1 to 9).foreach(i => Txn.commitAppend(Seq((i.toLong, s"v$i")).toDF("id", "v"), ten))
+    assert(entriesOf(ten, 10).size == 10)
+    val (_, schemaJobs) = jobsDuring(Txn.readVersion(spark, ten, 10).schema)
+    assert(schemaJobs.size == 0, "schema resolution ran jobs")
+    // graft -> graft stream over that table: one job per data batch
+    val sink = freshRoot("jobs_sink")
+    val ckpt = freshRoot("jobs_ckpt")
+    val batchKey = "streaming.sql.batchId"
+    val (queryId, streamJobs) = jobsDuring {
+      val q = spark.readStream.format("graft").load(ten)
+        .writeStream.format("graft").option("checkpointLocation", ckpt)
+        .start(sink)
+      try {
+        q.processAllAvailable()
+        (10 until 14).foreach { i =>
+          Txn.commitAppend(Seq((i.toLong, s"v$i")).toDF("id", "v"), ten)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      q.id.toString
+    }
+    val perBatch = streamJobs
+      .filter(_.getProperty("sql.streaming.queryId") == queryId)
+      .groupBy(_.getProperty(batchKey).toLong).map { case (b, js) => b -> js.size }
+    // batch 0 also bootstraps the sink table; every later batch is one
+    // appended version, landed by the sink's write job alone
+    assert((1L to 4L).forall(perBatch.contains), s"batches: $perBatch")
+    assert(perBatch.filter(_._1 >= 1L).values.forall(_ == 1), s"jobs per batch: $perBatch")
+    assert(Txn.read(spark, sink).count() == 14L)
+  }
 }

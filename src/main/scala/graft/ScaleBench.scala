@@ -910,7 +910,7 @@ object ScaleBench {
         f.delete(new org.apache.hadoop.fs.Path(root), true)
         val clustered = base.repartitionByRange(16 * m, col("o_custkey"))
         if (t == "idx")
-          Txn.commitIndexed(clustered, root,
+          Txn.commit(clustered, root,
             statsCols = Seq("o_custkey"), bloomCols = Seq("o_custkey"))
         else Txn.commit(clustered, root)
       }
@@ -1127,7 +1127,7 @@ object ScaleBench {
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         f.delete(new org.apache.hadoop.fs.Path(root), true)
         val t0 = System.nanoTime()
-        Txn.commitIndexed(
+        Txn.commit(
           base.repartitionByRange(8 * m, col("o_custkey"))
             .sortWithinPartitions("o_custkey"),
           root, statsCols = Seq("o_custkey"), bloomCols = Seq("o_orderkey"),
@@ -1195,7 +1195,7 @@ object ScaleBench {
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         f.delete(new org.apache.hadoop.fs.Path(root), true)
         val t0 = System.nanoTime()
-        Txn.commitPartitioned(base, root, "o_year")
+        Txn.commit(base, root, partitionBy = Some("o_year"))
         val t1 = System.nanoTime()
         val year = Seq(Txn.PartProbe("o_year", Seq(1995L)))
         val pp = Txn.partitionCensus(spark, root, year)
@@ -1265,10 +1265,10 @@ object ScaleBench {
         val t0 = System.nanoTime()
         // range layout on o_custkey: each of the 16 range tasks writes
         // one distinct-custkey-range file into every year dir it holds
-        Txn.commitPartitioned(
+        Txn.commit(
           base.repartitionByRange(16, col("o_custkey"))
             .sortWithinPartitions("o_custkey"),
-          root, "o_year", statsCols = Seq("o_custkey"))
+          root, statsCols = Seq("o_custkey"), partitionBy = Some("o_year"))
         val t1 = System.nanoTime()
         val year = Txn.PartProbe("o_year", Seq(1995L))
         val twoRung = Seq(year, Txn.RangeProbe("o_custkey", cLo, cHi))
@@ -1307,9 +1307,9 @@ object ScaleBench {
         f2a.delete(new org.apache.hadoop.fs.Path(root2), true)
         val base2 = base.withColumn("o_src",
           concat(lit("s"), (col("o_custkey") % 4).cast("string")))
-        Txn.commitPartitioned(
+        Txn.commit(
           base2.repartition(col("o_year"), col("o_src")),
-          root2, "o_year,o_src")
+          root2, partitionBy = Some("o_year,o_src"))
         val t0b = System.nanoTime()
         val (frame, r) =
           Txn.skipScan(spark, root2, Txn.currentVersion(spark, root2).get,
@@ -1541,7 +1541,7 @@ object ScaleBench {
         Txn.commit(base, root)
         nTable = Txn.read(spark, root).count()
         val t0 = System.nanoTime()
-        Txn.commitDelete(spark, root, "o_orderkey", keys)
+        Txn.commitDelete(spark, root, Seq("o_orderkey"), keys)
         val t1 = System.nanoTime()
         nAfter = Txn.read(spark, root).count()
         val t2 = System.nanoTime()

@@ -189,7 +189,7 @@ private[catalog] class GraftBatchWrite(root: String, schema: StructType,
     // must not publish a spurious version over a directory of empty
     // files — only tasks that actually wrote rows count
     val wroteFiles = messages.exists(_.isInstanceOf[GraftCommitMessage])
-    val meta = Map("op" -> opName) ++ partCol.map("partitionCol" -> _)
+    val meta = Txn.withPartitionCol(Map("op" -> opName), partCol)
     // declared-index tables (graft.stats / graft.bloom): sidecars land
     // on the fresh dir BEFORE the publish, so they are atomic with the
     // data — every SQL INSERT keeps the skipping index current (r12)
@@ -220,13 +220,8 @@ private[catalog] class GraftBatchWrite(root: String, schema: StructType,
         // publish CAS-pinned at that version (r11 advice medium): a
         // concurrent append/delete landing between the pin and this
         // publish fails the Replace loud instead of being silently
-        // clobbered — the commitIf contract, natively
-        pinnedBase match {
-          case Some(base) =>
-            Txn.publishDirFullIf(spark, root, dataRel, base, meta)
-          case None =>
-            Txn.publishDirFull(spark, root, dataRel, meta)
-        }
+        // clobbered — the pinned `Txn.commit` contract, natively
+        Txn.publishDirFull(spark, root, dataRel, meta, pinnedBase)
         ()
       case GraftBatchWrite.Replace =>
         // a replace that produced zero rows (e.g. UPDATE/MERGE emptying
@@ -234,12 +229,7 @@ private[catalog] class GraftBatchWrite(root: String, schema: StructType,
         // commit an empty snapshot with the declared schema
         val empty = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        pinnedBase match {
-          case Some(base) =>
-            Txn.commitIf(empty, root, base, meta = meta)
-          case None =>
-            Txn.commit(empty, root, meta = meta)
-        }
+        Txn.commit(empty, root, meta = meta, expectedBase = pinnedBase)
         ()
     }
   }

@@ -189,12 +189,11 @@ private[catalog] object GraftProcedures {
         }
         def cols(k: String) = props.get(k).toSeq
           .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-        val v = Txn.commitIf(clustered, root, expectedBase = base,
-          statsCols = cols("stats"), bloomCols = cols("bloom"),
-          partitionBy = partCol,
+        val v = Txn.commit(clustered, root, cols("stats"),
           meta = Map("op" ->
-            (if (zCols.isEmpty) "sql-compact" else "sql-compact-zorder")) ++
-            partCol.map("partitionCol" -> _))
+            (if (zCols.isEmpty) "sql-compact" else "sql-compact-zorder")),
+          partitionBy = partCol, bloomCols = cols("bloom"),
+          expectedBase = Some(base))
         val files = Txn.tableDetail(s, root)._2
         resultScan(out, Seq(v, files))
       }

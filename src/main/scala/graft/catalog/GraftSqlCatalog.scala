@@ -87,8 +87,9 @@ object GraftSqlCatalog {
     * `_stats.tsv`/`_stats_str.tsv` (min/max skipping) and `_bloom.tsv`
     * (point skipping, long-castable columns) sidecars onto its fresh
     * snapshot dir before the publish — a pure-SQL user gets the same
-    * skipping economics commitIndexed gives the programmatic API,
-    * maintained automatically across the table's life. */
+    * skipping economics `Txn.commit(bloomCols = …)` gives the
+    * programmatic API, maintained automatically across the table's
+    * life. */
   val StatsProp = "graft.stats"
   val BloomProp = "graft.bloom"
   /** TBLPROPERTIES key declaring a CHECK constraint (r13): a boolean
@@ -609,7 +610,7 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
   * economics, picked by shape:
   *   - a single-column `= v` / `IN (...)` predicate, or a pure
   *     CONJUNCTION of equalities on distinct columns (r12), becomes an
-  *     O(keys) TOMBSTONE via [[Txn.commitDeleteComposite]]: `DELETE
+  *     O(keys) TOMBSTONE via [[Txn.commitDelete]]: `DELETE
   *     FROM graft.t WHERE a = 1 AND b = 2` is one composite-key
   *     tombstone, never a rewrite;
   *   - on a DECLARED-KEY table, any other predicate takes the delta
@@ -617,7 +618,7 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
   *     O(matched), still no rewrite (r12);
   *   - on a keyless table, a fully-translatable predicate becomes a
   *     REWRITE — `read().where(NOT TRUE(pred))` committed through
-  *     [[Txn.commitIf]] pinned at this table's version, so a DELETE
+  *     [[Txn.commit]] pinned at this table's version, so a DELETE
   *     racing a writer fails loud instead of silently discarding the
   *     racer's rows; anything else falls to the group-based row-level
   *     plan.
@@ -1005,7 +1006,7 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
         val keys = spark.createDataFrame(
           spark.sparkContext.parallelize(tuples.map(t => Row(t: _*)), 1),
           keySchema)
-        Txn.commitDeleteComposite(spark, root, physCols, keys,
+        Txn.commitDelete(spark, root, physCols, keys,
           meta = Map("op" -> "sql-delete"))
         ()
       case None =>
@@ -1015,9 +1016,9 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
         // alone is NULL there and where() drops the row — silent data
         // loss on nullable predicate columns (r11 advice, high). Keep
         // rows where the condition is not TRUE.
-        Txn.commitIf(physify(snapshot.where(!coalesce(pred, lit(false)))),
-          root, expectedBase = version,
-          meta = Map("op" -> "sql-delete-rewrite"))
+        Txn.commit(physify(snapshot.where(!coalesce(pred, lit(false)))),
+          root, meta = Map("op" -> "sql-delete-rewrite"),
+          expectedBase = Some(version))
         ()
     }
   }
@@ -1026,8 +1027,8 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       physifySchema(snapshot.schema))
-    Txn.commitIf(empty, root, expectedBase = version,
-      meta = Map("op" -> "sql-truncate"))
+    Txn.commit(empty, root, meta = Map("op" -> "sql-truncate"),
+      expectedBase = Some(version))
     true
   }
 }
@@ -1467,33 +1468,22 @@ private[catalog] class GraftWriteBuilder(spark: SparkSession, root: String,
               case (true, Some(c)) if replaceWhere.isDefined =>
                 Txn.commitReplaceWhere(data, root, c, replaceWhere.get,
                   expectedBase = pinnedVersion, statsCols = statsCols,
-                  meta = Map("op" -> "sql-overwrite-partition",
-                    "partitionCol" -> c))
+                  meta = Map("op" -> "sql-overwrite-partition"))
               case (true, Some(c)) if dynamic =>
                 Txn.commitReplacePartitions(data, root, c,
                   expectedBase = pinnedVersion, statsCols = statsCols,
                   bloomCols = bloomCols,
-                  meta = Map("op" -> "sql-overwrite-dynamic",
-                    "partitionCol" -> c))
-              case (true, None) =>
-                Txn.commitIf(data, root, expectedBase = pinnedVersion,
-                  statsCols = statsCols,
-                  meta = Map("op" -> "sql-overwrite"))
-              case (true, Some(c)) =>
-                Txn.commitIf(data, root, expectedBase = pinnedVersion,
-                  statsCols = statsCols,
-                  meta = Map("op" -> "sql-overwrite", "partitionCol" -> c),
-                  partitionBy = Some(c))
-              case (false, None) =>
-                Txn.commitAppend(data, root, statsCols = statsCols,
-                  bloomCols = bloomCols,
-                  meta = Map("op" -> "sql-insert"))
-              case (false, Some(c)) =>
-                // the canonical partitioned ingest loop: the shard lands
-                // as col=value subdirs of one manifest-appended dir
-                Txn.commitAppendPartitioned(data, root, c,
-                  statsCols = statsCols, bloomCols = bloomCols,
-                  meta = Map("op" -> "sql-insert"))
+                  meta = Map("op" -> "sql-overwrite-dynamic"))
+              case (true, _) =>
+                Txn.commit(data, root, statsCols,
+                  meta = Map("op" -> "sql-overwrite"), partitionBy = partCol,
+                  expectedBase = Some(pinnedVersion))
+              case (false, _) =>
+                // a partitioned shard lands as col=value subdirs of one
+                // manifest-appended dir: the canonical ingest loop
+                Txn.commitAppend(data, root, statsCols,
+                  meta = Map("op" -> "sql-insert"), bloomCols = bloomCols,
+                  partitionBy = partCol)
             }
             ()
           }

@@ -568,7 +568,7 @@ object Rewrite {
     Txn.commit(
       o.repartitionByRange(8, col("o_custkey")).sortWithinPartitions("o_custkey"),
       root, statsCols = Seq("o_custkey"))
-    Txn.commitDelete(s, root, "o_orderkey",
+    Txn.commitDelete(s, root, Seq("o_orderkey"),
       o.where(col("o_orderkey") % 10 === 0).select("o_orderkey"),
       meta = Map("op" -> "erasure"))
     Txn.readSkipping(s, root, Seq(Txn.RangeProbe("o_custkey", 301L, 600L)))
@@ -711,7 +711,7 @@ object Rewrite {
     * o_custkey (range partition + sort), so per-file min/max on the
     * UNCLUSTERED o_orderkey spans ~the whole key domain in every file —
     * range stats cannot skip anything for a point probe. The per-file
-    * BLOOM sidecar (`Txn.commitIndexed(bloomCols = o_orderkey)`) can:
+    * BLOOM sidecar (`Txn.commit(bloomCols = o_orderkey)`) can:
     * `readSkipping` keeps only files whose filter may contain a probe key
     * (one-sided — never drops a file holding a match), the skipping
     * story Delta's bloom filter index tells. Probes are every order key
@@ -729,7 +729,7 @@ object Rewrite {
     val root = txnRoot(s, dir, "orders_bloom")
     val o = orders(s, dir)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    Txn.commitIndexed(
+    Txn.commit(
       o.repartitionByRange(8, col("o_custkey")).sortWithinPartitions("o_custkey"),
       root, statsCols = Seq("o_custkey"), bloomCols = Seq("o_orderkey"),
       bloomBits = 1 << 18)
@@ -760,7 +760,7 @@ object Rewrite {
     val root = txnRoot(s, dir, "docs_strbloom")
     val d = documents(s, dir).select(col("doc_id"),
       concat(lit("doc-"), reverse(col("doc_id").cast("string"))).as("suid"))
-    Txn.commitIndexed(
+    Txn.commit(
       d.repartitionByRange(8, col("doc_id")).sortWithinPartitions("doc_id"),
       root, bloomCols = Seq("suid"), bloomBits = 1 << 18)
     val probes = d.where(col("doc_id") % 97 === 0)
@@ -844,7 +844,7 @@ object Rewrite {
     val reseg = Txn.read(s, root).where(col("custkey") % 10 === 0)
       .withColumn("mktsegment", lit("RESEG"))
     Txn.commitUpsert(reseg, root, "custkey", meta = Map("op" -> "re-segment"))
-    Txn.commitDelete(s, root, "custkey",
+    Txn.commitDelete(s, root, Seq("custkey"),
       Txn.read(s, root).where(col("custkey") % 100 === 0).select("custkey"),
       meta = Map("op" -> "gdpr-erasure"))
     Txn.commit(Txn.read(s, root), root, meta = Map("op" -> "compact"))
@@ -859,7 +859,7 @@ object Rewrite {
 
   /** HIVE-PARTITIONED table layout (r10): orders committed as
     * `data/<uuid>/o_year=YYYY/` partition dirs, a 2099 shard appended
-    * partition-wise (`commitAppendPartitioned` — the O(shard)
+    * partition-wise (`commitAppend(partitionBy = …)` — the O(shard)
     * ingest-one-day loop), then a three-year query answered by
     * `readSkipping`, which opens only the matching partition
     * DIRECTORIES (the listing is the index — no sidecar, no file
@@ -884,11 +884,12 @@ object Rewrite {
     val root = txnRoot(s, dir, "orders_part")
     val o = orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
       col("o_totalprice"), year(col("o_orderdate")).cast("long").as("o_year"))
-    Txn.commitPartitioned(o, root, "o_year")
-    Txn.commitAppendPartitioned(
+    Txn.commit(o, root, partitionBy = Some("o_year"))
+    Txn.commitAppend(
       o.where(col("o_orderkey") % 17 === 0)
         .withColumn("o_orderkey", col("o_orderkey") + 30000000L)
-        .withColumn("o_year", lit(2099L)), root, "o_year")
+        .withColumn("o_year", lit(2099L)), root,
+      partitionBy = Some("o_year"))
     Txn.readSkipping(s, root,
       Seq(Txn.PartProbe("o_year", Seq(1993L, 1995L, 2099L))))
       .withColumn("o_year", col("o_year").cast("long"))
@@ -918,10 +919,10 @@ object Rewrite {
     val root = txnRoot(s, dir, "orders_partskip")
     val o = orders(s, dir).select(col("o_orderkey"), col("o_custkey"),
       col("o_totalprice"), year(col("o_orderdate")).cast("long").as("o_year"))
-    Txn.commitPartitioned(
+    Txn.commit(
       o.repartitionByRange(8, col("o_custkey")).sortWithinPartitions("o_custkey"),
-      root, "o_year", statsCols = Seq("o_custkey"))
-    Txn.commitDelete(s, root, "o_orderkey",
+      root, statsCols = Seq("o_custkey"), partitionBy = Some("o_year"))
+    Txn.commitDelete(s, root, Seq("o_orderkey"),
       o.where(col("o_orderkey") % 97 === 0).select("o_orderkey"))
     Txn.readSkipping(s, root, Seq(Txn.PartProbe("o_year", Seq(1995L)),
       Txn.RangeProbe("o_custkey", 500L, 1500L)))
@@ -953,7 +954,7 @@ object Rewrite {
     Txn.commitAppend(base.where(col("custkey") % 2 === 0)
       .withColumn("custkey", col("custkey") + 5000000L)
       .repartition(8), root)
-    Txn.commitDelete(s, root, "custkey",
+    Txn.commitDelete(s, root, Seq("custkey"),
       base.where(col("custkey") % 13 === 0).select("custkey"))
     s.conf.set("spark.graft.txn.maintain.maxFiles", "4")
     s.conf.set("spark.graft.txn.maintain.maxTombstones", "0")
@@ -1087,7 +1088,7 @@ object Rewrite {
     val o = orders(s, dir)
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     Txn.commit(o, root)
-    Txn.commitDelete(s, root, "o_orderkey",
+    Txn.commitDelete(s, root, Seq("o_orderkey"),
       o.where(col("o_orderkey") % 7 === 0).select("o_orderkey"),
       meta = Map("op" -> "erasure"))
     Txn.commitAppend(o.where(col("o_orderkey").isin(7L, 14L)), root)

@@ -40,15 +40,22 @@ import org.apache.spark.sql.types.StructType
   * design carried: [[commitAppend]] gives incremental ADD-file commits
   * (a version's manifest lists many dirs; appending a shard to a
   * 100 TB table costs O(shard), and the CDC feed serves appends at
-  * file level without diffing), [[commitIf]] gives serializable
-  * conflict detection for rewrites, and [[commitDelete]] gives
-  * O(deleted-keys) row-level deletes via tombstone entries (Delta's
+  * file level without diffing), [[commit]] with an `expectedBase`
+  * gives serializable conflict detection for rewrites, and
+  * [[commitDelete]] gives O(deleted-keys) row-level deletes via
+  * tombstone entries (Delta's
   * deletion-vector role; readers fold entries in log order, and a
   * periodic compacting [[commit]] collapses the chain). The remaining
   * simplification vs Delta: tombstones are key-level, not per-file
   * row bitmaps — [[readSkipping]] still skips files by stats and folds
   * the tombstone anti-joins over the pruned scan (r10), paying one
   * O(deleted-keys) join per tombstone until compaction.
+  *
+  * Every writer reaches `_commits/` through ONE step, [[publish]]:
+  * resolve the tip, stage, rename under [[publishLock]], re-stamp the
+  * publish instant. Writes computed from a pinned snapshot CAS at
+  * `expectedBase + 1`; blind writes (appends, deletes, restores)
+  * rebase onto the new tip, a bounded number of times.
   *
   * Schema resolution never launches a Spark job. Every `data/<uuid>`
   * dir is IMMUTABLE once written and uuid-named, so it is never
@@ -353,11 +360,12 @@ object Txn {
 
   /** Write `df` as a fresh immutable snapshot dir (plus its optional
     * stats sidecar) and return its root-relative path — the shared
-    * first phase of every commit flavor (r9 review: previously
-    * triplicated across commit/commitIf/appendCore). */
+    * first phase of every commit flavor. */
   private def writeSnapshot(df: DataFrame, root: String,
       statsCols: Seq[String], partitionBy: Option[String] = None,
       bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20): String = {
+    require(bloomBits % 64 == 0 && bloomBits > 0,
+      s"bloomBits must be a positive multiple of 64, got $bloomBits")
     val spark = df.sparkSession
     val dataRel = s"data/${java.util.UUID.randomUUID().toString}"
     val w = df.write.mode("overwrite")
@@ -496,15 +504,75 @@ object Txn {
     true
   }
 
-  /** Stage a manifest body under `_tmp/` (invisible to readers) and
-    * return its path, ready for the atomic publish rename. */
-  private def stageManifest(f: FileSystem, root: String, tag: String,
-      body: String): Path = {
-    val tmp = new Path(s"$root/_tmp/$tag")
-    val out = f.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    f.mkdirs(new Path(s"$root/_commits"))
-    tmp
+  /** The highest committed version, 0 for a table with none. */
+  private def tipVersion(f: FileSystem, root: String): Long =
+    committedVersions(f, root).foldLeft(0L)(math.max)
+
+  /** The CAS check of a write computed from version `expectedBase`. */
+  private def checkBase(root: String, tip: Long, expectedBase: Long): Unit =
+    if (tip != expectedBase)
+      throw new java.util.ConcurrentModificationException(
+        s"table at $root moved to version $tip while this writer " +
+          s"computed from $expectedBase; re-read and recompute")
+
+  /** Commit metadata of a write laid out by `partitionBy`: the spec is
+    * recorded as `partitionCol`, here and nowhere else. */
+  private[graft] def withPartitionCol(meta: Map[String, String],
+      partitionBy: Option[String]): Map[String, String] =
+    meta ++ partitionBy.map("partitionCol" -> _)
+
+  private val MaxPublishAttempts = 10000
+
+  /** The commit protocol's ONE publish step — every manifest reaches
+    * `_commits/` here. A round lists `_commits` to resolve the tip,
+    * asks `entries` for the manifest's entry list at that tip (None
+    * ends with no publish: [[appendIdempotent]]'s replay no-op),
+    * stages the body under `_tmp/` (invisible to readers), renames it
+    * to tip+1 under [[publishLock]] and re-stamps its mtime
+    * ([[stampPublish]]). A lost round deletes its staged manifest.
+    *
+    * `expectedBase` picks the conflict rule:
+    *   - `Some(b)`: CAS at `b + 1`. A tip other than `b`, or a lost
+    *     rename, throws [[java.util.ConcurrentModificationException]]:
+    *     a write computed from a pinned snapshot must not rebase.
+    *   - `None`: rebase. A lost round re-resolves the tip and retries.
+    *     A failed rename does not always mean the version was taken
+    *     (a transient FS fault, a vacuumed `_tmp`), so the rounds are
+    *     bounded and a persistent fault fails loud instead of spinning. */
+  private def publish(f: FileSystem, root: String,
+      expectedBase: Option[Long], meta: Map[String, String])(
+      entries: Long => Option[Seq[String]]): Option[Long] = {
+    @annotation.tailrec
+    def round(attempt: Int, lastTried: Long): Option[Long] = {
+      require(attempt <= MaxPublishAttempts,
+        s"commit at $root failed to publish after $attempt attempts " +
+          s"(last tried version $lastTried) — filesystem fault or runaway contention")
+      val base = tipVersion(f, root)
+      expectedBase.foreach(checkBase(root, base, _))
+      entries(base) match {
+        case None => None
+        case Some(es) =>
+          val tmp = new Path(s"$root/_tmp/${java.util.UUID.randomUUID()}")
+          val out = f.create(tmp, false)
+          try out.write(manifestBody(es.mkString(","), meta).getBytes("UTF-8"))
+          finally out.close()
+          f.mkdirs(new Path(s"$root/_commits"))
+          val target = new Path(s"$root/_commits/${base + 1}")
+          val won = publishLock(root).synchronized {
+            !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
+          }
+          if (won) Some(base + 1)
+          else {
+            f.delete(tmp, false)
+            if (expectedBase.nonEmpty)
+              throw new java.util.ConcurrentModificationException(
+                s"version ${base + 1} at $root was taken concurrently; " +
+                  "re-read and recompute")
+            round(attempt + 1, base + 1)
+          }
+      }
+    }
+    round(1, 0L)
   }
 
   /** Commit `df` as the next version of the table at `root`; returns
@@ -520,45 +588,40 @@ object Txn {
     * after). [[readSkipping]] then opens only the files whose range
     * overlaps a predicate — the Delta/Iceberg file-skipping core. Stats
     * cost one extra scan of the new snapshot at commit time (file-local
-    * aggregation, no shuffle: the groupBy key IS the input file). */
+    * aggregation, no shuffle: the groupBy key IS the input file).
+    * `bloomCols` add `_bloom.tsv` point-skipping sidecars of `bloomBits`
+    * bits each, computed in the same pass.
+    *
+    * `partitionBy` (r10) lays the snapshot out HIVE-PARTITIONED as
+    * `data/<uuid>/<col>=<value>/part-*.parquet` (a comma list nests
+    * levels): the partition columns materialize from the directory
+    * names on read, and partition-level skipping ([[readSkipping]] with
+    * a `PartProbe`) needs no sidecar — the listing IS the index. The
+    * layout is self-describing, so deletes, upserts, restores, clones
+    * and CDC compose with it unchanged.
+    *
+    * `expectedBase` (OPTIMISTIC CONCURRENCY): publish only if the table
+    * is still at that version — the one this writer read before
+    * computing. A full-snapshot rewrite computed from version B would
+    * otherwise silently DISCARD any version committed between B and the
+    * publish; the rebase that serializes plain commits cannot know the
+    * rewrite is stale. This is Delta's conflict detection at
+    * whole-snapshot granularity: losers throw
+    * [[java.util.ConcurrentModificationException]] and must re-read and
+    * recompute (their orphan snapshot is vacuum fodder, never visible).
+    * The check runs before the data write (a stale writer fails cheap)
+    * and again at the publish rename, the linearization point. */
   def commit(df: DataFrame, root: String, statsCols: Seq[String] = Nil,
-      meta: Map[String, String] = Map.empty): Long = {
+      meta: Map[String, String] = Map.empty,
+      partitionBy: Option[String] = None,
+      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20,
+      expectedBase: Option[Long] = None): Long = {
     val f = fs(df.sparkSession, root)
-    val dataRel = writeSnapshot(df, root, statsCols)
-    publishFull(f, root, dataRel, manifestBody(dataRel, meta))
-  }
-
-  /** CAS-publish a staged full-snapshot manifest: retry the rename at
-    * the next version number until we win (rename-without-overwrite
-    * fails if a concurrent writer took N first). */
-  private def publishFull(f: FileSystem, root: String, dataRel: String,
-      body: String): Long = {
-    var tmp = stageManifest(f, root, dataRel.stripPrefix("data/"), body)
-    var n = committedVersions(f, root).foldLeft(0L)(math.max) + 1
-    var published = false
-    var attempt = 0
-    while (!published) {
-      // a failed rename does NOT always mean the version was taken: the
-      // staged manifest may be gone (concurrent vacuum of _tmp, transient
-      // FS fault) — re-stage it before retrying, and bound the loop so a
-      // persistent fault fails loud instead of spinning on n forever
-      // (r10 advice)
-      attempt += 1
-      require(attempt <= 10000,
-        s"commit at $root failed to publish after $attempt attempts " +
-          s"(last tried version $n) — filesystem fault or runaway contention")
-      if (!f.exists(tmp))
-        tmp = stageManifest(f, root,
-          s"${dataRel.stripPrefix("data/")}-$attempt", body)
-      val target = new Path(s"$root/_commits/$n")
-      publishLock(root).synchronized {
-        if (f.exists(target)) n += 1
-        else if (f.rename(tmp, target)) { stampPublish(f, target); published = true }
-        else if (f.exists(target)) n += 1
-        // else: rename failed with the slot still free — loop re-stages
-      }
-    }
-    n
+    expectedBase.foreach(checkBase(root, tipVersion(f, root), _))
+    val dataRel = writeSnapshot(df, root, statsCols, partitionBy,
+      bloomCols, bloomBits)
+    publish(f, root, expectedBase, withPartitionCol(meta, partitionBy))(
+      _ => Some(Seq(dataRel))).get
   }
 
   /** True when `a` and `b` sit on the same LOSSLESS widening chain
@@ -638,7 +701,7 @@ object Txn {
     * keep their sidecars current on every INSERT — published atomically
     * with the data because the pointer swap happens after. Costs one
     * extra scan of the NEW dir per declared sidecar kind (O(batch),
-    * the same bill the programmatic commitIndexed pays). */
+    * the same bill a programmatic [[commit]] with sidecars pays). */
   private[graft] def writeSidecars(spark: SparkSession, root: String,
       dataRel: String, statsCols: Seq[String], bloomCols: Seq[String],
       bloomBits: Int = 1 << 20): Unit = {
@@ -648,24 +711,15 @@ object Txn {
 
   /** Publish an ALREADY-WRITTEN snapshot dir as the next FULL version
     * (r11, the native V2 writer's commit half: executors have streamed
-    * parquet into `root/<dataRel>` — invisible until this rename). */
+    * parquet into `root/<dataRel>` — invisible until this rename).
+    * `expectedBase` pins the publish as in [[commit]] (r12): a
+    * full-snapshot REPLACE computed from a pinned scan must not discard
+    * a commit that landed between the pin and the publish. */
   private[graft] def publishDirFull(spark: SparkSession, root: String,
-      dataRel: String, meta: Map[String, String] = Map.empty): Long =
-    publishFull(fs(spark, root), root, dataRel, manifestBody(dataRel, meta))
-
-  /** OCC-pinned [[publishDirFull]] (r12, r11 advice medium): publish an
-    * already-written snapshot dir as version `expectedBase + 1` ONLY if
-    * the table is still at `expectedBase` — the [[commitIf]] contract
-    * for the native V2 write path. A full-snapshot REPLACE computed
-    * from a pinned scan silently discards any commit that landed
-    * between the pin and the publish; losers throw
-    * [[java.util.ConcurrentModificationException]] loud (the orphan
-    * snapshot is vacuum fodder, never visible). */
-  private[graft] def publishDirFullIf(spark: SparkSession, root: String,
-      dataRel: String, expectedBase: Long,
-      meta: Map[String, String] = Map.empty): Long =
-    casPublish(spark, root, expectedBase, dataRel.stripPrefix("data/"),
-      manifestBody(dataRel, meta))
+      dataRel: String, meta: Map[String, String] = Map.empty,
+      expectedBase: Option[Long] = None): Long =
+    publish(fs(spark, root), root, expectedBase, meta)(
+      _ => Some(Seq(dataRel))).get
 
   /** OCC-pinned DELTA publish (r12, the native half of the SQL delta
     * row-level ops): extend `expectedBase`'s manifest with an optional
@@ -692,11 +746,9 @@ object Txn {
     // reader already folds the tuple anti-join (r13, r12 verdict item 3)
     val keySpec = keyCols.mkString("+")
     val f = fs(spark, root)
-    val dirs = manifestDirs(f, root, expectedBase) ++
-      keysRel.map(k => s"~$k@$keySpec").toSeq ++ rowsRel.toSeq
-    casPublish(spark, root, expectedBase,
-      s"delta-${java.util.UUID.randomUUID()}",
-      manifestBody(dirs.mkString(","), meta))
+    publish(f, root, Some(expectedBase), meta)(base => Some(
+      manifestDirs(f, root, base) ++
+        keysRel.map(k => s"~$k@$keySpec").toSeq ++ rowsRel.toSeq)).get
   }
 
   /** DYNAMIC PARTITION OVERWRITE publish (r13, r12 verdict item 6):
@@ -813,7 +865,8 @@ object Txn {
     }
     if (!hasFiles) f.delete(new Path(s"$root/$dataRel"), true)
     publishPartitionReplace(spark, root,
-      if (hasFiles) Some(dataRel) else None, colVals, expectedBase, meta)
+      if (hasFiles) Some(dataRel) else None, colVals, expectedBase,
+      withPartitionCol(meta, Some(partSpec)))
   }
 
   /** [[publishDynamicOverwrite]] from a DataFrame (the V1 write-bridge
@@ -823,39 +876,11 @@ object Txn {
       expectedBase: Long, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       meta: Map[String, String] = Map.empty): Long = {
-    val cols = partitionCols(partSpec)
-    cols.foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"partition column $c absent from the batch schema")
-    }
-    val spark = df.sparkSession
     val dataRel = writeSnapshot(df, root, statsCols,
       partitionBy = Some(partSpec), bloomCols = bloomCols)
-    publishDynamicOverwrite(spark, root, dataRel, cols, expectedBase, meta)
-  }
-
-  /** Shared OCC publish: stage `body`, rename to `expectedBase + 1`
-    * only if the table is still at `expectedBase`; loud CME on loss. */
-  private def casPublish(spark: SparkSession, root: String,
-      expectedBase: Long, tag: String, body: String): Long = {
-    val f = fs(spark, root)
-    val cur = committedVersions(f, root).foldLeft(0L)(math.max)
-    if (cur != expectedBase)
-      throw new java.util.ConcurrentModificationException(
-        s"table at $root moved to version $cur while this writer " +
-          s"computed from $expectedBase; re-read and recompute")
-    val tmp = stageManifest(f, root, tag, body)
-    val target = new Path(s"$root/_commits/${expectedBase + 1}")
-    val occLost = publishLock(root).synchronized {
-      f.exists(target) || !f.rename(tmp, target) || !stampPublish(f, target)
-    }
-    if (occLost) {
-      f.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"version ${expectedBase + 1} at $root was taken concurrently; " +
-          "re-read and recompute")
-    }
-    expectedBase + 1
+    publishDynamicOverwrite(df.sparkSession, root, dataRel,
+      partitionCols(partSpec), expectedBase,
+      withPartitionCol(meta, Some(partSpec)))
   }
 
   /** TABLE-LEVEL properties (r12): one small `_props` file at the table
@@ -917,24 +942,10 @@ object Txn {
   private[graft] def publishDirAppend(spark: SparkSession, root: String,
       dataRel: String, meta: Map[String, String] = Map.empty): Long = {
     val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_commits"))
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
+    publish(f, root, None, meta) { base =>
       require(base >= 1, s"append to uninitialized table at $root — commit first")
-      val dirs = manifestDirs(f, root, base) :+ dataRel
-      val tmp = stageManifest(f, root,
-        s"${dataRel.stripPrefix("data/")}-$attempt",
-        manifestBody(dirs.mkString(","), meta))
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
-      }
-      if (won) return base + 1
-      f.delete(tmp, false)
-      attempt += 1
-    }
-    -1L // unreachable
+      Some(manifestDirs(f, root, base) :+ dataRel)
+    }.get
   }
 
   /** APPEND commit (r9): publish `df` as new data ADDED to the current
@@ -956,18 +967,25 @@ object Txn {
     * rewrite, which is the correct Delta semantics for blind appends.)
     *
     * Schema: the appended shard may add nullable columns; readers see
-    * them null-filled on older rows via mergeSchema ([[readVersion]]). */
+    * them null-filled on older rows via mergeSchema ([[readVersion]]).
+    *
+    * `partitionBy` writes the shard hive-partitioned (see [[commit]]):
+    * one day's (or tenant's) data lands as `<col>=<value>` subdirs of a
+    * fresh manifest-appended dir — O(shard) commit into a partitioned
+    * table of any size, the production ingest loop. */
   def commitAppend(df: DataFrame, root: String, statsCols: Seq[String] = Nil,
       meta: Map[String, String] = Map.empty,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20): Long =
+      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20,
+      partitionBy: Option[String] = None): Long =
     appendCore(df, root, statsCols, meta, dedupKey = None,
-      bloomCols = bloomCols, bloomBits = bloomBits)
+      partitionBy = partitionBy, bloomCols = bloomCols, bloomBits = bloomBits)
       .getOrElse(sys.error("unreachable: dedup-free append cannot no-op"))
 
-  /** The rebase loop shared by [[commitAppend]] and [[appendIdempotent]].
-    * Per-iteration order is RESOLVE tip → CHECK dedup marker → RENAME
-    * to tip+1, and that order is what makes the idempotence check
-    * serializable (r9 review): a racer that published the marker
+  /** The rebase shared by [[commitAppend]] and [[appendIdempotent]].
+    * Per-round order is RESOLVE tip → CHECK dedup marker → schema guard
+    * → RENAME to tip+1 ([[publish]] resolves and renames; the round's
+    * entry function checks and guards), and that order is what makes
+    * the idempotence check serializable (r9 review): a racer that published the marker
     * before our resolve is seen by the check; a racer that published
     * after our resolve holds a version ≥ our target, so our
     * rename-without-overwrite FAILS and the next iteration re-resolves
@@ -999,111 +1017,100 @@ object Txn {
       writeSnapshot(
         readDir(spark, f, s"$root/$written").select(upsertKey.get).distinct(),
         root, Nil)
-    f.mkdirs(new Path(s"$root/_commits"))
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
+    publish(f, root, None, withPartitionCol(meta, partitionBy)) { base =>
       require(base >= 1, s"append to uninitialized table at $root — commit first")
       val replayed = dedupKey.exists { case (app, bid) =>
         history(spark, root).exists { case (_, _, m) =>
           m.get("txnAppId").contains(app) && m.get("txnVersion").contains(bid) }
       }
-      if (replayed) return None
-      // SCHEMA ENFORCEMENT at write time (r10, Delta's contract): a
-      // shard may ADD nullable columns (mergeSchema null-fills older
-      // rows) but a shared column changing TYPE would poison the table
-      // — every subsequent read of the version chain fails, long after
-      // the writer is gone. Reject it HERE, where the writer can fix
-      // it, not at read time. Cost: one tip schema resolve per attempt
-      // (driver-side, from the footer memo — no Spark job).
-      // Hive-PARTITION columns are exempt: their
-      // read-side type is INFERRED from directory names (int for
-      // numeric values), not declared by the data, so comparing it to
-      // the shard's declared type is a false mismatch by construction.
-      // Name comparison follows the analyzer's resolution: when
-      // spark.sql.caseSensitive is false (the default) the guard keys
-      // on lowercased names, otherwise a shard declaring `ID string`
-      // against a base `id long` would BYPASS the type check and poison
-      // read-time unionByName anyway (r10 advice).
-      val caseSensitive =
-        spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-      def resolvedName(n: String): String =
-        if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-      val partCols: Set[String] = (manifestDirs(f, root, base)
-        .map(parseEntry).collect { case (dir, None) => resolveDir(root, dir) }
-        .filter(isPartitionedDir(f, _))
-        // every LEVEL's column names (r13: nested a=v/b=w chains)
-        .flatMap(d => partitionLeafDirs(f, d).flatMap(_._2.map(_._1)))
-        .toSet ++ partitionBy.toSeq.flatMap(partitionCols)).map(resolvedName)
-      val baseFields = readVersion(spark, root, base).schema.fields
-        .map(fld => resolvedName(fld.name) -> fld.dataType).toMap
-      df.schema.fields
-        .filterNot(fld => partCols.contains(resolvedName(fld.name)))
-        .foreach { fld =>
-          baseFields.get(resolvedName(fld.name)).foreach { t =>
-            // nullability-insensitive: a shard tightening (or loosening)
-            // nullability is not a type change — every read path unions
-            // schemas as nullable anyway (r11; strict equality rejected
-            // `array<long> not-null` into `array<long>`). Same-chain
-            // WIDENING shards are accepted (r13, ALTER COLUMN TYPE):
-            // lossless either direction — readVersion union-coerces
-            // mixed chains to the wider member, so they cannot poison
-            // reads the way a string-into-long shard would.
-            require(ignoreNullability(t) == ignoreNullability(fld.dataType)
-              || sameWideningChain(ignoreNullability(t),
-                ignoreNullability(fld.dataType)),
-              s"appended shard changes column ${fld.name} from $t to " +
-                s"${fld.dataType} at $root — a type change needs a full " +
-                "rewrite commit, not an append")
-          }
-        }
-      val dataRel = written
-      // an upsert's manifest extension is tombstone-then-data: the keys
-      // delete every prior copy, the fresh dir re-inserts the new rows —
-      // ONE atomic publish, so no reader ever sees the delete without
-      // the insert
-      val dirs = manifestDirs(f, root, base) ++
-        upsertKey.map(k => s"~$keysWritten@$k").toSeq :+ dataRel
-      val tmp = stageManifest(f, root, s"${dataRel.stripPrefix("data/")}-$attempt",
-        manifestBody(dirs.mkString(","), meta))
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
+      if (replayed) None
+      else {
+        guardAppendSchema(spark, f, root, base, df.schema, partitionBy)
+        val dataRel = written
+        // an upsert's manifest extension is tombstone-then-data: the keys
+        // delete every prior copy, the fresh dir re-inserts the new rows —
+        // ONE atomic publish, so no reader ever sees the delete without
+        // the insert
+        Some(manifestDirs(f, root, base) ++
+          upsertKey.map(k => s"~$keysWritten@$k").toSeq :+ dataRel)
       }
-      if (won) return Some(base + 1)
-      f.delete(tmp, false) // staged manifest of the lost round
-      attempt += 1 // racer took the slot: rebase onto the new tip
     }
-    None // unreachable
+  }
+
+  /** SCHEMA ENFORCEMENT at write time (r10, Delta's contract): a shard
+    * may ADD nullable columns (mergeSchema null-fills older rows) but a
+    * shared column changing TYPE would poison the table — every
+    * subsequent read of the version chain fails, long after the writer
+    * is gone. Reject it HERE, where the writer can fix it, not at read
+    * time. Cost: one tip schema resolve per round (driver-side, from
+    * the footer memo — no Spark job).
+    * Hive-PARTITION columns are exempt: their read-side type is
+    * INFERRED from directory names (int for numeric values), not
+    * declared by the data, so comparing it to the shard's declared type
+    * is a false mismatch by construction.
+    * Name comparison follows the analyzer's resolution: when
+    * spark.sql.caseSensitive is false (the default) the guard keys on
+    * lowercased names, otherwise a shard declaring `ID string` against
+    * a base `id long` would BYPASS the type check and poison read-time
+    * unionByName anyway (r10 advice). */
+  private def guardAppendSchema(spark: SparkSession, f: FileSystem,
+      root: String, base: Long, shard: StructType,
+      partitionBy: Option[String]): Unit = {
+    val caseSensitive =
+      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+    def resolvedName(n: String): String =
+      if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
+    val partCols: Set[String] = (manifestDirs(f, root, base)
+      .map(parseEntry).collect { case (dir, None) => resolveDir(root, dir) }
+      .filter(isPartitionedDir(f, _))
+      // every LEVEL's column names (r13: nested a=v/b=w chains)
+      .flatMap(d => partitionLeafDirs(f, d).flatMap(_._2.map(_._1)))
+      .toSet ++ partitionBy.toSeq.flatMap(partitionCols)).map(resolvedName)
+    val baseFields = readVersion(spark, root, base).schema.fields
+      .map(fld => resolvedName(fld.name) -> fld.dataType).toMap
+    shard.fields
+      .filterNot(fld => partCols.contains(resolvedName(fld.name)))
+      .foreach { fld =>
+        baseFields.get(resolvedName(fld.name)).foreach { t =>
+          // nullability-insensitive: a shard tightening (or loosening)
+          // nullability is not a type change — every read path unions
+          // schemas as nullable anyway (r11; strict equality rejected
+          // `array<long> not-null` into `array<long>`). Same-chain
+          // WIDENING shards are accepted (r13, ALTER COLUMN TYPE):
+          // lossless either direction — readVersion union-coerces
+          // mixed chains to the wider member, so they cannot poison
+          // reads the way a string-into-long shard would.
+          require(ignoreNullability(t) == ignoreNullability(fld.dataType)
+            || sameWideningChain(ignoreNullability(t),
+              ignoreNullability(fld.dataType)),
+            s"appended shard changes column ${fld.name} from $t to " +
+              s"${fld.dataType} at $root — a type change needs a full " +
+              "rewrite commit, not an append")
+        }
+      }
   }
 
   /** ROW-LEVEL DELETE without rewriting the table (r9): commit the
-    * DELETED KEYS as a tombstone entry (`~data/<uuid>@<keyCol>`) that
-    * extends the manifest exactly like an append — cost O(deleted
-    * keys), never O(table), the same economics [[commitAppend]] gives
-    * inserts and the gap Delta fills with deletion vectors. Readers
-    * fold entries in order, so a key re-appended AFTER its tombstone
-    * survives (log-replay semantics); every read of a tombstoned
-    * version pays one anti-join per tombstone, and a periodic full
-    * [[commit]] of `read(...)` (compaction) collapses the chain back
-    * to a single clean dir. [[readSkipping]] on a tombstoned version
-    * prunes by stats first, then folds the tombstone anti-joins over
-    * the pruned scan (r10 — the deletion-vector read shape).
-    * The CDC slow path handles tombstone steps (the
-    * file-level fast path is gated to pure data-dir extensions). */
-  def commitDelete(spark: SparkSession, root: String, keyCol: String,
-      keys: DataFrame, meta: Map[String, String] = Map.empty): Long =
-    commitDeleteComposite(spark, root, Seq(keyCol), keys, meta)
-
-  /** COMPOSITE-KEY tombstone delete (r12, r11 verdict item 6): delete
-    * every row whose `(keyCols...)` TUPLE appears in `keys` — the
-    * manifest entry is `~data/<uuid>@a+b`, readers anti-join on all key
-    * columns in log order. `DELETE FROM t WHERE a = 1 AND b = 2` is one
-    * single-row composite tombstone: O(keys), never a rewrite, where
-    * r11 silently downgraded to a full-table copy-on-write. Same
-    * economics, concurrency (rebase loop), and compaction story as the
-    * single-column form — which is now just the 1-column case. */
-  def commitDeleteComposite(spark: SparkSession, root: String,
+    * DELETED KEYS as a tombstone entry that extends the manifest
+    * exactly like an append — cost O(deleted keys), never O(table), the
+    * same economics [[commitAppend]] gives inserts and the gap Delta
+    * fills with deletion vectors. Readers fold entries in order, so a
+    * key re-appended AFTER its tombstone survives (log-replay
+    * semantics); every read of a tombstoned version pays one anti-join
+    * per tombstone, and a periodic full [[commit]] of `read(...)`
+    * (compaction) collapses the chain back to a single clean dir.
+    * [[readSkipping]] on a tombstoned version prunes by stats first,
+    * then folds the tombstone anti-joins over the pruned scan (r10 —
+    * the deletion-vector read shape). The CDC slow path handles
+    * tombstone steps (the file-level fast path is gated to pure
+    * data-dir extensions).
+    *
+    * Every row whose `keyCols` TUPLE appears in `keys` is deleted: the
+    * entry is `~data/<uuid>@a+b` (r12; one column is `~data/<uuid>@a`),
+    * so `DELETE FROM t WHERE a = 1 AND b = 2` is one single-row
+    * tombstone, never a rewrite. Concurrent deletes rebase like
+    * appends. */
+  def commitDelete(spark: SparkSession, root: String,
       keyCols: Seq[String], keys: DataFrame,
       meta: Map[String, String] = Map.empty): Long = {
     require(keyCols.nonEmpty, "composite tombstone needs at least one column")
@@ -1124,24 +1131,10 @@ object Txn {
     val f = fs(spark, root)
     val dataRel = writeSnapshot(
       keys.select(keyCols.map(col): _*).distinct(), root, Nil)
-    f.mkdirs(new Path(s"$root/_commits"))
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
+    publish(f, root, None, meta) { base =>
       require(base >= 1, s"delete from uninitialized table at $root")
-      val dirs = manifestDirs(f, root, base) :+ s"~$dataRel@$keySpec"
-      val tmp = stageManifest(f, root,
-        s"${dataRel.stripPrefix("data/")}-$attempt",
-        manifestBody(dirs.mkString(","), meta))
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
-      }
-      if (won) return base + 1
-      f.delete(tmp, false)
-      attempt += 1
-    }
-    -1L // unreachable
+      Some(manifestDirs(f, root, base) :+ s"~$dataRel@$keySpec")
+    }.get
   }
 
   /** IDEMPOTENT streaming append (r9): the exactly-once foreachBatch
@@ -1172,8 +1165,7 @@ object Txn {
       bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20,
       partitionBy: Option[String] = None): Option[Long] =
     appendCore(df, root, statsCols,
-      meta = Map("txnAppId" -> appId, "txnVersion" -> batchId.toString) ++
-        partitionBy.map("partitionCol" -> _),
+      meta = Map("txnAppId" -> appId, "txnVersion" -> batchId.toString),
       dedupKey = Some((appId, batchId.toString)),
       partitionBy = partitionBy,
       bloomCols = bloomCols, bloomBits = bloomBits)
@@ -1239,22 +1231,8 @@ object Txn {
     require(f.exists(new Path(s"$root/_commits/$toVersion")),
       s"version $toVersion at $root was never committed or was vacuumed")
     val dirs = manifestDirs(f, root, toVersion)
-    val body = manifestBody(dirs.mkString(","),
-      meta + ("restoredFrom" -> toVersion.toString))
-    f.mkdirs(new Path(s"$root/_commits"))
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
-      val tmp = stageManifest(f, root, s"restore-$toVersion-$attempt", body)
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
-      }
-      if (won) return base + 1
-      f.delete(tmp, false)
-      attempt += 1
-    }
-    -1L // unreachable
+    publish(f, root, None, meta + ("restoredFrom" -> toVersion.toString))(
+      _ => Some(dirs)).get
   }
 
   /** METADATA-ONLY commit (r13, the column-mapping carrier): publish
@@ -1267,22 +1245,10 @@ object Txn {
   def commitMetaOnly(spark: SparkSession, root: String,
       meta: Map[String, String]): Long = {
     val f = fs(spark, root)
-    var attempt = 0
-    while (true) {
-      val base = committedVersions(f, root).foldLeft(0L)(math.max)
+    publish(f, root, None, meta) { base =>
       require(base >= 1, s"metadata commit on uninitialized table at $root")
-      val dirs = manifestDirs(f, root, base)
-      val tmp = stageManifest(f, root, s"meta-$base-$attempt",
-        manifestBody(dirs.mkString(","), meta))
-      val target = new Path(s"$root/_commits/${base + 1}")
-      val won = publishLock(root).synchronized {
-        !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
-      }
-      if (won) return base + 1
-      f.delete(tmp, false)
-      attempt += 1
-    }
-    -1L // unreachable
+      Some(manifestDirs(f, root, base))
+    }.get
   }
 
   /** Zero-copy SHALLOW CLONE (r10): initialize `dstRoot` as version 1
@@ -1315,112 +1281,12 @@ object Txn {
       val abs = resolveDir(srcRoot, dir)
       key.fold(abs)(k => s"~$abs@$k")
     }
-    val body = manifestBody(absEntries.mkString(","),
-      meta + ("clonedFrom" -> s"$srcRoot#$srcV"))
-    val tmp = stageManifest(f, dstRoot, "clone-v1", body)
-    val target = new Path(s"$dstRoot/_commits/1")
-    val cloneWon = publishLock(dstRoot).synchronized {
-      !f.exists(target) && f.rename(tmp, target) && stampPublish(f, target)
+    try publish(f, dstRoot, Some(0L),
+      meta + ("clonedFrom" -> s"$srcRoot#$srcV"))(_ => Some(absEntries)).get
+    catch {
+      case _: java.util.ConcurrentModificationException =>
+        sys.error(s"clone target $dstRoot was initialized concurrently")
     }
-    if (!cloneWon) {
-      f.delete(tmp, false)
-      sys.error(s"clone target $dstRoot was initialized concurrently")
-    }
-    1L
-  }
-
-  /** HIVE-PARTITIONED commit (r10): the snapshot dir is laid out as
-    * `data/<uuid>/<partCol>=<value>/part-*.parquet` — the standard
-    * warehouse idiom for time/tenant-keyed 100 TB corpora. The
-    * partition column materializes from the directory names on read
-    * (one column of storage saved per row), and partition-level
-    * skipping ([[readSkipping]] with a `PartProbe`) needs no sidecar at
-    * all: the directory listing IS the index. Layout is self-describing
-    * (readers detect `col=` children), so deletes, upserts, restores,
-    * clones and CDC all compose with partitioned snapshots unchanged.
-    * Pair with [[commitAppendPartitioned]] for the canonical
-    * ingest-one-day-at-a-time loop. */
-  def commitPartitioned(df: DataFrame, root: String, partCol: String,
-      meta: Map[String, String] = Map.empty,
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomBits: Int = 1 << 20): Long = {
-    partitionCols(partCol).foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"partition column $c absent from the schema")
-    }
-    val f = fs(df.sparkSession, root)
-    val dataRel = writeSnapshot(df, root, statsCols,
-      partitionBy = Some(partCol), bloomCols = bloomCols, bloomBits = bloomBits)
-    publishFull(f, root, dataRel,
-      manifestBody(dataRel, meta + ("partitionCol" -> partCol)))
-  }
-
-  /** [[commitAppend]] writing the shard hive-partitioned: one day's (or
-    * tenant's) data lands as `<partCol>=<value>` subdirs of a fresh
-    * manifest-appended dir — O(shard) commit into a partitioned table
-    * of any size, the production ingest loop. */
-  def commitAppendPartitioned(df: DataFrame, root: String, partCol: String,
-      meta: Map[String, String] = Map.empty,
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      bloomBits: Int = 1 << 20): Long = {
-    partitionCols(partCol).foreach { c =>
-      require(df.schema.fieldNames.contains(c),
-        s"partition column $c absent from the shard schema")
-    }
-    appendCore(df, root, statsCols, meta + ("partitionCol" -> partCol),
-      dedupKey = None, partitionBy = Some(partCol),
-      bloomCols = bloomCols, bloomBits = bloomBits)
-      .getOrElse(sys.error("unreachable: dedup-free append cannot no-op"))
-  }
-
-  /** OPTIMISTIC-CONCURRENCY commit: publish `df` as the next version
-    * only if the table is still at `expectedBase` (the version this
-    * writer read before computing). A full-snapshot rewrite computed
-    * from version B silently DISCARDS any version committed between B
-    * and the publish — [[commit]]'s CAS only serializes version
-    * numbers, it cannot know the rewrite is stale. This is the
-    * serializable-writer check Delta calls conflict detection, reduced
-    * to whole-snapshot granularity: losers throw
-    * [[java.util.ConcurrentModificationException]] and must re-read +
-    * recompute (their orphan snapshot is vacuum fodder, never visible).
-    * The check runs AFTER the data write — the publish rename is the
-    * linearization point, and a racer that lands between check and
-    * rename is caught because rename-without-overwrite fails on the
-    * taken version number and we re-check instead of retrying blindly. */
-  def commitIf(df: DataFrame, root: String, expectedBase: Long,
-      statsCols: Seq[String] = Nil, meta: Map[String, String] = Map.empty,
-      partitionBy: Option[String] = None,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20): Long = {
-    val spark = df.sparkSession
-    val f = fs(spark, root)
-    def check(): Unit = {
-      val cur = committedVersions(f, root).foldLeft(0L)(math.max)
-      if (cur != expectedBase)
-        throw new java.util.ConcurrentModificationException(
-          s"table at $root moved to version $cur while this writer " +
-            s"computed from $expectedBase; re-read and recompute")
-    }
-    check()
-    val dataRel = writeSnapshot(df, root, statsCols, partitionBy,
-      bloomCols, bloomBits)
-    val tmp = stageManifest(f, root, dataRel.stripPrefix("data/"),
-      manifestBody(dataRel, meta))
-    try check()
-    catch { case t: Throwable => f.delete(tmp, false); throw t }
-    val target = new Path(s"$root/_commits/${expectedBase + 1}")
-    val occLost = publishLock(root).synchronized {
-      f.exists(target) || !f.rename(tmp, target)
-    }
-    if (occLost) {
-      // a racer published expectedBase+1 between the re-check and the
-      // rename; the rename-without-overwrite failure IS the detection
-      // (staged manifest cleaned; the orphan snapshot is vacuum fodder)
-      f.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"version ${expectedBase + 1} at $root was taken concurrently; " +
-          "re-read and recompute")
-    }
-    expectedBase + 1
   }
 
   /** ONE aggregation pass computing EVERY declared sidecar of a fresh
@@ -1697,23 +1563,6 @@ object Txn {
       }.toMap
   }
 
-  /** [[commit]] that also writes BLOOM sidecars: full-snapshot publish
-    * with `_stats.tsv` for `statsCols` (range skipping) and
-    * `_bloom.tsv` for `bloomCols` (point skipping via [[readSkipping]]).
-    * Sidecars cost one extra scan of the fresh snapshot each and are
-    * invisible to plain parquet readers. */
-  def commitIndexed(df: DataFrame, root: String, statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = 1 << 20,
-      meta: Map[String, String] = Map.empty): Long = {
-    require(bloomBits % 64 == 0 && bloomBits > 0,
-      s"bloomBits must be a positive multiple of 64, got $bloomBits")
-    val spark = df.sparkSession
-    val f = fs(spark, root)
-    val dataRel = writeSnapshot(df, root, statsCols,
-      bloomCols = bloomCols, bloomBits = bloomBits)
-    publishFull(f, root, dataRel, manifestBody(dataRel, meta))
-  }
-
   /** CHECK-constrained commit (r10, Delta's table constraints): every
     * expression in `checks` must hold on EVERY row or nothing is
     * published — the snapshot is validated AS WRITTEN (read back from
@@ -1740,7 +1589,7 @@ object Txn {
           s"constraint violated, commit aborted (table unchanged): CHECK ($c) " +
             s"fails on rows like ${sample.mkString("; ").take(500)}")
     }
-    publishFull(f, root, dataRel, manifestBody(dataRel, meta))
+    publish(f, root, None, meta)(_ => Some(Seq(dataRel))).get
   }
 
   /** One file group of a pruned scan: `files` read together, plus the
@@ -2378,7 +2227,7 @@ object Txn {
     *   - `spark.graft.txn.maintain.maxTombstones` (default 8)
     *   - `spark.graft.txn.maintain.targetBytes`   (default 128 MiB)
     *
-    * CONCURRENCY: the compaction publishes through [[commitIf]] pinned
+    * CONCURRENCY: the compaction publishes through [[commit]] pinned
     * to the version the gauge read — a maintenance job must NEVER
     * clobber a writer that landed mid-rewrite (a full-snapshot commit
     * from a stale base silently discards the racer's rows). A lost
@@ -2391,7 +2240,9 @@ object Txn {
   def maintain(spark: SparkSession, root: String,
       statsCols: Seq[String] = Nil): Option[Long] = {
     def confLong(k: String, d: Long): Long =
-      spark.conf.getOption(k).map(_.toLong).getOrElse(d)
+      spark.conf.getOption(k).fold(d)(v => v.toLongOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"$k must be a whole number, got '$v'")))
     val maxFiles = confLong("spark.graft.txn.maintain.maxFiles", 64L)
     val maxTombs = confLong("spark.graft.txn.maintain.maxTombstones", 8L)
     val targetBytes = confLong("spark.graft.txn.maintain.targetBytes", 128L << 20)
@@ -2423,13 +2274,11 @@ object Txn {
         case Some(c) => folded.repartition(partitionCols(c).map(col): _*)
         case None    => folded.repartition(nFiles.toInt)
       }
-      try Some(commitIf(laid, root, expectedBase = base,
-        statsCols = statsCols,
+      try Some(commit(laid, root, statsCols,
         meta = Map("op" -> "maintain",
           "compactedFiles" -> files.toString,
-          "collapsedTombstones" -> tombs.toString) ++
-          partCol.map("partitionCol" -> _),
-        partitionBy = partCol))
+          "collapsedTombstones" -> tombs.toString),
+        partitionBy = partCol, expectedBase = Some(base)))
       catch {
         case _: java.util.ConcurrentModificationException => None
       }
@@ -2462,7 +2311,7 @@ object Txn {
       if (st.isFile && st.getPath.getName.endsWith(".parquet")) total += st.getLen
     }
     val nFiles = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    val v = commitIndexed(spark.read.parquet(inDir).repartition(nFiles),
+    val v = commit(spark.read.parquet(inDir).repartition(nFiles),
       root, statsCols = statsCols, bloomCols = bloomCols,
       bloomBits = bloomBits)
     val dataDir = s"$root/${manifestTarget(fs(spark, root), root, v)}"

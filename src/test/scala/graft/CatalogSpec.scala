@@ -308,7 +308,7 @@ class CatalogSpec extends SparkSpec {
     val root = fresh("skip_t")
     val df = (1L to 16000L).map(i => (i, i % 97L)).toDF("id", "v")
       .repartitionByRange(16, col("id"))
-    Txn.commitIndexed(df, root, statsCols = Seq("id"), bloomCols = Seq("id"))
+    Txn.commit(df, root, statsCols = Seq("id"), bloomCols = Seq("id"))
     GraftCatalog.create(spark, catRoot, "sk", root)
     // point query: opens only the files whose stats+bloom admit the keys
     graft.catalog.GraftScanStats.reset()
@@ -449,7 +449,7 @@ class CatalogSpec extends SparkSpec {
     val catRoot = spark.conf.get(s"spark.sql.catalog.$c.root")
     val root = fresh("partskip_t")
     val df = (1L to 8000L).map(i => (i, 2017L + i % 8L)).toDF("id", "year")
-    Txn.commitPartitioned(df, root, "year", statsCols = Seq("id"))
+    Txn.commit(df, root, partitionBy = Some("year"), statsCols = Seq("id"))
     GraftCatalog.create(spark, catRoot, "py", root)
     graft.catalog.GraftScanStats.reset()
     val got = spark.sql(
@@ -1011,7 +1011,7 @@ class CatalogSpec extends SparkSpec {
       concat(lit("doc-"), lpad(((fcol("id") * 2654435761L) % 100000L)
         .cast("string"), 6, "0")).as("suid"))
       .repartitionByRange(16, fcol("id"))
-    Txn.commitIndexed(docs, root, bloomCols = Seq("suid"))
+    Txn.commit(docs, root, bloomCols = Seq("suid"))
     GraftCatalog.create(spark, catRoot, "sb", root)
     // programmatic claim: the bloom keeps O(matching) of 16 files
     val probe = docs.where(fcol("id") === 7777L)
@@ -1053,9 +1053,9 @@ class CatalogSpec extends SparkSpec {
       concat(lit("doc-"), ((col("id") * 40503L) % 100003L).cast("string"))
         .as("skey"))
       .repartitionByRange(4, col("id"))
-    Txn.commitPartitioned(df, root, "year,src", statsCols = Seq("id"),
+    Txn.commit(df, root, partitionBy = Some("year,src"), statsCols = Seq("id"),
       bloomCols = Seq("key", "skey"), bloomBits = 1 << 14)
-    Txn.commitDelete(spark, root, "id", Seq(1234L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(1234L).toDF("id"))
     GraftCatalog.create(spark, catRoot, "cj", root)
     // ids ≡ 4 (mod 6) live under year=2021/src=web; 1234 is tombstoned
     val hits = Seq(1234L, 1240L, 2230L)

@@ -639,7 +639,7 @@ class StreamingSpec extends SparkSpec {
       .writeStream.format("memory").queryName(sink)
       .outputMode(OutputMode.Append()).start()
     q.processAllAvailable()
-    Txn.commitDelete(spark, root, "id", Seq(1L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(1L).toDF("id"))
     val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.processAllAvailable()
       q.awaitTermination(10000)
@@ -675,7 +675,7 @@ class StreamingSpec extends SparkSpec {
     Txn.commitAppend(Seq(IvmRow("a", 2)).toDS().toDF(), root)
     q.processAllAvailable(); assertMatchesRecompute()
     // a DELETE streams as a retraction instead of failing the query
-    Txn.commitDelete(spark, root, "grp",
+    Txn.commitDelete(spark, root, Seq("grp"),
       Seq("b").toDF("grp"))
     q.processAllAvailable(); assertMatchesRecompute()
     // an upsert streams as delete+insert pairs
@@ -750,7 +750,7 @@ class StreamingSpec extends SparkSpec {
     // with the fold) — the 100 TB onboarding shape in miniature
     Txn.commit((1L to 800L).map(i => (i, i % 7L)).toDF("id", "v")
       .repartition(8), root)
-    Txn.commitDelete(spark, root, "id", Seq(13L, 14L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(13L, 14L).toDF("id"))
     val q = spark.readStream.format("graft")
       .option("maxFilesPerTrigger", "3").load(root)
       .writeStream.format("parquet")
@@ -890,7 +890,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("gsrc_cdc_rl_c").toString
     Txn.commit((1L to 600L).map(i => (i, i % 5L)).toDF("id", "v")
       .repartition(6), root)
-    Txn.commitDelete(spark, root, "id", Seq(10L).toDF("id")) // folds into genesis
+    Txn.commitDelete(spark, root, Seq("id"), Seq(10L).toDF("id")) // folds into genesis
     def start() = spark.readStream.format("graft")
       .option("changeFeed", "true")
       .option("maxFilesPerTrigger", "2")

@@ -140,12 +140,12 @@ class TxnSpec extends SparkSpec {
     // writer A reads at v1 and starts computing; writer B lands v2 first
     Txn.commit((6L to 9L).toDF("id"), root) // v2
     intercept[java.util.ConcurrentModificationException] {
-      Txn.commitIf((100L to 105L).toDF("id"), root, expectedBase = 1L)
+      Txn.commit((100L to 105L).toDF("id"), root, expectedBase = Some(1L))
     }
     // loser's orphan snapshot never became visible
     assert(ids(Txn.read(spark, root)) == (6L to 9L).toSet)
     // after re-reading at v2, the recomputed rewrite lands as v3
-    val v3 = Txn.commitIf((200L to 202L).toDF("id"), root, expectedBase = 2L)
+    val v3 = Txn.commit((200L to 202L).toDF("id"), root, expectedBase = Some(2L))
     assert(v3 == 3L)
     assert(ids(Txn.read(spark, root)) == (200L to 202L).toSet)
   }
@@ -207,7 +207,7 @@ class TxnSpec extends SparkSpec {
     Txn.commit((1L to 3L).toDF("id"), root,
       meta = Map("op" -> "bootstrap", "job" -> "ingest-42"))
     Txn.commit((4L to 6L).toDF("id"), root) // metadata-free (the v1 format)
-    Txn.commitIf((7L to 9L).toDF("id"), root, expectedBase = 2L,
+    Txn.commit((7L to 9L).toDF("id"), root, expectedBase = Some(2L),
       meta = Map("op" -> "compact"))
     val h = Txn.history(spark, root)
     assert(h.map(_._1) == Seq(1L, 2L, 3L))
@@ -457,7 +457,7 @@ class TxnSpec extends SparkSpec {
     import spark.implicits._
     val root = freshRoot("del")
     Txn.commit((1L to 10L).toDF("id"), root)                      // v1
-    Txn.commitDelete(spark, root, "id", Seq(3L, 7L, 99L).toDF("id"), // v2
+    Txn.commitDelete(spark, root, Seq("id"), Seq(3L, 7L, 99L).toDF("id"), // v2
       meta = Map("op" -> "gdpr-erasure"))
     assert(ids(Txn.read(spark, root)) == ((1L to 10L).toSet -- Set(3L, 7L)))
     // v1 time travel unaffected by the tombstone
@@ -476,7 +476,7 @@ class TxnSpec extends SparkSpec {
     Txn.commit(spark.range(0, 8000).toDF("id")
       .repartitionByRange(8, col("id")).sortWithinPartitions("id"),
       root, statsCols = Seq("id"))
-    Txn.commitDelete(spark, root, "id", Seq(5L, 4000L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(5L, 4000L).toDF("id"))
     val (keptT, Txn.SkipReport(_, totalT, _, _)) = Txn.skipDecision(spark, root,
       Txn.currentVersion(spark, root).get, Seq(Txn.RangeProbe("id", 0L, 10L)))
     assert(keptT.size < totalT,
@@ -497,7 +497,7 @@ class TxnSpec extends SparkSpec {
     // vacuum keeps tombstone dirs the retained version references
     val root2 = freshRoot("delvac")
     Txn.commit((1L to 5L).toDF("id"), root2)
-    Txn.commitDelete(spark, root2, "id", Seq(2L).toDF("id"))
+    Txn.commitDelete(spark, root2, Seq("id"), Seq(2L).toDF("id"))
     Txn.vacuum(spark, root2, keepLast = 1, retentionMs = 0L)
     assert(ids(Txn.read(spark, root2)) == Set(1L, 3L, 4L, 5L))
   }
@@ -548,7 +548,7 @@ class TxnSpec extends SparkSpec {
     val root = freshRoot("badkey")
     Txn.commit((1L to 3L).toDF("a,b"), root)
     intercept[IllegalArgumentException] {
-      Txn.commitDelete(spark, root, "a,b", Seq(1L).toDF("a,b"))
+      Txn.commitDelete(spark, root, Seq("a,b"), Seq(1L).toDF("a,b"))
     }
   }
 
@@ -670,7 +670,7 @@ class TxnSpec extends SparkSpec {
       Seq((20L, "app20")).toDF("id", "v"), root))
     val b = new Thread(() => Txn.commitUpsert(
       Seq((5L, "ups5")).toDF("id", "v"), root, "id"))
-    val c = new Thread(() => Txn.commitDelete(spark, root, "id",
+    val c = new Thread(() => Txn.commitDelete(spark, root, Seq("id"),
       Seq(9L).toDF("id")))
     a.start(); b.start(); c.start(); a.join(); b.join(); c.join()
     assert(Txn.currentVersion(spark, root).contains(4L))
@@ -745,7 +745,7 @@ class TxnSpec extends SparkSpec {
     val df = (1L to n).map { i =>
       (i / 1000L, (i * 2654435761L) % 1000003L)
     }.toDF("grp", "key")
-    Txn.commitIndexed(
+    Txn.commit(
       df.repartitionByRange(8, col("grp")).sortWithinPartitions("grp"),
       root, statsCols = Seq("key"), bloomCols = Seq("key"),
       bloomBits = 1 << 17)
@@ -787,7 +787,7 @@ class TxnSpec extends SparkSpec {
     import spark.implicits._
     val root = freshRoot("part")
     val df = (1L to 4000L).map(i => (i, i % 8L)).toDF("id", "day")
-    Txn.commitPartitioned(df, root, "day")
+    Txn.commit(df, root, partitionBy = Some("day"))
     // the directory listing IS the index: 1 of 8 partitions opened
     assert(Txn.partitionCensus(spark, root, Seq(Txn.PartProbe("day", Seq(3L)))) == ((1, 8)))
     assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("day", Seq(3L))))) ==
@@ -795,8 +795,8 @@ class TxnSpec extends SparkSpec {
     // partition column materializes from dir names on a full read
     assert(Txn.read(spark, root).count() == 4000L)
     // O(shard) partitioned append: a new day lands as one more dir
-    Txn.commitAppendPartitioned(
-      (5001L to 5100L).map(i => (i, 9L)).toDF("id", "day"), root, "day")
+    Txn.commitAppend(
+      (5001L to 5100L).map(i => (i, 9L)).toDF("id", "day"), root, partitionBy = Some("day"))
     assert(Txn.partitionCensus(spark, root, Seq(Txn.PartProbe("day", Seq(9L)))) == ((1, 9)))
     assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("day", Seq(9L))))) ==
       (5001L to 5100L).toSet)
@@ -808,7 +808,7 @@ class TxnSpec extends SparkSpec {
         r.getAs[Number](2).longValue())) // partition col type is inferred
     assert(ch.length == 100 && ch.forall(c => c._1 == "insert" && c._3 == 9L))
     // tombstone deletes fold over the pruned partition scan
-    Txn.commitDelete(spark, root, "id", Seq(3L, 11L, 5001L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(3L, 11L, 5001L).toDF("id"))
     assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("day", Seq(3L, 9L))))) ==
       ((1L to 4000L).filter(_ % 8 == 3).toSet -- Set(3L, 11L)) ++
         (5002L to 5100L).toSet)
@@ -822,9 +822,9 @@ class TxnSpec extends SparkSpec {
       .toSet == ((1L to 10L).toSet - 3L).map(_ % 8L))
     // STRING partition values (tenant/source-keyed layout) prune too
     val root2 = freshRoot("partstr")
-    Txn.commitPartitioned(
+    Txn.commit(
       Seq((1L, "web"), (2L, "books"), (3L, "web")).toDF("id", "src"),
-      root2, "src")
+      root2, partitionBy = Some("src"))
     assert(Txn.partitionCensus(spark, root2, Seq(Txn.PartProbe("src", Seq("web")))) == ((1, 2)))
     assert(ids(Txn.readSkipping(spark, root2, Seq(Txn.PartProbe("src", Seq("web"))))) ==
       Set(1L, 3L))
@@ -842,11 +842,11 @@ class TxnSpec extends SparkSpec {
     Txn.commitAppend(Seq(100L).toDF("id"), root)
     // ...so the pinned publish must fail loud, not clobber the append
     intercept[java.util.ConcurrentModificationException] {
-      Txn.publishDirFullIf(spark, root, rel, expectedBase = 1L)
+      Txn.publishDirFull(spark, root, rel, expectedBase = Some(1L))
     }
     assert(ids(Txn.read(spark, root)) == (1L to 5L).toSet + 100L)
     // re-pinned at the NEW tip, the replace lands
-    val v = Txn.publishDirFullIf(spark, root, rel, expectedBase = 2L)
+    val v = Txn.publishDirFull(spark, root, rel, expectedBase = Some(2L))
     assert(v == 3L && ids(Txn.read(spark, root)) == (6L to 9L).toSet)
   }
 
@@ -881,7 +881,7 @@ class TxnSpec extends SparkSpec {
     // INSIDE the real subdir, not a bogus sibling.
     val df = Seq((1L, "a:b"), (2L, "a:b"), (3L, "plain"),
       (4L, null.asInstanceOf[String]), (5L, "a b")).toDF("id", "src")
-    Txn.commitPartitioned(df, root, "src", statsCols = Seq("id"))
+    Txn.commit(df, root, partitionBy = Some("src"), statsCols = Seq("id"))
     // exactly the four real partition dirs exist — no sidecar debris
     val dataDirs = new java.io.File(root, "data").listFiles()
     val subdirs = dataDirs.head.listFiles().filter(_.isDirectory)
@@ -922,7 +922,7 @@ class TxnSpec extends SparkSpec {
     // ranges — the shape where the file rung has something to prune
     val df = (1L to 8000L).map(i => (i, i % 4L)).toDF("id", "year")
       .repartitionByRange(4, col("id"))
-    Txn.commitPartitioned(df, root, "year", statsCols = Seq("id"))
+    Txn.commit(df, root, partitionBy = Some("year"), statsCols = Seq("id"))
     val twoRung = Seq(Txn.PartProbe("year", Seq(1L)), Txn.RangeProbe("id", 100L, 300L))
     val (dk, dt) = Txn.partitionCensus(spark, root, twoRung)
     val (_, Txn.SkipReport(fk, fit, _, _)) = Txn.skipDecision(spark, root,
@@ -936,7 +936,7 @@ class TxnSpec extends SparkSpec {
     assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("year", Seq(1L)),
       Txn.RangeProbe("id", 100L, 300L)))) == want(base))
     // tombstones fold over the two-rung pruned scan
-    Txn.commitDelete(spark, root, "id", Seq(101L, 205L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(101L, 205L).toDF("id"))
     assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("year", Seq(1L)),
       Txn.RangeProbe("id", 100L, 300L)))) == want(base) -- Set(101L, 205L))
     // a FLAT appended shard in the chain skips the directory rung
@@ -952,7 +952,7 @@ class TxnSpec extends SparkSpec {
     val root2 = freshRoot("partbloom")
     val keyed = (1L to 6000L).map(i => (i, (i * 2654435761L) % 100003L, i % 3L))
       .toDF("id", "key", "tenant").repartition(4)
-    Txn.commitPartitioned(keyed, root2, "tenant",
+    Txn.commit(keyed, root2, partitionBy = Some("tenant"),
       bloomCols = Seq("key"), bloomBits = 1 << 17)
     val probe = ((42L * 2654435761L) % 100003L)
     val (_, Txn.SkipReport(bk, bt, _, _)) = Txn.skipDecision(spark, root2,
@@ -978,7 +978,7 @@ class TxnSpec extends SparkSpec {
         val lo = 100L * k + 1L
         Txn.commitAppend((lo to lo + 99L).toDF("id").repartition(4), root)
         expected ++= (lo to lo + 99L)
-        Txn.commitDelete(spark, root, "id", Seq(lo + 1L).toDF("id"))
+        Txn.commitDelete(spark, root, Seq("id"), Seq(lo + 1L).toDF("id"))
         expected -= (lo + 1L)
       }
       val (_, filesBefore, _, tombsBefore) = Txn.tableDetail(spark, root)
@@ -1004,10 +1004,10 @@ class TxnSpec extends SparkSpec {
       // compacted snapshot is still col=value dirs (directory pruning
       // survives), the chain is collapsed, content holds
       val proot = freshRoot("maintain_part")
-      Txn.commitPartitioned(
+      Txn.commit(
         (1L to 400L).map(i => (i, i % 4L)).toDF("id", "day")
-          .repartition(8), proot, "day")
-      Txn.commitDelete(spark, proot, "id", Seq(7L).toDF("id"))
+          .repartition(8), proot, partitionBy = Some("day"))
+      Txn.commitDelete(spark, proot, Seq("id"), Seq(7L).toDF("id"))
       val pv = Txn.maintain(spark, proot)
       assert(pv.nonEmpty)
       val (_, _, _, ptombs) = Txn.tableDetail(spark, proot)
@@ -1039,7 +1039,7 @@ class TxnSpec extends SparkSpec {
     assert(ids(Txn.readVersion(spark, root,
       Txn.versionAsOf(spark, root, betweenTs).get)) == (1L to 5L).toSet)
     // detail reflects the tombstone chain a compaction scheduler watches
-    Txn.commitDelete(spark, root, "id", Seq(10L).toDF("id"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(10L).toDF("id"))
     val (nVer, nFiles, bytes, nTombs) = Txn.tableDetail(spark, root)
     assert(nVer == 3L && nTombs == 1L && nFiles > 0L && bytes > 0L)
   }
@@ -1051,7 +1051,7 @@ class TxnSpec extends SparkSpec {
       (i / 500L, (i * 2654435761L) % 1000003L)
     }.toDF("grp", "key").repartitionByRange(4, col("grp"))
       .sortWithinPartitions("grp")
-    Txn.commitIndexed(shard(1L, 2000L), root,
+    Txn.commit(shard(1L, 2000L), root,
       bloomCols = Seq("key"), bloomBits = 1 << 16)
     // the ingest loop: appended shards carry their own bloom sidecars
     Txn.commitAppend(shard(2001L, 4000L), root,
@@ -1077,7 +1077,7 @@ class TxnSpec extends SparkSpec {
     val df = Seq[(Long, String)]((0L, "a"), (0L, null), (0L, "b"),
       (1L, "c"), (1L, "d"), (2L, null), (2L, null)).toDF("grp", "s")
       .repartitionByRange(3, col("grp"))
-    Txn.commitIndexed(df, root, bloomCols = Seq("s"), bloomBits = mBits)
+    Txn.commit(df, root, bloomCols = Seq("s"), bloomBits = mBits)
     val dataDir = new java.io.File(root, "data").listFiles().head
     val lines = scala.io.Source.fromFile(new java.io.File(dataDir, "_bloom.tsv"))
       .getLines().toSet
@@ -1229,19 +1229,19 @@ class TxnSpec extends SparkSpec {
     // one- and two-level partitioned chains: an escaped value and NULL
     val part1 = freshRoot("eq_part1")
     val p1 = Seq[(Long, String)]((1L, "x/y"), (2L, null), (3L, "p%q")).toDF("id", "src")
-    Txn.commitPartitioned(p1, part1, "src")
-    Txn.commitAppendPartitioned(Seq((4L, "a b")).toDF("id", "src"), part1, "src")
+    Txn.commit(p1, part1, partitionBy = Some("src"))
+    Txn.commitAppend(Seq((4L, "a b")).toDF("id", "src"), part1, partitionBy = Some("src"))
     val part2 = freshRoot("eq_part2")
     val p2 = Seq[(Long, java.lang.Integer, String)]((1L, 2024, "x/y"),
       (2L, null, "w"), (3L, 2025, null)).toDF("id", "yr", "src")
-    Txn.commitPartitioned(p2, part2, "yr,src")
-    Txn.commitAppendPartitioned(
+    Txn.commit(p2, part2, partitionBy = Some("yr,src"))
+    Txn.commitAppend(
       Seq[(Long, java.lang.Integer, String)]((4L, 2024, "p%q")).toDF("id", "yr", "src"),
-      part2, "yr,src")
+      part2, partitionBy = Some("yr,src"))
     // a tombstoned version (rows appended after the tombstone survive)
     val tomb = freshRoot("eq_tomb")
     Txn.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), tomb)
-    Txn.commitDelete(spark, tomb, "id", Seq(2L, 3L).toDF("id"))
+    Txn.commitDelete(spark, tomb, Seq("id"), Seq(2L, 3L).toDF("id"))
     Txn.commitAppend(Seq((3L, "c2")).toDF("id", "v"), tomb)
     // a zero-copy clone: its manifest names the chain's dirs absolutely
     val clone = freshRoot("eq_clone")
@@ -1321,5 +1321,109 @@ class TxnSpec extends SparkSpec {
     assert((1L to 4L).forall(perBatch.contains), s"batches: $perBatch")
     assert(perBatch.filter(_._1 >= 1L).values.forall(_ == 1), s"jobs per batch: $perBatch")
     assert(Txn.read(spark, sink).count() == 14L)
+  }
+
+  /** `body` on another thread, failing the test if it has not returned
+    * within `seconds` (a publish that spins forever never returns). */
+  private def within[A](seconds: Int)(body: => A): scala.util.Try[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    val f = Future(body)(scala.concurrent.ExecutionContext.global)
+    Await.ready(f, seconds.seconds).value.get
+  }
+
+  test("every rebase publish is bounded: a rename that keeps failing fails loud") {
+    import spark.implicits._
+    PublishFaultFs.register(spark.sparkContext.hadoopConfiguration)
+    val root = freshRoot("bounded")
+    Txn.commit((1L to 5L).toDF("id"), root)
+    val faulty = s"${PublishFaultFs.NoPublish}://$root"
+    val calls = Seq[(String, () => Long)](
+      "commitAppend" -> (() => Txn.commitAppend((6L to 9L).toDF("id"), faulty)),
+      "commitMetaOnly" -> (() => Txn.commitMetaOnly(spark, faulty, Map("op" -> "m"))))
+    calls.foreach { case (name, call) =>
+      val t0 = System.nanoTime()
+      val err = within(600)(call()).failed.get
+      assert(err.isInstanceOf[IllegalArgumentException], s"$name: $err")
+      assert(err.getMessage.contains("failed to publish after") &&
+        err.getMessage.contains("attempts"), s"$name: ${err.getMessage}")
+      info(f"$name gave up after ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    }
+    // nothing was published and every lost round removed its staged
+    // manifest; the plain local scheme still commits
+    assert(ids(Txn.read(spark, root)) == (1L to 5L).toSet)
+    assert(fs(root).listStatus(new Path(s"$root/_tmp")).isEmpty)
+    assert(Txn.commitAppend((6L to 9L).toDF("id"), root) == 2L)
+    assert(ids(Txn.read(spark, root)) == (1L to 9L).toSet)
+  }
+
+  test("every publishing path stamps its publish instant, not its staging instant") {
+    import spark.implicits._
+    PublishFaultFs.register(spark.sparkContext.hadoopConfiguration)
+    val local = freshRoot("stamp")
+    val cloneLocal = freshRoot("stamp_clone")
+    val root = s"${PublishFaultFs.SlowPublish}://$local"
+    val clone = s"${PublishFaultFs.SlowPublish}://$cloneLocal"
+    // (what, table dir on the local FS, the publishing call)
+    val published = Seq[(String, String, () => Long)](
+      ("commit", local, () => Txn.commit((1L to 5L).toDF("id"), root)),
+      ("commit(expectedBase)", local,
+        () => Txn.commit((1L to 6L).toDF("id"), root, expectedBase = Some(1L))),
+      ("commitAppend", local, () => Txn.commitAppend((7L to 9L).toDF("id"), root)),
+      ("commitDelete", local,
+        () => Txn.commitDelete(spark, root, Seq("id"), Seq(2L).toDF("id"))),
+      ("restore", local, () => Txn.restore(spark, root, 3L)),
+      ("commitMetaOnly", local, () => Txn.commitMetaOnly(spark, root, Map("op" -> "m"))),
+      ("cloneTable", cloneLocal, () => Txn.cloneTable(spark, root, clone)))
+    published.foreach { case (name, dir, call) =>
+      val manifest = s"$dir/_commits/${call()}"
+      val staged = PublishFaultFs.stagedAt(manifest).getOrElse(
+        fail(s"$name: no staging instant recorded for $manifest"))
+      val mtime = fs(dir).getFileStatus(new Path(manifest)).getModificationTime
+      assert(mtime - staged >= 1000L,
+        s"$name: manifest mtime $mtime is its staging instant $staged, not its publish")
+    }
+    assert(ids(Txn.read(spark, local)) == (1L to 9L).toSet)
+  }
+
+  test("maintain: a malformed threshold conf names its key") {
+    import spark.implicits._
+    val root = freshRoot("maintain_conf")
+    Txn.commit((1L to 5L).toDF("id"), root)
+    Seq("spark.graft.txn.maintain.maxFiles",
+      "spark.graft.txn.maintain.maxTombstones",
+      "spark.graft.txn.maintain.targetBytes").foreach { k =>
+      spark.conf.set(k, "abc")
+      try {
+        val err = intercept[IllegalArgumentException](Txn.maintain(spark, root))
+        assert(err.getMessage == s"$k must be a whole number, got 'abc'")
+      } finally spark.conf.unset(k)
+    }
+  }
+
+  test("partitionBy commits record partitionCol exactly once, as the spec") {
+    import spark.implicits._
+    val spec = "yr,src"
+    def rows(lo: Long) = (lo until lo + 4).map(i => (i, i % 2, s"s${i % 3}"))
+      .toDF("id", "yr", "src")
+    def assertPinned(root: String, how: String): Unit = {
+      val (v, _, meta) = Txn.history(spark, root).last
+      assert(meta.get("partitionCol").contains(spec), s"$how: $meta")
+      val lines = scala.io.Source.fromFile(s"$root/_commits/$v")
+      try assert(lines.getLines().count(_.startsWith("partitionCol\t")) == 1, how)
+      finally lines.close()
+    }
+    val root = freshRoot("partcol")
+    Txn.commit(rows(0L), root, partitionBy = Some(spec))
+    assertPinned(root, "commit")
+    Txn.commit(rows(10L), root, partitionBy = Some(spec), expectedBase = Some(1L))
+    assertPinned(root, "commit(expectedBase)")
+    Txn.commitAppend(rows(20L), root, partitionBy = Some(spec))
+    assertPinned(root, "commitAppend")
+    Txn.appendIdempotent(rows(30L), root, appId = "a", batchId = 0L,
+      partitionBy = Some(spec))
+    assertPinned(root, "appendIdempotent")
+    assert(ids(Txn.read(spark, root)) == (10L until 14L).toSet ++
+      (20L until 24L) ++ (30L until 34L))
   }
 }

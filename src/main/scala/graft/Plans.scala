@@ -65,21 +65,23 @@ object Plans {
       sb.append("\n")
     }
     // Both shapes of the verify-join scale switch (r6): the SAME
-    // lshVerifiedPairs plan with the build side broadcast (bench scale)
-    // and with spark.graft.dedup.broadcastVerify=off (the 100 TB shape:
+    // lshVerifiedPairs plan under the session's broadcast threshold
+    // (bench scale: the build side broadcasts) and with
+    // spark.sql.autoBroadcastJoinThreshold=-1 (the 100 TB shape:
     // co-partitioned shuffle hash join, no corpus-derived broadcast).
     locally {
       import org.apache.spark.sql.functions.col
       val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-      Seq("on", "off").foreach { mode =>
-        spark.conf.set("spark.graft.dedup.broadcastVerify", mode)
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prior = spark.conf.getAll.get(key) // explicitly set value only
+      try Seq(None, Some("-1")).foreach { thr =>
+        thr.foreach(spark.conf.set(key, _))
         val df = graft.ops.DedupOps.lshVerifiedPairs(docs)
-        sb.append(s"==== lsh_verified_pairs (broadcastVerify=$mode) ====\n")
+        sb.append(s"==== lsh_verified_pairs (autoBroadcastJoinThreshold=${spark.conf.get(key)}) ====\n")
         sb.append(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
         sb.append("\n")
-      }
-      spark.conf.unset("spark.graft.dedup.broadcastVerify")
+      } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
     // r13 golden (r12 verdict item 2): a SQL join against a TOMBSTONED
     // graft table must plan a BroadcastHashJoin STATICALLY — the V1

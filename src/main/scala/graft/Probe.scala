@@ -134,7 +134,7 @@ object Probe {
       spark.stop(); return
     }
     if (key == "micro_shape") {
-      // which build-side shape does broadcastVerify=auto pick for the
+      // which build-side shape does DedupOps.verifySide pick for the
       // verify joins at this corpus size? (sf arg = fixture dir)
       import org.apache.spark.sql.functions.{col, expr}
       graft.functions.GraftFunctions.register(spark)

@@ -20,12 +20,18 @@ import org.apache.spark.sql.functions._
   * must still consider n² candidate pairs. Replica 0 is also suffixed,
   * so per-token bytes are identical at every multiplier.
   *
-  * Usage: `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.ScaleBench`
-  * Env knobs: SPARK_GRAFT_SCALE_MULTS (default "1,10"),
+  * Usage: `SPARK_GRAFT_SF_DIR=<fixture dir> runMain graft.ScaleBench`
+  * Env knobs: SPARK_GRAFT_SF_DIR (base fixture), SPARK_GRAFT_CPUS
+  * (local cores, default 32), SPARK_GRAFT_SCALE_MULTS (default "1,10"),
   * SPARK_GRAFT_SCALE_PASSES (default 2, min-of-passes like Bench),
   * SPARK_GRAFT_SCALE_ONLY (comma-filter on query keys).
   * Writes SCALING_r13.json (per-query seconds and output rows per
   * multiplier, plus the x10/x1 ratio).
+  *
+  * Curve modes: SPARK_GRAFT_SCALE_<MODE>=1 runs one point INSTEAD of
+  * the query curve and writes <MODE>_r13.json, for MODE in STOPGRAM,
+  * CELEBRITY, TXNAPPEND, TXNDELETE, UPSERT, BLOOM, PARTITION, PARTSKIP,
+  * CLONE, SQLMERGE, STREAMBACKLOG, SQLSKIP, OVERWRITE and INGEST.
   */
 object ScaleBench {
 
@@ -78,8 +84,7 @@ object ScaleBench {
                              // both grow n× here — near-linear is the claim)
 
   def synthesize(spark: SparkSession, baseDir: String, mult: Int,
-      outDir: String, stopGram: Boolean = false,
-      bpRepeat: Int = 0): Unit = {
+      outDir: String, stopGram: Boolean = false): Unit = {
     val docs0 = Tables.documents(spark, baseDir)
     // stop-gram mode (r7 verdict item 2's done-condition): plant one
     // bigram shared by EVERY doc before the per-replica token suffixing,
@@ -96,22 +101,7 @@ object ScaleBench {
           .as("text"),
         col("lang"), col("source"), col("n_chars"))
     }
-    val unioned = replicas.reduce(_.unionByName(_))
-    // boilerplate mode (r8 verdict item 1's done-condition): open EVERY
-    // doc with `bpRepeat` copies of one 8-token line (template-heavy
-    // web pages repeat identical nav/footer/license lines many times) —
-    // planted AFTER the replica token-suffixing, so the line hashes
-    // identically across the WHOLE corpus and the hot key's frequency
-    // is bpRepeat x corpus, growing linearly with the multiplier: the
-    // hash-FREQUENCY key the r8 row_number survivor election sorted in
-    // one task and the r9 aggregate election map-side-combines
-    val out =
-      if (bpRepeat > 0) unioned.withColumn("text",
-        concat(concat_ws(" ", (0 until bpRepeat).flatMap(_ =>
-          Seq("zzbp1", "zzbp2", "zzbp3", "zzbp4", "zzbp5", "zzbp6", "zzbp7", "zzbp8"))
-          .map(lit): _*), lit(" "), col("text")))
-      else unioned
-    out
+    replicas.reduce(_.unionByName(_))
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
   }
@@ -247,329 +237,6 @@ object ScaleBench {
       s"""{"note":"every doc carries a planted stop-bigram; registered llm_ngram_jaccard timed WITH the df cap ${graft.ops.DedupOps.NgramDfCap}; uncapped_cand_pairs is the analytic single-key bomb the cap removed","passes":$passes,"corpora":{$json}}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("STOPGRAM_r13.json"), s.getBytes)
-    println(s)
-  }
-
-  /** Stop-bigram skew point for llm_lm_score (r11, r10 verdict item 5):
-    * the r10 scaladoc claimed the bigram join's stop-bigram skew is
-    * AQE-splittable — this mode MEASURED that claim and found it FALSE
-    * for the plan shape (c12 aggregates over the SAME exchange the
-    * join probes, so the join child is Sort(HashAgg(ShuffleStage)) —
-    * not the Sort(ShuffleStage) pattern OptimizeSkewedJoin rewrites;
-    * zero isSkew markers at ANY threshold down to 512KB). The r11
-    * registered plan defuses the skew BY CONSTRUCTION instead (hot/cold
-    * split — see TextOps.llmLmScore); this mode times the registered
-    * form against the kept r10 naive form under AQE skew ON and OFF on
-    * bpRepeat-planted corpora (every doc opens with 16 copies of an
-    * 8-token line ⇒ ~8 bigram keys each at frequency 16×corpus), with
-    * auto-broadcast disabled so the cold join takes its web-scale
-    * shuffle shape, skew thresholds lowered to 8MB/4MB (local partition
-    * sizes must be ABLE to trip the rule for the "it never fires"
-    * finding to mean anything), outputs asserted equal across all
-    * three. Writes LMSKEW_r13.json. Enabled with
-    * SPARK_GRAFT_SCALE_LMSKEW=1. */
-  private def lmSkewCurve(spark: SparkSession, baseDir: String,
-      mults: Seq[Int], passes: Int): Unit = {
-    import graft.ops.TextOps
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_SCALE_BP_REPEAT", "16").toInt
-    val confKeys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.enabled")
-    val saved = confKeys.map(k => k -> spark.conf.getOption(k)).toMap
-    def restore(): Unit = saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8MB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4MB")
-      val out = mults.map { m =>
-        val d = s"/tmp/graft_scale_lmskew_x$m"
-        synthesize(spark, baseDir, m, d, bpRepeat = repeat)
-        val docs = Tables.documents(spark, d)
-        // census: total bigram occurrences (= the naive form's exchange
-        // rows), the max single-key frequency (= the naive form's
-        // unsplittable partition floor), and the occurrences the top-K
-        // hot broadcast removes from the cold exchange
-        val bg = docs
-          .select(explode(expr(
-            "zip_with(slice(split(text,' '), 1, size(split(text,' '))-1), " +
-              "slice(split(text,' '), 2, size(split(text,' '))-1), " +
-              "(x, y) -> concat(x, ' ', y))")).as("g"))
-          .groupBy("g").count()
-        val Seq(hotDf, totalRows) = bg.agg(max("count"), sum("count"))
-          .collect().head.toSeq.map(_.asInstanceOf[Long]).toSeq
-        val hotKRows = bg.orderBy(col("count").desc, col("g"))
-          .limit(graft.ops.TextOps.LmHotBigrams)
-          .agg(sum("count")).head().getLong(0)
-        def run(build: => org.apache.spark.sql.DataFrame,
-            skewOn: Boolean): (Double, Long) = {
-          spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-          var best = Double.MaxValue
-          var n = -1L
-          (1 to passes).foreach { _ =>
-            spark.catalog.clearCache()
-            val t0 = System.nanoTime()
-            n = graft.ops.Q.withCached(build)(_.count())
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          }
-          (best, n)
-        }
-        // equality of the two forms before timing counts
-        val eq = SparkEntry.queries("llm_lm_score")(spark, d)
-          .unionByName(TextOps.lmScoreNaiveForm(spark, d))
-          .groupBy("doc_id", "n_bigrams", "avg_nll")
-          .count().where(col("count") =!= 2).count()
-        require(eq == 0, s"lm_score forms diverge on $eq rows at x$m")
-        val (hcSec, hcRows) =
-          run(SparkEntry.queries("llm_lm_score")(spark, d), skewOn = true)
-        val (onSec, onRows) =
-          run(TextOps.lmScoreNaiveForm(spark, d), skewOn = true)
-        val (offSec, offRows) =
-          run(TextOps.lmScoreNaiveForm(spark, d), skewOn = false)
-        require(onRows == offRows && onRows == hcRows,
-          s"modes diverge: $hcRows/$onRows/$offRows rows at x$m")
-        System.err.println(f"lmskew x$m: hot/cold $hcSec%.2f s, " +
-          f"naive skew-on $onSec%.2f s, naive skew-off $offSec%.2f s, " +
-          f"$hcRows rows, hot df $hotDf, cold exchange ${totalRows - hotKRows}" +
-          f" of $totalRows")
-        (m, hcSec, onSec, offSec, hcRows, hotDf, totalRows, hotKRows)
-      }
-      def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-      val json = out.map { case (m, hc, on, off, n, df, tot, hotK) =>
-        s""""x$m":{"hotcold_sec":${f2(hc)},"naive_skew_on_sec":${f2(on)},"naive_skew_off_sec":${f2(off)},"rows":$n,"max_bigram_df":$df,"naive_exchange_rows":$tot,"cold_exchange_rows":${tot - hotK},"hot_broadcast_rows":$hotK}"""
-      }.mkString(",")
-      val s =
-        s"""{"note":"every doc opens with $repeat copies of an 8-token line => ~8 planted bigram keys each at frequency ${repeat}x corpus; auto-broadcast disabled so the bigram join takes its web-scale shuffle shape; skew thresholds lowered to 8MB/4MB. FINDING 1: AQE's OptimizeSkewedJoin NEVER fires on the naive form (naive_skew_on ~= naive_skew_off within noise, zero isSkew markers at any threshold) because c12 aggregates over the same exchange the join probes (join child = Sort(HashAgg(ShuffleStage)), not the Sort(ShuffleStage) pattern the rule rewrites) -- the r10 'AQE splits it' scaladoc claim was wrong and is withdrawn. FINDING 2: the registered r11 hot/cold form removes the bomb STRUCTURALLY -- its cold exchange carries cold_exchange_rows (every key bounded by the K-th hot frequency) vs the naive form's naive_exchange_rows with max_bigram_df of them in ONE AQE-unsplittable task. Local wall SLIGHTLY favors the naive form (32 page-cached cores absorb a few-million-row hot task; the hot/cold form pays a broadcast + union) -- the gated claim is the exchange bound, which is what stragglers/spill/OOM scale with at 100 TB, not local seconds","bp_repeat":$repeat,"passes":$passes,"hot_k":${graft.ops.TextOps.LmHotBigrams},"corpora":{$json}}"""
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("LMSKEW_r13.json"), s.getBytes)
-      println(s)
-    } finally restore()
-  }
-
-  /** Planted-boilerplate point (r8 verdict item 1's done-condition):
-    * corpora where EVERY document opens with the same 8-token line, at
-    * 1x and the max multiplier, timing the REGISTERED aggregate-election
-    * [[graft.ops.Rewrite.lineDedup]] against the r8 window-election form
-    * on identical inputs. The census records the max line-hash
-    * frequency — the exact row count of the single-task window
-    * partition the r8 form sorts (and the AQE-unsplittable part of its
-    * shuffle), which grows linearly with the corpus while the aggregate
-    * form's per-task state stays O(1) per hash via map-side combine.
-    * Both forms' outputs are asserted identical before timing counts.
-    * Writes BOILERPLATE_r13.json. Enabled with
-    * SPARK_GRAFT_SCALE_BOILERPLATE=1 (runs INSTEAD of the query curve). */
-  private def boilerplateCurve(spark: SparkSession, baseDir: String,
-      mults: Seq[Int], passes: Int): Unit = {
-    import graft.ops.Rewrite
-    // 16 planted copies per doc by default: template-heavy pages repeat
-    // identical lines, and the hot key must outgrow what a single local
-    // task hides (at 5k docs x 1 copy the one-task sort is milliseconds
-    // and the window form's missing partial aggregation is invisible)
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_SCALE_BP_REPEAT", "16").toInt
-    val out = mults.map { m =>
-      val d = s"/tmp/graft_scale_bp_x$m"
-      synthesize(spark, baseDir, m, d, bpRepeat = repeat)
-      val docs = Tables.documents(spark, d).select("doc_id", "text")
-      val maxDf = Rewrite.lineView(docs)
-        .groupBy("line_hash").count().agg(max("count")).head().getLong(0)
-      // one-off equivalence check: the two elections agree exactly
-      val diff = Rewrite.lineDedup(docs)
-        .unionByName(Rewrite.lineDedupWindowForm(docs))
-        .groupBy("doc_id", "n_lines", "n_kept", "clean_text")
-        .count().where(col("count") =!= 2).count()
-      require(diff == 0, s"election forms diverge on $diff rows at x$m")
-      var aggMin = Double.MaxValue
-      var winMin = Double.MaxValue
-      var nRows = -1L
-      (1 to passes).foreach { _ =>
-        spark.catalog.clearCache()
-        var t0 = System.nanoTime()
-        nRows = graft.ops.Q.withCached(Rewrite.lineDedup(docs))(_.count())
-        aggMin = math.min(aggMin, (System.nanoTime() - t0) / 1e9)
-        t0 = System.nanoTime()
-        graft.ops.Q.withCached(Rewrite.lineDedupWindowForm(docs))(_.count())
-        winMin = math.min(winMin, (System.nanoTime() - t0) / 1e9)
-      }
-      System.err.println(f"boilerplate x$m: agg $aggMin%.2f s, window $winMin%.2f s, " +
-        f"$nRows rows, max line df $maxDf")
-      (m, aggMin, winMin, nRows, maxDf)
-    }
-    def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val json = out.map { case (m, a, w, n, df) =>
-      s""""x$m":{"agg_sec":${f2(a)},"window_sec":${f2(w)},"rows":$n,"max_line_df":$df}"""
-    }.mkString(",")
-    val s =
-      s"""{"note":"every doc opens with $repeat planted copies of one 8-token boilerplate line (template-heavy pages repeat identical lines); registered join-free aggregate-election lineDedup vs the r8 row_number-window form on identical inputs (outputs asserted equal); max_line_df is the single-task window partition the window form sorts — linear in corpus, the unsplittable straggler/OOM at web scale — while the aggregate form map-side-combines every hot hash to one struct per map task (O(1) per-group state at any f)","bp_repeat":$repeat,"passes":$passes,"corpora":{$json}}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BOILERPLATE_r13.json"), s.getBytes)
-    println(s)
-  }
-
-  /** Planted-boilerplate point for CHUNK dedup (r10 verdict item 1's
-    * done-condition): the same bpRepeat planting opens every doc with
-    * 128 identical tokens, so chunks 0..2 (40 tokens, stride 32) hash
-    * identically across the WHOLE corpus — hot chunk hashes whose
-    * frequency is the doc count, growing linearly with the multiplier.
-    * Times the registered aggregate-election llm_chunk_dedup against
-    * the r9 row_number-window form on identical inputs (outputs
-    * asserted equal); max_chunk_df is the single-task window partition
-    * the window form sorts. Writes CHUNKBOILER_r13.json. Enabled with
-    * SPARK_GRAFT_SCALE_CHUNKBOILER=1. */
-  private def chunkBoilerCurve(spark: SparkSession, baseDir: String,
-      mults: Seq[Int], passes: Int): Unit = {
-    import graft.ops.TextOps
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_SCALE_BP_REPEAT", "16").toInt
-    val out = mults.map { m =>
-      val d = s"/tmp/graft_scale_cbp_x$m"
-      synthesize(spark, baseDir, m, d, bpRepeat = repeat)
-      val docs = Tables.documents(spark, d).select("doc_id", "text")
-      val maxDf = TextOps.chunkHashes(docs)
-        .groupBy("chunk_hash").count().agg(max("count")).head().getLong(0)
-      val agg = TextOps.llmChunkDedup.build(spark, d)
-      val win = TextOps.llmChunkDedupWindowForm(docs)
-      val diff = agg.unionByName(win)
-        .groupBy("doc_id", "n_chunks", "n_dup_chunks", "dup_ratio_micro")
-        .count().where(col("count") =!= 2).count()
-      require(diff == 0, s"election forms diverge on $diff rows at x$m")
-      var aggMin = Double.MaxValue
-      var winMin = Double.MaxValue
-      var nRows = -1L
-      (1 to passes).foreach { _ =>
-        spark.catalog.clearCache()
-        var t0 = System.nanoTime()
-        nRows = graft.ops.Q.withCached(TextOps.llmChunkDedup.build(spark, d))(_.count())
-        aggMin = math.min(aggMin, (System.nanoTime() - t0) / 1e9)
-        t0 = System.nanoTime()
-        graft.ops.Q.withCached(TextOps.llmChunkDedupWindowForm(docs))(_.count())
-        winMin = math.min(winMin, (System.nanoTime() - t0) / 1e9)
-      }
-      System.err.println(f"chunkboiler x$m: agg $aggMin%.2f s, window $winMin%.2f s, " +
-        f"$nRows rows, max chunk df $maxDf")
-      (m, aggMin, winMin, nRows, maxDf)
-    }
-    def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val json = out.map { case (m, a, w, n, df) =>
-      s""""x$m":{"agg_sec":${f2(a)},"window_sec":${f2(w)},"rows":$n,"max_chunk_df":$df}"""
-    }.mkString(",")
-    val s =
-      s"""{"note":"every doc opens with $repeat planted copies of one 8-token boilerplate line => chunks 0..2 identical across the corpus; registered min(struct) aggregate-election llm_chunk_dedup vs the r9 row_number-window form on identical inputs (outputs asserted equal); max_chunk_df is the single-task window partition the window form sorts -- linear in corpus, unsplittable by AQE -- while the aggregate form map-side-combines every hot hash to one struct per map task","bp_repeat":$repeat,"passes":$passes,"corpora":{$json}}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("CHUNKBOILER_r13.json"), s.getBytes)
-    println(s)
-  }
-
-  /** Mega-cluster survivor election (r11, r10 verdict item 1's
-    * done-condition): llm_cluster_best's r11 aggregate election
-    * ([[graft.ops.DedupOps.clusterBestElect]] — ONE groupBy(label) with
-    * min(struct(-quality, doc_id)) + count, partial-aggregatable) vs
-    * the r10 count+row_number window form on identical (doc_id, label,
-    * quality_micro) frames where ONE label covers 99% of all docs — the
-    * template/boilerplate family shape crawls guarantee. The window
-    * form sorts the hot label in ONE AQE-unsplittable task, linear in
-    * the corpus; the aggregate form combines it map-side. Outputs
-    * asserted equal. The synthetic frame isolates the ELECTION (the
-    * component machinery upstream is shared by both forms and already
-    * measured by SCALING's contraction curves). Writes
-    * CLUSTERBEST_r13.json. Enabled with SPARK_GRAFT_SCALE_CLUSTERBEST=1. */
-  private def clusterBestCurve(spark: SparkSession,
-      mults: Seq[Int], passes: Int): Unit = {
-    import graft.ops.DedupOps
-    val out = mults.map { m =>
-      val n = 2000000L * m
-      val scored = spark.range(n).toDF("doc_id")
-        .withColumn("label",
-          when(col("doc_id") % 100 < 99, lit(0L))
-            .otherwise(col("doc_id") % 100000L))
-        .withColumn("quality_micro",
-          pmod(col("doc_id") * lit(2654435761L), lit(1000000L)))
-      val megaSize = scored.where(col("label") === 0L).count()
-      val agg = DedupOps.clusterBestElect(scored)
-      val win = DedupOps.clusterBestWindowForm(scored)
-      val diff = agg.unionByName(win)
-        .groupBy("doc_id", "cluster_id", "n_members", "quality_micro")
-        .count().where(col("count") =!= 2).count()
-      require(diff == 0, s"election forms diverge on $diff rows at x$m")
-      var aggMin = Double.MaxValue
-      var winMin = Double.MaxValue
-      var nRows = -1L
-      (1 to passes).foreach { _ =>
-        spark.catalog.clearCache()
-        var t0 = System.nanoTime()
-        nRows = DedupOps.clusterBestElect(scored).count()
-        aggMin = math.min(aggMin, (System.nanoTime() - t0) / 1e9)
-        t0 = System.nanoTime()
-        DedupOps.clusterBestWindowForm(scored).count()
-        winMin = math.min(winMin, (System.nanoTime() - t0) / 1e9)
-      }
-      System.err.println(f"clusterbest x$m: agg $aggMin%.2f s, window $winMin%.2f s, " +
-        f"$nRows clusters, mega label $megaSize docs")
-      (m, aggMin, winMin, nRows, megaSize)
-    }
-    def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val json = out.map { case (m, a, w, n, mega) =>
-      s""""x$m":{"agg_sec":${f2(a)},"window_sec":${f2(w)},"clusters":$n,"mega_label_docs":$mega}"""
-    }.mkString(",")
-    val s =
-      s"""{"note":"synthetic (doc_id, label, quality_micro) frames with ONE label covering 99% of docs (the crawl template-family shape); registered r11 aggregate election (min(struct(-quality,doc_id)) + count in one groupBy, map-side combining) vs the r10 count+row_number window form on identical inputs, outputs asserted equal. The window form's hot label is a single-task AQE-unsplittable sort linear in the corpus; mega_label_docs is that partition's size","passes":$passes,"corpora":{$json}}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("CLUSTERBEST_r13.json"), s.getBytes)
-    println(s)
-  }
-
-  /** Dominant-source packing point (r10 verdict item 2's
-    * done-condition): corpora rewritten to ONE source — the input
-    * shape a real training mix hits whenever a single crawl dominates
-    * — comparing the registered hierarchical two-pass prefix sum
-    * against the r9 single-window form on identical inputs (outputs
-    * asserted equal). The window form's one source = one full-corpus
-    * single-task sort, linear in the multiplier and AQE-unsplittable;
-    * the hierarchical form's largest partition is PackBucketDocs rows
-    * at level 1 and corpus/PackBucketDocs 24-byte rows at level 2.
-    * Writes PACK_r13.json. Enabled with SPARK_GRAFT_SCALE_PACK=1. */
-  private def packCurve(spark: SparkSession, baseDir: String,
-      mults: Seq[Int], passes: Int): Unit = {
-    import graft.ops.TextOps
-    val out = mults.map { m =>
-      val d = s"/tmp/graft_scale_pack_x$m"
-      synthesize(spark, baseDir, m, d)
-      // one dominant source; the token frame is shared by both forms
-      val t = Tables.documents(spark, d)
-        .select(col("doc_id"), lit("the_crawl").as("source"),
-          size(split(col("text"), " ")).cast("bigint").as("n_tokens"))
-      val diff = TextOps.packSequencesHierarchical(t)
-        .unionByName(TextOps.llmPackSequencesWindowForm(t))
-        .groupBy("doc_id", "source", "n_tokens", "start_off", "seq_no", "seq_off")
-        .count().where(col("count") =!= 2).count()
-      require(diff == 0, s"prefix-sum forms diverge on $diff rows at x$m")
-      var hierMin = Double.MaxValue
-      var winMin = Double.MaxValue
-      var nRows = -1L
-      (1 to passes).foreach { _ =>
-        spark.catalog.clearCache()
-        var t0 = System.nanoTime()
-        nRows = graft.ops.Q.withCached(TextOps.packSequencesHierarchical(t))(_.count())
-        hierMin = math.min(hierMin, (System.nanoTime() - t0) / 1e9)
-        t0 = System.nanoTime()
-        graft.ops.Q.withCached(TextOps.llmPackSequencesWindowForm(t))(_.count())
-        winMin = math.min(winMin, (System.nanoTime() - t0) / 1e9)
-      }
-      System.err.println(f"pack x$m: hierarchical $hierMin%.2f s, window $winMin%.2f s, " +
-        f"$nRows rows")
-      (m, hierMin, winMin, nRows)
-    }
-    def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val json = out.map { case (m, h, w, n) =>
-      s""""x$m":{"hier_sec":${f2(h)},"window_sec":${f2(w)},"rows":$n}"""
-    }.mkString(",")
-    val s =
-      s"""{"note":"single-source corpora (one dominant crawl -- the common real mix): registered hierarchical two-pass prefix sum (bucket B=${TextOps.PackBucketDocs}: bounded level-1 windows + 1/B-size level-2 subtotal window) vs the r9 one-window-per-source form on identical inputs (outputs asserted equal); the window form's hot source is one full-corpus single-task sort, linear in the multiplier and AQE-unsplittable","passes":$passes,"corpora":{$json}}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("PACK_r13.json"), s.getBytes)
     println(s)
   }
 
@@ -1591,18 +1258,6 @@ object ScaleBench {
       stopGramCurve(spark, baseDir, mults, passes)
       spark.stop(); return
     }
-    if (sys.env.get("SPARK_GRAFT_SCALE_BOILERPLATE").contains("1")) {
-      boilerplateCurve(spark, baseDir, mults, passes)
-      spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_SCALE_CHUNKBOILER").contains("1")) {
-      chunkBoilerCurve(spark, baseDir, mults, passes)
-      spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_SCALE_PACK").contains("1")) {
-      packCurve(spark, baseDir, mults, passes)
-      spark.stop(); return
-    }
     if (sys.env.get("SPARK_GRAFT_SCALE_CELEBRITY").contains("1")) {
       celebrityCurve(spark, mults, passes)
       spark.stop(); return
@@ -1629,14 +1284,6 @@ object ScaleBench {
     }
     if (sys.env.get("SPARK_GRAFT_SCALE_PARTSKIP").contains("1")) {
       partSkipCurve(spark, baseDir, mults, passes)
-      spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_SCALE_CLUSTERBEST").contains("1")) {
-      clusterBestCurve(spark, mults, passes)
-      spark.stop(); return
-    }
-    if (sys.env.get("SPARK_GRAFT_SCALE_LMSKEW").contains("1")) {
-      lmSkewCurve(spark, baseDir, mults, passes)
       spark.stop(); return
     }
     if (sys.env.get("SPARK_GRAFT_SCALE_CLONE").contains("1")) {

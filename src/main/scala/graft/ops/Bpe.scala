@@ -128,77 +128,17 @@ object Bpe {
   /** The full train pipeline: corpus pass → capped frequency table →
     * merge rounds. Shared by both registered rows (apply re-derives
     * the table rather than reading a side channel, so each row is
-    * self-contained under the driver contract). Two conf-gated train
-    * engines (`spark.graft.bpe.train`, BpeSpec pins merge-for-merge
-    * equality):
-    *   - "driver" (default): collect the capped table (BOUNDED:
-    *     MaxWords rows) and fold locally — the HF/sentencepiece shape,
-    *     fastest when the cap fits one machine.
-    *   - "distributed": the table never leaves the cluster — each
-    *     round is one pair-count aggregate + a 1-ROW argmax collect +
-    *     a map applying the merge (persist/unpersist per round keeps
-    *     lineage flat). K rounds = 2K vocab-sized jobs; the shape that
-    *     survives a cap too large for driver memory. */
-  private[graft] def mergesFor(s: SparkSession, dir: String): Seq[(String, String)] = {
-    val capped = wordCounts(s, dir)
-      .orderBy(col("cnt").desc, col("word"))
-      .limit(MaxWords)
-    s.conf.get("spark.graft.bpe.train", "driver") match {
-      case "driver" =>
-        trainMerges(
-          capped.collect() // BOUNDED: MaxWords rows by construction
-            .map(r => (r.getString(0), r.getLong(1))).toSeq,
-          Merges)
-      case "distributed" => trainMergesDistributed(capped, Merges)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.bpe.train must be driver|distributed, got '$other'")
-    }
-  }
-
-  /** Distributed merge rounds over a (word, cnt) frame — identical
-    * merges to [[trainMerges]] by construction (same counts, same
-    * argmax tie-break, same leftmost non-overlap application); only
-    * the 1-row per-round argmax ever reaches the driver. */
-  private[graft] def trainMergesDistributed(
-      words: org.apache.spark.sql.DataFrame,
-      k: Int): Seq[(String, String)] = {
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    // localCheckpoint per round: persist alone keeps the full logical
-    // lineage, and round k's plan would embed every earlier round's —
-    // the plan TEXT alone (AQE re-explains per stage) OOMs the driver
-    // by round ~20. Checkpointing flattens each round to a LogicalRDD.
-    var reps = words
-      .select(split(col("word"), "").as("syms"), col("cnt"))
-      .localCheckpoint(true)
-    var round = 0
-    while (round < k) {
-      val best = reps
-        .select(col("cnt"), explode(expr(
-          """zip_with(slice(syms, 1, size(syms)-1), slice(syms, 2, size(syms)-1),
-            |  (x, y) -> struct(x AS a, y AS b))""".stripMargin)).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum("cnt").as("c"))
-        .orderBy(col("c").desc, col("a"), col("b"))
-        .limit(1).collect() // ONE row per round
-      if (best.isEmpty) round = k
-      else {
-        val (a, b) = (best(0).getString(0), best(0).getString(1))
-        merges += ((a, b))
-        val applyOne = udf((syms: Seq[String]) => {
-          val buf = scala.collection.mutable.ArrayBuffer(syms: _*)
-          mergeInPlace(buf, (a, b))
-          buf.toSeq
-        })
-        val next = reps.select(applyOne(col("syms")).as("syms"), col("cnt"))
-          .localCheckpoint(true) // eager: pins this round, flattens lineage
-        reps.unpersist(blocking = false)
-        reps = next
-        round += 1
-      }
-    }
-    reps.unpersist(blocking = false)
-    merges.toSeq
-  }
+    * self-contained under the driver contract). The capped table is
+    * BOUNDED (MaxWords rows at any corpus size), so it is collected and
+    * folded locally — the HF/sentencepiece shape. */
+  private[graft] def mergesFor(s: SparkSession, dir: String): Seq[(String, String)] =
+    trainMerges(
+      wordCounts(s, dir)
+        .orderBy(col("cnt").desc, col("word"))
+        .limit(MaxWords)
+        .collect() // BOUNDED: MaxWords rows by construction
+        .map(r => (r.getString(0), r.getLong(1))).toSeq,
+      Merges)
 
   // ---- generated DuckDB oracle ----
 

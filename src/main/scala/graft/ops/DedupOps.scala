@@ -456,42 +456,26 @@ object DedupOps {
     * member joins — the scale switch the r5 verdict asked to be CODE,
     * not a scaladoc contract. The hinted side is corpus-derived: an
     * easy broadcast at bench SFs (MBs), a driver/executor OOM at
-    * 100 TB. `spark.graft.dedup.broadcastVerify` gates it:
-    *   - "on"   — always `broadcast()` (pins the bench-scale plan
-    *     deterministically, independent of stats);
-    *   - "off"  — never broadcast; hint SHUFFLE_HASH instead, so the
-    *     same join becomes the documented scale shape: a key-
-    *     partitioned shuffle hash join (build side = this frame,
-    *     no sort) co-partitioned with the candidate exchange;
-    *   - "auto" (default) — broadcast iff Catalyst's size estimate
-    *     for the frame fits the session's autoBroadcastJoinThreshold;
-    *     otherwise the shuffle-hash shape. A disabled threshold
-    *     (<= 0) means never broadcast. The estimate is derived from
-    *     the COMPRESSED parquet footprint (measured ~2.6 MB for a
-    *     50k-doc corpus whose in-memory token arrays are ~10× that),
-    *     so at cluster scale either lower the threshold accordingly
-    *     or set "off" explicitly — the same conservatism Spark's own
-    *     auto-broadcast carries.
-    * In every mode the CANDIDATE side is never the build side — it is
-    * the unbounded one. Both shapes are plan-goldened in PLANS.md and
+    * 100 TB. It is broadcast iff Catalyst's size estimate for the
+    * frame fits the session's `spark.sql.autoBroadcastJoinThreshold`;
+    * otherwise it is hinted SHUFFLE_HASH — the documented scale shape:
+    * a key-partitioned shuffle hash join (build side = this frame, no
+    * sort) co-partitioned with the candidate exchange. A disabled
+    * threshold (<= 0) means never broadcast. The estimate is derived
+    * from the COMPRESSED parquet footprint (measured ~2.6 MB for a
+    * 50k-doc corpus whose in-memory token arrays are ~10× that), so at
+    * cluster scale lower the threshold accordingly or set it to -1 —
+    * the same conservatism Spark's own auto-broadcast carries.
+    * The CANDIDATE side is never the build side — it is the unbounded
+    * one. Both shapes are plan-goldened in PLANS.md and
     * result-equivalence is asserted in LlmSpec (the hint changes only
     * the exchange strategy, never the rows). */
   private[graft] def verifySide(
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val mode = df.sparkSession.conf
-      .get("spark.graft.dedup.broadcastVerify", "auto")
-    mode match {
-      case "on"  => broadcast(df)
-      case "off" => df.hint("shuffle_hash")
-      case "auto" =>
-        val thr = org.apache.spark.sql.internal.SQLConf.get
-          .autoBroadcastJoinThreshold
-        if (thr > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= thr)
-          broadcast(df)
-        else df.hint("shuffle_hash")
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.dedup.broadcastVerify must be on|off|auto, got '$other'")
-    }
+    val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    if (thr > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= thr)
+      broadcast(df)
+    else df.hint("shuffle_hash")
   }
   private[graft] def lshVerifiedPairs(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -763,51 +747,6 @@ object DedupOps {
     val p0 = cut(
       pairs.select(ca.as("src"), cb.as("dst")).repartition(edgeParts),
       eager = true)
-    // OPT-IN small-graph escape hatch: when the materialized edge list
-    // is at most `spark.graft.cc.localEdgeThreshold` rows (default 0 =
-    // disabled), solve components with a driver-side union-find over
-    // ONE collect of the checkpointed pairs instead of iterating —
-    // after token-set contraction the rep-pair graph of a moderate
-    // shard is often a few thousand edges, where each distributed
-    // round is pure scheduler overhead. Deliberately NOT the default:
-    // the benchmarked/graded path stays the distributed loop below
-    // (the 100 TB shape), and the threshold bounds driver memory
-    // explicitly (~16 bytes/edge). The explicit-nodes variant never
-    // collects `nodes`: labels for paired vertices are broadcast back
-    // (bounded by 2× the threshold) and singletons coalesce to
-    // themselves. Equality with the loop is pinned in LlmSpec.
-    val localThr = s.conf.get("spark.graft.cc.localEdgeThreshold", "0").toLong
-    if (localThr > 0 && p0.count() <= localThr) {
-      val parent = new LongLongMap()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      p0.collect().foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.contains(a)) parent.put(a, a)
-        if (!parent.contains(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        // attach the larger root under the smaller: the root of every
-        // tree is then the component's min id (the label contract)
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-      import s.implicits._
-      val local = parent.keysIterator.toSeq.map(v => (v, find(v)))
-        .toDF("doc_id", "label")
-      tick(s"cc: local union-find (${parent.size} paired vertices)")
-      return nodesOpt match {
-        case None => local
-        case Some(n) =>
-          n.select(col(n.columns.head).as("doc_id"))
-            .join(broadcast(local.select(col("doc_id"), col("label").as("l"))),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"), coalesce(col("l"), col("doc_id")).as("label"))
-      }
-    }
     // Recursive partition contraction (r6). Each LEVEL runs an
     // in-memory union-find inside every partition of its edge list
     // (mapPartitions — fully distributed, no driver involvement; memory
@@ -1071,8 +1010,8 @@ object DedupOps {
     * families with millions of members); the r10 form's
     * row_number-over-label window put the hottest label in ONE
     * unsplittable task, while this aggregate form combines it
-    * map-side — clusterBestWindowForm is kept private as ScaleBench's
-    * measured contrast (CLUSTERBEST mode, planted every-doc cluster). */
+    * map-side (CLUSTERBEST_r11/r13.json measured both forms on a
+    * planted every-doc cluster). */
   val llmClusterBest: Q = Q(
     "llm_cluster_best",
     s"""WITH RECURSIVE
@@ -1113,41 +1052,16 @@ object DedupOps {
     val (tagged, repDocs) = tsContraction(docs)
     val labels = componentLabels(tagged, lshVerifiedPairs(repDocs))
     val scored = withQualityMicro(docs).select(col("doc_id"), col("quality_micro"))
-    clusterBestElect(labels.join(scored, "doc_id"))
-  }
-
-  /** The r11 survivor election: per label, winner =
-    * min(struct(-quality_micro, doc_id)) (argmax quality, min-doc_id
-    * tie-break) and n_members = count(*), both in ONE groupBy — fully
-    * partial-aggregatable, so a planted mega-label combines map-side
-    * instead of sorting in one window task. Input must carry
-    * (doc_id, label, quality_micro). */
-  private[graft] def clusterBestElect(
-      scored: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    scored
+    // the r11 survivor election: per label, winner =
+    // min(struct(-quality_micro, doc_id)) (argmax quality, min-doc_id
+    // tie-break) and n_members = count(*), both in ONE groupBy
+    labels.join(scored, "doc_id")
       .groupBy(col("label"))
       .agg(
         min(struct((-col("quality_micro")).as("nq"), col("doc_id").as("doc_id"))).as("w"),
         count(lit(1)).as("n_members"))
       .select(col("w.doc_id").as("doc_id"), col("label").as("cluster_id"),
         col("n_members"), (-col("w.nq")).as("quality_micro"))
-      .orderBy("doc_id")
-
-  /** r10's window-form election, retained ONLY as ScaleBench's
-    * measured contrast (CLUSTERBEST mode): count + row_number over the
-    * label partition puts the hottest label in one unsplittable task.
-    * Not registered in any query plan since r11. */
-  private[graft] def clusterBestWindowForm(
-      scored: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byLabel = Window.partitionBy(col("label"))
-    scored
-      .withColumn("n_members", count(lit(1)).over(byLabel))
-      .withColumn("__rn", row_number().over(
-        byLabel.orderBy(col("quality_micro").desc, col("doc_id"))))
-      .where(col("__rn") === 1)
-      .select(col("doc_id"), col("label").as("cluster_id"),
-        col("n_members"), col("quality_micro"))
       .orderBy("doc_id")
   }
 

@@ -80,20 +80,9 @@ object Rewrite {
     lineDedup(aug)
   }
 
-  /** (doc_id, line_id, line_text, line_hash) line view shared by the
-    * two election forms below (and ScaleBench's hash-frequency census). */
-  private[graft] def lineView(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs
-      .withColumn("toks", split(col("text"), " "))
-      .select(col("doc_id"), posexplode(expr(
-        s"""transform(sequence(0, (size(toks)-1) div $L),
-           |  c -> concat_ws(' ', slice(toks, cast(c*$L+1 as int), $L)))""".stripMargin))
-        .as(Seq("line_id", "line_text")))
-      .withColumn("line_hash",
-        expr("cast(conv(substring(sha2(line_text, 256), 1, 15), 16, 10) as bigint)"))
-
   /** The dedup-and-reconstruct engine over any (doc_id, text) frame —
-    * the twin-slice-free core the registered row and ScaleBench share.
+    * the twin-slice-free core the registered row and ScaleBench's
+    * scaling curve share.
     *
     * Survivor election (r9, skew-proofed per the r8 verdict): the first
     * (doc_id, line_id) per 60-bit sha256 line hash is elected with a
@@ -114,11 +103,18 @@ object Rewrite {
     * form: it moved the full line frame TWICE (hash partition, then
     * doc regroup); this moves the combined hash groups once, the
     * winner rows once, and (doc_id, count) pairs once — strictly fewer
-    * bytes AND skew-proof. ScaleBench's boilerplate mode measures both
-    * forms on a planted every-doc line ([[lineDedupWindowForm]] is
-    * kept privately as that contrast). */
+    * bytes AND skew-proof. BOILERPLATE_r09/r13.json measured both forms
+    * on a planted every-doc line. */
   def lineDedup(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val lines = lineView(docs)
+    // (doc_id, line_id, line_text, line_hash) line view
+    val lines = docs
+      .withColumn("toks", split(col("text"), " "))
+      .select(col("doc_id"), posexplode(expr(
+        s"""transform(sequence(0, (size(toks)-1) div $L),
+           |  c -> concat_ws(' ', slice(toks, cast(c*$L+1 as int), $L)))""".stripMargin))
+        .as(Seq("line_id", "line_text")))
+      .withColumn("line_hash",
+        expr("cast(conv(substring(sha2(line_text, 256), 1, 15), 16, 10) as bigint)"))
     // per-doc denominators: map-side-combined counts, never text
     val counts = lines.groupBy("doc_id").agg(count(lit(1)).as("n_lines"))
     // the election: one combined exchange keyed by line_hash
@@ -140,27 +136,6 @@ object Rewrite {
         coalesce(col("clean_text"), lit("")).as("clean_text"))
       .orderBy("doc_id")
   }
-
-  /** The r8 window-election form, kept ONLY as ScaleBench's degradation
-    * baseline for the planted-boilerplate measurement (BOILERPLATE_r09):
-    * the `row_number` window makes an f-duplicated line one f-row
-    * single-task sort. Not used by any registered query. */
-  private[graft] def lineDedupWindowForm(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    lineView(docs)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("line_hash").orderBy("doc_id", "line_id")))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_lines"),
-        sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_kept"),
-        concat_ws(" ", expr(
-          """transform(
-            |  array_sort(collect_list(
-            |    CASE WHEN rn = 1 THEN struct(line_id, line_text) END)),
-            |  x -> x.line_text)""".stripMargin)).as("clean_text"))
-      .select(col("doc_id"), col("n_lines").cast("bigint").as("n_lines"),
-        col("n_kept").cast("bigint").as("n_kept"), col("clean_text"))
-      .orderBy("doc_id")
 
   /** The MERGE change batch, derived identically on both surfaces: the
     * last 30 days of orders (a "recent change feed" — customers with no
@@ -956,14 +931,16 @@ object Rewrite {
       .repartition(8), root)
     Txn.commitDelete(s, root, Seq("custkey"),
       base.where(col("custkey") % 13 === 0).select("custkey"))
-    s.conf.set("spark.graft.txn.maintain.maxFiles", "4")
-    s.conf.set("spark.graft.txn.maintain.maxTombstones", "0")
+    val thresholds = Seq("spark.graft.txn.maintain.maxFiles" -> "4",
+      "spark.graft.txn.maintain.maxTombstones" -> "0")
+    val prior = thresholds.map { case (k, _) => k -> s.conf.getOption(k) }
+    thresholds.foreach { case (k, v) => s.conf.set(k, v) }
     try {
       val v = Txn.maintain(s, root, statsCols = Seq("custkey"))
       require(v.nonEmpty, s"maintain gauge failed to trip at $root")
-    } finally {
-      s.conf.unset("spark.graft.txn.maintain.maxFiles")
-      s.conf.unset("spark.graft.txn.maintain.maxTombstones")
+    } finally prior.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
     Txn.read(s, root).orderBy("custkey")
   }

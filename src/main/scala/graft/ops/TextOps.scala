@@ -352,9 +352,8 @@ object TextOps {
     * trillion-row full-width sort). start_off = bucket base + local
     * prefix, applied by a join on (source, bucket) — key cardinality
     * #buckets, no hot key because the bucket splits the dominant
-    * source. ScaleBench's PACK mode measures both forms on a
-    * single-source corpus ([[llmPackSequencesWindowForm]] is the kept
-    * contrast). */
+    * source (PACK_r10/r13.json measured both forms on a single-source
+    * corpus). */
   val llmPackSequences: Q = Q(
     "llm_pack_sequences",
     """WITH t AS (SELECT doc_id, source,
@@ -377,8 +376,7 @@ object TextOps {
   private[graft] val PackBucketDocs = 4096L
 
   /** The two-pass prefix sum over (doc_id, source, n_tokens) rows — see
-    * [[llmPackSequences]]. Kept callable on any token frame so
-    * ScaleBench can drive it on synthetic single-source corpora. */
+    * [[llmPackSequences]]. */
   private[graft] def packSequencesHierarchical(
       t: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val bucketed = t.withColumn("bucket", expr(s"doc_id div $PackBucketDocs"))
@@ -398,20 +396,6 @@ object TextOps {
       .select("source", "bucket", "base_off")
     local.join(bases, Seq("source", "bucket"))
       .withColumn("start_off", col("base_off") + col("local_off"))
-      .withColumn("seq_no", expr("start_off div 256"))
-      .withColumn("seq_off", col("start_off") % 256)
-      .select("doc_id", "source", "n_tokens", "start_off", "seq_no", "seq_off")
-      .orderBy("doc_id")
-  }
-
-  /** The r9 single-window form, kept ONLY as ScaleBench's degradation
-    * baseline (PACK mode): one dominant source = one unsplittable
-    * full-corpus sort task. Not used by any registered query. */
-  private[graft] def llmPackSequencesWindowForm(
-      t: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    t.withColumn("start_off", coalesce(sum("n_tokens").over(w), lit(0L)))
       .withColumn("seq_no", expr("start_off div 256"))
       .withColumn("seq_off", col("start_off") % 256)
       .select("doc_id", "source", "n_tokens", "start_off", "seq_no", "seq_off")
@@ -499,9 +483,9 @@ object TextOps {
     * billions on a web corpus). Per-doc arithmetic follows join-free
     * from two narrow counts: n_dup = n_chunks - n_winners_in_doc,
     * because exactly one chunk per hash is rn=1 in the window
-    * formulation and that chunk is the min struct. ScaleBench's
-    * CHUNKBOILER mode plants an every-doc chunk and measures both
-    * forms ([[llmChunkDedupWindowForm]] is the kept contrast). */
+    * formulation and that chunk is the min struct.
+    * CHUNKBOILER_r10/r13.json measured both forms on a planted
+    * every-doc chunk. */
   val llmChunkDedup: Q = Q(
     "llm_chunk_dedup",
     """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -523,7 +507,15 @@ object TextOps {
       |    AS dup_ratio_micro
       |FROM r GROUP BY 1 ORDER BY doc_id""".stripMargin
   ) { (s, dir) =>
-    val h = chunkHashes(documents(s, dir))
+    // (doc_id, chunk_id, chunk_hash) triples, text left behind in the
+    // scan stage
+    val h = documents(s, dir)
+      .withColumn("toks", split(col("text"), " "))
+      .withColumn("chunk_id", explode(expr("sequence(0, (size(toks)-1) div 32)")))
+      .select(col("doc_id"), col("chunk_id").cast("bigint").as("chunk_id"),
+        expr("""cast(conv(substring(sha2(
+                 concat_ws(' ', slice(toks, cast(chunk_id*32+1 as int), 40)), 256),
+                 1, 15), 16, 10) as bigint)""").as("chunk_hash"))
     // survivor = min struct(doc_id, chunk_id) per hash — an UNPACKED
     // struct min, NOT a packed doc_id*K+chunk_id long, whose composite
     // key collides once a doc exceeds K chunks (the r8 code-review
@@ -540,35 +532,6 @@ object TextOps {
       .select("doc_id", "n_chunks", "n_dup_chunks", "dup_ratio_micro")
       .orderBy("doc_id")
   }
-
-  /** The shared chunk-hash frame of llm_chunk_dedup and its ScaleBench
-    * contrast: (doc_id, chunk_id, chunk_hash) triples, text left behind
-    * in the scan stage. */
-  private[graft] def chunkHashes(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("chunk_id", explode(expr("sequence(0, (size(toks)-1) div 32)")))
-      .select(col("doc_id"), col("chunk_id").cast("bigint").as("chunk_id"),
-        expr("""cast(conv(substring(sha2(
-                 concat_ws(' ', slice(toks, cast(chunk_id*32+1 as int), 40)), 256),
-                 1, 15), 16, 10) as bigint)""").as("chunk_hash"))
-
-  /** The r9 `row_number`-window election, kept ONLY as ScaleBench's
-    * degradation baseline (CHUNKBOILER mode): a planted every-doc chunk
-    * makes the hot hash one f-row single-task sort here, while the
-    * registered aggregate form reduces it map-side. Not used by any
-    * registered query. */
-  private[graft] def llmChunkDedupWindowForm(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    chunkHashes(docs)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("chunk_hash").orderBy("doc_id", "chunk_id")))
-      .withColumn("is_dup", when(col("rn") > 1, 1L).otherwise(0L))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_chunks"), sum("is_dup").as("n_dup_chunks"))
-      .withColumn("dup_ratio_micro", expr("n_dup_chunks * 1000000 div n_chunks"))
-      .orderBy("doc_id")
 
   /** Bloom-prefiltered decontamination — llm_decontaminate's 100 TB
     * shape when the benchmark set outgrows a broadcast HASH JOIN but
@@ -996,56 +959,21 @@ object TextOps {
     inVocab.unionByName(oov).orderBy("term")
   }
 
-  /** Global dense ids over (df desc, term) — two conf-gated
-    * distributed shapes (r11, `spark.graft.vocab.rank`; both
-    * deterministic because the sort order is TOTAL, so range-boundary
-    * placement can shift partition sizes but never the composed rank —
-    * TextPipelineSpec pins the equality):
-    *   - "zip" (default): range-partitioned sort + RDD zipWithIndex —
-    *     Spark's classic global-dense-id idiom; one extra size-pass
-    *     job, exits codegen at the boundary.
-    *   - "sharded": the pure-DataFrame form — repartitionByRange +
-    *     per-partition row_number (the window partitions BY
-    *     spark_partition_id, so each window partition is one bounded
-    *     range shard, never a global single-task window) + a P-row
-    *     offset cumsum joined back on partition id. Stays in
-    *     Dataset-land end to end.
-    * Neither shape ever runs `row_number() OVER ()` unpartitioned —
-    * a billion-term vocab ranks across the cluster either way. */
+  /** Global dense ids over (df desc, term): range-partitioned sort +
+    * RDD zipWithIndex — Spark's classic global-dense-id idiom; one
+    * extra size-pass job, exits codegen at the boundary. Deterministic
+    * because the sort order is TOTAL, so range-boundary placement can
+    * shift partition sizes but never the composed rank. Never a
+    * `row_number() OVER ()` unpartitioned — a billion-term vocab ranks
+    * across the cluster. */
   private[graft] def vocabRank(
       terms: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = terms.sparkSession
-    s.conf.get("spark.graft.vocab.rank", "zip") match {
-      case "zip" =>
-        import s.implicits._
-        terms.orderBy(col("df").desc, col("term").asc)
-          .as[(String, Long)].rdd.zipWithIndex()
-          .map { case ((term, df), id) => (term, df, id) }
-          .toDF("term", "df", "vocab_id")
-      case "sharded" =>
-        val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-        // cached: read twice (local ranks + offsets), and the range
-        // boundaries come from sampling — one pinned materialization
-        // guarantees both reads see the same partition ids
-        val sharded = Q.cached(terms
-          .repartitionByRange(parts, col("df").desc, col("term").asc)
-          .sortWithinPartitions(col("df").desc, col("term").asc)
-          .withColumn("__pid", spark_partition_id()))
-        val local = sharded.withColumn("__rk", row_number().over(
-          Window.partitionBy(col("__pid"))
-            .orderBy(col("df").desc, col("term").asc)))
-        val offsets = sharded.groupBy("__pid")
-          .agg(count(lit(1)).as("__n"))
-          .withColumn("__base", coalesce(sum("__n").over(
-            Window.orderBy("__pid")
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select("__pid", "__base")
-        local.join(offsets, Seq("__pid"))
-          .select(col("term"), col("df"),
-            (col("__base") + col("__rk") - 1L).as("vocab_id"))
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.vocab.rank must be zip|sharded, got '$other'")
-    }
+    import s.implicits._
+    terms.orderBy(col("df").desc, col("term").asc)
+      .as[(String, Long)].rdd.zipWithIndex()
+      .map { case ((term, df), id) => (term, df, id) }
+      .toDF("term", "df", "vocab_id")
   }
 
   /** Time-horizon dedup (r8) — exact dedup with a RECENCY WINDOW: a
@@ -1207,7 +1135,7 @@ object TextOps {
     * the (w1,w2) exchange — normally the efficiency win), so the join
     * child is Sort(HashAgg(ShuffleStage)), not the
     * Sort(ShuffleStage) pattern `OptimizeSkewedJoin` rewrites; the
-    * split never fires at ANY threshold (ScaleBench LMSKEW: zero
+    * split never fires at ANY threshold (LMSKEW_r11.json: zero
     * isSkew markers, on/off timings equal-to-noise). The registered
     * plan therefore defuses the skew BY CONSTRUCTION with a HOT/COLD
     * split: the [[LmHotBigrams]] most frequent bigrams (the "of the"
@@ -1215,10 +1143,10 @@ object TextOps {
     * broadcast and attach map-side via a left join, and only the COLD
     * tail — every key bounded by the K-th hot frequency — pays the
     * shuffle join. Outputs identical (every pair matches c12 by
-    * construction; the split is a partition of the rows); LMSKEW
-    * times both forms on a planted every-doc bigram. The
+    * construction; the split is a partition of the rows); LMSKEW_r11/
+    * r13.json timed both forms on a planted every-doc bigram. The
     * history-count frame is vocab-sized and SIZE-GATED through the
-    * same broadcastVerify switch the dedup family ships (r10 advice);
+    * dedup family's [[DedupOps.verifySide]] (r10 advice);
     * the 1-row vocab count broadcasts unconditionally; the per-doc
     * reduce is a partial-agg average. No stage materializes anything
     * corpus×vocab. */
@@ -1241,21 +1169,7 @@ object TextOps {
       |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
       |  round(avg(nll), 4) AS avg_nll
       |FROM scored GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  ) { (s, dir) => lmScoreBuild(s, dir, hotCold = true) }
-
-  /** Hot-bigram broadcast size for the lm_score hot/cold split. */
-  private[graft] val LmHotBigrams = 1024
-
-  /** The r10 single-join form, kept ONLY as ScaleBench's measured
-    * contrast (LMSKEW mode) — its bigram exchange carries every
-    * stop-bigram occurrence into one partition, and AQE cannot split
-    * it (see [[llmLmScore]]). Not registered since r11. */
-  private[graft] def lmScoreNaiveForm(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
-    lmScoreBuild(s, dir, hotCold = false)
-
-  private def lmScoreBuild(s: org.apache.spark.sql.SparkSession, dir: String,
-      hotCold: Boolean): org.apache.spark.sql.DataFrame = {
+  ) { (s, dir) =>
     // (r14 note: Q.spreadScan was tried here and REVERTED — the
     // interleaved A/B put the spread form ~0.5 s SLOWER at this row's
     // best: the pairs cache fill is one modest tokenize pass and the
@@ -1268,7 +1182,7 @@ object TextOps {
         |  (a, b) -> struct(a AS w1, b AS w2))""".stripMargin)).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2")))
     val c12Raw = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-    // two regimes, the broadcastVerify pattern: when the whole bigram
+    // two regimes, the verifySide pattern: when the whole bigram
     // table fits the session broadcast threshold, broadcast it — zero
     // shuffle, no skew possible, the right bench/small-corpus plan (and
     // no cache: Catalyst computes it inline once). When it does not
@@ -1279,7 +1193,7 @@ object TextOps {
       .autoBroadcastJoinThreshold
     val c12Small = thr > 0 &&
       c12Raw.queryExecution.optimizedPlan.stats.sizeInBytes <= thr
-    val c12 = if (hotCold && !c12Small) Q.cached(c12Raw) else c12Raw
+    val c12 = if (c12Small) c12Raw else Q.cached(c12Raw)
     val hist = c12.groupBy("w1").agg(sum(col("c")).as("c1"))
     // r14: vocab from the bigram table instead of a SECOND tokenize
     // pass over documents (one full single-task scan saved). Exact
@@ -1292,7 +1206,7 @@ object TextOps {
       .union(c12.select(col("w2").as("tok")))
       .agg(countDistinct(col("tok")).as("vocab"))
     val counted =
-      if (!hotCold || c12Small) pairs.join(c12, Seq("w1", "w2"))
+      if (c12Small) pairs.join(c12, Seq("w1", "w2"))
       else {
         // hot/cold split: the K most frequent bigrams attach map-side
         // (broadcast left join), only the cold tail pays the shuffle —
@@ -1314,6 +1228,9 @@ object TextOps {
       .agg(count(lit(1)).as("n_bigrams"), round(avg(col("nll")), 4).as("avg_nll"))
       .orderBy("doc_id")
   }
+
+  /** Hot-bigram broadcast size for the lm_score hot/cold split. */
+  private[graft] val LmHotBigrams = 1024
 
   def all: Seq[Q] = Seq(llmTokenCount, llmFingerprint, llmQualityScore, llmLangId,
     llmStratifiedSample, llmDecontaminate, llmTopTerms, llmRepetitionFilter,

@@ -59,24 +59,6 @@ class BpeSpec extends SparkSpec {
     }
   }
 
-  test("distributed train learns the same merges as the driver fold") {
-    val dir = "/root/testdata/sf0.001"
-    def run(mode: String): Seq[(String, String, String)] = {
-      spark.conf.set("spark.graft.bpe.train", mode)
-      try Bpe.llmBpeTrain.build(spark, dir).collect()
-        .map(r => (r.getString(1), r.getString(2), r.getString(3))).toSeq
-      finally spark.conf.unset("spark.graft.bpe.train")
-    }
-    val driver = run("driver")
-    val dist = run("distributed")
-    assert(driver.nonEmpty && driver == dist)
-    intercept[IllegalArgumentException] {
-      spark.conf.set("spark.graft.bpe.train", "bogus")
-      try Bpe.mergesFor(spark, dir)
-      finally spark.conf.unset("spark.graft.bpe.train")
-    }
-  }
-
   test("subword packing mode is structurally = the whitespace mode") {
     val dir = "/root/testdata/sf0.001"
     val sub = Bpe.packSequencesSubword(spark, dir)

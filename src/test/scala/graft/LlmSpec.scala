@@ -406,29 +406,20 @@ class LlmSpec extends SparkSpec {
     assert(labels == Map(0L -> 0L, 1L -> 0L, 2L -> 2L))
   }
 
-  test("local union-find escape hatch == distributed component loop " +
-      "(opt-in via spark.graft.cc.localEdgeThreshold)") {
-    // the r6 small-graph path: a driver union-find over one collect of
-    // the checkpointed edges, gated on edge count and OFF by default —
-    // same (doc_id, label) map as the loop, for both the explicit-nodes
-    // and the edges-only entry points, including singleton handling
+  test("component loop on the fixture: entry points agree, singletons label self") {
+    // the explicit-nodes and the edges-only entry points give the same
+    // label to every paired vertex, and the explicit-nodes one labels
+    // docs with no near-dup pair as themselves
     val docs = Tables.documents(spark, dir)
     val nodes = docs.select(col("doc_id"))
     val pairs = graft.ops.Llm.jaccardPairs(docs).select(col("doc_a"), col("doc_b"))
-    def run() = (
-      graft.ops.DedupOps.connectedComponents(nodes, pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
-      graft.ops.DedupOps.connectedComponentsOfEdges(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    val (loopNodes, loopEdges) = run()
-    spark.conf.set("spark.graft.cc.localEdgeThreshold", "1000000")
-    val (localNodes, localEdges) =
-      try run() finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
-    assert(localNodes == loopNodes)
-    assert(localEdges == loopEdges)
+    val withNodes = graft.ops.DedupOps.connectedComponents(nodes, pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ofEdges = graft.ops.DedupOps.connectedComponentsOfEdges(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ofEdges.nonEmpty && withNodes.filter(e => ofEdges.contains(e._1)) == ofEdges)
     // singletons really exercised: docs with no near-dup pair label self
-    assert(loopNodes.exists { case (d, l) => d == l &&
-      !loopEdges.contains(d) })
+    assert(withNodes.exists { case (d, l) => d == l && !ofEdges.contains(d) })
   }
 
   test("partition-local contraction stitches components that span every " +
@@ -518,53 +509,40 @@ class LlmSpec extends SparkSpec {
       s"all-pairs join leaked back into the corpus-clean pair stage:\n$plan")
   }
 
-  test("verify-join build side is conf-gated: identical pairs in every " +
-      "mode, shuffle-hash plan when broadcast is off") {
+  test("verify-join build side follows autoBroadcastJoinThreshold, same rows") {
     // r5 verdict item 1: the broadcast hints on the LSH verify joins
     // were an unconditional bench-scale choice with the 100 TB shape
-    // living only in scaladoc. verifySide now gates them on
-    // spark.graft.dedup.broadcastVerify — this test is the executable
-    // half of the contract: the hint changes ONLY the exchange
+    // living only in scaladoc. verifySide now broadcasts only under
+    // spark.sql.autoBroadcastJoinThreshold — this test is the executable
+    // half of the contract: the threshold changes ONLY the exchange
     // strategy (broadcast vs co-partitioned shuffle hash), never rows.
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     def key(r: Row) = (r.getLong(0), r.getLong(1))
-    def withMode[A](m: Option[String])(f: => A): A = {
-      m.foreach(spark.conf.set("spark.graft.dedup.broadcastVerify", _))
-      try f finally spark.conf.unset("spark.graft.dedup.broadcastVerify")
+    val thrKey = "spark.sql.autoBroadcastJoinThreshold"
+    def withThreshold[A](thr: Option[String])(f: => A): A = {
+      val prior = spark.conf.get(thrKey)
+      thr.foreach(spark.conf.set(thrKey, _))
+      try f finally spark.conf.set(thrKey, prior)
     }
-    val on = withMode(Some("on"))(
-      graft.ops.DedupOps.lshVerifiedPairs(docs))
-    val onRows = on.collect().map(key).toSet
-    assert(on.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
-    val off = withMode(Some("off"))(
-      graft.ops.DedupOps.lshVerifiedPairs(docs))
-    val offPlan = off.queryExecution.executedPlan.toString
-    assert(offPlan.contains("ShuffledHashJoin"),
-      s"broadcastVerify=off must plan the verify joins as shuffle hash:\n$offPlan")
-    assert(off.collect().map(key).toSet == onRows)
-    // auto with the session's broadcast threshold disabled = the scale
-    // shape, same rows again
-    val thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val auto = withMode(None)(graft.ops.DedupOps.lshVerifiedPairs(docs))
-      assert(auto.queryExecution.executedPlan.toString.contains("ShuffledHashJoin"))
-      assert(auto.collect().map(key).toSet == onRows)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-    withMode(Some("bogus")) {
-      intercept[IllegalArgumentException] {
-        graft.ops.DedupOps.lshVerifiedPairs(docs)
-      }
+    // plan and rows both taken under the threshold the frame was built with
+    def pairs(thr: Option[String]) = withThreshold(thr) {
+      val df = graft.ops.DedupOps.lshVerifiedPairs(docs)
+      (df.queryExecution.executedPlan.toString, df.collect().map(key).toSet)
     }
-    assert(onRows.nonEmpty)
+    val (benchPlan, benchRows) = pairs(None)
+    assert(benchPlan.contains("BroadcastHashJoin"),
+      s"the default threshold must broadcast the verify joins:\n$benchPlan")
+    val (scalePlan, scaleRows) = pairs(Some("-1"))
+    assert(scalePlan.contains("ShuffledHashJoin"),
+      s"a disabled threshold must plan the verify joins as shuffle hash:\n$scalePlan")
+    assert(benchRows.nonEmpty && scaleRows == benchRows)
     // the r6 ingest path routes its ref-set lookup through the same
     // verifySide gate — identical novel set in the forced-scale shape
     val inc = SparkEntry.queries("llm_dedup_incremental")
-    val incOn = withMode(Some("on"))(inc(spark, dir))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val incOff = withMode(Some("off"))(inc(spark, dir))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(incOff == incOn && incOn.nonEmpty)
+    def novel(thr: Option[String]) = withThreshold(thr)(
+      inc(spark, dir).select("doc_id").collect().map(_.getLong(0)).toSet)
+    val (incBench, incScale) = (novel(None), novel(Some("-1")))
+    assert(incScale == incBench && incBench.nonEmpty)
   }
 
   test("ts-group expansion == direct pair set on a doc_id-remapped corpus") {

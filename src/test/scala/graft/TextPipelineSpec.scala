@@ -358,27 +358,4 @@ class TextPipelineSpec extends SparkSpec {
         .forall(r => assign(r.getLong(0)) == r.getAs[Number]("shard").longValue()))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
-
-  test("vocab rank: zip and sharded modes assign identical ids") {
-    def run(mode: String): Map[String, (Long, Long)] = {
-      spark.conf.set("spark.graft.vocab.rank", mode)
-      try SparkEntry.queries("llm_build_vocab")(spark, sf("sf0.01"))
-        .collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      finally spark.conf.unset("spark.graft.vocab.rank")
-    }
-    val zip = run("zip")
-    val sharded = run("sharded")
-    assert(zip.nonEmpty && zip == sharded)
-    // the rank covers more terms than one shuffle partition holds, so
-    // the sharded mode genuinely composed offsets across partitions
-    val inVocab = zip.values.count(_._2 >= 0)
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    assert(inVocab > parts, s"fixture too small: $inVocab ids, $parts partitions")
-    intercept[IllegalArgumentException] {
-      spark.conf.set("spark.graft.vocab.rank", "bogus")
-      try SparkEntry.queries("llm_build_vocab")(spark, sf("sf0.001")).collect()
-      finally spark.conf.unset("spark.graft.vocab.rank")
-    }
-  }
 }

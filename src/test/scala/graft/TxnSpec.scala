@@ -1401,6 +1401,20 @@ class TxnSpec extends SparkSpec {
     }
   }
 
+  test("txn_maintain restores the caller's maintain thresholds") {
+    // the row trips the gauge with its own thresholds; a value the
+    // caller had set must read back unchanged after the build, and an
+    // unset key must stay unset
+    val maxFiles = "spark.graft.txn.maintain.maxFiles"
+    val maxTombstones = "spark.graft.txn.maintain.maxTombstones"
+    spark.conf.set(maxFiles, "20")
+    try {
+      SparkEntry.queries("txn_maintain")(spark, sf("sf0.001"))
+      assert(spark.conf.getOption(maxFiles).contains("20"))
+      assert(spark.conf.getOption(maxTombstones).isEmpty)
+    } finally spark.conf.unset(maxFiles)
+  }
+
   test("partitionBy commits record partitionCol exactly once, as the spec") {
     import spark.implicits._
     val spec = "yr,src"

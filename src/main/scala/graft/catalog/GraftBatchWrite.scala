@@ -4,16 +4,18 @@ import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.RowDeltaUtils
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetShim, ParquetFileFormat}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.ops.Txn
 
@@ -28,13 +30,11 @@ import graft.ops.Txn
   * the same trick Delta/Iceberg use (data files are inert until the
   * log points at them).
   *
-  * Replaces the r11-initial V1Write bridge for the write side: rows
-  * flow as InternalRow from whole-stage codegen into the parquet
-  * writer with no Row conversion, and the write parallelism is the
-  * query's own partitioning. Supported column types: the flat
-  * primitive set (long/int/double/float/boolean/string/date/
-  * timestamp) — a nested/array/decimal schema fails loud at PLAN time
-  * (schemaToParquet), never mid-write.
+  * This is the one SQL write path: rows flow as InternalRow from
+  * whole-stage codegen into Spark's own parquet encoder
+  * ([[GraftParquetEncoder]]) with no Row conversion, and the write
+  * parallelism is the query's own partitioning. Every column type
+  * `df.write.parquet` writes is supported, encoded the same way.
   *
   * `mode` picks the manifest semantics at commit:
   *   - Append    — manifest-extension append ([[Txn.publishDirAppend]])
@@ -63,127 +63,33 @@ private[catalog] object GraftBatchWrite {
     * throw fails the task, which fails the statement; the half-written
     * files sit in a dir no manifest will ever reference, so nothing
     * was committed (the same atomicity every abort path rides). */
-  def assertCheck(check: Option[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)],
+  def assertCheck(check: Option[(String, Expression)],
       row: InternalRow, schema: StructType): Unit =
     check.foreach { case (sql, e) =>
       val r = e.eval(row)
-      if (r != null && !r.asInstanceOf[Boolean]) {
-        // rendering is best-effort: an op-prefixed rewrite row has one
-        // extra leading field the schema cannot describe
-        val rendered =
-          try row.toSeq(schema).mkString("[", ", ", "]")
-          catch { case _: Throwable => row.toString }
+      if (r != null && !r.asInstanceOf[Boolean])
         throw new IllegalStateException(
-          s"CHECK ($sql) violated by row $rendered — statement aborted, " +
-            "nothing was committed")
-      }
+          s"CHECK ($sql) violated by row " +
+            s"${row.toSeq(schema).mkString("[", ", ", "]")} — statement " +
+            "aborted, nothing was committed")
     }
-
-  /** StructType → parquet MessageType for the supported flat set; all
-    * fields optional (Spark's reader null-fills; nullability is
-    * enforced upstream by the analyzer). */
-  def schemaToParquet(schema: StructType, name: String): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val t: Type = f.dataType match {
-        case LongType => Types.optional(PrimitiveTypeName.INT64).named(f.name)
-        case IntegerType => Types.optional(PrimitiveTypeName.INT32).named(f.name)
-        case DoubleType => Types.optional(PrimitiveTypeName.DOUBLE).named(f.name)
-        case FloatType => Types.optional(PrimitiveTypeName.FLOAT).named(f.name)
-        case BooleanType => Types.optional(PrimitiveTypeName.BOOLEAN).named(f.name)
-        case StringType => Types.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name)
-        case DateType => Types.optional(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.dateType()).named(f.name)
-        case TimestampType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name)
-        // DECIMAL (r12, r11 verdict item 5 — the most common warehouse
-        // column type no longer falls to the V1 row bridge): parquet's
-        // standard physical encodings by precision — INT32 to 9 digits,
-        // INT64 to 18, FIXED_LEN_BYTE_ARRAY (two's-complement unscaled)
-        // above — exactly what Spark's vectorized reader expects
-        case d: DecimalType =>
-          val ann = LogicalTypeAnnotation.decimalType(d.scale, d.precision)
-          if (d.precision <= 9)
-            Types.optional(PrimitiveTypeName.INT32).as(ann).named(f.name)
-          else if (d.precision <= 18)
-            Types.optional(PrimitiveTypeName.INT64).as(ann).named(f.name)
-          else
-            Types.optional(PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY)
-              .length(minBytesForPrecision(d.precision)).as(ann).named(f.name)
-        case other => throw new UnsupportedOperationException(
-          s"graft native writer supports flat primitive columns; " +
-            s"column ${f.name} is $other — write via the programmatic " +
-            "Txn API for nested schemas")
-      }
-      b.addField(t)
-    }
-    b.named(name)
-  }
-
-  /** Partition values must render to directory names unambiguously:
-    * integral/string/boolean types round-trip exactly (the same set the
-    * skipping probes trust — dates/floats/decimals render differently
-    * between internal and directory forms). */
-  def supportedPartitionType(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | ShortType | ByteType | StringType |
-         BooleanType => true
-    case _ => false
-  }
-
-  /** Smallest byte width whose two's-complement range covers `p`
-    * decimal digits (the parquet FIXED_LEN_BYTE_ARRAY sizing rule). */
-  def minBytesForPrecision(p: Int): Int = {
-    var n = 1
-    while (!BigInt(10).pow(p).-(1).abs
-        .<(BigInt(2).pow(8 * n - 1))) n += 1
-    n
-  }
-
-  /** Two's-complement `width`-byte encoding of an unscaled decimal —
-    * sign-extended left-pad, the FIXED_LEN_BYTE_ARRAY contract. */
-  def toFixedBytes(unscaled: java.math.BigInteger, width: Int): Array[Byte] = {
-    val raw = unscaled.toByteArray
-    require(raw.length <= width,
-      s"unscaled value $unscaled overflows $width bytes")
-    val out = new Array[Byte](width)
-    val pad: Byte = if (unscaled.signum() < 0) -1 else 0
-    java.util.Arrays.fill(out, 0, width - raw.length, pad)
-    System.arraycopy(raw, 0, out, width - raw.length, raw.length)
-    out
-  }
 }
 
-private[catalog] class GraftBatchWrite(root: String, schema: StructType,
-    mode: GraftBatchWrite.Mode, opName: String,
+private[catalog] class GraftBatchWrite(spark: SparkSession, root: String,
+    schema: StructType, mode: GraftBatchWrite.Mode, opName: String,
     rowLevel: Boolean = false,
     pinnedBase: Option[Long] = None,
     partCol: Option[String] = None,
     statsCols: Seq[String] = Nil,
     bloomCols: Seq[String] = Nil,
-    check: Option[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = None)
+    check: Option[(String, Expression)] = None)
   extends BatchWrite {
 
   private val dataRel = s"data/${UUID.randomUUID().toString}"
   // the partition spec is one column or a comma list (r13 multi-level)
   private val partCols: Seq[String] = partCol.toSeq.flatMap(Txn.partitionCols)
-  // fail loud on unsupported schemas at PLAN time, before any task runs
-  // (partitioned writes validate the FILE schema — the partition columns
-  // live in directory names, not in the files)
-  GraftBatchWrite.schemaToParquet(
-    StructType(schema.fields.filterNot(f => partCols.contains(f.name))),
-    "graft")
-  partCols.foreach { c =>
-    require(GraftBatchWrite.supportedPartitionType(schema(c).dataType),
-      s"graft native partitioned writer supports integral/string/boolean " +
-        s"partition columns; $c is ${schema(c).dataType}")
-  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
     // zero-row tasks report GraftNoRowsMessage and leave no file behind
     // (r11 advice): an INSERT INTO from an empty multi-partition source
     // must not publish a spurious version over a directory of empty
@@ -236,90 +142,107 @@ private[catalog] class GraftBatchWrite(root: String, schema: StructType,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftWriterFactory(s"$root/$dataRel", schema, rowLevel, partCols,
-      check)
+    // the FILE schema: partition columns live in directory names
+    new GraftWriterFactory(s"$root/$dataRel", schema,
+      GraftParquetEncoder(spark,
+        StructType(schema.fields.filterNot(f => partCols.contains(f.name)))),
+      rowLevel, partCols, spark.sessionState.conf.sessionLocalTimeZone, check)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     // no manifest references the dir — deleting it is cleanup, not
     // correctness (readers never saw it)
-    val spark = SparkSession.active
     val p = new Path(s"$root/$dataRel")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 }
 
+/** Spark's own parquet encoder for one file schema: the
+  * `OutputWriterFactory` that `ParquetFileFormat.prepareWrite` returns,
+  * prepared once on the driver, plus the job configuration it was
+  * prepared into — that configuration carries the schema and the
+  * session's parquet settings (codec, timestamp type, rebase modes), so
+  * tasks encode exactly as `df.write.parquet` would. Every field is
+  * declared optional, as Spark's file writers declare them (the
+  * analyzer enforces nullability upstream); a type parquet cannot hold
+  * fails at plan time, before any task runs. */
+private[catalog] final class GraftParquetEncoder private (
+    val schema: StructType, factory: OutputWriterFactory,
+    conf: SerializableConfiguration) extends Serializable {
+  def hadoopConf: Configuration = conf.value
+  /** A writer of the one file `path`, for task `partitionId`. */
+  def open(path: String, partitionId: Int): OutputWriter =
+    factory.newInstance(path, schema, new TaskAttemptContextImpl(conf.value,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP,
+        partitionId), 0)))
+}
+
+private[catalog] object GraftParquetEncoder {
+  def apply(spark: SparkSession, schema: StructType): GraftParquetEncoder = {
+    val fileSchema = GraftParquetShim.writeSchema(schema)
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, fileSchema)
+    new GraftParquetEncoder(fileSchema, factory,
+      new SerializableConfiguration(job.getConfiguration))
+  }
+}
+
 private[catalog] class GraftWriterFactory(dataDir: String,
-    schema: StructType, rowLevel: Boolean,
-    partCols: Seq[String] = Nil,
-    check: Option[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = None)
+    schema: StructType, encoder: GraftParquetEncoder, rowLevel: Boolean,
+    partCols: Seq[String], timeZone: String,
+    check: Option[(String, Expression)])
   extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     if (partCols.nonEmpty)
-      new GraftPartitionedParquetWriter(dataDir, schema, partCols,
-        partitionId, taskId, check = check)
+      new GraftPartitionedParquetWriter(dataDir, schema, encoder, partCols,
+        timeZone, partitionId, taskId, check)
     else
-      new GraftParquetWriter(dataDir, schema, partitionId, taskId, rowLevel,
-        check = check)
+      new GraftParquetWriter(dataDir, encoder, partitionId, taskId, rowLevel,
+        check)
 }
 
 /** Native HIVE-PARTITIONED task writer (r12): each row routes to a
   * lazily-opened per-partition-value writer under
-  * `dataDir/<col>=<escaped value>/` — the standard warehouse layout,
-  * written straight from codegen'd InternalRow with no Spark
-  * row-conversion bridge. The partition column is NOT stored in the
-  * files (the directory name carries it — one column of storage saved
-  * per row, and the read side reconstructs it like every other
-  * partitioned snapshot); values hive-escape and nulls land in the
-  * default-partition sentinel dir. A task writes one file per distinct
-  * partition value it SEES, so pre-sorting/repartitioning the insert by
-  * the partition column keeps the file count at one-per-partition — the
-  * same knob Spark's own partitioned writer exposes. */
+  * `dataDir/<col>=<value>/`, written straight from codegen'd InternalRow
+  * with no Spark row-conversion bridge. Directory names follow Spark's
+  * own `partitionBy` rule, so they match what `df.write.partitionBy`
+  * writes for the same rows: the value cast to string in the session
+  * time zone, then `ExternalCatalogUtils.getPartitionPathString` — hive
+  * escaping, and NULL or '' to the default-partition sentinel. The
+  * partition columns are NOT stored in the files (the read side
+  * reconstructs them like every other partitioned snapshot). A task
+  * writes one file per distinct partition value it SEES, so
+  * clustering the insert by the partition columns keeps the file count
+  * at one-per-partition — the same knob Spark's own partitioned writer
+  * exposes. */
 private[catalog] class GraftPartitionedParquetWriter(dataDir: String,
-    schema: StructType, partCols: Seq[String], partitionId: Int,
-    taskId: Long,
-    check: Option[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = None)
+    schema: StructType, encoder: GraftParquetEncoder, partCols: Seq[String],
+    timeZone: String, partitionId: Int, taskId: Long,
+    check: Option[(String, Expression)])
   extends DataWriter[InternalRow] {
 
-  import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-
-  private val partIdxs = partCols.map(schema.fieldIndex).toArray
-  private val partTypes = partIdxs.map(schema.fields(_).dataType)
-  private val fileSchema =
-    StructType(schema.fields.filterNot(f => partCols.contains(f.name)))
+  private val partStrings = UnsafeProjection.create(partCols.map { c =>
+    Cast(BoundReference(schema.fieldIndex(c), schema(c).dataType, true),
+      StringType, Some(timeZone)): Expression
+  })
   // bound projection dropping the partition columns; the inner writer
   // consumes each projected row before the next call, so the reused
   // UnsafeRow buffer is safe
   private val drop = UnsafeProjection.create(
-    fileSchema.fields.map(f =>
+    encoder.schema.fields.map(f =>
       BoundReference(schema.fieldIndex(f.name), f.dataType, true)).toSeq)
   private val writers =
     scala.collection.mutable.Map.empty[String, GraftParquetWriter]
 
   /** Nested `a=v/b=w` chain in declaration order (r13 multi-level). */
   private def dirOf(row: InternalRow): String = {
+    val vals = partStrings(row)
     val sb = new StringBuilder(dataDir)
     var i = 0
-    while (i < partIdxs.length) {
-      val partIdx = partIdxs(i)
-      val raw =
-        if (row.isNullAt(partIdx)) "__HIVE_DEFAULT_PARTITION__"
-        else {
-          val v = partTypes(i) match {
-            case LongType    => row.getLong(partIdx).toString
-            case IntegerType => row.getInt(partIdx).toString
-            case ShortType   => row.getShort(partIdx).toString
-            case ByteType    => row.getByte(partIdx).toString
-            case StringType  => row.getUTF8String(partIdx).toString
-            case BooleanType => row.getBoolean(partIdx).toString
-            case other => throw new IllegalStateException(
-              s"unreachable: partition type $other passed the plan-time check")
-          }
-          Txn.escapePathName(v)
-        }
-      sb.append('/').append(partCols(i)).append('=').append(raw)
+    while (i < partCols.length) {
+      sb.append('/').append(ExternalCatalogUtils.getPartitionPathString(
+        partCols(i), if (vals.isNullAt(i)) null else vals.getUTF8String(i).toString))
       i += 1
     }
     sb.toString
@@ -331,8 +254,8 @@ private[catalog] class GraftPartitionedParquetWriter(dataDir: String,
     GraftBatchWrite.assertCheck(check, row, schema)
     val dir = dirOf(row)
     val w = writers.getOrElseUpdate(dir,
-      new GraftParquetWriter(dir, fileSchema, partitionId, taskId,
-        rowLevel = false))
+      new GraftParquetWriter(dir, encoder, partitionId, taskId,
+        rowLevel = false, check = None))
     w.write(drop(row))
   }
 
@@ -364,92 +287,40 @@ private[catalog] case object GraftNoRowsMessage extends WriterCommitMessage
   * un-projected rows reach DataWriter.write whenever the operation
   * declares no metadata attributes, with op = WRITE_WITH_METADATA).
   * The writer detects the prefix by arity (numFields == schema+1),
-  * skips rows an op ever marks DELETE, and shifts field reads by one;
-  * the projected two-arg write path delegates to the one-arg form. */
+  * skips rows an op ever marks DELETE, and projects the prefix off
+  * before the CHECK and the encoder; the projected two-arg write path
+  * delegates to the one-arg form. */
 private[catalog] class GraftParquetWriter(dataDir: String,
-    schema: StructType, partitionId: Int, taskId: Long,
-    rowLevel: Boolean,
-    check: Option[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = None)
+    encoder: GraftParquetEncoder, partitionId: Int, taskId: Long,
+    rowLevel: Boolean, check: Option[(String, Expression)])
   extends DataWriter[InternalRow] {
 
+  private val schema = encoder.schema
   private val file =
     s"$dataDir/part-$partitionId-$taskId-${UUID.randomUUID().toString}.parquet"
-  /** The CHECK rebound for the op-prefixed rewrite row shape: every
-    * BoundReference shifts one slot right past `__row_operation`. */
-  private lazy val shiftedCheck = check.map { case (sql, e) =>
-    (sql, e.transform {
-      case b: org.apache.spark.sql.catalyst.expressions.BoundReference =>
-        b.copy(ordinal = b.ordinal + 1)
+  private lazy val dropOp = UnsafeProjection.create(
+    schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(i + 1, f.dataType, true)
     })
-  }
-  private val messageType =
-    GraftBatchWrite.schemaToParquet(schema, "graft")
-  private val conf = new Configuration()
-  GroupWriteSupport.setSchema(messageType, conf)
   // opened LAZILY on the first row (r11 advice): an eager constructor
   // open made every empty partition emit a zero-row parquet file and a
   // commit message, so the driver's "no rows => no publish" guard could
   // never fire on a multi-partition empty source
-  private var writer: org.apache.parquet.hadoop.ParquetWriter[
-    org.apache.parquet.example.data.Group] = _
-  private def openedWriter() = {
-    if (writer == null)
-      writer = ExampleParquetWriter.builder(new Path(file))
-        .withConf(conf)
-        .withType(messageType)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-    writer
-  }
-  private val factory = new SimpleGroupFactory(messageType)
+  private var writer: OutputWriter = _
 
   override def write(meta: InternalRow, row: InternalRow): Unit = write(row)
 
   override def write(row: InternalRow): Unit = {
     // row-level op rows arrive [__row_operation, ...cols]; detect by
-    // arity, drop DELETE-marked rows, shift reads
-    val off =
-      if (rowLevel && row.numFields == schema.fields.length + 1) 1 else 0
-    if (off == 1 && row.getInt(0) ==
-        org.apache.spark.sql.catalyst.util.RowDeltaUtils.DELETE_OPERATION) {
-      return
-    }
-    // declared CHECK per surviving row; op-prefixed rewrite rows
-    // (group-COW UPDATE/MERGE) evaluate through the SHIFTED binding so
-    // keyless row-level ops are guarded too (r13)
-    if (off == 0) GraftBatchWrite.assertCheck(check, row, schema)
-    else GraftBatchWrite.assertCheck(shiftedCheck, row, schema)
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.fields.length) {
-      if (!row.isNullAt(i + off)) {
-        val name = schema.fields(i).name
-        schema.fields(i).dataType match {
-          case LongType      => g.add(name, row.getLong(i + off))
-          case IntegerType   => g.add(name, row.getInt(i + off))
-          case DoubleType    => g.add(name, row.getDouble(i + off))
-          case FloatType     => g.add(name, row.getFloat(i + off))
-          case BooleanType   => g.add(name, row.getBoolean(i + off))
-          case StringType    =>
-            g.add(name, Binary.fromString(row.getUTF8String(i + off).toString))
-          case DateType      => g.add(name, row.getInt(i + off))
-          case TimestampType => g.add(name, row.getLong(i + off))
-          case d: DecimalType =>
-            val dec = row.getDecimal(i + off, d.precision, d.scale)
-            if (d.precision <= 9) g.add(name, dec.toUnscaledLong.toInt)
-            else if (d.precision <= 18) g.add(name, dec.toUnscaledLong)
-            else g.add(name, Binary.fromConstantByteArray(
-              GraftBatchWrite.toFixedBytes(
-                dec.toJavaBigDecimal.unscaledValue(),
-                GraftBatchWrite.minBytesForPrecision(d.precision))))
-          case other => throw new IllegalStateException(
-            s"unreachable: $other passed schemaToParquet")
-        }
-      }
-      i += 1
-    }
-    openedWriter().write(g)
+    // arity, drop DELETE-marked rows, project the prefix off
+    val prefixed = rowLevel && row.numFields == schema.fields.length + 1
+    if (prefixed && row.getInt(0) == RowDeltaUtils.DELETE_OPERATION) return
+    val data = if (prefixed) dropOp(row) else row
+    // declared CHECK per surviving row, so keyless row-level ops
+    // (group-COW UPDATE/MERGE) are guarded too (r13)
+    GraftBatchWrite.assertCheck(check, data, schema)
+    if (writer == null) writer = encoder.open(file, partitionId)
+    writer.write(data)
   }
 
   override def commit(): WriterCommitMessage =
@@ -460,7 +331,7 @@ private[catalog] class GraftParquetWriter(dataDir: String,
     if (writer != null) {
       writer.close()
       val p = new Path(file)
-      p.getFileSystem(conf).delete(p, false)
+      p.getFileSystem(encoder.hadoopConf).delete(p, false)
     }
   }
 

@@ -4,6 +4,7 @@ import java.util.UUID
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
@@ -38,39 +39,34 @@ import graft.ops.Txn
   * tombstone anti-join per delta until a compacting commit — measured
   * flat-in-table-size by SQLMERGE_r12 vs the COW form's linear
   * rewrite. */
-private[catalog] class GraftDeltaWrite(root: String, rowSchema: StructType,
-    keySchema: StructType, keyCols: Seq[String], pinnedBase: Long,
-    opName: String, statsCols: Seq[String] = Nil,
-    bloomCols: Seq[String] = Nil,
-    check: Option[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = None)
-  extends DeltaWrite {
-  override def toBatch: DeltaBatchWrite =
-    new GraftDeltaBatchWrite(root, rowSchema, keySchema, keyCols,
-      pinnedBase, opName, statsCols, bloomCols, check)
-}
-
-private[catalog] class GraftDeltaBatchWrite(root: String,
+private[catalog] class GraftDeltaWrite(spark: SparkSession, root: String,
     rowSchema: StructType, keySchema: StructType, keyCols: Seq[String],
     pinnedBase: Long, opName: String, statsCols: Seq[String] = Nil,
     bloomCols: Seq[String] = Nil,
-    check: Option[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = None)
+    check: Option[(String, Expression)] = None)
+  extends DeltaWrite {
+  override def toBatch: DeltaBatchWrite =
+    new GraftDeltaBatchWrite(spark, root, rowSchema, keySchema, keyCols,
+      pinnedBase, opName, statsCols, bloomCols, check)
+}
+
+private[catalog] class GraftDeltaBatchWrite(spark: SparkSession, root: String,
+    rowSchema: StructType, keySchema: StructType, keyCols: Seq[String],
+    pinnedBase: Long, opName: String, statsCols: Seq[String] = Nil,
+    bloomCols: Seq[String] = Nil,
+    check: Option[(String, Expression)] = None)
   extends DeltaBatchWrite {
 
   private val keysRel = s"data/${UUID.randomUUID()}"
   private val rowsRel = s"data/${UUID.randomUUID()}"
-  // fail loud on unsupported schemas at PLAN time, before any task runs
-  GraftBatchWrite.schemaToParquet(rowSchema, "graft")
-  GraftBatchWrite.schemaToParquet(keySchema, "graft")
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory =
     new GraftDeltaWriterFactory(s"$root/$keysRel", s"$root/$rowsRel",
-      rowSchema, keySchema, check)
+      GraftParquetEncoder(spark, rowSchema),
+      GraftParquetEncoder(spark, keySchema), check)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
     val anyKeys = messages.exists {
       case GraftDeltaMessage(k, _) => k.isDefined
       case _                       => false
@@ -97,7 +93,6 @@ private[catalog] class GraftDeltaBatchWrite(root: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
     Seq(keysRel, rowsRel).foreach { rel =>
       val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -109,14 +104,12 @@ private[catalog] case class GraftDeltaMessage(keysFile: Option[String],
     rowsFile: Option[String]) extends WriterCommitMessage
 
 private[catalog] class GraftDeltaWriterFactory(keysDir: String,
-    rowsDir: String, rowSchema: StructType,
-    keySchema: StructType,
-    check: Option[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = None)
+    rowsDir: String, rows: GraftParquetEncoder, keys: GraftParquetEncoder,
+    check: Option[(String, Expression)])
   extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
-    new GraftDeltaRowWriter(keysDir, rowsDir, rowSchema, keySchema,
+    new GraftDeltaRowWriter(keysDir, rowsDir, rows, keys,
       partitionId, taskId, check)
 }
 
@@ -125,19 +118,17 @@ private[catalog] class GraftDeltaWriterFactory(keysDir: String,
   * — a task that saw no deltas leaves nothing behind — and task/attempt
   * distinct names keep speculation safe exactly like the plain writer. */
 private[catalog] class GraftDeltaRowWriter(keysDir: String, rowsDir: String,
-    rowSchema: StructType, keySchema: StructType, partitionId: Int,
-    taskId: Long,
-    check: Option[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] = None)
+    rows: GraftParquetEncoder, keys: GraftParquetEncoder, partitionId: Int,
+    taskId: Long, check: Option[(String, Expression)])
   extends DeltaWriter[InternalRow] {
 
   private val keysW =
-    new GraftParquetWriter(keysDir, keySchema, partitionId, taskId,
-      rowLevel = false)
+    new GraftParquetWriter(keysDir, keys, partitionId, taskId,
+      rowLevel = false, check = None)
   // replacement/new rows carry the declared CHECK (r13); deleting a
   // violating row is always legal, so the keys writer never checks
   private val rowsW =
-    new GraftParquetWriter(rowsDir, rowSchema, partitionId, taskId,
+    new GraftParquetWriter(rowsDir, rows, partitionId, taskId,
       rowLevel = false, check = check)
 
   override def delete(meta: InternalRow, id: InternalRow): Unit =

@@ -10,10 +10,10 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchT
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, Write, WriteBuilder}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -62,9 +62,11 @@ import graft.ops.{GraftCatalog, Txn}
   * passed (cheap, codegen'd, and the pruning I/O win is what matters
   * at 100 TB).
   *
-  * Write path: `V1Write`→`InsertableRelation` — INSERT INTO is
-  * `Txn.commitAppend` (O(batch), manifest extension), INSERT OVERWRITE
-  * / CTAS-replace is a full `Txn.commit`. Every write is one atomic
+  * Write path: one native V2 batch write ([[GraftBatchWrite]]) for
+  * every schema — executors encode rows with Spark's own parquet writer
+  * into an invisible snapshot dir; INSERT INTO publishes it as an
+  * O(batch) manifest extension, INSERT OVERWRITE as a pinned
+  * full-snapshot or partition-replace commit. Every write is one atomic
   * manifest publish; a reader holding the previous pin never sees a
   * torn write.
   *
@@ -97,10 +99,9 @@ object GraftSqlCatalog {
     * write path — native batch writes evaluate it per row in the task
     * writers (a violating row fails the task, so the statement aborts
     * with nothing published — data files are inert until the manifest
-    * rename), the V1 bridge validates the batch frame, and delta
-    * row-level operations check their replacement rows. SQL CHECK
-    * semantics: NULL is not a violation (same as the programmatic
-    * [[graft.ops.Txn.commitChecked]]). */
+    * rename), and delta row-level operations check their replacement
+    * rows. SQL CHECK semantics: NULL is not a violation (same as the
+    * programmatic [[graft.ops.Txn.commitChecked]]). */
   val CheckProp = "graft.check"
 
   /** Parse + analyze + BIND a declared CHECK expression against a
@@ -722,34 +723,14 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
     if (keyCols.isEmpty) snapshot.schema
     else StructType(snapshot.schema.fields.map(f =>
       if (keyCols.contains(f.name)) f.copy(nullable = false) else f))
-  /** Write capability follows the SCHEMA and LAYOUT (Spark requires the
-    * declared kind to match the Write object): flat primitive schemas —
-    * including PARTITIONED tables whose partition type renders to
-    * directory names (r12: the native writer streams rows into
-    * `col=value` subdirs itself) — take the native executor-parallel
-    * path; nested/array schemas fall back to the V1 bridge, whose Txn
-    * commits handle any Spark schema. */
-  override def capabilities(): util.Set[TableCapability] = {
-    val fileSchema = StructType(
-      schema().fields.filterNot(f => partColsSeq.contains(f.name)))
-    val writeCap =
-      try {
-        GraftBatchWrite.schemaToParquet(fileSchema, "probe")
-        if (colMap.isEmpty && partColsSeq.forall(c =>
-          GraftBatchWrite.supportedPartitionType(schema()(c).dataType)))
-          TableCapability.BATCH_WRITE
-        else TableCapability.V1_BATCH_WRITE
-      }
-      catch { case _: UnsupportedOperationException =>
-        TableCapability.V1_BATCH_WRITE }
-    // OVERWRITE_DYNAMIC (r13): partitionOverwriteMode=dynamic INSERTs
-    // replace only the touched partitions (one manifest extension);
-    // on an unpartitioned table dynamic degenerates to the full
-    // replace, so the capability is always sound to declare
-    util.EnumSet.of(TableCapability.BATCH_READ, writeCap,
+  /** OVERWRITE_DYNAMIC (r13): partitionOverwriteMode=dynamic INSERTs
+    * replace only the touched partitions (one manifest extension); on
+    * an unpartitioned table dynamic degenerates to the full replace, so
+    * the capability is always sound to declare. */
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE, TableCapability.OVERWRITE_DYNAMIC,
       TableCapability.OVERWRITE_BY_FILTER)
-  }
 
   /** The declared partition transforms (r13): surfaced so DESCRIBE and
     * the analyzer see the layout the `_props` contract declares. */
@@ -822,15 +803,13 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(spark, root, info.schema(), version, partCol,
-      statsCols, bloomCols, mapped = colMap.nonEmpty,
-      physifyFrame = physify, physifySchemaF = physifySchema,
-      checkSql = tableProps.get("check"))
+      statsCols, bloomCols, physifySchema, tableProps.get("check"))
 
   /** UPDATE / MERGE INTO / predicate DELETE. Two regimes (r12):
     *
-    *  - a DECLARED-KEY table (`TBLPROPERTIES ('graft.key' = 'col')`,
-    *    flat-primitive schema) takes the DELTA path: Spark's rewrite
-    *    hands the write only the CHANGED rows, committed as one
+    *  - a DECLARED-KEY table (`TBLPROPERTIES ('graft.key' = 'col')`)
+    *    takes the DELTA path: Spark's rewrite hands the write only the
+    *    CHANGED rows, committed as one
     *    tombstone+rows manifest extension — O(batch), the
     *    [[Txn.commitUpsert]] economics from pasted SQL (r11 verdict
     *    item 2). The scan side keeps full pushdown + sidecar skipping.
@@ -843,9 +822,7 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder = {
     val deltaKeys = Some(keyCols).filter { ks =>
-      ks.nonEmpty && ks.forall(snapshot.schema.fieldNames.contains) &&
-        (try { GraftBatchWrite.schemaToParquet(snapshot.schema, "probe"); true }
-        catch { case _: UnsupportedOperationException => false })
+      ks.nonEmpty && ks.forall(snapshot.schema.fieldNames.contains)
     }
     deltaKeys match {
       case Some(ks) => new RowLevelOperationBuilder {
@@ -882,7 +859,7 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
                   // rows, r13)
                   val check = tableProps.get("check").map(c => (c,
                     GraftSqlCatalog.bindCheck(spark, c, wInfo.schema())))
-                  new GraftDeltaWrite(root, physifySchema(wInfo.schema()),
+                  new GraftDeltaWrite(spark, root, physifySchema(wInfo.schema()),
                     keySchema, ks, version,
                     s"sql-${info.command().toString.toLowerCase(java.util.Locale.ROOT)}-delta",
                     statsCols, bloomCols, check)
@@ -930,7 +907,7 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
           new WriteBuilder {
             override def build(): Write = new Write {
               override def toBatch: BatchWrite =
-                new GraftBatchWrite(root, physifySchema(wInfo.schema()),
+                new GraftBatchWrite(spark, root, physifySchema(wInfo.schema()),
                   GraftBatchWrite.Replace,
                   s"sql-${info.command().toString.toLowerCase(java.util.Locale.ROOT)}",
                   rowLevel = true,
@@ -1288,24 +1265,17 @@ private[catalog] class GraftV1Scan(pruned: DataFrame, label: String,
     }.asInstanceOf[T]
 }
 
-/** V1 write bridge: INSERT INTO → O(batch) manifest-extension append,
-  * INSERT OVERWRITE / truncate → full-snapshot commit. Both end in one
-  * atomic Txn publish. */
-/** Native write bridge (r11, replacing the initial V1Write form):
-  * INSERT INTO → executor-parallel parquet into an invisible snapshot
-  * dir + one O(batch) manifest-extension publish; INSERT OVERWRITE /
-  * truncate → same write, full-snapshot publish. InternalRow flows
-  * from codegen straight into the parquet writers — no Row-conversion
-  * boundary on the write side. Schemas beyond the native writer's flat
-  * primitive set (arrays, structs, decimals) fall back to the V1
-  * bridge, whose Txn commits handle any Spark schema. */
+/** The SQL write builder: INSERT INTO → executor-parallel parquet
+  * into an invisible snapshot dir + one O(batch) manifest-extension
+  * publish; INSERT OVERWRITE (full, dynamic or static-partition) → the
+  * same write, published as the matching pinned replace. Rows arrive
+  * under the LOGICAL schema; under a column mapping they land under the
+  * physical names (`physifySchema`), and the CHECK binds positionally,
+  * so it evaluates identically on both. */
 private[catalog] class GraftWriteBuilder(spark: SparkSession, root: String,
     schema: StructType, pinnedVersion: Long, partCol: Option[String],
-    statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-    mapped: Boolean = false,
-    physifyFrame: DataFrame => DataFrame = identity,
-    physifySchemaF: StructType => StructType = identity,
-    checkSql: Option[String] = None)
+    statsCols: Seq[String], bloomCols: Seq[String],
+    physifySchema: StructType => StructType, checkSql: Option[String])
   extends WriteBuilder with SupportsTruncate
   with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite
   with org.apache.spark.sql.connector.write.SupportsOverwrite {
@@ -1360,133 +1330,73 @@ private[catalog] class GraftWriteBuilder(spark: SparkSession, root: String,
     this
   }
 
-  /** Native eligibility (r12: partitioned tables included; r13:
-    * multi-level): the FILE schema (minus the partition columns, which
-    * live in dir names) must be flat-primitive and every partition type
-    * directory-renderable — then INSERTs stream executor-parallel into
-    * nested `col=value` subdirs with no V1 row bridge, the canonical
-    * ingest loop at native speed. */
   private def partCols: Seq[String] = partCol.toSeq.flatMap(Txn.partitionCols)
-  private def nativeSupported: Boolean =
-    !mapped && // mapped tables write through the V1 translation
-    (try {
-      GraftBatchWrite.schemaToParquet(StructType(
-        schema.fields.filterNot(f => partCols.contains(f.name))), "probe")
-      true
-    } catch { case _: UnsupportedOperationException => false }) &&
-      partCols.forall(c => schema.fieldNames.contains(c) &&
-        GraftBatchWrite.supportedPartitionType(schema(c).dataType))
 
-  override def build(): Write =
-    if (nativeSupported) new Write
-      with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-      // r14 (guide §6 partitioning-on-write, the Iceberg
-      // write.distribution-mode=hash shape): partitioned INSERT /
-      // dynamic OVERWRITE batches must arrive CLUSTERED by the
-      // partition columns. Without it every input task opens a writer
-      // per partition value it sees — locally the small-source insert
-      // ran as ONE task serially filling all ~35 leaf files (measured
-      // 1.95 s of txn_sql_partitioned2), and at scale N tasks ×
-      // P partitions explodes into N·P small files. Clustering routes
-      // each partition value to one task: parallel across partitions,
-      // exactly one file per leaf per statement. Static
-      // `PARTITION (col=v)` overwrites are exempt — their batch holds a
-      // single partition value, where clustering would serialize the
-      // write into one task for nothing.
-      // `spark.graft.write.distribution` (clustered|none, default
-      // clustered) is the escape hatch the Iceberg pattern exposes as
-      // write.distribution-mode (r14 advice): a value-skewed ingest
-      // (most rows in one partition value) funnels through one task
-      // under clustering, and `none` reverts to the unclustered shape.
-      // The key is read from the session that built the write, never
-      // from whichever session is active when Spark asks.
-      override def requiredDistribution()
-          : org.apache.spark.sql.connector.distributions.Distribution =
-        if (partCols.nonEmpty && replaceWhere.isEmpty &&
-            spark.conf.get("spark.graft.write.distribution", "clustered") ==
-              "clustered")
-          org.apache.spark.sql.connector.distributions.Distributions.clustered(
-            partCols.map(c =>
-              org.apache.spark.sql.connector.expressions.Expressions.identity(c)
-                .asInstanceOf[org.apache.spark.sql.connector.expressions.Expression])
-              .toArray)
-        else
-          org.apache.spark.sql.connector.distributions.Distributions.unspecified()
-      override def requiredOrdering()
-          : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-        Array.empty
-      // the declared CHECK binds ONCE at write build (driver), then
-      // evaluates per row in the task writers — a violating row fails
-      // the task, the statement aborts, nothing publishes (r13)
-      private val check = checkSql.map(c => (c,
-        GraftSqlCatalog.bindCheck(SparkSession.active, c, schema)))
-      override def toBatch: BatchWrite =
+  override def build(): Write = new Write
+    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+    // r14 (guide §6 partitioning-on-write, the Iceberg
+    // write.distribution-mode=hash shape): partitioned INSERT /
+    // dynamic OVERWRITE batches must arrive CLUSTERED by the
+    // partition columns. Without it every input task opens a writer
+    // per partition value it sees — locally the small-source insert
+    // ran as ONE task serially filling all ~35 leaf files (measured
+    // 1.95 s of txn_sql_partitioned2), and at scale N tasks ×
+    // P partitions explodes into N·P small files. Clustering routes
+    // each partition value to one task: parallel across partitions,
+    // exactly one file per leaf per statement. Static
+    // `PARTITION (col=v)` overwrites are exempt — their batch holds a
+    // single partition value, where clustering would serialize the
+    // write into one task for nothing.
+    // `spark.graft.write.distribution` (clustered|none, default
+    // clustered) is the escape hatch the Iceberg pattern exposes as
+    // write.distribution-mode (r14 advice): a value-skewed ingest
+    // (most rows in one partition value) funnels through one task
+    // under clustering, and `none` reverts to the unclustered shape.
+    // The key is read from the session that built the write, never
+    // from whichever session is active when Spark asks; any other
+    // value fails the statement here rather than silently meaning none.
+    private val clustered = {
+      val confKey = "spark.graft.write.distribution"
+      spark.conf.get(confKey, "clustered") match {
+        case "clustered" => true
+        case "none"      => false
+        case other => throw new IllegalArgumentException(
+          s"$confKey must be 'clustered' or 'none', got '$other'")
+      }
+    }
+    override def requiredDistribution()
+        : org.apache.spark.sql.connector.distributions.Distribution =
+      if (partCols.nonEmpty && replaceWhere.isEmpty && clustered)
+        org.apache.spark.sql.connector.distributions.Distributions.clustered(
+          partCols.map(c =>
+            org.apache.spark.sql.connector.expressions.Expressions.identity(c)
+              .asInstanceOf[org.apache.spark.sql.connector.expressions.Expression])
+            .toArray)
+      else
+        org.apache.spark.sql.connector.distributions.Distributions.unspecified()
+    override def requiredOrdering()
+        : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+      Array.empty
+    // the declared CHECK binds ONCE at write build (driver), then
+    // evaluates per row in the task writers — a violating row fails
+    // the task, the statement aborts, nothing publishes (r13)
+    private val check = checkSql.map(c => (c,
+      GraftSqlCatalog.bindCheck(spark, c, schema)))
+    override def toBatch: BatchWrite = {
+      // every overwrite replaces from the pinned base: CAS at version+1,
+      // so a concurrent commit fails this writer loud (r11 advice); a
+      // dynamic overwrite publishes ONE replace-partitions extension
+      // (r13), a static one the statement's partition tuple
+      val (mode, op) =
         if (replaceWhere.isDefined)
-          new GraftBatchWrite(root, schema,
-            GraftBatchWrite.ReplaceWhere(replaceWhere.get),
-            "sql-overwrite-partition", pinnedBase = Some(pinnedVersion),
-            partCol = partCol, statsCols = statsCols, bloomCols = bloomCols,
-            check = check)
-        else if (dynamic)
-          // dynamic overwrite: executors write the touched partitions,
-          // commit publishes ONE replace-partitions extension (r13)
-          new GraftBatchWrite(root, schema, GraftBatchWrite.DynamicOverwrite,
-            "sql-overwrite-dynamic", pinnedBase = Some(pinnedVersion),
-            partCol = partCol, statsCols = statsCols, bloomCols = bloomCols,
-            check = check)
-        else if (overwrite)
-          // OVERWRITE replaces from a pinned base: CAS at version+1, so
-          // a concurrent commit fails this writer loud (r11 advice)
-          new GraftBatchWrite(root, schema, GraftBatchWrite.Replace,
-            "sql-overwrite", pinnedBase = Some(pinnedVersion),
-            partCol = partCol, statsCols = statsCols, bloomCols = bloomCols,
-            check = check)
-        else
-          new GraftBatchWrite(root, schema, GraftBatchWrite.Append,
-            "sql-insert", partCol = partCol, statsCols = statsCols,
-            bloomCols = bloomCols, check = check)
+          (GraftBatchWrite.ReplaceWhere(replaceWhere.get), "sql-overwrite-partition")
+        else if (dynamic) (GraftBatchWrite.DynamicOverwrite, "sql-overwrite-dynamic")
+        else if (overwrite) (GraftBatchWrite.Replace, "sql-overwrite")
+        else (GraftBatchWrite.Append, "sql-insert")
+      new GraftBatchWrite(spark, root, physifySchema(schema), mode, op,
+        pinnedBase = if (overwrite) Some(pinnedVersion) else None,
+        partCol = partCol, statsCols = statsCols, bloomCols = bloomCols,
+        check = check)
     }
-    else new V1Write {
-      override def toInsertableRelation: InsertableRelation =
-        new InsertableRelation {
-          override def insert(data0: DataFrame, ow: Boolean): Unit = {
-            // the declared CHECK validates the batch BEFORE any commit
-            // (SQL semantics: NULL is not a violation) — three sample
-            // violations in the error, nothing published (r13)
-            checkSql.foreach { c =>
-              val bad = data0.where(!coalesce(
-                org.apache.spark.sql.functions.expr(c), lit(true))).take(3)
-              if (bad.nonEmpty) throw new IllegalStateException(
-                s"CHECK ($c) violated by rows like " +
-                  s"${bad.mkString("; ")} — statement aborted, nothing " +
-                  "was committed")
-            }
-            // under a column mapping the batch arrives with LOGICAL
-            // names — land it under the physical ones (r13)
-            val data = physifyFrame(data0)
-            (overwrite || ow, partCol) match {
-              case (true, Some(c)) if replaceWhere.isDefined =>
-                Txn.commitReplaceWhere(data, root, c, replaceWhere.get,
-                  expectedBase = pinnedVersion, statsCols = statsCols,
-                  meta = Map("op" -> "sql-overwrite-partition"))
-              case (true, Some(c)) if dynamic =>
-                Txn.commitReplacePartitions(data, root, c,
-                  expectedBase = pinnedVersion, statsCols = statsCols,
-                  bloomCols = bloomCols,
-                  meta = Map("op" -> "sql-overwrite-dynamic"))
-              case (true, _) =>
-                Txn.commit(data, root, statsCols,
-                  meta = Map("op" -> "sql-overwrite"), partitionBy = partCol,
-                  expectedBase = Some(pinnedVersion))
-              case (false, _) =>
-                // a partitioned shard lands as col=value subdirs of one
-                // manifest-appended dir: the canonical ingest loop
-                Txn.commitAppend(data, root, statsCols,
-                  meta = Map("op" -> "sql-insert"), bloomCols = bloomCols,
-                  partitionBy = partCol)
-            }
-            ()
-          }
-        }
-    }
+  }
 }

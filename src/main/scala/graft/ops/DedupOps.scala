@@ -691,9 +691,8 @@ object DedupOps {
     * of the component. */
   private[graft] def connectedComponents(
       nodes: org.apache.spark.sql.DataFrame,
-      pairs: org.apache.spark.sql.DataFrame,
-      tick: String => Unit = _ => ()): org.apache.spark.sql.DataFrame =
-    ccImpl(Some(nodes), pairs, tick)
+      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ccImpl(Some(nodes), pairs)
 
   /** CC over exactly the vertices that appear in an edge. The node set
     * is derived from the CHECKPOINTED edge list, so the (often
@@ -703,14 +702,12 @@ object DedupOps {
     * for the label init (measured: it cost llm_dedup_clusters ~2 s at
     * sf0.1 before this entry point existed). */
   private[graft] def connectedComponentsOfEdges(
-      pairs: org.apache.spark.sql.DataFrame,
-      tick: String => Unit = _ => ()): org.apache.spark.sql.DataFrame =
-    ccImpl(None, pairs, tick)
+      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ccImpl(None, pairs)
 
   private def ccImpl(
       nodesOpt: Option[org.apache.spark.sql.DataFrame],
-      pairs: org.apache.spark.sql.DataFrame,
-      tick: String => Unit): org.apache.spark.sql.DataFrame = {
+      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // No session-conf tuning in the loop: round 3 flipped codegen/AQE off
     // and quartered shuffle partitions here, and the driver measured the
     // query 58% SLOWER (7.26 s → 11.47 s). With default confs (codegen
@@ -742,8 +739,12 @@ object DedupOps {
     // resident vertex). Locally 4 keeps scheduler overhead nil; on a
     // cluster set it near total cores — the level count only grows as
     // log4(parts), so 4096 parts is still just 6 levels.
-    val edgeParts =
-      math.max(1, s.conf.get("spark.graft.cc.edgeParts", "4").toInt)
+    val edgeParts = {
+      val confKey = "spark.graft.cc.edgeParts"
+      val raw = s.conf.get(confKey, "4")
+      math.max(1, raw.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"$confKey must be a whole number of partitions, got '$raw'")))
+    }
     val p0 = cut(
       pairs.select(ca.as("src"), cb.as("dst")).repartition(edgeParts),
       eager = true)
@@ -819,8 +820,6 @@ object DedupOps {
         .repartition(parts), eager = true)
       // isEmpty on the just-materialized checkpoint is a limit-1 scan
       if (q.isEmpty) ccDone = true else cur = q
-      tick(s"cc: level ${rootMaps.size} (next parts $parts, " +
-        s"${if (ccDone) "closed" else "stitching"})")
     }
     // Descend the root chains back to the original vertices. At the
     // final level the quotient was empty, so every vertex there has one

@@ -842,47 +842,6 @@ object Txn {
       dataRel, meta)
   }
 
-  /** [[publishPartitionReplace]] from a DataFrame (the V1 write-bridge
-    * path). An EMPTY batch publishes the tombstone alone — the named
-    * partition clears, per INSERT OVERWRITE semantics (the fileless
-    * snapshot dir would otherwise break read-time schema inference). */
-  def commitReplaceWhere(df: DataFrame, root: String, partSpec: String,
-      colVals: Seq[(String, Any)], expectedBase: Long,
-      statsCols: Seq[String] = Nil,
-      meta: Map[String, String] = Map.empty): Long = {
-    val spark = df.sparkSession
-    val dataRel = writeSnapshot(df, root, statsCols,
-      partitionBy = Some(partSpec))
-    val f = fs(spark, root)
-    val hasFiles = {
-      val it = f.listFiles(new Path(s"$root/$dataRel"), true)
-      var found = false
-      while (!found && it.hasNext) {
-        val st = it.next()
-        found = st.isFile && st.getPath.getName.endsWith(".parquet")
-      }
-      found
-    }
-    if (!hasFiles) f.delete(new Path(s"$root/$dataRel"), true)
-    publishPartitionReplace(spark, root,
-      if (hasFiles) Some(dataRel) else None, colVals, expectedBase,
-      withPartitionCol(meta, Some(partSpec)))
-  }
-
-  /** [[publishDynamicOverwrite]] from a DataFrame (the V1 write-bridge
-    * path): write the batch hive-partitioned, then publish the
-    * replace-touched-partitions extension. O(batch) end to end. */
-  def commitReplacePartitions(df: DataFrame, root: String, partSpec: String,
-      expectedBase: Long, statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil,
-      meta: Map[String, String] = Map.empty): Long = {
-    val dataRel = writeSnapshot(df, root, statsCols,
-      partitionBy = Some(partSpec), bloomCols = bloomCols)
-    publishDynamicOverwrite(df.sparkSession, root, dataRel,
-      partitionCols(partSpec), expectedBase,
-      withPartitionCol(meta, Some(partSpec)))
-  }
-
   /** TABLE-LEVEL properties (r12): one small `_props` file at the table
     * root holding `key<TAB>value` lines — the SQL catalog's home for a
     * declared primary key (`key` → rowId of the delta row-level ops)

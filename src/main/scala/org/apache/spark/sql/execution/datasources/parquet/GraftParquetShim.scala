@@ -7,13 +7,23 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[parquet]` footer reader and footer →
   * schema conversion, so a caller can resolve a parquet schema on the
   * driver with Spark's own code instead of the Spark job its schema
-  * inference launches. Nothing else is exposed. */
+  * inference launches; and into the schema check and `asNullable`
+  * that Spark's own file writers apply. Nothing else is exposed. */
 object GraftParquetShim {
+
+  /** The file schema Spark's parquet writer declares for `schema`:
+    * every field, nested ones included, nullable. A type parquet cannot
+    * hold throws the error `df.write.parquet` throws. */
+  def writeSchema(schema: StructType): StructType = {
+    DataSourceUtils.verifySchema(new ParquetFileFormat, schema)
+    schema.asNullable
+  }
 
   /** What schema resolution needs from one footer: the parquet schema
     * and Spark's row-metadata string, without row-group metadata. */

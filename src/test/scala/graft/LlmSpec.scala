@@ -464,6 +464,17 @@ class LlmSpec extends SparkSpec {
     assert(labels == (0L until 10L).map(i => i -> i).toMap)
   }
 
+  test("spark.graft.cc.edgeParts must be a whole number") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
+    spark.conf.set("spark.graft.cc.edgeParts", "four")
+    val e = try intercept[IllegalArgumentException] {
+      graft.ops.DedupOps.connectedComponentsOfEdges(pairs)
+    } finally spark.conf.unset("spark.graft.cc.edgeParts")
+    assert(e.getMessage.contains("spark.graft.cc.edgeParts") &&
+      e.getMessage.contains("'four'"), e.getMessage)
+  }
+
   test("component loop uses RELIABLE checkpoints when a dir is configured") {
     // the cluster path: with a checkpoint dir set, the loop's lineage
     // cuts go to the (cluster) FS so executor loss mid-loop is

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
-import graft.ops.Txn
+import graft.ops.{GraftCommitMessage, GraftParquetEncoder, GraftParquetWrite, GraftParquetWriter, Txn}
 
 /** O(batch) SQL row-level operations (r12, r11 verdict item 2 —
   * "What's wrong 2"): when a table DECLARES a primary key
@@ -60,21 +60,32 @@ private[catalog] class GraftDeltaBatchWrite(spark: SparkSession, root: String,
   private val keysRel = s"data/${UUID.randomUUID()}"
   private val rowsRel = s"data/${UUID.randomUUID()}"
 
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DeltaWriterFactory =
-    new GraftDeltaWriterFactory(s"$root/$keysRel", s"$root/$rowsRel",
-      GraftParquetEncoder(spark, rowSchema),
-      GraftParquetEncoder(spark, keySchema), check)
+  /** The statement's row and key encoders; their broadcast job
+    * configurations live until commit or abort. */
+  private var encoders: Seq[GraftParquetEncoder] = Nil
+  private def releaseEncoders(): Unit = { encoders.foreach(_.destroy()); encoders = Nil }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val anyKeys = messages.exists {
-      case GraftDeltaMessage(k, _) => k.isDefined
-      case _                       => false
-    }
-    val anyRows = messages.exists {
-      case GraftDeltaMessage(_, r) => r.isDefined
-      case _                       => false
-    }
+  override def createBatchWriterFactory(
+      info: PhysicalWriteInfo): DeltaWriterFactory = {
+    val rows = GraftParquetEncoder(spark, rowSchema)
+    val keys = GraftParquetEncoder(spark, keySchema)
+    encoders = Seq(rows, keys)
+    new GraftDeltaWriterFactory(s"$root/$keysRel", s"$root/$rowsRel",
+      rows, keys, check)
+  }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    try publish(messages) finally releaseEncoders()
+
+  private def publish(messages: Array[WriterCommitMessage]): Unit = {
+    val deltas = messages.toSeq.collect { case m: GraftDeltaMessage => m }
+    val conf = spark.sparkContext.hadoopConfiguration
+    GraftParquetWrite.keepCommitted(conf, s"$root/$keysRel",
+      deltas.flatMap(_.keysFile))
+    GraftParquetWrite.keepCommitted(conf, s"$root/$rowsRel",
+      deltas.flatMap(_.rowsFile))
+    val anyKeys = deltas.exists(_.keysFile.isDefined)
+    val anyRows = deltas.exists(_.rowsFile.isDefined)
     // a delta that touched nothing (MERGE with zero matches and zero
     // inserts, DELETE matching no rows) is a valid no-op — the table
     // stays at its pinned version, no spurious commit
@@ -92,12 +103,11 @@ private[catalog] class GraftDeltaBatchWrite(spark: SparkSession, root: String,
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    Seq(keysRel, rowsRel).foreach { rel =>
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    try Seq(keysRel, rowsRel).foreach { rel =>
       val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
+    } finally releaseEncoders()
 }
 
 private[catalog] case class GraftDeltaMessage(keysFile: Option[String],
@@ -144,7 +154,7 @@ private[catalog] class GraftDeltaRowWriter(keysDir: String, rowsDir: String,
 
   override def commit(): WriterCommitMessage = {
     def fileOf(m: WriterCommitMessage): Option[String] = m match {
-      case GraftCommitMessage(f) => Some(f)
+      case GraftCommitMessage(fs) => fs.headOption
       case _                     => None
     }
     GraftDeltaMessage(fileOf(keysW.commit()), fileOf(rowsW.commit()))

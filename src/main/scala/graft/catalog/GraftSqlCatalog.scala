@@ -893,7 +893,7 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
             options: CaseInsensitiveStringMap): ScanBuilder = {
           val inner = rawNativeScanBuilder().getOrElse {
             val tmp = s"$root/_tmp/rlo-${java.util.UUID.randomUUID()}"
-            snapshot.write.parquet(tmp)
+            graft.ops.GraftParquetWrite(snapshot, tmp, Nil)
             new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
               s"graft.$tableName@v$version", spark,
               CaseInsensitiveStringMap.empty(), Seq(tmp),
@@ -915,9 +915,14 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
                   // version: CAS the publish so a concurrent writer's
                   // commit is never silently discarded (r11 advice)
                   pinnedBase = Some(version),
+                  // the rewrite keeps the table's layout and indexes: a
+                  // partitioned table stays partitioned, and declared
+                  // sidecars are rebuilt on the rewritten dir
+                  partCol = partCol, statsCols = statsCols,
+                  bloomCols = bloomCols,
                   // the declared CHECK guards KEYLESS UPDATE/MERGE too
                   // (r13): the rewrite's rows may arrive op-prefixed —
-                  // the writer shifts the binding per row
+                  // the writer strips the prefix before the check
                   check = tableProps.get("check").map(c => (c,
                     GraftSqlCatalog.bindCheck(spark, c, wInfo.schema()))))
             }

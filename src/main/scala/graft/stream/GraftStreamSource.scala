@@ -122,8 +122,8 @@ class GraftStreamSink(root: String, appId: String, keyCol: Option[String],
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val spark = data.sparkSession
-    // the micro-batch frame arrives flagged streaming (df.write refuses
-    // it): re-wrap its computed rows as a plain batch frame
+    // the micro-batch frame arrives flagged streaming (a batch write
+    // cannot plan it): re-wrap its computed rows as a plain batch frame
     val batch = SparkShims.internalCreateBatchFrame(
       spark, data.queryExecution.toRdd, data.schema)
     // a fresh root bootstraps with an empty v1 carrying the stream's
@@ -295,7 +295,7 @@ class GraftStreamSource(spark: SparkSession, root: String,
   private def chunkFrame(v: Long, from: Long, until: Long): DataFrame = {
     val keys = fileKeys(v).slice(from.toInt, until.toInt).toSet
     val df = Txn.snapshotChunk(spark, root, v, keys)
-      .withColumn("_commit_version", lit(v))
+      .withColumn("_commit_version", Txn.versionCol(v))
     if (cdc) df.withColumn("_change_type", lit("insert")) else df
   }
 
@@ -306,7 +306,7 @@ class GraftStreamSource(spark: SparkSession, root: String,
       // initial image: the snapshot as inserts (the CDC genesis)
       Txn.readVersion(spark, root, to)
         .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(to))
+        .withColumn("_commit_version", Txn.versionCol(to))
     else
       // per-version row-level diffs off the batch CDC feed: appends
       // serve at file level, rewrites/tombstones diff (Txn.changes'

@@ -8,7 +8,9 @@ import org.apache.parquet.hadoop.metadata.{FileMetaData, ParquetMetadata}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.SchemaUtils
 
 /** Bridge into Spark's `private[parquet]` footer reader and footer →
   * schema conversion, so a caller can resolve a parquet schema on the
@@ -19,8 +21,11 @@ object GraftParquetShim {
 
   /** The file schema Spark's parquet writer declares for `schema`:
     * every field, nested ones included, nullable. A type parquet cannot
-    * hold throws the error `df.write.parquet` throws. */
+    * hold, or a duplicate column name, throws the error
+    * `df.write.parquet` throws. */
   def writeSchema(schema: StructType): StructType = {
+    SchemaUtils.checkColumnNameDuplication(schema.fieldNames.toSeq,
+      SQLConf.get.caseSensitiveAnalysis)
     DataSourceUtils.verifySchema(new ParquetFileFormat, schema)
     schema.asNullable
   }

@@ -1,14 +1,17 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
 /** Minimal bridge into the `org.apache.spark.sql` package-private API:
   * building a DataFrame from a custom LogicalPlan (`Dataset.ofRows` is
-  * private[sql]). This is the standard extension-library technique; the
-  * only thing exposed is plan → DataFrame construction. */
+  * private[sql]) and a Column from a Catalyst expression. This is the
+  * standard extension-library technique; nothing else is exposed. */
 object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 }

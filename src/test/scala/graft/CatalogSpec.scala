@@ -1763,4 +1763,65 @@ class CatalogSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out == ref)
   }
+
+  test("keyless UPDATE on a PARTITIONED table keeps its layout and " +
+      "sidecars: a partition filter still prunes after the rewrite") {
+    val c = sqlCat("cowpart")
+    val catRoot = spark.conf.get(s"spark.sql.catalog.$c.root")
+    spark.sql(s"CREATE TABLE $c.p (id BIGINT, v BIGINT, day BIGINT) " +
+      s"PARTITIONED BY (day) TBLPROPERTIES ('graft.stats' = 'v')")
+    spark.sql(s"INSERT INTO $c.p SELECT id, id AS v, id % 4 AS day FROM range(400)")
+    def dayOne(): (Long, graft.catalog.GraftScanStats.ScanDecision) = {
+      graft.catalog.GraftScanStats.reset()
+      val n = spark.sql(s"SELECT count(*) FROM $c.p WHERE day = 1").head().getLong(0)
+      (n, graft.catalog.GraftScanStats.lastDecision.get)
+    }
+    val (before, d0) = dayOne()
+    assert(before == 100L && d0.dirsKept == 1 && d0.dirsTotal == 4, s"$d0")
+    spark.sql(s"UPDATE $c.p SET v = v + 1000 WHERE day = 1")
+    val (after, d1) = dayOne()
+    assert(after == 100L && d1.dirsKept == 1 && d1.dirsTotal == 4,
+      s"the rewrite must stay partitioned: $d1")
+    assert(spark.sql(s"SELECT sum(v) FROM $c.p").head().getLong(0) ==
+      (0L until 400L).sum + 100L * 1000L)
+    val tRoot = GraftCatalog.resolve(spark, catRoot, "p")
+    val v = Txn.currentVersion(spark, tRoot).get
+    assert(Txn.history(spark, tRoot).last._3.get("partitionCol").contains("day"))
+    assert(Txn.fileStats(spark, tRoot, v).keys.exists(_._2 == "v"),
+      "the rewrite must rebuild the declared stats sidecars")
+  }
+
+  test("only committed task files publish: a fresh dir's part file that " +
+      "no commit message names is deleted before the publish") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val c = sqlCat("orphan")
+    val catRoot = spark.conf.get(s"spark.sql.catalog.$c.root")
+    spark.sql(s"CREATE TABLE $c.o (id BIGINT)")
+    val tRoot = GraftCatalog.resolve(spark, catRoot, "o")
+    val write = new graft.catalog.GraftBatchWrite(spark, tRoot,
+      StructType(Seq(StructField("id", LongType))),
+      graft.catalog.GraftBatchWrite.Append, "sql-insert")
+    val factory = write.createBatchWriterFactory(
+      new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      })
+    def attempt(taskId: Long, rows: Seq[Long]) = {
+      val w = factory.createWriter(0, taskId)
+      rows.foreach(i => w.write(InternalRow(i)))
+      w.commit()
+    }
+    // two attempts of one partition: the driver keeps the first's
+    // message, as it keeps one result per partition
+    val won = attempt(1L, Seq(1L, 2L))
+    attempt(2L, Seq(1L, 2L, 99L))
+    val wonFile = new java.io.File(
+      won.asInstanceOf[graft.ops.GraftCommitMessage].files.head)
+    def partFiles = wonFile.getParentFile.listFiles()
+      .map(_.getName).filter(_.startsWith("part-")).toSet
+    assert(partFiles.size == 2)
+    write.commit(Array(won))
+    assert(partFiles == Set(wonFile.getName))
+    assert(ids(spark.table(s"$c.o")) == Set(1L, 2L))
+  }
 }

@@ -721,6 +721,37 @@ class StreamingSpec extends SparkSpec {
     assert(batches == batches.distinct, s"replayed batch landed twice: $batches")
   }
 
+  test("graft source → sink: a steady-state single-version micro-batch " +
+      "compiles no new code (the commit version rides as data)") {
+    import graft.ops.Txn
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val src = java.nio.file.Files.createTempDirectory("gcg_src").toString + "/t"
+    val dst = java.nio.file.Files.createTempDirectory("gcg_dst").toString + "/t"
+    val ckpt = java.nio.file.Files.createTempDirectory("gcg_ckpt").toString
+    Txn.commit(Seq((0L, "a")).toDF("id", "grp"), src)
+    val q = spark.readStream.format("graft").load(src)
+      .selectExpr("id", "upper(grp) AS grp", "_commit_version")
+      .writeStream.format("graft")
+      .option("root", dst).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append()).start()
+    def oneVersion(i: Long): Unit = {
+      Txn.commitAppend(Seq((i, s"g$i")).toDF("id", "grp"), src)
+      q.processAllAvailable()
+    }
+    val compiles = try {
+      q.processAllAvailable()
+      (1L to 3L).foreach(oneVersion) // warm-up: each shape compiles once
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (4L to 6L).foreach(oneVersion)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    } finally q.stop()
+    assert(compiles == 0L,
+      s"$compiles codegen compiles over 3 steady-state micro-batches")
+    assert(Txn.read(spark, dst).select("id", "_commit_version").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      (0L to 6L).map(i => (i, i + 1)).toSet)
+  }
+
   test("graft streaming sink: keyCol option turns the sink into an " +
       "exactly-once streaming UPSERT (r12)") {
     import graft.ops.Txn

@@ -1440,4 +1440,24 @@ class TxnSpec extends SparkSpec {
     assert(ids(Txn.read(spark, root)) == (10L until 14L).toSet ++
       (20L until 24L) ++ (30L until 34L))
   }
+
+  test("an append's schema guard reads footers, not a listing of the " +
+      "chain: the 40th idempotent append runs one job, like the 5th") {
+    import spark.implicits._
+    val root = freshRoot("guard_jobs")
+    Txn.commit(Seq(0L).toDF("id"), root)
+    // append i lands on a base of i data dirs; past 32 dirs
+    // (parallelPartitionDiscovery.threshold) a listing of the chain
+    // runs a job of its own
+    val jobs = (1L to 40L).map { i =>
+      jobsDuring(Txn.appendIdempotent(Seq(i).toDF("id"), root, "guard", i))._2.size
+    }
+    assert(jobs(4) == 1 && jobs(39) == 1, s"jobs per append: $jobs")
+    assert(ids(Txn.read(spark, root)) == (0L to 40L).toSet)
+    // the guard still rejects a type change against any dir of the chain
+    val err = intercept[IllegalArgumentException] {
+      Txn.appendIdempotent(Seq("x").toDF("id"), root, "guard", 41L)
+    }
+    assert(err.getMessage.contains("appended shard changes column id"))
+  }
 }

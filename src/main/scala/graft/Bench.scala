@@ -1,32 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tables.events fails loud on any non-UTC session (its
-      // TIMESTAMP_NTZ normalization is zone-sensitive); pin it here like
-      // every other shipped entry point so the bench doesn't depend on
-      // the host JVM's default zone (r7 advice)
-      .config("spark.sql.session.timeZone", "UTC")
-      // A session cycling through many DISTINCT query plans (186 here;
-      // any long-lived analytics driver) thrashes the whole-stage-codegen
-      // compiled-class cache at its 100-entry default: every pass of every
-      // query re-runs Janino on every codegen unit, ~0.1-0.2 s of pure
-      // driver compile per query that min-of-N can never amortize because
-      // the classes are already evicted again. Sized to hold the full
-      // registry's units (~10/query) with headroom; scale-independent
-      // (driver-side compile cost, no data-size interaction) — measured
-      // −30% on the 142 sub-second keys in an interleaved A/B
-      // (plans/r15/ab_codegen_cache_32c.txt). Static conf: must be set
-      // before the first session is created.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // Warm-up: touch every input table once (parquet footer reads, FS
     // cache, codegen of the scan path) so the first timed query doesn't
     // pay cold-start costs that min-of-2 can't always hide (round-1

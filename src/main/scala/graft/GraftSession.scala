@@ -1,0 +1,33 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one local session the dev mains and the test suites run on. */
+object GraftSession {
+
+  /** A `local[cores]` session (or the already-active one) with:
+    *  - `cores` shuffle partitions;
+    *  - session time zone UTC: `Tables.events` fails loud in any other
+    *    zone, because its TIMESTAMP_NTZ normalization is zone-sensitive;
+    *  - a 4096-entry whole-stage-codegen class cache. A session cycling
+    *    through many DISTINCT plans (the 186-key registry, any
+    *    long-lived analytics driver) thrashes the 100-entry default:
+    *    every pass re-runs Janino on every codegen unit, ~0.1-0.2 s of
+    *    driver compile per query. 4096 holds the registry's ~10 units
+    *    per query with headroom; measured −30% on the 142 sub-second
+    *    keys in an interleaved A/B (plans/r15/ab_codegen_cache_32c.txt).
+    *    It is a static conf, so it only takes effect on the first
+    *    session of the JVM;
+    *  - the UI off and log level WARN. */
+  def local(cores: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

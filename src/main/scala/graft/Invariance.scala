@@ -27,13 +27,7 @@ object Invariance {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only: Set[String] = args.drop(1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
 
     def fingerprint(df: DataFrame): (String, Long) = {
       // decimal(38,0) sum: a plain long sum of 64-bit hashes overflows

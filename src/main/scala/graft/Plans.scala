@@ -2,20 +2,38 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import scala.util.matching.Regex
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: dump formatted physical plans for the scale-claim evidence
   * in PLANS.md (`runMain graft.Plans <sfDir> <outFile>`). */
 object Plans {
+
+  private val idPatterns: Seq[(Regex, Int => String)] = Seq(
+    ("""#(\d+)""".r, n => s"#$n"),
+    ("""RDD\[(\d+)\]""".r, n => s"RDD[$n]"),
+    ("""plan_id=(\d+)""".r, n => s"plan_id=$n"),
+    ("""(?<=[A-Za-z$])@([0-9a-f]{1,8})\b""".r, n => s"@$n"))
+
+  /** Expression ids, RDD ids and exchange plan ids are JVM-global
+    * counters, so a section's raw dump moves whenever an earlier section
+    * creates more or fewer of them; the `Class@hash` identity of an
+    * aggregator object in a plan moves with every run. Renumber each
+    * kind in order of first appearance within the section, as Spark's
+    * `PlanStabilitySuite` does: distinct ids stay distinct, and a
+    * section changes only when its plan does. */
+  private[graft] def normalizeIds(plan: String): String =
+    idPatterns.foldLeft(plan) { case (text, (re, render)) =>
+      val ids = scala.collection.mutable.Map.empty[String, Int]
+      re.replaceAllIn(text,
+        m => render(ids.getOrElseUpdate(m.group(1), ids.size + 1)))
+    }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val keys = Seq("scan_filter_pushdown", "join_broadcast_dims",
       "sort_multikey_limit", "agg_pricing_summary", "llm_similarity_topk",
@@ -43,13 +61,12 @@ object Plans {
       "txn_sql_partitioned2", "txn_sql_upsert_composite",
       "txn_sql_join_prune", "txn_sql_widen")
     val sb = new StringBuilder
-    keys.foreach { k =>
-      val df = SparkEntry.queries(k)(spark, sfDir)
-      sb.append(s"==== $k ====\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+    def section(title: String, df: DataFrame): Unit = {
+      sb.append(s"==== $title ====\n")
+      sb.append(normalizeIds(df.queryExecution.explainString(FormattedMode)))
       sb.append("\n")
     }
+    keys.foreach(k => section(k, SparkEntry.queries(k)(spark, sfDir)))
     // llm_corpus_clean's final plan hides its stages behind checkpointed
     // RDDs (the component loop is iterative), so dump the near-dup pair
     // stage directly — the r3 VERDICT golden is that it contains NO
@@ -59,10 +76,7 @@ object Plans {
       val stage3 = graft.ops.DedupOps.contractedNearDupEdges(
         Tables.documents(spark, sfDir).select(col("doc_id"), col("text")),
         graft.ops.DedupOps.lshVerifiedPairs)
-      sb.append("==== corpus_clean_near_dup_stage (contraction + LSH) ====\n")
-      sb.append(stage3.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("\n")
+      section("corpus_clean_near_dup_stage (contraction + LSH)", stage3)
     }
     // Both shapes of the verify-join scale switch (r6): the SAME
     // lshVerifiedPairs plan under the session's broadcast threshold
@@ -76,11 +90,8 @@ object Plans {
       val prior = spark.conf.getAll.get(key) // explicitly set value only
       try Seq(None, Some("-1")).foreach { thr =>
         thr.foreach(spark.conf.set(key, _))
-        val df = graft.ops.DedupOps.lshVerifiedPairs(docs)
-        sb.append(s"==== lsh_verified_pairs (autoBroadcastJoinThreshold=${spark.conf.get(key)}) ====\n")
-        sb.append(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        sb.append("\n")
+        section(s"lsh_verified_pairs (autoBroadcastJoinThreshold=${spark.conf.get(key)})",
+          graft.ops.DedupOps.lshVerifiedPairs(docs))
       } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
     // r13 golden (r12 verdict item 2): a SQL join against a TOMBSTONED
@@ -102,10 +113,7 @@ object Plans {
         "INSERT INTO plans_g.fact SELECT id % 25, id FROM range(0, 20000)")
       val j = spark.sql("SELECT f.k, d.name, f.v FROM plans_g.fact f " +
         "JOIN plans_g.dim d ON f.k = d.k")
-      sb.append("==== v1_stats_broadcast (tombstoned dim x fact, r13) ====\n")
-      sb.append(j.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("\n")
+      section("v1_stats_broadcast (tombstoned dim x fact, r13)", j)
       spark.conf.unset("spark.sql.catalog.plans_g")
       spark.conf.unset("spark.sql.catalog.plans_g.root")
     }
@@ -128,10 +136,7 @@ object Plans {
         "CASE WHEN id % 7 = 0 THEN 'x' ELSE 'y' END FROM range(0, 1000)")
       val j = spark.sql("SELECT f.k, f.v FROM plans_d.fact f " +
         "JOIN plans_d.dim d ON f.k = d.k WHERE d.tag = 'x'")
-      sb.append("==== runtime_filter_scan (indexed fact x selective dim, r13) ====\n")
-      sb.append(j.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("\n")
+      section("runtime_filter_scan (indexed fact x selective dim, r13)", j)
       spark.conf.unset("spark.sql.catalog.plans_d")
       spark.conf.unset("spark.sql.catalog.plans_d.root")
     }

@@ -223,9 +223,9 @@ object DedupOps {
     * cap². The information argument is the classic prefix-filter one:
     * a gram half the corpus shares carries ~no signal about any
     * specific pair. 20 is ACTIVE on the fixture (max df 22 at sf0.01,
-    * 129 at sf0.1) and keeps the 3 true sf0.01 pairs; ScaleBench's
-    * stop-gram corpus pins the bound (a planted every-doc gram is
-    * dropped instead of exploding). */
+    * 129 at sf0.1) and keeps the 3 true sf0.01 pairs; STOPGRAM_r13.json
+    * records the bound on a corpus with a planted every-doc gram (the
+    * gram is dropped instead of exploding). */
   private[graft] final val NgramDfCap = 20
 
   /** Word-bigram Jaccard (τ = 0.5) over the doc_id%3==0 sample — the

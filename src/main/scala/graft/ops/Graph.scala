@@ -193,8 +193,8 @@ object Graph {
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
   }
 
-  /** The UNORIENTED wedge enumeration — ScaleBench's celebrity-curve
-    * contrast only, never a shipped path: wedges are enumerated from
+  /** The UNORIENTED wedge enumeration — GraphSpec's reference for
+    * [[triangleCounts]], never a shipped path: wedges are enumerated from
     * EVERY vertex (each triangle found once per corner, which is
     * exactly its per-vertex incidence count), so a vertex of degree d
     * contributes d(d-1)/2 join rows — the celebrity vertex's d² blowup

@@ -270,11 +270,19 @@ object Txn {
     val f = fs(spark, root)
     val v = currentVersion(spark, root).getOrElse(
       sys.error(s"no committed version at $root"))
+    val entries = manifestDirs(f, root, v).map(parseEntry)
+    val (files, bytes) = dataFileTotals(f, root, entries)
+    (committedVersions(f, root).size.toLong, files, bytes,
+      entries.count(_._2.isDefined).toLong)
+  }
+
+  /** (count, total bytes) of the `.parquet` files under the data dirs
+    * of a parsed manifest; tombstone key dirs are skipped. */
+  private def dataFileTotals(f: FileSystem, root: String,
+      entries: Seq[(String, Option[String])]): (Long, Long) = {
     var files = 0L
     var bytes = 0L
-    var tombs = 0L
-    manifestDirs(f, root, v).map(parseEntry).foreach {
-      case (_, Some(_)) => tombs += 1
+    entries.foreach {
       case (dir, None) =>
         val it = f.listFiles(new Path(resolveDir(root, dir)), true)
         while (it.hasNext) {
@@ -283,8 +291,9 @@ object Txn {
             files += 1; bytes += st.getLen
           }
         }
+      case _ => ()
     }
-    (committedVersions(f, root).size.toLong, files, bytes, tombs)
+    (files, bytes)
   }
 
   /** Snapshot-read version `n` (time travel). Multi-dir versions (from
@@ -321,30 +330,38 @@ object Txn {
             .reduce(_.unionByName(_, allowMissingColumns = true))
       }
     } else {
-      // ordered fold: a tombstone deletes its keys from everything
-      // BEFORE it in the entry list; rows appended AFTER the tombstone
-      // (a re-insert of a deleted key) survive. This is the order
-      // Delta's log replay gives remove/add actions.
-      entries.map(parseEntry).foldLeft(Option.empty[DataFrame]) {
-        case (acc, (dir, None)) =>
-          val d = readDir(spark, f, resolveDir(root, dir))
-          Some(acc.fold(d)(_.unionByName(d, allowMissingColumns = true)))
-        case (acc, (dir, Some(keyCol))) =>
-          val cols = tombstoneCols(keyCol)
-          val keys = readDir(spark, f, resolveDir(root, dir))
-            .select(cols.map(col): _*).distinct()
-          val base = acc.getOrElse(sys.error(
-            s"tombstone $dir precedes any data dir at $root"))
-          // a USING-column anti-join moves the key columns to the FRONT
-          // of the output — restore the committed column order, or a
-          // tombstone on a non-leading column silently reorders the
-          // table's schema (found by the r13 dynamic-overwrite work:
-          // positional INSERTs then bind wrong columns)
-          Some(base.join(keys, cols, "left_anti")
-            .select(base.columns.map(col).toSeq: _*))
-      }.getOrElse(sys.error(s"empty manifest for version $n at $root"))
+      foldTombstones(spark, f, root, entries.map(parseEntry).map {
+        case (dir, None) => Left(readDir(spark, f, resolveDir(root, dir)))
+        case (dir, Some(keyCol)) => Right((dir, keyCol))
+      }).getOrElse(sys.error(s"empty manifest for version $n at $root"))
     }
   }
+
+  /** The ordered tombstone fold shared by every read of a tombstoned
+    * version: data frames union in manifest order, and a tombstone
+    * `(dir, keyCol)` deletes its keys from everything BEFORE it; rows
+    * appended AFTER the tombstone (a re-insert of a deleted key)
+    * survive. This is the order Delta's log replay gives remove/add
+    * actions. None for an empty part list. */
+  private def foldTombstones(spark: SparkSession, f: FileSystem, root: String,
+      parts: Seq[Either[DataFrame, (String, String)]]): Option[DataFrame] =
+    parts.foldLeft(Option.empty[DataFrame]) {
+      case (acc, Left(d)) =>
+        Some(acc.fold(d)(_.unionByName(d, allowMissingColumns = true)))
+      case (acc, Right((dir, keyCol))) =>
+        val cols = tombstoneCols(keyCol)
+        val keys = readDir(spark, f, resolveDir(root, dir))
+          .select(cols.map(col): _*).distinct()
+        val base = acc.getOrElse(sys.error(
+          s"tombstone $dir precedes any data dir at $root"))
+        // a USING-column anti-join moves the key columns to the FRONT
+        // of the output — restore the committed column order, or a
+        // tombstone on a non-leading column silently reorders the
+        // table's schema (found by the r13 dynamic-overwrite work:
+        // positional INSERTs then bind wrong columns)
+        Some(base.join(keys, cols, "left_anti")
+          .select(base.columns.map(col).toSeq: _*))
+    }
 
   /** Read the current committed snapshot. Fails loud on a table with no
     * committed version — an uninitialized (or all-torn) table is a
@@ -1695,25 +1712,13 @@ object Txn {
           }
           .select(schema.fieldNames.map(col).toSeq: _*)
     }
-    plan.foldLeft(Option.empty[DataFrame]) {
-      case (acc, Left(groups)) =>
-        // a fully-pruned dir still contributes an empty frame so a
-        // following tombstone folds over SOMETHING (same semantics as
-        // the r10 flat form)
-        val nonEmpty = groups.map(scan).filter(_ ne empty)
-        val d = if (nonEmpty.isEmpty) empty else nonEmpty.reduce(_.unionByName(_))
-        Some(acc.fold(d)(_.unionByName(d)))
-      case (acc, Right((dir, keyCol))) =>
-        val cols = tombstoneCols(keyCol)
-        val keys = readDir(spark, f, resolveDir(root, dir))
-          .select(cols.map(col): _*).distinct()
-        val base = acc.getOrElse(sys.error(
-          s"tombstone $dir precedes any data dir at $root"))
-        // restore column order after the USING anti-join (see the
-        // readVersion fold — same reordering hazard)
-        Some(base.join(keys, cols, "left_anti")
-          .select(base.columns.map(col).toSeq: _*))
-    }.getOrElse(empty)
+    foldTombstones(spark, f, root, plan.map(_.left.map { groups =>
+      // a fully-pruned dir still contributes an empty frame so a
+      // following tombstone folds over SOMETHING (same semantics as
+      // the r10 flat form)
+      val nonEmpty = groups.map(scan).filter(_ ne empty)
+      if (nonEmpty.isEmpty) empty else nonEmpty.reduce(_.unionByName(_))
+    })).getOrElse(empty)
   }
 
   /** The skipping decision alone, without a scan: the data files of
@@ -1931,35 +1936,18 @@ object Txn {
   private[graft] def versionBytes(spark: SparkSession, root: String,
       n: Long): Long = {
     val f = fs(spark, root)
-    var bytes = 0L
-    manifestDirs(f, root, n).map(parseEntry).foreach {
-      case (_, Some(_)) => ()
-      case (dir, None) =>
-        val it = f.listFiles(new Path(resolveDir(root, dir)), true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-            bytes += st.getLen
-        }
-    }
-    bytes
+    dataFileTotals(f, root, manifestDirs(f, root, n).map(parseEntry))._2
   }
 
-  /** DETERMINISTIC file-key enumeration of a version's data files (r13,
-    * the initial-snapshot chunking substrate): manifest-entry order,
-    * then sorted partition subdirs, then sorted file basenames — stable
-    * across processes and replays because manifests are immutable and
-    * names sort identically everywhere (listStatus order is NOT
-    * guaranteed, hence the explicit sorts). Keys match the sidecar/
-    * [[prunePlanBy]] convention: `basename` for flat dirs,
-    * `subdir/basename` inside partitioned dirs. */
-  private[graft] def snapshotFileKeys(spark: SparkSession, root: String,
-      version: Long): Seq[String] =
-    snapshotFileSizes(spark, root, version).map(_._1)
-
-  /** The same deterministic enumeration with per-file BYTES — the
-    * rate-limited streaming source's `maxBytesPerTrigger` cursor
-    * (r13): one listing yields both the order and the budget data. */
+  /** DETERMINISTIC enumeration of a version's data files with their
+    * BYTES (r13, the initial-snapshot chunking substrate and the
+    * rate-limited streaming source's `maxBytesPerTrigger` cursor):
+    * manifest-entry order, then sorted partition subdirs, then sorted
+    * file basenames — stable across processes and replays because
+    * manifests are immutable and names sort identically everywhere
+    * (listStatus order is NOT guaranteed, hence the explicit sorts).
+    * Keys match the sidecar/[[prunePlanBy]] convention: `basename` for
+    * flat dirs, `subdir/basename` inside partitioned dirs. */
   private[graft] def snapshotFileSizes(spark: SparkSession, root: String,
       version: Long): Seq[(String, Long)] = {
     val f = fs(spark, root)

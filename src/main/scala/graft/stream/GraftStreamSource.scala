@@ -170,7 +170,7 @@ object GraftStreamSource {
   * unchanged and an unlimited stream writes the identical offset log);
   * `filesServed >= 0` means the INITIAL SNAPSHOT of `version` is
   * mid-flight with that many files (of the deterministic
-  * [[Txn.snapshotFileKeys]] order) already emitted — the state that
+  * [[Txn.snapshotFileSizes]] order) already emitted — the state that
   * lets a 100 TB onboarding land as N bounded, individually
   * checkpointed micro-batches instead of one unbounded batch. */
 case class GraftSourceOffset(version: Long, filesServed: Long)

@@ -11,19 +11,30 @@ import org.apache.spark.sql.execution.FormattedMode
   * in PLANS.md (`runMain graft.Plans <sfDir> <outFile>`). */
 object Plans {
 
+  private val uuid =
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+
   private val idPatterns: Seq[(Regex, Int => String)] = Seq(
     ("""#(\d+)""".r, n => s"#$n"),
     ("""RDD\[(\d+)\]""".r, n => s"RDD[$n]"),
     ("""plan_id=(\d+)""".r, n => s"plan_id=$n"),
-    ("""(?<=[A-Za-z$])@([0-9a-f]{1,8})\b""".r, n => s"@$n"))
+    ("""(?<=[A-Za-z$])@([0-9a-f]{1,8})\b""".r, n => s"@$n"),
+    // a uuid, or the prefix of one that a truncated location keeps
+    ("""data/([0-9a-f]{8}-[0-9a-f-]*)""".r, n => s"data/dir$n"),
+    (s"(part-\\d+-\\d+-$uuid\\.parquet)".r, n => s"part$n.parquet"),
+    ("""(plans_[a-z]+\d+)""".r, n => s"plans_tmp$n"))
 
   /** Expression ids, RDD ids and exchange plan ids are JVM-global
     * counters, so a section's raw dump moves whenever an earlier section
     * creates more or fewer of them; the `Class@hash` identity of an
-    * aggregator object in a plan moves with every run. Renumber each
-    * kind in order of first appearance within the section, as Spark's
-    * `PlanStabilitySuite` does: distinct ids stay distinct, and a
-    * section changes only when its plan does. */
+    * aggregator object in a plan moves with every run; a table's
+    * `data/<uuid>` snapshot dirs and its `part-<pid>-<taskAttempt>-<uuid>`
+    * file names are fresh on every commit (the task attempt id is a
+    * JVM-global counter too), and so are the `plans_*` temp catalog
+    * roots the last sections create. Renumber each kind in order of first
+    * appearance within the section, as Spark's `PlanStabilitySuite`
+    * does: distinct ids stay distinct, and a section changes only when
+    * its plan does. */
   private[graft] def normalizeIds(plan: String): String =
     idPatterns.foldLeft(plan) { case (text, (re, render)) =>
       val ids = scala.collection.mutable.Map.empty[String, Int]

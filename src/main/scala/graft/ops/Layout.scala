@@ -220,6 +220,22 @@ object Layout {
       .drop("zx_raw", "zy_raw", "x_mn", "x_mx", "y_mn", "y_mx")
   }
 
+  /** Recursive parquet-file byte count — `listFiles(_, true)` so a
+    * hive-partitioned layout (`k=v/` subdirs) totals correctly; a
+    * top-level listStatus would see zero files there, size the output
+    * as ONE file, and silently serialize the whole dataset (r8
+    * self-review). */
+  private[graft] def parquetBytes(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path): Long = {
+    var total = 0L
+    val it = fs.listFiles(path, true)
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.isFile && st.getPath.getName.endsWith(".parquet")) total += st.getLen
+    }
+    total
+  }
+
   /** Compact a parquet directory into ~`targetBytes`-sized files:
     * list the input files (Hadoop FS — works on HDFS/S3A the same
     * way), size the output file count from the actual byte total, and
@@ -232,22 +248,6 @@ object Layout {
     * per-task files): scans pay per-file open cost and footer reads,
     * so periodic compaction keeps scan parallelism matched to data,
     * not to ingest history. */
-  /** Recursive parquet-file byte count — `listFiles(_, true)` so a
-    * hive-partitioned layout (`k=v/` subdirs) totals correctly; a
-    * top-level listStatus would see zero files there, size the output
-    * as ONE file, and silently serialize the whole dataset (r8
-    * self-review). */
-  private def parquetBytes(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): Long = {
-    var total = 0L
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) total += st.getLen
-    }
-    total
-  }
-
   def compactParquet(spark: org.apache.spark.sql.SparkSession,
       inDir: String, outDir: String, targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
@@ -260,7 +260,7 @@ object Layout {
     countParquetFiles(fs, outDir)
   }
 
-  private def countParquetFiles(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def countParquetFiles(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Int =
     fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))

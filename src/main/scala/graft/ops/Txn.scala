@@ -62,6 +62,13 @@ import org.apache.spark.sql.types.StructType
   * `expectedBase + 1`; blind writes (appends, deletes, restores)
   * rebase onto the new tip, a bounded number of times.
   *
+  * A snapshot dir's layout is decided once, when it is written: flat,
+  * or nested `col=value` leaves, with sidecars in each leaf and only
+  * `*.parquet` files as data. Every reader of a version's files takes
+  * them from ONE listing, [[walkDir]]: each kept dir listed once, a
+  * subtree the directory rung drops never listed, and the file rung
+  * reading only the kept leaves' sidecars.
+  *
   * Schema resolution never launches a Spark job. Every `data/<uuid>`
   * dir is IMMUTABLE once written and uuid-named, so it is never
   * rewritten and its name is never reused: one write, one schema, for
@@ -268,32 +275,20 @@ object Txn {
   def tableDetail(spark: SparkSession,
       root: String): (Long, Long, Long, Long) = {
     val f = fs(spark, root)
-    val v = currentVersion(spark, root).getOrElse(
+    val versions = committedVersions(f, root)
+    val v = versions.maxOption.getOrElse(
       sys.error(s"no committed version at $root"))
-    val entries = manifestDirs(f, root, v).map(parseEntry)
-    val (files, bytes) = dataFileTotals(f, root, entries)
-    (committedVersions(f, root).size.toLong, files, bytes,
-      entries.count(_._2.isDefined).toLong)
+    val entries = versionLeaves(f, root, v)._1
+    val (files, bytes) = dataFileTotals(entries)
+    (versions.size.toLong, files, bytes, entries.count(_.isRight).toLong)
   }
 
-  /** (count, total bytes) of the `.parquet` files under the data dirs
-    * of a parsed manifest; tombstone key dirs are skipped. */
-  private def dataFileTotals(f: FileSystem, root: String,
-      entries: Seq[(String, Option[String])]): (Long, Long) = {
-    var files = 0L
-    var bytes = 0L
-    entries.foreach {
-      case (dir, None) =>
-        val it = f.listFiles(new Path(resolveDir(root, dir)), true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-            files += 1; bytes += st.getLen
-          }
-        }
-      case _ => ()
-    }
-    (files, bytes)
+  /** (count, total bytes) of the data files of a walked version;
+    * tombstone key dirs are skipped. */
+  private def dataFileTotals(
+      entries: Seq[Either[Seq[Leaf], (String, String)]]): (Long, Long) = {
+    val files = leavesOf(entries).flatMap(_.dataFiles)
+    (files.size.toLong, files.map(_.getLen).sum)
   }
 
   /** Snapshot-read version `n` (time travel). Multi-dir versions (from
@@ -398,28 +393,74 @@ object Txn {
     dataRel
   }
 
-  /** All LEAF partition directories under a hive-partitioned snapshot
-    * dir (r13, multi-level): depth-first through the `col=value` chain,
-    * each leaf as (relative path, partition (col, rawValue) pairs in
-    * nesting order). Single-level dirs yield their immediate children —
-    * every pre-r13 layout walks unchanged. */
-  private def partitionLeafDirs(f: FileSystem,
-      abs: String): Seq[(String, Seq[(String, String)])] = {
-    def recurse(p: Path, rel: String,
-        parts: Seq[(String, String)]): Seq[(String, Seq[(String, String)])] = {
-      val children = f.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      if (children.isEmpty) {
-        if (parts.isEmpty) Seq.empty else Seq((rel, parts))
-      } else children.flatMap { st =>
-        val n = st.getPath.getName
-        val eq = n.indexOf('=')
-        recurse(st.getPath, if (rel.isEmpty) n else s"$rel/$n",
-          parts :+ ((n.substring(0, eq), n.substring(eq + 1))))
+  /** One leaf dir of a snapshot dir as [[walkDir]] lists it: `rel` is
+    * its `col=value/` chain relative to the snapshot dir ("" for a flat
+    * dir), `parts` the chain's (col, rawValue) pairs in nesting order,
+    * `files` its plain files, data and sidecars, in name order. Data
+    * file keys are `rel + basename`, the sidecars' convention. */
+  private final case class Leaf(rel: String, parts: Seq[(String, String)],
+      files: Seq[FileStatus]) {
+    def dataFiles: Seq[FileStatus] =
+      files.filter(_.getPath.getName.endsWith(".parquet"))
+  }
+
+  private val allParts: (String, String) => Boolean = (_, _) => true
+
+  private def isPartitionDir(st: FileStatus): Boolean =
+    st.isDirectory && st.getPath.getName.contains("=")
+
+  /** The one listing of a snapshot dir: depth-first through its
+    * `col=value` subdirs in name order, each visited dir listed exactly
+    * once. `keepPart` is the directory rung, applied per level, so a
+    * dropped subtree is never listed. Returns the kept leaves and the
+    * (kept, visited) `col=value` dir counts; a flat dir is one leaf with
+    * `rel = ""` and counts 0/0. */
+  private def walkDir(f: FileSystem, absDir: String,
+      keepPart: (String, String) => Boolean = allParts): (Seq[Leaf], Int, Int) = {
+    var kept = 0
+    var visited = 0
+    def walk(p: Path, rel: String, parts: Seq[(String, String)]): Seq[Leaf] = {
+      val children = f.listStatus(p).toSeq.sortBy(_.getPath.getName)
+      val subdirs = children.filter(isPartitionDir)
+      if (subdirs.isEmpty) Seq(Leaf(rel, parts, children.filter(_.isFile)))
+      else subdirs.flatMap { st =>
+        val name = st.getPath.getName
+        val eq = name.indexOf('=')
+        val (c, v) = (name.substring(0, eq), name.substring(eq + 1))
+        visited += 1
+        if (!keepPart(c, v)) Nil
+        else {
+          kept += 1
+          walk(st.getPath, s"$rel$name/", parts :+ ((c, v)))
+        }
       }
     }
-    recurse(new Path(abs), "", Nil)
+    val leaves = walk(new Path(absDir), "", Nil)
+    (leaves, kept, visited)
   }
+
+  /** Version `n` through [[walkDir]], in manifest order: each data dir
+    * as `Left(leaves)`, each tombstone as `Right((dir, keyCol))`, plus
+    * the version's summed (kept, visited) `col=value` dir counts. */
+  private def versionLeaves(f: FileSystem, root: String, n: Long,
+      keepPart: (String, String) => Boolean = allParts)
+      : (Seq[Either[Seq[Leaf], (String, String)]], Int, Int) = {
+    var kept = 0
+    var visited = 0
+    val entries = manifestDirs(f, root, n).map(parseEntry).map {
+      case (dir, None) =>
+        val (leaves, k, v) = walkDir(f, resolveDir(root, dir), keepPart)
+        kept += k
+        visited += v
+        Left(leaves)
+      case (dir, Some(keyCol)) => Right((dir, keyCol))
+    }
+    (entries, kept, visited)
+  }
+
+  private def leavesOf(
+      entries: Seq[Either[Seq[Leaf], (String, String)]]): Seq[Leaf] =
+    entries.collect { case Left(leaves) => leaves }.flatten
 
   /** A snapshot dir is HIVE-PARTITIONED iff its immediate children are
     * `col=value` subdirectories — self-describing, so readers never
@@ -428,11 +469,8 @@ object Txn {
   private def isPartitionedDir(f: FileSystem, path: String): Boolean =
     memoized(qualified(f, path)).fold {
       val p = new Path(path)
-      f.exists(p) && hasPartitionChild(f.listStatus(p).toSeq)
+      f.exists(p) && f.listStatus(p).exists(isPartitionDir)
     }(_.partitioned)
-
-  private def hasPartitionChild(children: Seq[FileStatus]): Boolean =
-    children.exists(st => st.isDirectory && st.getPath.getName.contains("="))
 
   /** One data dir as schema resolution sees it: its footer (any data
     * file's — one write, one schema) and its layout. */
@@ -461,23 +499,14 @@ object Txn {
       dirs: Seq[String]): Seq[Option[DirFooter]] = {
     val keys = dirs.map(qualified(f, _)).distinct
     val missing = keys.filter(memoized(_).isEmpty).flatMap { k =>
-      val p = new Path(k)
-      if (!f.exists(p)) None
+      if (!f.exists(new Path(k))) None
       else {
-        val children = f.listStatus(p).toSeq
-        val partitioned = hasPartitionChild(children)
-        val files =
-          if (!partitioned) children.filter(_.isFile)
-          else {
-            val it = f.listFiles(p, true)
-            val all = Seq.newBuilder[FileStatus]
-            while (it.hasNext) all += it.next()
-            all.result()
-          }
-        files.filter { st =>
+        val leaves = walkDir(f, k)._1
+        leaves.flatMap(_.files).filter { st =>
           val n = st.getPath.getName
           !n.startsWith("_") && !n.startsWith(".")
-        }.minByOption(_.getPath.toString).map(st => (k, st, partitioned))
+        }.minByOption(_.getPath.toString)
+          .map(st => (k, st, leaves.exists(_.parts.nonEmpty)))
       }
     }
     if (missing.nonEmpty) {
@@ -765,11 +794,7 @@ object Txn {
       "delta publish needs keys, rows, or both")
     require(keyCols.nonEmpty && keyCols.distinct == keyCols,
       s"delta key columns must be non-empty and distinct: $keyCols")
-    keyCols.foreach { keyCol =>
-      require(!keyCol.contains(',') && !keyCol.contains('\n') &&
-        !keyCol.contains('@') && !keyCol.contains('+'),
-        s"delta key column must be free of ',', '@', '+' and newlines: $keyCol")
-    }
+    keyCols.foreach(requireKeyColName("delta key", _))
     // composite keys land as the r12 `~dir@a+b` tombstone form — every
     // reader already folds the tuple anti-join (r13, r12 verdict item 3)
     val keySpec = keyCols.mkString("+")
@@ -778,6 +803,14 @@ object Txn {
       manifestDirs(f, root, base) ++
         keysRel.map(k => s"~$k@$keySpec").toSeq ++ rowsRel.toSeq)).get
   }
+
+  /** A key column's name lands in a `~<dir>@<a+b>` tombstone entry of a
+    * comma-separated manifest line: a metacharacter in it would corrupt
+    * the manifest for every future reader (r10 advice; '+' joined the
+    * reserved set with composite keys). `what` names the column's role. */
+  private def requireKeyColName(what: String, c: String): Unit =
+    require(!c.exists(",@+\n".contains(_)),
+      s"$what column must be free of ',', '@', '+' and newlines: $c")
 
   /** DYNAMIC PARTITION OVERWRITE publish (r13, r12 verdict item 6):
     * replace exactly the partitions the freshly-written snapshot dir
@@ -804,38 +837,43 @@ object Txn {
       root: String, dataRel: String, partColsSeq: Seq[String],
       expectedBase: Long, meta: Map[String, String] = Map.empty): Long = {
     require(partColsSeq.nonEmpty, "dynamic overwrite needs partition columns")
-    val f = fs(spark, root)
-    val leaves = partitionLeafDirs(f, s"$root/$dataRel")
+    val leaves = walkDir(fs(spark, root), s"$root/$dataRel")._1
+      .filter(_.parts.nonEmpty)
     require(leaves.nonEmpty,
       s"dynamic overwrite wrote no partition dirs under $dataRel")
-    val tuples = leaves.map { case (rel, parts) =>
-      val byCol = parts.toMap
-      require(parts.map(_._1) == partColsSeq,
-        s"partition chain $rel does not match declared columns $partColsSeq")
-      partColsSeq.map { c =>
-        val raw = byCol(c)
+    val tuples = leaves.map { leaf =>
+      require(leaf.parts.map(_._1) == partColsSeq,
+        s"partition chain ${leaf.rel} does not match declared columns $partColsSeq")
+      leaf.parts.map { case (_, raw) =>
         require(raw != hiveDefaultPartition,
-          s"dynamic overwrite cannot replace the NULL partition ($rel): " +
+          s"dynamic overwrite cannot replace the NULL partition (${leaf.rel}): " +
             "a null key matches no rows in the tombstone anti-join — " +
             "rewrite the null partition explicitly")
         unescapePathName(raw)
       }
     }.distinct
-    // type the tuples at the TABLE schema (the dir names are strings;
-    // the anti-join must compare at the column type, same cast rule as
-    // the partition-column reconstruction in scanPruned)
+    replacePartitions(spark, root, partColsSeq, tuples, Some(dataRel),
+      expectedBase, meta)
+  }
+
+  /** The shared tail of the partition replaces: tombstone the partition
+    * `tuples` of `cols` and publish them with `dataRel` as one delta
+    * CAS-pinned at `expectedBase`. The tuples are strings (directory or
+    * statement values), typed at the TABLE schema so the anti-join
+    * compares at the column type — the cast rule of the partition-column
+    * reconstruction in scanPruned. */
+  private def replacePartitions(spark: SparkSession, root: String,
+      cols: Seq[String], tuples: Seq[Seq[String]], dataRel: Option[String],
+      expectedBase: Long, meta: Map[String, String]): Long = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val schema = readVersion(spark, root, expectedBase).schema
-    val strSchema = org.apache.spark.sql.types.StructType(partColsSeq.map(c =>
-      org.apache.spark.sql.types.StructField(c,
-        org.apache.spark.sql.types.StringType, nullable = false)))
-    val strDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        tuples.map(t => org.apache.spark.sql.Row(t: _*)), 1), strSchema)
-    val typed = strDf.select(partColsSeq.map(c =>
+    val strSchema = StructType(cols.map(StructField(_, StringType, nullable = false)))
+    val strDf = spark.createDataFrame(spark.sparkContext.parallelize(
+      tuples.map(t => org.apache.spark.sql.Row(t: _*)), 1), strSchema)
+    val typed = strDf.select(cols.map(c =>
       col(c).cast(schema(c).dataType).as(c)): _*)
-    val keysRel = writeSnapshot(typed, root, Nil)
-    publishDeltaIf(spark, root, expectedBase, partColsSeq, Some(keysRel),
-      Some(dataRel), meta)
+    publishDeltaIf(spark, root, expectedBase, cols,
+      Some(writeSnapshot(typed, root, Nil)), dataRel, meta)
   }
 
   /** STATIC partition replace (r13, `INSERT OVERWRITE t PARTITION
@@ -854,20 +892,8 @@ object Txn {
         s"cannot replace the NULL partition of $c: a null key matches " +
           "no rows in the tombstone anti-join — rewrite it explicitly")
     }
-    val schema = readVersion(spark, root, expectedBase).schema
-    val cols = colVals.map(_._1)
-    val strSchema = org.apache.spark.sql.types.StructType(cols.map(c =>
-      org.apache.spark.sql.types.StructField(c,
-        org.apache.spark.sql.types.StringType, nullable = false)))
-    val strDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        org.apache.spark.sql.Row(colVals.map(_._2.toString): _*)), 1),
-      strSchema)
-    val typed = strDf.select(cols.map(c =>
-      col(c).cast(schema(c).dataType).as(c)): _*)
-    val keysRel = writeSnapshot(typed, root, Nil)
-    publishDeltaIf(spark, root, expectedBase, cols, Some(keysRel),
-      dataRel, meta)
+    replacePartitions(spark, root, colVals.map(_._1),
+      Seq(colVals.map(_._2.toString)), dataRel, expectedBase, meta)
   }
 
   /** TABLE-LEVEL properties (r12): one small `_props` file at the table
@@ -989,9 +1015,7 @@ object Txn {
     upsertKey.foreach { k =>
       require(df.schema.fieldNames.contains(k),
         s"upsert key column $k absent from the batch schema")
-      require(!k.contains(',') && !k.contains('\n') && !k.contains('@') &&
-        !k.contains('+'),
-        s"upsert key column must be free of ',', '@', '+' and newlines: $k")
+      requireKeyColName("upsert key", k)
     }
     lazy val written: String = // data written once, on first need
       writeSnapshot(df, root, statsCols, partitionBy, bloomCols, bloomBits)
@@ -1109,13 +1133,7 @@ object Txn {
     keyCols.foreach { c =>
       require(keys.schema.fieldNames.contains(c),
         s"keys frame must carry the key column $c")
-      // the tombstone entry is parsed as `~<dir>@<a+b>` inside a
-      // comma-separated manifest line — a metacharacter in a column
-      // name would corrupt the manifest for every future reader (r10
-      // advice; '+' joined the reserved set with composite keys)
-      require(!c.contains(',') && !c.contains('\n') && !c.contains('@') &&
-        !c.contains('+'),
-        s"tombstone key column must be free of ',', '@', '+' and newlines: $c")
+      requireKeyColName("tombstone key", c)
     }
     val keySpec = keyCols.mkString("+")
     val f = fs(spark, root)
@@ -1409,66 +1427,57 @@ object Txn {
     java.net.URLDecoder.decode(s, "UTF-8")
 
   /** (file-key, col) -> (min, max) merged from every snapshot dir's
-    * stats sidecar; dirs committed without stats simply contribute
+    * stats sidecars; dirs committed without stats simply contribute
     * nothing, so their files are never prunable. File keys: plain
     * basename for flat dirs (globally unique — Spark part files embed a
-    * write UUID), `subdir/basename` for hive-partitioned dirs (one
+    * write UUID), `chain/basename` for hive-partitioned dirs (one
     * write task emits same-basename files into several partition
-    * subdirs, so the subdir qualifies the key). */
+    * subdirs, so the leaf's chain qualifies the key). */
   def fileStats(spark: SparkSession, root: String,
       version: Long): Map[(String, String), (Option[Long], Option[Long])] = {
     val f = fs(spark, root)
-    manifestDirs(f, root, version)
-      .filter(!_.startsWith("~")).flatMap { d =>
-        statsSidecars(f, resolveDir(root, d)).flatMap { case (prefix, p) =>
-          readLines(f, p).map { line =>
-            val Array(file, c, mn, mx) = line.split('\t')
-            def parse(s: String) = if (s == "-") None else Some(s.toLong)
-            (s"$prefix$file", c) -> ((parse(mn), parse(mx)))
-          }
-        }
-      }.toMap
+    leavesOf(versionLeaves(f, root, version)._1).flatMap { leaf =>
+      leafStats(f, leaf).map { case ((file, c), mm) => (leaf.rel + file, c) -> mm }
+    }.toMap
   }
 
-  /** The sidecar files named `name` under a snapshot dir with their
-    * file-key prefixes: the dir-root sidecar (flat snapshots, prefix
-    * "") plus one per LEAF partition subdir (prefix `chain/` — the full
-    * `a=v/b=w/` relative path for multi-level layouts, r13). */
-  private def sidecarsNamed(f: FileSystem, dir: String,
-      name: String): Seq[(String, Path)] = {
-    val flat = new Path(s"$dir/$name")
-    val fromRoot = if (f.exists(flat)) Seq(("", flat)) else Seq.empty
-    val fromParts =
-      if (!isPartitionedDir(f, dir)) Seq.empty
-      else partitionLeafDirs(f, dir).flatMap { case (rel, _) =>
-        val p = new Path(s"$dir/$rel/$name")
-        if (f.exists(p)) Seq((s"$rel/", p)) else Seq.empty
-      }
-    fromRoot ++ fromParts
-  }
+  /** The tab-split lines of the sidecar `name` of one leaf, found in the
+    * leaf's own listing: a leaf written without it has none. Sidecars
+    * sit in each leaf and key its files by basename. Empty fields are
+    * kept: an empty string's encoded stat bound is one. */
+  private def sidecarRows(f: FileSystem, leaf: Leaf,
+      name: String): Seq[Array[String]] =
+    leaf.files.find(_.getPath.getName == name).toSeq
+      .flatMap(st => readLines(f, st.getPath)).map(_.split("\t", -1))
 
-  private def statsSidecars(f: FileSystem, dir: String): Seq[(String, Path)] =
-    sidecarsNamed(f, dir, "_stats.tsv")
+  /** A stats bound: `-` is the null sentinel (never prunable). */
+  private def bound[A](s: String)(parse: String => A): Option[A] =
+    if (s == "-") None else Some(parse(s))
 
-  /** (file-key, col) -> lexicographic (min, max) from the STRING stats
-    * sidecars (r12) — same merge/keying rules as [[fileStats]]; dirs
-    * committed without string stats contribute nothing. */
-  def fileStatsStr(spark: SparkSession, root: String, version: Long)
-      : Map[(String, String), (Option[String], Option[String])] = {
-    val f = fs(spark, root)
-    manifestDirs(f, root, version)
-      .filter(!_.startsWith("~")).flatMap { d =>
-        sidecarsNamed(f, resolveDir(root, d), "_stats_str.tsv").flatMap {
-          case (prefix, p) =>
-            readLines(f, p).map { line =>
-              val Array(file, c, mn, mx) = line.split('\t')
-              def parse(s: String) =
-                if (s == "-") None else Some(decodeStatValue(s))
-              (s"$prefix$file", c) -> ((parse(mn), parse(mx)))
-            }
-        }
-      }.toMap
-  }
+  /** `_stats.tsv` (r8): (basename, col) -> numeric (min, max). */
+  private def leafStats(f: FileSystem,
+      leaf: Leaf): Map[(String, String), (Option[Long], Option[Long])] =
+    sidecarRows(f, leaf, "_stats.tsv").map { case Array(file, c, mn, mx) =>
+      (file, c) -> ((bound(mn)(_.toLong), bound(mx)(_.toLong)))
+    }.toMap
+
+  /** `_stats_str.tsv` (r12): (basename, col) -> lexicographic (min, max). */
+  private def leafStatsStr(f: FileSystem,
+      leaf: Leaf): Map[(String, String), (Option[String], Option[String])] =
+    sidecarRows(f, leaf, "_stats_str.tsv").map { case Array(file, c, mn, mx) =>
+      (file, c) -> ((bound(mn)(decodeStatValue), bound(mx)(decodeStatValue)))
+    }.toMap
+
+  /** `_bloom.tsv` (r10): (basename, col) -> the file's bloom bit array,
+    * stored as `basename TAB col TAB base64(bits)`. The size is a
+    * per-file constant: the default 2^20 bits at K=7 holds ~100k keys
+    * under 1% false positives. */
+  private def leafBlooms(f: FileSystem,
+      leaf: Leaf): Map[(String, String), Array[Long]] =
+    sidecarRows(f, leaf, "_bloom.tsv").map { case Array(file, c, b64) =>
+      val bb = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(b64))
+      (file, c) -> Array.fill(bb.remaining / 8)(bb.getLong())
+    }.toMap
 
   private def readLines(f: FileSystem, p: Path): Seq[String] = {
     val in = f.open(p)
@@ -1477,18 +1486,6 @@ object Txn {
     text.split('\n').filter(_.nonEmpty).toSeq
   }
 
-  /** Per-file BLOOM sidecar (r10): for each named LONG-castable column,
-    * one fixed-size bloom filter per data file over that file's values,
-    * stored as `_bloom.tsv` lines `basename TAB col TAB base64(bits)`
-    * inside the snapshot dir (published atomically with the data, like
-    * `_stats.tsv`). Built by the same mergeable
-    * [[graft.functions.BloomGramAgg]] the decontamination path uses —
-    * partial aggregation per input split, a bitwise-OR merge per file,
-    * no shuffle wider than one fixed-size array per file. `mBits` is a
-    * per-file constant: at the default 2^20 bits / K=7 a 128 KiB
-    * sidecar per file holds ~100k keys under 1% FP; size it to the
-    * file row count, not the table. Null values contribute nothing (a
-    * null never matches a point probe). */
   /** The long a STRING value feeds its bloom as (r13): Spark's
     * xxhash64 at the default seed — computed identically by the
     * executor-side builder (`functions.xxhash64`) and the driver-side
@@ -1527,31 +1524,6 @@ object Txn {
     if (snap.schema(c).dataType == org.apache.spark.sql.types.StringType)
       xxhash64(col(c))
     else numFeed(snap, c)
-
-  /** (file-key, col) -> bloom bit array, merged from every snapshot
-    * dir's `_bloom.tsv` sidecars (dir-root for flat snapshots,
-    * per-partition-subdir with `subdir/basename` keys for partitioned
-    * ones); dirs committed without blooms contribute nothing (their
-    * files are never point-prunable). */
-  def fileBlooms(spark: SparkSession, root: String,
-      version: Long): Map[(String, String), Array[Long]] = {
-    val f = fs(spark, root)
-    manifestDirs(f, root, version)
-      .filter(!_.startsWith("~")).flatMap { d =>
-        sidecarsNamed(f, resolveDir(root, d), "_bloom.tsv").flatMap {
-          case (prefix, p) =>
-            readLines(f, p).map { line =>
-              val Array(file, c, b64) = line.split('\t')
-              val bytes = java.util.Base64.getDecoder.decode(b64)
-              val bb = java.nio.ByteBuffer.wrap(bytes)
-              val bits = new Array[Long](bytes.length / 8)
-              var i = 0
-              while (i < bits.length) { bits(i) = bb.getLong(); i += 1 }
-              (s"$prefix$file", c) -> bits
-            }
-        }
-      }.toMap
-  }
 
   /** CHECK-constrained commit (r10, Delta's table constraints): every
     * expression in `checks` must hold on EVERY row or nothing is
@@ -1602,70 +1574,30 @@ object Txn {
       dirsKept: Int, dirsTotal: Int)
 
   /** The skipping planner every pruned read and probe goes through
-    * (r11: partition-aware): every data file in version `version` passes
-    * through `keepFile` (keyed by basename for flat dirs,
-    * `subdir/basename` inside partitioned dirs — matching the sidecar
-    * keys); tombstone entries pass through for the reader's log-order
-    * fold. Partitioned dirs additionally pass each `col=value` subdir
-    * through `keepPart` FIRST — the directory rung — and only surviving
-    * subdirs pay the file-rung listing, so a pruned read's metadata
-    * cost is O(kept partitions), never O(table). Skipping reads pass
-    * [[probesKeepFile]] and [[probesKeepPart]], which are one-sided:
-    * they may keep what the probes' residual rejects, never drop a
-    * file/dir containing a matching row. The version is an
-    * explicit parameter so one resolve feeds the file list, the schema
-    * and the tombstone fold alike (r10 advice: resolving twice let a
-    * concurrent commit mix two versions' views). */
+    * (r11: partition-aware), over [[versionLeaves]]: each `col=value`
+    * dir passes through `keepPart` FIRST — the directory rung, applied
+    * per level (r13), so a dropped subtree is never listed and a pruned
+    * read's metadata cost is O(kept subtrees), never O(table). Each
+    * kept leaf's data files then pass through `keepFile(leaf)` by
+    * basename — the file rung, which reads only that leaf's sidecars.
+    * Tombstone entries pass through for the reader's log-order fold.
+    * Skipping reads pass [[probesKeepFile]] and [[probesKeepPart]],
+    * which are one-sided: they may keep what the probes' residual
+    * rejects, never drop a file/dir containing a matching row. The
+    * version is an explicit parameter so one resolve feeds the file
+    * list, the schema and the tombstone fold alike (r10 advice:
+    * resolving twice let a concurrent commit mix two versions' views). */
   private def prunePlanBy(spark: SparkSession, root: String, version: Long,
-      keepFile: String => Boolean, keepPart: (String, String) => Boolean):
+      keepFile: Leaf => String => Boolean, keepPart: (String, String) => Boolean):
       (Seq[Either[Seq[ScanGroup], (String, String)]], SkipReport) = {
-    val f = fs(spark, root)
-    var total = 0
-    var dirsKept = 0
-    var dirsTotal = 0
-    def parquetFiles(dir: Path): Seq[String] =
-      f.listStatus(dir).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
-    def base(path: String): String = path.substring(path.lastIndexOf('/') + 1)
-    val plan = manifestDirs(f, root, version).map(parseEntry).map {
-      case (dir, None) =>
-        val abs = resolveDir(root, dir)
-        if (!isPartitionedDir(f, abs)) {
-          val files = parquetFiles(new Path(abs))
-          total += files.size
-          Left(Seq(ScanGroup(files.filter(p => keepFile(base(p))), Nil)))
-        } else {
-          // recursive walk (r13, multi-level layouts): the directory
-          // rung applies PER LEVEL — a dropped `col=value` subtree is
-          // never listed below, so a two-level `year=…/source=…` table
-          // pays O(kept year dirs) + O(kept source dirs) metadata, and
-          // file keys inside a leaf carry the full relative chain
-          def walk(p: Path, rel: String,
-              parts: Seq[(String, String)]): Seq[ScanGroup] = {
-            val children = f.listStatus(p).toSeq
-              .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-            if (children.isEmpty) {
-              val files = parquetFiles(p)
-              total += files.size
-              Seq(ScanGroup(
-                files.filter(fp => keepFile(s"$rel${base(fp)}")), parts))
-            } else children.flatMap { st =>
-              val pdir = st.getPath.getName
-              val eq = pdir.indexOf('=')
-              val (c, v) = (pdir.substring(0, eq), pdir.substring(eq + 1))
-              dirsTotal += 1
-              if (!keepPart(c, v)) Nil // directory rung: never listed
-              else {
-                dirsKept += 1
-                walk(st.getPath, s"$rel$pdir/", parts :+ ((c, v)))
-              }
-            }
-          }
-          Left(walk(new Path(abs), "", Nil))
-        }
-      case (dir, Some(keyCol)) => Right((dir, keyCol))
-    }
+    val (entries, dirsKept, dirsTotal) =
+      versionLeaves(fs(spark, root), root, version, keepPart)
+    val plan = entries.map(_.left.map(_.map { leaf =>
+      val keep = keepFile(leaf)
+      ScanGroup(leaf.dataFiles.map(_.getPath).filter(p => keep(p.getName))
+        .map(_.toString), leaf.parts)
+    }))
+    val total = leavesOf(entries).map(_.dataFiles.size).sum
     val kept = plan.collect { case Left(gs) => gs.map(_.files.size).sum }.sum
     (plan, SkipReport(kept, total, dirsKept, dirsTotal))
   }
@@ -1730,7 +1662,7 @@ object Txn {
   def skipDecision(spark: SparkSession, root: String, version: Long,
       probes: Seq[SkipProbe]): (Seq[String], SkipReport) = {
     val (plan, report) = prunePlanBy(spark, root, version,
-      probesKeepFile(spark, root, version, probes), probesKeepPart(probes))
+      probesKeepFile(fs(spark, root), probes), probesKeepPart(probes))
     (plan.collect { case Left(gs) => gs.flatMap(_.files) }.flatten, report)
   }
 
@@ -1745,7 +1677,7 @@ object Txn {
   def skipScan(spark: SparkSession, root: String, version: Long,
       probes: Seq[SkipProbe]): (DataFrame, SkipReport) = {
     val (plan, report) = prunePlanBy(spark, root, version,
-      probesKeepFile(spark, root, version, probes), probesKeepPart(probes))
+      probesKeepFile(fs(spark, root), probes), probesKeepPart(probes))
     (scanPruned(spark, root, version, plan), report)
   }
 
@@ -1816,16 +1748,10 @@ object Txn {
       probes: Seq[SkipProbe]): (Int, Int) = {
     val v = currentVersion(spark, root).getOrElse(
       sys.error(s"no committed version at $root"))
-    val f = fs(spark, root)
     val keep = probesKeepPart(probes)
-    val leaves = manifestDirs(f, root, v).map(parseEntry).flatMap {
-      case (dir, None) =>
-        val abs = resolveDir(root, dir)
-        if (isPartitionedDir(f, abs)) partitionLeafDirs(f, abs).map(_._2)
-        else Nil
-      case _ => Nil
-    }
-    (leaves.count(_.forall { case (c, pv) => keep(c, pv) }), leaves.size)
+    val chains = leavesOf(versionLeaves(fs(spark, root), root, v)._1)
+      .map(_.parts).filter(_.nonEmpty)
+    (chains.count(_.forall { case (c, pv) => keep(c, pv) }), chains.size)
   }
 
   /** One-sided skipping probes: the SQL read path derives them from
@@ -1850,17 +1776,19 @@ object Txn {
   final case class StrPointProbe(col: String,
       values: Seq[String]) extends SkipProbe
 
-  /** The file rung: the conjunction keep-decision for a file key under
+  /** The file rung: per leaf the directory rung kept, the conjunction
+    * keep-decision for one of its data files (by basename) under
     * `probes`. Ranges check min/max stats, points check stats AND
     * blooms per value (absent sidecar rows always keep), partition
     * probes are handled at the directory rung and keep every file
-    * here. Sidecars load on first use, so a partition-only plan reads
+    * here. Only kept leaves' sidecars are read, each kind on first use
+    * and from the leaf's own listing, so a partition-only plan reads
     * none. */
-  private def probesKeepFile(spark: SparkSession, root: String,
-      version: Long, probes: Seq[SkipProbe]): String => Boolean = {
-    lazy val stats = fileStats(spark, root, version)
-    lazy val blooms = fileBlooms(spark, root, version)
-    lazy val strStats = fileStatsStr(spark, root, version)
+  private def probesKeepFile(f: FileSystem,
+      probes: Seq[SkipProbe]): Leaf => String => Boolean = leaf => {
+    lazy val stats = leafStats(f, leaf)
+    lazy val blooms = leafBlooms(f, leaf)
+    lazy val strStats = leafStatsStr(f, leaf)
     // min/max: a file survives unless its recorded range provably
     // misses [lo, hi] (no stats row or null bounds = always kept)
     def statsKeep(base: String, c: String, lo: Long, hi: Long): Boolean =
@@ -1934,39 +1862,28 @@ object Txn {
     * (r13, r12 verdict item 2). O(files) driver-side listing, the same
     * bill the prune planner already pays. */
   private[graft] def versionBytes(spark: SparkSession, root: String,
-      n: Long): Long = {
-    val f = fs(spark, root)
-    dataFileTotals(f, root, manifestDirs(f, root, n).map(parseEntry))._2
-  }
+      n: Long): Long =
+    dataFileTotals(versionLeaves(fs(spark, root), root, n)._1)._2
 
   /** DETERMINISTIC enumeration of a version's data files with their
     * BYTES (r13, the initial-snapshot chunking substrate and the
     * rate-limited streaming source's `maxBytesPerTrigger` cursor):
-    * manifest-entry order, then sorted partition subdirs, then sorted
-    * file basenames — stable across processes and replays because
-    * manifests are immutable and names sort identically everywhere
-    * (listStatus order is NOT guaranteed, hence the explicit sorts).
-    * Keys match the sidecar/[[prunePlanBy]] convention: `basename` for
-    * flat dirs, `subdir/basename` inside partitioned dirs. */
+    * manifest-entry order, then leaves sorted by their chain string
+    * (`year=1-b/…` before `year=1/…`, unlike the walk's per-level name
+    * order), then file basenames — stable across processes and replays
+    * because manifests are immutable and names sort identically
+    * everywhere. A checkpointed cursor indexes into this order, so it
+    * must not change. Keys match the sidecar/[[prunePlanBy]]
+    * convention: `basename` for flat dirs, `chain/basename` inside
+    * partitioned dirs. */
   private[graft] def snapshotFileSizes(spark: SparkSession, root: String,
-      version: Long): Seq[(String, Long)] = {
-    val f = fs(spark, root)
-    def names(dir: Path): Seq[(String, Long)] = f.listStatus(dir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(st => (st.getPath.getName, st.getLen)).sortBy(_._1)
-    manifestDirs(f, root, version).map(parseEntry).flatMap {
-      case (dir, None) =>
-        val abs = resolveDir(root, dir)
-        if (!isPartitionedDir(f, abs)) names(new Path(abs))
-        else partitionLeafDirs(f, abs).sortBy(_._1).flatMap {
-          case (rel, _) =>
-            names(new Path(s"$abs/$rel")).map { case (n, len) =>
-              (s"$rel/$n", len)
-            }
-        }
-      case _ => Seq.empty
+      version: Long): Seq[(String, Long)] =
+    versionLeaves(fs(spark, root), root, version)._1.flatMap {
+      case Left(leaves) =>
+        leaves.sortBy(_.rel.stripSuffix("/")).flatMap(leaf =>
+          leaf.dataFiles.map(st => (leaf.rel + st.getPath.getName, st.getLen)))
+      case Right(_) => Nil
     }
-  }
 
   /** One CHUNK of a version's snapshot: exactly the rows of the data
     * files whose key is in `keys`, with every LATER tombstone's
@@ -1979,8 +1896,8 @@ object Txn {
     * [[scanPruned]] contract. */
   private[graft] def snapshotChunk(spark: SparkSession, root: String,
       version: Long, keys: Set[String]): DataFrame = {
-    val (plan, _) = prunePlanBy(spark, root, version, keys.contains,
-      (_, _) => true)
+    val (plan, _) = prunePlanBy(spark, root, version,
+      leaf => n => keys(leaf.rel + n), allParts)
     scanPruned(spark, root, version, plan)
   }
 
@@ -2217,7 +2134,10 @@ object Txn {
       s"maintain thresholds must be positive ($maxFiles, $maxTombs, $targetBytes)")
     val base = currentVersion(spark, root).getOrElse(
       sys.error(s"no committed version at $root"))
-    val (_, files, bytes, tombs) = tableDetail(spark, root)
+    // the tableDetail gauge, pinned at `base`
+    val entries = versionLeaves(fs(spark, root), root, base)._1
+    val (files, bytes) = dataFileTotals(entries)
+    val tombs = entries.count(_.isRight)
     if (files <= maxFiles && tombs <= maxTombs) None
     else {
       // a hive-partitioned table keeps its layout through maintenance:
@@ -2226,15 +2146,12 @@ object Txn {
       // meta, but its data dirs still do); the rewrite re-partitions
       // keyed by the partition column — each task owns whole
       // partitions, one file per col=value dir — instead of
-      // flattening the table into an unpartitioned snapshot
-      val f = fs(spark, root)
-      // the full partition-column CHAIN (r13: a=v/b=w nests keep both)
-      val partCol = manifestDirs(f, root, base).map(parseEntry)
-        .collectFirst { case (dir, None)
-            if isPartitionedDir(f, resolveDir(root, dir)) =>
-          partitionLeafDirs(f, resolveDir(root, dir))
-            .head._2.map(_._1).mkString(",")
-        }
+      // flattening the table into an unpartitioned snapshot.
+      // The full partition-column CHAIN (r13: a=v/b=w nests keep both)
+      val partCol = entries.collectFirst {
+        case Left(leaf +: _) if leaf.parts.nonEmpty =>
+          leaf.parts.map(_._1).mkString(",")
+      }
       val nFiles = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong)
       val folded = readVersion(spark, root, base)
       val laid = partCol match {
@@ -2271,19 +2188,12 @@ object Txn {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val in = new Path(inDir)
     val f = in.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var total = 0L
-    val it = f.listFiles(in, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) total += st.getLen
-    }
+    val total = Layout.parquetBytes(f, in)
     val nFiles = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
     val v = commit(spark.read.parquet(inDir).repartition(nFiles),
       root, statsCols = statsCols, bloomCols = bloomCols,
       bloomBits = bloomBits)
-    val dataDir = s"$root/${manifestTarget(fs(spark, root), root, v)}"
-    val outCount = f.listStatus(new Path(dataDir))
-      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    (v, outCount)
+    (v, Layout.countParquetFiles(f,
+      s"$root/${manifestTarget(fs(spark, root), root, v)}"))
   }
 }

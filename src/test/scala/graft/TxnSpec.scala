@@ -1460,4 +1460,71 @@ class TxnSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("appended shard changes column id"))
   }
+
+  test("the skipping planner lists only the dirs the directory rung keeps") {
+    import spark.implicits._
+    val root = freshRoot("listing")
+    Txn.commit((1L to 800L).map(i => (i, i % 8L)).toDF("id", "day"), root,
+      partitionBy = Some("day"), statsCols = Seq("id"))
+    Txn.read(spark, root).schema // warms the footer memo
+    val v = Txn.currentVersion(spark, root).get
+    val ((kept, report), listed) =
+      ListingCountFs.counting(spark.sparkContext.hadoopConfiguration) {
+        Txn.skipDecision(spark, root, v,
+          Seq(Txn.PartProbe("day", Seq(3L)), Txn.RangeProbe("id", 1L, 100L)))
+      }
+    val underRoot = listed.filter(_.startsWith(root))
+    val dayDirs = underRoot.map(new Path(_).getName).filter(_.startsWith("day="))
+    assert(dayDirs == Seq("day=3"), s"listed under the root: $underRoot")
+    // the data dir and day=3, each once
+    assert(underRoot.size == 2, s"listed under the root: $underRoot")
+    assert(report.dirsKept == 1 && report.dirsTotal == 8, s"$report")
+    assert(kept.nonEmpty && kept.forall(_.contains("/day=3/")), s"$kept")
+    assert(ids(Txn.readSkipping(spark, root, Seq(Txn.PartProbe("day", Seq(3L)),
+      Txn.RangeProbe("id", 1L, 100L)))) == (1L to 100L).filter(_ % 8 == 3).toSet)
+  }
+
+  test("every view of a mixed flat/partitioned/tombstoned chain agrees " +
+      "on its files") {
+    import spark.implicits._
+    val root = freshRoot("mixedviews")
+    Txn.commit((1L to 20L).map(i => (i, "0", "z")).toDF("id", "year", "src")
+      .repartition(2), root)
+    // "1-b" sorts before "1/" as a chain string but after "1" as a name
+    val rows = (21L to 60L).map(i =>
+      (i, if (i % 3 == 0) "1-b" else "1", if (i % 2 == 0) "a" else "b"))
+    Txn.commitAppend(rows.toDF("id", "year", "src").repartition(2), root,
+      partitionBy = Some("year,src"))
+    Txn.commitDelete(spark, root, Seq("id"), Seq(2L, 30L).toDF("id"))
+    val v = Txn.currentVersion(spark, root).get
+    val sizes = Txn.snapshotFileSizes(spark, root, v)
+    val (_, files, bytes, tombs) = Txn.tableDetail(spark, root)
+    assert((files, bytes, tombs) == ((sizes.size.toLong, sizes.map(_._2).sum, 1L)))
+    // manifest order, then leaves by chain string, then file names
+    val (flat, nested) = sizes.map(_._1).span(!_.contains('/'))
+    assert(flat.nonEmpty && flat == flat.sorted, s"$sizes")
+    val chains = nested.map(k => k.substring(0, k.lastIndexOf('/')))
+    assert(chains.distinct == Seq("year=1-b/src=a", "year=1-b/src=b",
+      "year=1/src=a", "year=1/src=b"), s"$sizes")
+    assert(nested.groupBy(k => k.substring(0, k.lastIndexOf('/')))
+      .values.forall(ks => ks == ks.sorted), s"$sizes")
+    // a probe that keeps everything plans exactly those files
+    val (kept, report) = Txn.skipDecision(spark, root, v,
+      Seq(Txn.PartProbe("year", Seq("1", "1-b")), Txn.RangeProbe("id", 0L, 100L)))
+    assert(kept.map(_.replaceFirst(".*/data/[^/]+/", "")).sorted ==
+      sizes.map(_._1).sorted, s"$kept")
+    assert(report.filesKept == sizes.size && report.filesTotal == sizes.size)
+    assert(Txn.partitionCensus(spark, root,
+      Seq(Txn.PartProbe("year", Seq("1-b")))) == ((2, 4)))
+  }
+
+  test("string stats of a file holding only empty strings read back") {
+    import spark.implicits._
+    val root = freshRoot("emptystr")
+    // both bounds encode as empty fields: `file TAB s TAB TAB`
+    Txn.commit(Seq((1L, ""), (2L, "")).toDF("id", "s").coalesce(1), root,
+      statsCols = Seq("s"))
+    assert(ids(Txn.readSkipping(spark, root,
+      Seq(Txn.StrPointProbe("s", Seq(""))))) == Set(1L, 2L))
+  }
 }

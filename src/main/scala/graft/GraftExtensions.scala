@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * `--conf spark.sql.extensions=graft.GraftExtensions` registers the
   * optimizer rule, the as-of-join planner strategy, and EVERY native
   * function in every session. The function list is
-  * `GraftFunctions.all` — the same single source the query builders'
-  * self-registration uses — so the two paths cannot drift
+  * `GraftFunctions.all` — the same single source `GraftSession.ensure`
+  * and the operators' parse-time binding use — so the paths cannot drift
   * (ExtensionsSpec asserts the injected set equals the list). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session the dev mains and the test suites run on. */
+/** The one local session the dev mains and the test suites run on, and
+  * the one place graft installs anything into a session. */
 object GraftSession {
 
-  /** A `local[cores]` session (or the already-active one) with:
+  /** A `local[cores]` session (or the already-active one) with graft
+    * installed ([[ensure]]) and:
     *  - `cores` shuffle partitions;
     *  - session time zone UTC: `Tables.events` fails loud in any other
     *    zone, because its TIMESTAMP_NTZ normalization is zone-sensitive;
@@ -28,6 +30,21 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ensure(spark)
     spark
+  }
+
+  /** Install graft into `spark`, idempotently: validate every
+    * [[GraftConf]] key first, then register the native functions for SQL
+    * text and add the as-of join strategy and the catalog's V1-bridge
+    * broadcast rule, each only if absent. Operators need none of it. */
+  def ensure(spark: SparkSession): Unit = {
+    GraftConf.all.foreach(_.get(spark))
+    graft.functions.GraftFunctions.register(spark)
+    val em = spark.experimental
+    if (!em.extraStrategies.contains(plans.AsOfJoinStrategy))
+      em.extraStrategies = em.extraStrategies :+ plans.AsOfJoinStrategy
+    if (!em.extraOptimizations.contains(catalog.GraftV1StatsBroadcast))
+      em.extraOptimizations = em.extraOptimizations :+ catalog.GraftV1StatsBroadcast
   }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.GraftFunctions
 import graft.ops.{GraftCatalog, Txn}
 
 /** SQL-callable MAINTENANCE procedures (r12): the operational verbs a
@@ -148,7 +149,7 @@ private[catalog] object GraftProcedures {
           require(df.schema.fieldNames.contains(c),
             s"zorder column $c absent from the schema")
         }
-        import org.apache.spark.sql.functions.{col, expr}
+        import org.apache.spark.sql.functions.col
         val props = Txn.tableProps(s, root)
         // a declared-partition table KEEPS its hive layout through
         // compaction (r12 advice, low): the rewrite re-partitions by
@@ -161,8 +162,7 @@ private[catalog] object GraftProcedures {
             case Seq()  => (d, None)
             case Seq(c) => (d, Some(c))
             case Seq(a, b) =>
-              graft.functions.GraftFunctions.register(s)
-              (d.withColumn("__zkey", expr(s"interleave16(`$a`, `$b`)")),
+              (d.withColumn("__zkey", GraftFunctions.expr(s"interleave16(`$a`, `$b`)")),
                 Some("__zkey"))
             case many => sys.error(
               s"zorder takes at most two columns (interleave16 is a " +

@@ -185,13 +185,15 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
   private var catalogName: String = _
   private var catalogRoot: String = _
 
-  private def spark: SparkSession = SparkSession.active
+  // the owning session: Spark initializes a session's catalog while it is active
+  private var spark: SparkSession = _
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
     catalogRoot = Option(options.get("root")).getOrElse(
       sys.error(s"spark.sql.catalog.$name.root must point at a GraftCatalog directory"))
-    GraftV1StatsBroadcast.install(SparkSession.active)
+    spark = SparkSession.active
+    graft.GraftSession.ensure(spark)
   }
 
   override def name(): String = catalogName
@@ -997,10 +999,12 @@ private[catalog] class GraftSqlTable(tableName: String, root: String,
         // evaluates NULL (`x > 5` with x null) must SURVIVE. `!pred`
         // alone is NULL there and where() drops the row — silent data
         // loss on nullable predicate columns (r11 advice, high). Keep
-        // rows where the condition is not TRUE.
+        // rows where the condition is not TRUE. The rewrite keeps the
+        // table's layout and indexes, as a keyless UPDATE/MERGE does.
         Txn.commit(physify(snapshot.where(!coalesce(pred, lit(false)))),
-          root, meta = Map("op" -> "sql-delete-rewrite"),
-          expectedBase = Some(version))
+          root, meta = Map("op" -> "sql-delete-rewrite"), partitionBy = partCol,
+          statsCols = statsCols.filterNot(partColsSeq.contains),
+          bloomCols = bloomCols.filterNot(partColsSeq.contains), expectedBase = Some(version))
         ()
     }
   }
@@ -1182,7 +1186,7 @@ private[catalog] object GraftFilters {
   * BROADCAST hint on exactly that side. JoinSelection then applies its
   * own join-type legality rules to the hint, so semantics never
   * change; AQE still re-plans everything else at runtime. Installed
-  * idempotently by [[GraftSqlCatalog.initialize]] via
+  * idempotently by `GraftSession.ensure` via
   * `spark.experimental.extraOptimizations` (the runtime-mutable
   * extension point — a catalog plugin cannot reach
   * SparkSessionExtensions after session build). */
@@ -1192,12 +1196,6 @@ object GraftV1StatsBroadcast
 
   import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, HintInfo, Join, JoinHint, LogicalPlan, Project, BROADCAST}
   import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V1ScanWrapper}
-
-  def install(spark: SparkSession): Unit = {
-    val em = spark.experimental
-    if (!em.extraOptimizations.contains(this))
-      em.extraOptimizations = em.extraOptimizations :+ this
-  }
 
   /** The manifest-derived byte size of a join side, when the side is a
     * (projected/filtered) Graft V1 relation — None anywhere else, so
@@ -1360,15 +1358,7 @@ private[catalog] class GraftWriteBuilder(spark: SparkSession, root: String,
     // The key is read from the session that built the write, never
     // from whichever session is active when Spark asks; any other
     // value fails the statement here rather than silently meaning none.
-    private val clustered = {
-      val confKey = "spark.graft.write.distribution"
-      spark.conf.get(confKey, "clustered") match {
-        case "clustered" => true
-        case "none"      => false
-        case other => throw new IllegalArgumentException(
-          s"$confKey must be 'clustered' or 'none', got '$other'")
-      }
-    }
+    private val clustered = graft.GraftConf.writeDistributionClustered.get(spark)
     override def requiredDistribution()
         : org.apache.spark.sql.connector.distributions.Distribution =
       if (partCols.nonEmpty && replaceWhere.isEmpty && clustered)

@@ -52,7 +52,7 @@ case class DotLong(left: Expression, right: Expression,
       if (x.isNullAt(i) || y.isNullAt(i)) return null
       // ansi=true: throw on 64-bit overflow like the ANSI-mode HOF this
       // expression may replace (RewriteHofDotProduct passes the matched
-      // evalMode); default wraps, for the proven-bounded internal uses.
+      // evalMode, GraftFunctions' builder the session's); false wraps.
       // MathUtils (not java.lang.Math): the replaced HOF raises
       // SparkArithmeticException with the ARITHMETIC_OVERFLOW error class
       // — callers matching on Spark error classes must see no difference
@@ -104,19 +104,19 @@ object GraftFunctions {
   import org.apache.spark.sql.catalyst.expressions.Expression
 
   /** The single source of truth for every native function: name →
-    * builder. BOTH registration paths (the per-query self-registration
-    * below and GraftExtensions' spark.sql.extensions injection) iterate
-    * THIS list, so a function added here is automatically available on
-    * both — the two lists drifted once (simhash60/minhash32/
-    * inter_count_sorted missing from the production wiring, caught in
-    * the r4 review) and a shared list makes that class of bug
-    * impossible. */
+    * builder. Every binding path iterates THIS list — parse-time
+    * binding in [[expr]], the session registry of [[register]] and
+    * GraftExtensions' spark.sql.extensions injection — so a function
+    * added here is available on all of them; the lists drifted once
+    * (simhash60/minhash32/inter_count_sorted missing from the
+    * production wiring, caught in the r4 review) and a shared list
+    * makes that class of bug impossible. */
   val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     // dot_long honors the session's ANSI mode at build time (r4 review:
     // a user-facing wrapping dot product next to a throwing HOF spelling
     // of the same sum is a silent-wrong-answer trap); graft's internal
-    // callers construct DotLong directly with ansi=false for their
-    // proven-bounded scaled integers
+    // callers build it through this same builder, so they get the
+    // session's ANSI mode too
     ("dot_long", classOf[DotLong], (exprs: Seq[Expression]) =>
       DotLong(exprs(0), exprs(1),
         ansi = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)),
@@ -135,19 +135,31 @@ object GraftFunctions {
     ("interleave16", classOf[Interleave16],
       (exprs: Seq[Expression]) => Interleave16(exprs(0), exprs(1))))
 
+  private lazy val builders = all.map { case (n, _, b) => Seq(n) -> b }.toMap
+  private lazy val parser = new org.apache.spark.sql.execution.SparkSqlParser()
+
+  /** `functions.expr(sql)` with each call of a function in [[all]] bound
+    * at parse time, so the column resolves whatever the session's
+    * registry holds: graft's operators build native calls through here. */
+  def expr(sql: String): org.apache.spark.sql.Column =
+    org.apache.spark.sql.graft.GraftShim.column(parser.parseExpression(sql).transformUp {
+      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+          if builders.contains(f.nameParts.map(_.toLowerCase(java.util.Locale.ROOT))) =>
+        builders(f.nameParts.map(_.toLowerCase(java.util.Locale.ROOT)))(f.arguments)
+    })
+
   /** Register graft's native expressions in a session's function
-    * registry (called by every query that uses them, and by
-    * GraftExtensions for spark.sql.extensions wiring). TRULY idempotent
-    * as of r11: an already-registered name is SKIPPED rather than
-    * replaced — the builders are stateless constants, so re-replacing
-    * them only produced the driver-log WARN noise the r10 verdict
-    * flagged ("function interleave16 replaced a previously registered
-    * function" on every Bench/Verify run). */
+    * registry, for SQL text that names them (called by
+    * `GraftSession.ensure`). TRULY idempotent as of r11: an
+    * already-registered name is SKIPPED rather than replaced — the
+    * builders are stateless constants, so re-replacing them only
+    * produced the driver-log WARN noise the r10 verdict flagged
+    * ("function interleave16 replaced a previously registered function"
+    * on every Bench/Verify run). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     all.foreach { case (name, _, builder) =>
-      val ident =
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+      val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
       if (!reg.functionExists(ident))
         reg.createOrReplaceTempFunction(name, builder, "built-in")
     }

@@ -423,7 +423,6 @@ object Aggs {
     * derived hashes), but the estimate is sketch-internal → no oracle;
     * SketchSpec asserts one-sidedness and the collision bound. */
   val aggCountMin: Q = Q.noOracle("agg_count_min") { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val cm = udaf(new graft.functions.CountMinAgg(1024))
     val terms = documents(s, dir)
       .select(explode(split(col("text"), " ")).as("term"))
@@ -432,7 +431,7 @@ object Aggs {
     val sketch = terms.agg(cm(col("h")).as("sketch"))
     terms.groupBy("term", "h").agg(count(lit(1)).as("exact"))
       .crossJoin(broadcast(sketch))
-      .withColumn("est", expr("cm_estimate(sketch, h)"))
+      .withColumn("est", graft.functions.GraftFunctions.expr("cm_estimate(sketch, h)"))
       .select("term", "exact", "est")
       .orderBy("term")
   }

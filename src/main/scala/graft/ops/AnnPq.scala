@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Product-quantization ANN — the memory-bounded third member of the
   * index family (sign-LSH = trainless buckets, IVF = inverted lists,
@@ -68,23 +69,22 @@ object AnnPq {
     // here covers all m subspaces, so it overestimates the per-row size
     // m-fold, conservatively) fall back to the pre-r14 join + window
     // form. AnnPqSpec pins output equality of the two paths.
-    val bound = BigInt(subs.sparkSession.conf
-      .get("spark.graft.ann.maxCollectedCodebookBytes", (128L << 20).toString))
+    val bound = graft.GraftConf.maxCollectedCodebookBytes.get(subs.sparkSession)
     if (codebooks.queryExecution.optimizedPlan.stats.sizeInBytes > bound) {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("vec_id", "sub_id")
         .orderBy(col("d2").asc, col("code"))
       return subs.join(broadcast(codebooks), "sub_id")
         .withColumn("d2",
-          expr("dot_long(sv, sv) - 2 * dot_long(sv, ce) + dot_long(ce, ce)"))
+          GraftFunctions.expr("dot_long(sv, sv) - 2 * dot_long(sv, ce) + dot_long(ce, ce)"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") === 1)
         .select("vec_id", "sub_id", "sv", "code")
     }
     val cbs = codebooks.groupBy("sub_id").agg(
-      expr("collect_list(struct(code, ce, dot_long(ce, ce) as cn2))").as("cbs"))
+      GraftFunctions.expr("collect_list(struct(code, ce, dot_long(ce, ce) as cn2))").as("cbs"))
     subs.join(broadcast(cbs), "sub_id")
-      .withColumn("code", expr(
+      .withColumn("code", GraftFunctions.expr(
         "array_min(transform(cbs, c -> struct(c.cn2 - 2 * dot_long(sv, c.ce) as d2, c.code as code))).code"))
       .select("vec_id", "sub_id", "sv", "code")
   }
@@ -133,7 +133,6 @@ object AnnPq {
 
   object AnnPqIndex {
     def load(spark: SparkSession, path: String): AnnPqIndex = {
-      graft.functions.GraftFunctions.register(spark)
       val codes = Q.cached(spark.read.parquet(s"$path/codes.parquet"))
       val trained =
         try spark.read.parquet(s"$path/meta.parquet")
@@ -180,7 +179,6 @@ object AnnPq {
     * per vector. */
   def buildAnnPqIndex(emb: DataFrame, m: Int = 8, ksub: Int = 32,
       iters: Int = 2, trainSample: Int = 0): AnnPqIndex = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val embC = Q.cached(emb.select(col("vec_id"), col("e"), col("n2")))
     val subs = Q.cached(subVectors(embC, m))
     val subsTrain =
@@ -216,7 +214,6 @@ object AnnPq {
     * way frozen centroids mis-assign one), so appends don't bump
     * `trainedRows` and [[maybeRetrainPq]] picks up the debt. */
   def appendToPqIndex(index: AnnPqIndex, newVecs: DataFrame): AnnPqIndex = {
-    graft.functions.GraftFunctions.register(newVecs.sparkSession)
     val nv = newVecs.select(col("vec_id"), col("e"), col("n2"))
     val m = index.codebooks.select(max(col("sub_id"))).head().getInt(0) + 1
     AnnPqIndex(
@@ -274,7 +271,6 @@ object AnnPq {
     * exact dot_long cosine, neighbor_id tie-break, top k. */
   def pqQueryTopk(index: AnnPqIndex, queries: DataFrame, k: Int = 5,
       rerankDepth: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val m = index.codebooks.select(max(col("sub_id"))).head().getInt(0) + 1
     val q = queries.select(col("vec_id").as("query_id"), col("e").as("qe"),
       col("n2").as("qn2"))
@@ -291,7 +287,7 @@ object AnnPq {
     subVectors(q.select(col("query_id").as("vec_id"), col("qe").as("e")), m)
       .join(broadcast(codebooks), "sub_id")
       .select(col("vec_id").as("query_id"), col("sub_id"), col("code"),
-        expr("dot_long(sv, ce)").as("pdot"))
+        GraftFunctions.expr("dot_long(sv, ce)").as("pdot"))
 
   /** ADC pre-rank: sum each candidate's m LUT hits (partial-aggregated),
     * approximate-cosine by the EXACT stored norm (only the numerator is
@@ -323,7 +319,7 @@ object AnnPq {
       .join(vecs.select(col("vec_id").as("neighbor_id"),
         col("e").as("ce2"), col("n2").as("cn2")), "neighbor_id")
       .join(broadcast(q), "query_id")
-      .withColumn("score", expr("cast(dot_long(qe, ce2) as double)")
+      .withColumn("score", GraftFunctions.expr("cast(dot_long(qe, ce2) as double)")
         / (sqrt(col("qn2").cast("double")) * sqrt(col("cn2").cast("double"))))
       .transform(graft.functions.TopKScored.rankedTopk(
         _, "query_id", col("score"), col("neighbor_id"), k))
@@ -369,7 +365,6 @@ object AnnPq {
 
   object AnnIvfPqIndex {
     def load(spark: SparkSession, path: String): AnnIvfPqIndex = {
-      graft.functions.GraftFunctions.register(spark)
       val codes = Q.cached(spark.read.parquet(s"$path/codes.parquet"))
       val trained =
         try spark.read.parquet(s"$path/meta.parquet")
@@ -391,7 +386,6 @@ object AnnPq {
     * assignment/encode passes always cover every vector. */
   def buildAnnIvfPqIndex(emb: DataFrame, nlist: Int = 10, m: Int = 8,
       ksub: Int = 32, iters: Int = 2, trainSample: Int = 0): AnnIvfPqIndex = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val embC = Q.cached(emb.select(col("vec_id"), col("e"), col("n2")))
     val trainC =
       if (trainSample <= 0) embC else Q.cached(trainSlice(embC, trainSample))
@@ -418,7 +412,6 @@ object AnnPq {
     * untouched, both drift debts covered by [[maybeRetrainIvfPq]]. */
   def appendToIvfPqIndex(index: AnnIvfPqIndex,
       newVecs: DataFrame): AnnIvfPqIndex = {
-    graft.functions.GraftFunctions.register(newVecs.sparkSession)
     val nv = newVecs.select(col("vec_id"), col("e"), col("n2"))
     val m = index.codebooks.select(max(col("sub_id"))).head().getInt(0) + 1
     val assigned = Llm.nearestLists(nv, index.centroids, 1)
@@ -462,7 +455,6 @@ object AnnPq {
     * the candidate scan touches only the probed lists' code rows. */
   def ivfPqQueryTopk(index: AnnIvfPqIndex, queries: DataFrame, k: Int = 5,
       nprobe: Int = 6, rerankDepth: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val m = index.codebooks.select(max(col("sub_id"))).head().getInt(0) + 1
     val q = queries.select(col("vec_id").as("query_id"), col("e").as("qe"),
       col("n2").as("qn2"))

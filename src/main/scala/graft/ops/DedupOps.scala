@@ -101,7 +101,6 @@ object DedupOps {
   private[graft] def embWithTwins(
       s: org.apache.spark.sql.SparkSession, dir: String,
       where: Option[org.apache.spark.sql.Column]): org.apache.spark.sql.DataFrame = {
-    GraftFunctions.register(s)
     val base0 = Llm.scaledEmb(s, dir)
       .select(idBelowOffset(col("vec_id"), "embWithTwins").as("vec_id"),
         col("label"), col("e"))
@@ -110,7 +109,7 @@ object DedupOps {
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("label"),
         concat(array(element_at(col("e"), 1) + lit(1L)),
           expr("slice(e, 2, size(e) - 1)")).as("e"))
-    base.unionByName(twins).withColumn("n2", expr("dot_long(e, e)"))
+    base.unionByName(twins).withColumn("n2", GraftFunctions.expr("dot_long(e, e)"))
   }
 
   /** All-pairs SimHash pair engine over any documents frame — shared by
@@ -122,11 +121,10 @@ object DedupOps {
   private[graft] def simhashAllPairs(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
-    GraftFunctions.register(s)
     val sig = docs
       .select(col("doc_id"),
         expr(simhashSigExpr).as("ths"))
-      .withColumn("simhash", expr("simhash60(ths)"))
+      .withColumn("simhash", GraftFunctions.expr("simhash60(ths)"))
     // repartition (pinned count — AQE would coalesce a by-column
     // repartition of this tiny input back to one partition): the small
     // documents file otherwise serializes the pair compare on one task
@@ -174,7 +172,6 @@ object DedupOps {
     "llm_simhash_banded",
     simhashOracle("")
   ) { (s, dir) =>
-    GraftFunctions.register(s)
     // token-set contraction (r4): the simhash signature is a pure
     // function of the distinct-token set, so equal-ts docs share every
     // band bucket — banding runs on representatives only and the full
@@ -186,7 +183,7 @@ object DedupOps {
     val sig = Q.cached(repDocs
       .select(col("doc_id"),
         expr(simhashSigExpr).as("ths"))
-      .withColumn("simhash", expr("simhash60(ths)"))
+      .withColumn("simhash", GraftFunctions.expr("simhash60(ths)"))
     ) // the signature index, probed by both sides of the bucket join
     // bands 0-5: 9 bits each; band 6: the top 6 bits (mask is harmless)
     val bands = sig.select(col("doc_id"), col("simhash"),
@@ -314,7 +311,6 @@ object DedupOps {
     "llm_cosine_near_dup",
     cosineOracle(s" WHERE vec_id < ${Llm.SampleBound}")
   ) { (s, dir) =>
-    GraftFunctions.register(s)
     // persist: both sides of the all-pairs join reference this frame —
     // without it the scan+scale lineage runs twice (r4 review; the LSH
     // sibling already persists for the same reason)
@@ -327,12 +323,11 @@ object DedupOps {
   private[graft] def cosineAllPairs(
       emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = emb.sparkSession
-    GraftFunctions.register(s)
     val a = emb.repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("vec_id"))
       .select(col("vec_id").as("vec_a"), col("e").as("ea"), col("n2").as("na"))
     val b = emb.select(col("vec_id").as("vec_b"), col("e").as("eb"), col("n2").as("nb"))
     a.join(broadcast(b), col("vec_a") < col("vec_b"))
-      .where(expr("cast(dot_long(ea, eb) as double)")
+      .where(GraftFunctions.expr("cast(dot_long(ea, eb) as double)")
         >= lit(0.95) * sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double")))
       .select("vec_a", "vec_b")
   }
@@ -358,7 +353,6 @@ object DedupOps {
     "llm_cosine_lsh",
     cosineOracle("")
   ) { (s, dir) =>
-    GraftFunctions.register(s)
     cosineLshPairs(Q.cached(embWithTwins(s, dir, None))).orderBy("vec_a", "vec_b")
   }
 
@@ -370,7 +364,6 @@ object DedupOps {
   private[graft] def cosineLshPairs(
       emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = emb.sparkSession
-    GraftFunctions.register(s)
     val sigs = Llm.signBuckets(emb)
     // no pre-verify distinct (the lshVerifiedPairs r5 change, same r3
     // item 7): a pair sharing k ≤ 8 table-buckets is exact-scored k
@@ -387,7 +380,7 @@ object DedupOps {
         col("n2").as("na"))), "vec_a")
       .join(verifySide(emb.select(col("vec_id").as("vec_b"), col("e").as("eb"),
         col("n2").as("nb"))), "vec_b")
-      .where(expr("cast(dot_long(ea, eb) as double)")
+      .where(GraftFunctions.expr("cast(dot_long(ea, eb) as double)")
         >= lit(0.95) * sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double")))
       .select("vec_a", "vec_b")
       .distinct()
@@ -480,7 +473,6 @@ object DedupOps {
   private[graft] def lshVerifiedPairs(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
-    GraftFunctions.register(s)
     // ONE tokenization serves both stages (r4 review): minhash32 is
     // order-independent, so the sorted distinct-token array used by the
     // exact verify is also the signature input — one persisted frame,
@@ -491,7 +483,7 @@ object DedupOps {
     val sets = Q.cached(Q.spreadScan(docs.select("doc_id", "text"), col("doc_id"))
       .select(col("doc_id"), expr("array_sort(array_distinct(split(text, ' ')))").as("ts")))
     val bands = Q.cached(sets
-      .withColumn("mhs", expr("minhash32(ts)"))
+      .withColumn("mhs", GraftFunctions.expr("minhash32(ts)"))
       .select(col("doc_id"), posexplode(expr(minhashBandExpr))
         .as(Seq("band", "bh")))) // the LSH index: built once, probed by both join sides
     // NO pre-verify distinct on the candidate pairs (r3 verdict item 7,
@@ -739,12 +731,7 @@ object DedupOps {
     // resident vertex). Locally 4 keeps scheduler overhead nil; on a
     // cluster set it near total cores — the level count only grows as
     // log4(parts), so 4096 parts is still just 6 levels.
-    val edgeParts = {
-      val confKey = "spark.graft.cc.edgeParts"
-      val raw = s.conf.get(confKey, "4")
-      math.max(1, raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"$confKey must be a whole number of partitions, got '$raw'")))
-    }
+    val edgeParts = math.max(1, graft.GraftConf.ccEdgeParts.get(s))
     val p0 = cut(
       pairs.select(ca.as("src"), cb.as("dst")).repartition(edgeParts),
       eager = true)
@@ -925,7 +912,6 @@ object DedupOps {
       |ORDER BY doc_id""".stripMargin
   ) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     // stage 1: quality gate (exact integer score, same as llm_quality_score)
     // (r14 note: Q.spreadScan was tried before this gate and REVERTED —
     // interleaved A/B measured the spread form ~0.35 s slower: the gate
@@ -1164,7 +1150,6 @@ object DedupOps {
 
   def buildNearDupIndex(
       corpus: org.apache.spark.sql.DataFrame): NearDupIndex = {
-    GraftFunctions.register(corpus.sparkSession)
     val (tagged, corpusReps) = tsContraction(corpus)
     // same one-tokenization shape as nearDupAgainst: the sorted verify
     // array feeds the signature, one persisted frame derives both the
@@ -1173,7 +1158,7 @@ object DedupOps {
       .select(col("doc_id").as("ref_id"),
         expr("array_sort(array_distinct(split(text, ' ')))").as("ts_b")))
     val bands = Q.cached(refSets
-      .withColumn("mhs", expr("minhash32(ts_b)"))
+      .withColumn("mhs", GraftFunctions.expr("minhash32(ts_b)"))
       .select(col("ref_id"), posexplode(expr(minhashBandExpr)).as(Seq("band", "bh"))))
     // (doc_id -> rep) for every corpus doc: probing never reads this —
     // it exists so DELETION can tell when a rep's equal-ts group is
@@ -1216,10 +1201,9 @@ object DedupOps {
     * in EITHER id direction (no ref < probe session ordering). */
   def matchedAgainstIndex(shard: org.apache.spark.sql.DataFrame,
       index: NearDupIndex): org.apache.spark.sql.DataFrame = {
-    GraftFunctions.register(shard.sparkSession)
     val probes = shard
       .select(col("doc_id"), expr("array_sort(array_distinct(split(text, ' ')))").as("ts_a"))
-      .withColumn("mhs", expr("minhash32(ts_a)"))
+      .withColumn("mhs", GraftFunctions.expr("minhash32(ts_a)"))
       .select(col("doc_id"), col("ts_a"),
         posexplode(expr(minhashBandExpr)).as(Seq("band", "bh")))
     // no pre-verify distinct (r3 item 7 shape): a probe pair colliding
@@ -1260,7 +1244,6 @@ object DedupOps {
       emb: org.apache.spark.sql.DataFrame,
       nlist: Int = 10): org.apache.spark.sql.DataFrame = {
     val s = emb.sparkSession
-    GraftFunctions.register(s)
     val embC = Q.cached(emb.select(col("vec_id"), col("e"), col("n2")))
     // the quantizer is the ANN index's (r7: the shared trainer
     // Llm.trainIvfCentroids over the already-cached frame — not
@@ -1274,7 +1257,7 @@ object DedupOps {
     val dropped = assigned.as("x")
       .join(assigned.as("y"),
         col("x.list_id") === col("y.list_id") && col("x.vec_id") < col("y.vec_id"))
-      .where(expr("cast(dot_long(x.e, y.e) as double)")
+      .where(GraftFunctions.expr("cast(dot_long(x.e, y.e) as double)")
         >= lit(0.95) * sqrt(col("x.n2").cast("double")) * sqrt(col("y.n2").cast("double")))
       .select(col("y.vec_id").as("vec_id"))
       .distinct()
@@ -1318,7 +1301,6 @@ object DedupOps {
       |FROM n LEFT JOIN d ON n.vec_id = d.vec_id
       |ORDER BY n.vec_id""".stripMargin
   ) { (s, dir) =>
-    GraftFunctions.register(s)
     val emb = Q.cached(embWithTwins(s, dir, None))
     semanticDedupFlags(emb)
       .join(emb.select(col("vec_id"), col("label")), "vec_id")

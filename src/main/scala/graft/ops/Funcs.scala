@@ -232,7 +232,6 @@ object Funcs {
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
   ) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     lineitem(s, dir).createOrReplaceTempView("graft_lineitem_v")
     s.sql(
       """SELECT l_returnflag, l_linestatus,

@@ -61,7 +61,8 @@ object Generators {
 
   /** G3 — the true UDTF surface: the custom Catalyst Generator
     * graft.functions.TokenizePos driven through LATERAL VIEW (SQL entry
-    * point; registered via GraftFunctions/GraftExtensions). Semantically
+    * point: SQL text resolves names through the session's registry, so
+    * the row installs graft with GraftSession.ensure). Semantically
     * posexplode(split(...)) — which is exactly what the oracle twin
     * computes — but exercised through the Generator extension point. */
   val udtfGenerator: Q = Q(
@@ -72,7 +73,7 @@ object Generators {
       |  FROM documents WHERE doc_id < 100) t
       |ORDER BY doc_id, pos""".stripMargin
   ) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
+    graft.GraftSession.ensure(s)
     documents(s, dir).where(col("doc_id") < 100).createOrReplaceTempView("g3_docs")
     s.sql(
       """SELECT doc_id, t.tok, CAST(t.pos AS BIGINT) AS pos

@@ -37,8 +37,8 @@ private[graft] object GraftParquetWrite {
     * by `partCols` (which then live only in the directory names). The
     * write is one Spark job run as a tracked SQL execution of `df`'s
     * plan, so listeners, the SQL UI and AQE see it as they see any
-    * action. An empty flat write still leaves one schema-bearing file:
-    * every reader resolves a dir's schema from a footer. */
+    * action. An empty write still leaves one flat schema-bearing file
+    * with every column: every reader resolves a dir's schema from a footer. */
   def apply(df: DataFrame, dir: String, partCols: Seq[String]): Unit = {
     val spark = df.sparkSession
     val schema = df.schema
@@ -63,8 +63,11 @@ private[graft] object GraftParquetWrite {
       if (files.isEmpty) {
         val p = new Path(dir)
         p.getFileSystem(encoder.hadoopConf).mkdirs(p)
-        if (partCols.isEmpty)
-          encoder.open(s"$dir/part-0-0-${UUID.randomUUID()}.parquet", 0).close()
+        // every column, partition columns too: an empty partitioned
+        // write lands as the flat dir CREATE TABLE starts a table with
+        val full = if (partCols.isEmpty) encoder else GraftParquetEncoder(spark, schema)
+        try full.open(s"$dir/part-0-0-${UUID.randomUUID()}.parquet", 0).close()
+        finally if (full ne encoder) full.destroy()
       }
     } finally encoder.destroy()
   }

@@ -130,7 +130,6 @@ object Layout {
       |SELECT event_id, x, y, xd | (yd << 1) AS zkey
       |FROM s4 ORDER BY zkey, event_id LIMIT 1000""".stripMargin
   ) { (s, dir) =>
-    GraftFunctions.register(s)
     events(s, dir)
       .select(col("event_id"),
         expr("user_id & 65535").as("x"),
@@ -138,7 +137,7 @@ object Layout {
         // dimension genuinely varies within 16 bits on the fixture
         expr("((unix_timestamp(date_trunc('hour', ts)) div 3600) - 473352) & 65535")
           .as("y"))
-      .withColumn("zkey", expr("interleave16(x, y)"))
+      .withColumn("zkey", GraftFunctions.expr("interleave16(x, y)"))
       .orderBy("zkey", "event_id")
       .limit(1000)
   }
@@ -205,7 +204,6 @@ object Layout {
       xCol: org.apache.spark.sql.Column, yCol: org.apache.spark.sql.Column,
       bits: Int = 8): org.apache.spark.sql.DataFrame = {
     require(bits >= 1 && bits <= 16, s"bits must be in [1,16], got $bits")
-    GraftFunctions.register(df.sparkSession)
     val top = (1L << bits) - 1
     val withDims = df.withColumn("zx_raw", xCol.cast("bigint"))
       .withColumn("zy_raw", yCol.cast("bigint"))
@@ -213,7 +211,7 @@ object Layout {
       min("zx_raw").as("x_mn"), max("zx_raw").as("x_mx"),
       min("zy_raw").as("y_mn"), max("zy_raw").as("y_mx"))
     withDims.join(broadcast(bounds))
-      .withColumn("zkey", expr(
+      .withColumn("zkey", GraftFunctions.expr(
         s"""interleave16(
            |  (zx_raw - x_mn) * $top div greatest(x_mx - x_mn, 1),
            |  (zy_raw - y_mn) * $top div greatest(y_mx - y_mn, 1))""".stripMargin))

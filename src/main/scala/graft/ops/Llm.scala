@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.Tables._
 
 /** §2.I — LLM-data-pipeline operators (the north-star additions).
@@ -129,7 +130,6 @@ object Llm {
   private[graft] def jaccardPairs(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = docs.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     val sets = Q.cached(docs
       .select(col("doc_id"), array_sort(array_distinct(split(col("text"), " "))).as("ts")))
@@ -152,11 +152,10 @@ object Llm {
     * input columns and adds n_inter/n_union. */
   private[graft] def verifyJaccardPairs(
       cand: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(cand.sparkSession)
     cand
       .where(lit(TauDenom) * least(size(col("ts_a")), size(col("ts_b"))).cast("bigint")
         >= lit(TauNumer) * greatest(size(col("ts_a")), size(col("ts_b"))).cast("bigint"))
-      .withColumn("n_inter", expr("inter_count_sorted(ts_a, ts_b)"))
+      .withColumn("n_inter", GraftFunctions.expr("inter_count_sorted(ts_a, ts_b)"))
       .withColumn("n_union",
         (size(col("ts_a")) + size(col("ts_b"))).cast("bigint") - col("n_inter"))
       .where(lit(TauDenom) * col("n_inter") >= lit(TauNumer) * col("n_union"))
@@ -186,7 +185,7 @@ object Llm {
       .withColumn("w", expr(
         "transform(sequence(0, 63), d -> cast(pmod(xxhash64(h * 64 + d), 1001) - 500 as bigint))"))
     emb.crossJoin(broadcast(hp))
-      .withColumn("bit", (expr("dot_long(w, e)") > 0).cast("bigint"))
+      .withColumn("bit", (GraftFunctions.expr("dot_long(w, e)") > 0).cast("bigint"))
       .withColumn("t", expr("h div 4"))
       .groupBy("vec_id", "t")
       .agg(sum(expr("shiftleft(bit, h % 4)")).as("bucket"))
@@ -195,11 +194,10 @@ object Llm {
   /** Scaled-integer embedding table shared by I3/I4: e = round(x·1e7) as
     * BIGINT per element, n2 = exact self-dot. */
   def scaledEmb(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    graft.functions.GraftFunctions.register(s)
     embeddings(s, dir)
       .withColumn("e", expr(
         "transform(embedding, x -> cast(round(cast(x as double) * 10000000.0d) as bigint))"))
-      .withColumn("n2", expr("dot_long(e, e)"))
+      .withColumn("n2", GraftFunctions.expr("dot_long(e, e)"))
   }
 
   /** Brute-force cosine top-5 neighbors for vec_id < 10 over an
@@ -211,7 +209,6 @@ object Llm {
   private[graft] def bruteForceTopk(
       emb: org.apache.spark.sql.DataFrame,
       candPred: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val q = emb.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("e").as("qe"), col("n2").as("qn2"))
     val c = emb.where(candPred)
@@ -220,7 +217,7 @@ object Llm {
     // map-side into O(k) state per query — no per-query sort, where the
     // r8 row_number window sorted every candidate in one task per query
     c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("dot", expr("dot_long(qe, ce)"))
+      .withColumn("dot", GraftFunctions.expr("dot_long(qe, ce)"))
       .withColumn("score",
         col("dot").cast("double") / (sqrt(col("qn2").cast("double")) * sqrt(col("cn2").cast("double"))))
       .transform(graft.functions.TopKScored.rankedTopk(
@@ -344,7 +341,6 @@ object Llm {
 
   object AnnLshIndex {
     def load(spark: org.apache.spark.sql.SparkSession, path: String): AnnLshIndex = {
-      graft.functions.GraftFunctions.register(spark)
       AnnLshIndex(
         Q.cached(spark.read.parquet(s"$path/buckets.parquet")),
         Q.cached(spark.read.parquet(s"$path/vecs.parquet")))
@@ -352,14 +348,12 @@ object Llm {
   }
 
   def buildAnnLshIndex(emb: org.apache.spark.sql.DataFrame): AnnLshIndex = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val vecs = Q.cached(emb.select(col("vec_id"), col("e"), col("n2")))
     AnnLshIndex(signBuckets(vecs), vecs)
   }
 
   def appendToLshIndex(index: AnnLshIndex,
       newVecs: org.apache.spark.sql.DataFrame): AnnLshIndex = {
-    graft.functions.GraftFunctions.register(newVecs.sparkSession)
     val nv = newVecs.select(col("vec_id"), col("e"), col("n2"))
     // uncached signature plan: the slice is consumed once by the union
     // (caching it here leaked a persist per append — r7 advice)
@@ -387,7 +381,6 @@ object Llm {
   def lshQueryTopk(index: AnnLshIndex,
       queries: org.apache.spark.sql.DataFrame,
       k: Int = 5): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     // query signatures recomputed from the same deterministic
     // hyperplanes — bit-identical to the index's build-time buckets;
     // UNCACHED: they are consumed once by the bucket probe, and a
@@ -409,7 +402,7 @@ object Llm {
       col("n2").as("cn2"))
     // bounded-heap top-k (r9) — same swap as bruteForceTopk
     cand.join(broadcast(qe), "query_id").join(ce, "neighbor_id")
-      .withColumn("score", expr("cast(dot_long(qe, ce) as double)")
+      .withColumn("score", GraftFunctions.expr("cast(dot_long(qe, ce) as double)")
         / (sqrt(col("qn2").cast("double")) * sqrt(col("cn2").cast("double"))))
       .transform(graft.functions.TopKScored.rankedTopk(
         _, "query_id", col("score"), col("neighbor_id"), k))
@@ -481,29 +474,28 @@ object Llm {
     // bound reads the optimizer's size ESTIMATE (no extra action on the
     // hot path); an overestimate just picks the always-correct fallback.
     // LlmSpec pins output equality of the two paths.
-    val bound = BigInt(vecs.sparkSession.conf
-      .get("spark.graft.ann.maxCollectedCodebookBytes", (128L << 20).toString))
+    val bound = graft.GraftConf.maxCollectedCodebookBytes.get(vecs.sparkSession)
     if (cs.queryExecution.optimizedPlan.stats.sizeInBytes > bound) {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("vec_id").orderBy(col("d2").asc, col("c_label"))
       return vecs.crossJoin(broadcast(cs))
         .withColumn("d2",
-          expr("dot_long(e, e) - 2 * dot_long(e, ce) + dot_long(ce, ce)"))
+          GraftFunctions.expr("dot_long(e, e) - 2 * dot_long(e, ce) + dot_long(ce, ce)"))
         .withColumn("rn", row_number().over(w))
         .where(col("rn") <= k)
         .select(vecs.columns.map(col) :+ col("c_label"): _*)
     }
     val cbs = broadcast(cs.groupBy().agg(
-      expr("collect_list(struct(c_label, ce, dot_long(ce, ce) as cn2))").as("cbs")))
+      GraftFunctions.expr("collect_list(struct(c_label, ce, dot_long(ce, ce) as cn2))").as("cbs")))
     val ranked = "transform(cbs, c -> struct(c.cn2 - 2 * dot_long(e, c.ce) as d2, c.c_label as c_label))"
     if (k == 1)
       vecs.crossJoin(cbs)
-        .withColumn("c_label", expr(s"array_min($ranked).c_label"))
+        .withColumn("c_label", GraftFunctions.expr(s"array_min($ranked).c_label"))
         .drop("cbs")
     else
       vecs.crossJoin(cbs)
         .withColumn("c_label", explode(
-          expr(s"transform(slice(array_sort($ranked), 1, $k), x -> x.c_label)")))
+          GraftFunctions.expr(s"transform(slice(array_sort($ranked), 1, $k), x -> x.c_label)")))
         .drop("cbs")
   }
 
@@ -579,12 +571,6 @@ object Llm {
 
   object AnnIvfIndex {
     def load(spark: org.apache.spark.sql.SparkSession, path: String): AnnIvfIndex = {
-      // register here too: a fresh query job's FIRST calls are load +
-      // annQueryTopk, with none of the fixture entry points (which
-      // register as a side effect) in between — without this the
-      // advertised cross-job flow died on 'Undefined function:
-      // dot_long' (r7 review)
-      graft.functions.GraftFunctions.register(spark)
       val assigned = Q.cached(spark.read.parquet(s"$path/assigned.parquet"))
       val trained =
         try spark.read.parquet(s"$path/meta.parquet")
@@ -603,7 +589,6 @@ object Llm {
     * embedding frame (r7 review). */
   private[graft] def trainIvfCentroids(embC: org.apache.spark.sql.DataFrame,
       nlist: Int, iters: Int): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(embC.sparkSession)
     var cents = listCentroids(
       embC.select((col("vec_id") % nlist).as("list_id"), col("e")))
     (1 to iters).foreach { _ =>
@@ -621,7 +606,6 @@ object Llm {
     * full pass. */
   def buildAnnIvfIndex(emb: org.apache.spark.sql.DataFrame,
       nlist: Int = 10, iters: Int = 2): AnnIvfIndex = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val embC = Q.cached(emb.select(col("vec_id"), col("e"), col("n2")))
     val centsC = Q.cached(trainIvfCentroids(embC, nlist, iters))
     val assigned = Q.cached(nearestLists(embC, centsC, 1)
@@ -636,7 +620,6 @@ object Llm {
     * assignments and any persisted copy of `centroids` stay valid. */
   def appendToAnnIndex(index: AnnIvfIndex,
       newVecs: org.apache.spark.sql.DataFrame): AnnIvfIndex = {
-    graft.functions.GraftFunctions.register(newVecs.sparkSession)
     AnnIvfIndex(index.centroids,
       index.assigned.unionByName(
         nearestLists(newVecs.select(col("vec_id"), col("e"), col("n2")),
@@ -700,7 +683,6 @@ object Llm {
   def annQueryTopk(index: AnnIvfIndex,
       queries: org.apache.spark.sql.DataFrame,
       k: Int = 5, nprobe: Int = 6): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val probes = nearestLists(queries.select(col("vec_id"), col("e"), col("n2")),
         index.centroids, nprobe)
       .select(col("vec_id").as("query_id"), col("c_label").as("list_id"),
@@ -709,7 +691,7 @@ object Llm {
     probes.join(index.assigned.select(col("list_id"), col("vec_id").as("neighbor_id"),
         col("e").as("ce2"), col("n2").as("cn2")), "list_id")
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score", expr("cast(dot_long(qe, ce2) as double)")
+      .withColumn("score", GraftFunctions.expr("cast(dot_long(qe, ce2) as double)")
         / (sqrt(col("qn2").cast("double")) * sqrt(col("cn2").cast("double"))))
       .transform(graft.functions.TopKScored.rankedTopk(
         _, "query_id", col("score"), col("neighbor_id"), k))

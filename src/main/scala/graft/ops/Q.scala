@@ -141,12 +141,7 @@ object Q {
     // tokenize paths (e.g. 64-long embedding decodes feeding repeated
     // cached map passes) may pass an explicit target; 0 = session conf
     val target = math.max(1L, if (targetBytesPerTask > 0) targetBytesPerTask
-      else {
-        val confKey = "spark.graft.spread.targetBytesPerTask"
-        val raw = spark.conf.get(confKey, "49152")
-        raw.toLongOption.getOrElse(throw new IllegalArgumentException(
-          s"$confKey must be a whole number of bytes, got '$raw'"))
-      })
+      else graft.GraftConf.spreadTargetBytesPerTask.get(spark))
     val w = ((size + target - 1) / target).min(BigInt(dp)).toInt
     if (w > 1) df.repartition(w, key) else df
   }

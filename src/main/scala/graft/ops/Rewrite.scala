@@ -931,8 +931,8 @@ object Rewrite {
       .repartition(8), root)
     Txn.commitDelete(s, root, Seq("custkey"),
       base.where(col("custkey") % 13 === 0).select("custkey"))
-    val thresholds = Seq("spark.graft.txn.maintain.maxFiles" -> "4",
-      "spark.graft.txn.maintain.maxTombstones" -> "0")
+    val thresholds = Seq(graft.GraftConf.maintainMaxFiles.name -> "4",
+      graft.GraftConf.maintainMaxTombstones.name -> "0")
     val prior = thresholds.map { case (k, _) => k -> s.conf.getOption(k) }
     thresholds.foreach { case (k, v) => s.conf.set(k, v) }
     try {

@@ -165,7 +165,7 @@ object StreamTwins {
     // restored after the stream stops, so batch queries are untouched.
     val sp = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.graft.stream.statePartitions", "8"))
+      graft.GraftConf.streamStatePartitions.get(s).toString)
     try {
       val q = s.readStream.format("graft").load(root)
         .groupBy("event_type")

@@ -556,7 +556,6 @@ object TextOps {
       |FROM g JOIN bench USING (gram) WHERE g.doc_id % 53 <> 0
       |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin
   ) { (s, dir) =>
-    graft.functions.GraftFunctions.register(s)
     val bloomAgg = udaf(new graft.functions.BloomGramAgg(1 << 16))
     // RAW grams, no corpus-wide distinct: the bloom probe runs in the
     // scan stage and drops non-candidate rows BEFORE any exchange, so
@@ -586,7 +585,7 @@ object TextOps {
     val bloom = benchGrams.agg(bloomAgg(col("gram_hash")).as("bits"))
     raw.where(col("doc_id") % 53 =!= 0)
       .crossJoin(broadcast(bloom))
-      .where(expr("bloom_contains(bits, gram_hash)"))
+      .where(graft.functions.GraftFunctions.expr("bloom_contains(bits, gram_hash)"))
       .select("doc_id", "gram").distinct()
       .join(broadcast(benchGrams.select("gram")), "gram")
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))

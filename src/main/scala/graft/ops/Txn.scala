@@ -2123,13 +2123,9 @@ object Txn {
     * OCC publish lost. */
   def maintain(spark: SparkSession, root: String,
       statsCols: Seq[String] = Nil): Option[Long] = {
-    def confLong(k: String, d: Long): Long =
-      spark.conf.getOption(k).fold(d)(v => v.toLongOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"$k must be a whole number, got '$v'")))
-    val maxFiles = confLong("spark.graft.txn.maintain.maxFiles", 64L)
-    val maxTombs = confLong("spark.graft.txn.maintain.maxTombstones", 8L)
-    val targetBytes = confLong("spark.graft.txn.maintain.targetBytes", 128L << 20)
+    val maxFiles = graft.GraftConf.maintainMaxFiles.get(spark)
+    val maxTombs = graft.GraftConf.maintainMaxTombstones.get(spark)
+    val targetBytes = graft.GraftConf.maintainTargetBytes.get(spark)
     require(maxFiles > 0 && maxTombs >= 0 && targetBytes > 0,
       s"maintain thresholds must be positive ($maxFiles, $maxTombs, $targetBytes)")
     val base = currentVersion(spark, root).getOrElse(

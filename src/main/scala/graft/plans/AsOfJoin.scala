@@ -27,7 +27,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
   * is produced without materializing candidates.
   *
   * Wiring: logical node → AsOfJoinStrategy (injected via
-  * GraftExtensions or `spark.experimental.extraStrategies`) → exec.
+  * GraftExtensions or added by `GraftSession.ensure`) → exec.
   * Public API: [[AsOfJoin.asof]].
   */
 final case class AsOfJoinPlan(
@@ -160,14 +160,12 @@ object AsOfJoin {
   /** As-of join `left` to the most recent strictly-prior `right` row per
     * key. The named columns are BIGINT (epoch-µs ts); right-side column
     * names should not collide with the left's (the output is
-    * left ++ right). Registers the planner strategy on first use. */
+    * left ++ right). `GraftSession.ensure` adds the planner strategy. */
   def asof(leftDf: DataFrame, rightDf: DataFrame,
       leftKey: String, leftTs: String, leftId: String,
       rightKey: String, rightTs: String, rightId: String): DataFrame = {
     val spark = leftDf.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    graft.GraftSession.ensure(spark)
     val l = leftDf.queryExecution.analyzed
     val r = rightDf.queryExecution.analyzed
     def a(p: LogicalPlan, name: String): Attribute = {

@@ -384,7 +384,6 @@ object StreamOps {
     * streams the corpus against itself; `ref_id < doc_id` makes arrival
     * order irrelevant, so stream ≡ batch — proven in StreamingSpec). */
   def nearDupAgainst(docs: DataFrame, corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // static reference index CONTRACTED to one doc per distinct token
     // set: a group's representative is its MIN doc_id, so for any doc d
     // the min earlier near-dup is always a rep — if a member m < d
@@ -405,7 +404,7 @@ object StreamOps {
       .select(col("doc_id").as("ref_id"),
         expr("array_sort(array_distinct(split(text, ' ')))").as("ref_toks")))
     val idx = graft.ops.Q.cached(refSets
-      .withColumn("mhs", expr("minhash32(ref_toks)"))
+      .withColumn("mhs", graft.functions.GraftFunctions.expr("minhash32(ref_toks)"))
       .select(col("ref_id"), posexplode(expr(graft.ops.DedupOps.minhashBandExpr))
         .as(Seq("band", "bh"))))
     // incoming docs: band with the same expressions, carrying the token
@@ -417,7 +416,7 @@ object StreamOps {
     val probes = docs
       .select(col("doc_id"),
         expr("array_sort(array_distinct(split(text, ' ')))").as("toks"))
-      .withColumn("mhs", expr("minhash32(toks)"))
+      .withColumn("mhs", graft.functions.GraftFunctions.expr("minhash32(toks)"))
       .select(col("doc_id"), col("toks"),
         posexplode(expr(graft.ops.DedupOps.minhashBandExpr)).as(Seq("band", "bh")))
     // the exact verify is the shared Llm.verifyJaccardPairs — same τ

@@ -1069,6 +1069,40 @@ class CatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT count(*) AS n FROM $c.cp").head().getLong(0) == 1200L)
   }
 
+  test("a keyless predicate DELETE keeps the table's partition layout " +
+      "and sidecars") {
+    val c = sqlCat("delpart")
+    val catRoot = spark.conf.get(s"spark.sql.catalog.$c.root")
+    spark.sql(s"CREATE TABLE $c.dp (id BIGINT, v BIGINT, day BIGINT) " +
+      s"PARTITIONED BY (day) " +
+      s"TBLPROPERTIES ('graft.stats' = 'id', 'graft.bloom' = 'id')")
+    spark.sql(s"INSERT INTO $c.dp SELECT id, id AS v, id % 8 AS day FROM range(800)")
+    val tRoot = GraftCatalog.resolve(spark, catRoot, "dp")
+    val day3 = Seq(Txn.PartProbe("day", Seq(3L)))
+    assert(Txn.partitionCensus(spark, tRoot, day3) == ((1, 8)))
+    // not a key shape: the rewrite path
+    spark.sql(s"DELETE FROM $c.dp WHERE v > 700")
+    assert(spark.sql(s"SELECT count(*) FROM $c.dp").head().getLong(0) == 701L)
+    assert(Txn.partitionCensus(spark, tRoot, day3) == ((1, 8)),
+      "the DELETE rewrite must keep the partitioned layout")
+    def kept(probes: Seq[Txn.SkipProbe]): Txn.SkipReport = {
+      val v = Txn.currentVersion(spark, tRoot).get
+      Txn.skipDecision(spark, tRoot, v, probes)._2
+    }
+    val all = kept(day3)
+    assert(all.dirsKept == 1 && all.dirsTotal == 8 && all.filesKept > 0, all)
+    // the stats sidecar prunes past the surviving max id (700) …
+    assert(kept(day3 :+ Txn.RangeProbe("id", 701L, 10000L)).filesKept == 0)
+    // … and the bloom sidecar an id inside day 3's range but not in it
+    assert(kept(day3 :+ Txn.PointProbe("id", Seq(21L))).filesKept == 0)
+    // deleting every row writes an empty partitioned snapshot: readable,
+    // and the next INSERT lands partitioned again
+    spark.sql(s"DELETE FROM $c.dp WHERE v >= 0")
+    assert(spark.sql(s"SELECT count(*) FROM $c.dp").head().getLong(0) == 0L)
+    spark.sql(s"INSERT INTO $c.dp VALUES (3, 3, 3)")
+    assert(spark.sql(s"SELECT id FROM $c.dp WHERE day = 3").head().getLong(0) == 3L)
+  }
+
   test("multi-column PARTITIONED BY: nested a=v/b=w layout, per-level " +
       "directory pruning, native writes, OVERWRITE keeps layout (r13)") {
     import graft.ops.Txn

@@ -1386,6 +1386,20 @@ class TxnSpec extends SparkSpec {
     assert(ids(Txn.read(spark, local)) == (1L to 9L).toSet)
   }
 
+  test("an empty partitioned commit publishes a version readers can open") {
+    import spark.implicits._
+    val root = freshRoot("empty_part")
+    Txn.commit(Seq.empty[(Long, Long)].toDF("id", "day"), root,
+      partitionBy = Some("day"))
+    val back = Txn.read(spark, root)
+    assert(back.count() == 0L)
+    assert(back.schema.map(f => (f.name, f.dataType)) ==
+      Seq("id" -> org.apache.spark.sql.types.LongType,
+        "day" -> org.apache.spark.sql.types.LongType))
+    Txn.commit(Seq((1L, 3L)).toDF("id", "day"), root, partitionBy = Some("day"))
+    assert(Txn.read(spark, root).as[(Long, Long)].collect().toSeq == Seq((1L, 3L)))
+  }
+
   test("maintain: a malformed threshold conf names its key") {
     import spark.implicits._
     val root = freshRoot("maintain_conf")
